@@ -223,14 +223,12 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
     """histQuantile property tests: (1) bucket arrays merged up two
     pyramid levels are IDENTICAL to histograms built directly at the
     coarse level (exact mergeability); (2) the pNN lower bound brackets
-    the true percentile within one bucket width; (3) the small-level
-    pandas rollup path agrees with the Spark rollup; (4) non-power-of-2
+    the true percentile within one bucket width; (3) non-power-of-2
     width is rejected."""
     import numpy as np
     import pytest
 
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.pyramid import _rollup_small_pandas
     from vt_grid_spark.operators.rollup import rollup_level
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs, finalize_columns
 
@@ -266,18 +264,121 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
                                              and lo == (b - 1) * w), \
                 (key, q, lo, true_q)
 
-    # pandas small-level rollup agrees with the Spark rollup
-    import pandas as pd
-    fine_pdf = fine.toPandas()
-    fine_pdf["h"] = fine_pdf["h"].map(list)
-    small = _rollup_small_pandas(fine_pdf, 8, [spec])
-    spark_roll = {(r.x, r.y): tuple(r.h)
-                  for r in rollup_level(fine, 8, [spec]).collect()}
-    pandas_roll = {(r.x, r.y): tuple(r.h) for _, r in small.iterrows()}
-    assert pandas_roll == spark_roll
-
     with pytest.raises(ValueError, match="power of 2"):
         AggSpec(out="h", reducer="histQuantile", field="_v", width=48.0)
+
+
+def _rows(df, cols):
+    """A level as a set of row tuples (arrays as tuples)."""
+    return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()}
+
+
+def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
+    """The batched tail: (1) ``rollup_ancestors`` equals chained
+    ``rollup_level`` at every level for one spec of each reducer; (2) its
+    plan is ONE hash aggregation (a single hash exchange); (3) a two-band
+    ``build_pyramid``, whose small levels all run through the tail, equals
+    the in-memory ``build_pyramid_df`` as row sets."""
+    import re
+
+    from vt_grid_spark.operators.encode import cell_aggregate, encode_points
+    from vt_grid_spark.operators.rollup import rollup_ancestors, rollup_level
+    from vt_grid_spark.plans.aggspec import VALID_REDUCERS, compile_aggs
+
+    specs = [
+        AggSpec(out="cnt", reducer="count"),
+        AggSpec(out="sum_v", reducer="sum", field="v"),
+        AggSpec(out="min_v", reducer="min", field="v"),
+        AggSpec(out="max_v", reducer="max", field="v"),
+        AggSpec(out="mean_v", reducer="mean", field="v"),
+        AggSpec(out="awm_v", reducer="areaWeightedMean", field="v", weight="v"),
+        AggSpec(out="aws_v", reducer="areaWeightedSum", field="v", weight="v"),
+        AggSpec(out="area", reducer="totalArea", weight="v"),
+        AggSpec(out="langs", reducer="union", field="lang"),
+        AggSpec(out="sk", reducer="kmvDistinct", field="url", k=8),
+        AggSpec(out="h", reducer="histQuantile", field="v", buckets=8, width=2.0),
+    ]
+    assert {s.reducer for s in specs} == VALID_REDUCERS
+    enc = encode_points(_points(spark, 3000), 8, with_quadkey=False)
+    fine = cell_aggregate(enc, 8, compile_aggs(specs)).localCheckpoint()
+    batch = rollup_ancestors(fine, 8, 4, specs)
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    plan = batch._jdf.queryExecution().explainString(jmode)
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    batch = batch.cache()
+    cols = [c for c in batch.columns if c != "zoom"]
+    chained = fine
+    for z in range(7, 3, -1):
+        chained = rollup_level(chained, z + 1, specs)
+        got = _rows(batch.where(F.col("zoom") == z), cols)
+        assert got == _rows(chained, cols) and got, f"zoom {z} diverged"
+    assert sorted(r.zoom for r in batch.select("zoom").distinct().collect()) \
+        == [4, 5, 6, 7]
+    batch.unpersist()
+
+    # two bands at the default SMALL_LEVEL_ROWS: band 1's tail batch is
+    # rolled up from the base level, band 2's from band 1's last level
+    # with band 2's specs (its min_v is the max of band 1's, so running
+    # band 1's specs past the boundary would change it)
+    band2 = [AggSpec(out="cnt", reducer="sum", field="cnt"), *SPECS[1:3],
+             AggSpec(out="min_v", reducer="max", field="min_v"), *SPECS[4:]]
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=7, aggregations=SPECS),
+                              ZoomBand(basezoom=7, minzoom=4, aggregations=band2)],
+                       gridsize=16)
+    pts = _points(spark, 2000)
+    io = TableIO(str(tmp_path / "pyr"))
+    man = build_pyramid(pts, plan, io, resume=False)
+    assert sorted(man) == list(range(6, 11))
+    assert all(man[z]["lineage"]["op"] == "rollup-small" for z in range(6, 10))
+    mem = build_pyramid_df(pts, plan).cache()
+    cols = ["x", "y", "quadkey", "cnt", "sum_v", "mean_v__cnt", "mean_v__sum",
+            "min_v", "max_v", "langs"]
+    for z in man:
+        got = _rows(io.read_level(spark, z), cols)
+        assert got == _rows(mem.where(F.col("zoom") == z), cols) and got, \
+            f"zoom {z} diverged"
+    mem.unpersist()
+
+
+def test_tail_crash_then_resume_equals_one_shot(spark, tmp_path, monkeypatch):
+    """Fault injection in the tail: a crash while writing the 4th tail
+    level leaves the three levels before it committed; a resumed build
+    keeps them (same completed_at) and every level then equals a one-shot
+    build as row sets."""
+    import pytest
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=3, aggregations=SPECS)],
+                       gridsize=16)
+    pts = _points(spark, 2000)
+    io = TableIO(str(tmp_path / "crash"))
+    written = []
+    write = TableIO.write_level_pandas
+
+    def crash_on_4th(self, pdf, zoom, lineage=None):
+        written.append(zoom)
+        if len(written) == 4:
+            raise RuntimeError("injected crash")
+        return write(self, pdf, zoom, lineage=lineage)
+
+    monkeypatch.setattr(TableIO, "write_level_pandas", crash_on_4th)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(pts, plan, io)
+    monkeypatch.undo()
+    assert written == [9, 8, 7, 6]
+    committed = {z: io.read_manifest(z)["completed_at"] for z in (10, 9, 8, 7)}
+    assert not io.level_complete(6) and not io.level_complete(5)
+
+    man = build_pyramid(pts, plan, io, resume=True)
+    assert {z: man[z]["completed_at"] for z in committed} == committed
+    one_shot = TableIO(str(tmp_path / "one_shot"))
+    want = build_pyramid(pts, plan, one_shot, resume=False)
+    assert sorted(man) == sorted(want) == list(range(5, 11))
+    cols = [c for c in io.read_level(spark, 10).columns if c != "zoom"]
+    for z in man:
+        got = _rows(io.read_level(spark, z), cols)
+        assert got == _rows(one_shot.read_level(spark, z), cols) and got, \
+            f"zoom {z} diverged"
 
 
 def test_kmv_sketch_merge_exact_and_estimate_sane(spark):

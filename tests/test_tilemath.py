@@ -33,6 +33,14 @@ def test_quadkey_roundtrip_vectorized():
         # parent = prefix (the pyramid invariant, aggregate-cells.js:31-32)
         px, py, pz = tm.parent(int(x), int(y), z)
         assert tm.tile_to_quadkey(px, py, pz) == qk[:-1]
+    # array input keeps its shape and yields object-dtype str equal to the
+    # scalar path's, z == 0 included
+    grid = tm.tile_to_quadkey(xs.reshape(20, 50), ys.reshape(20, 50), z)
+    assert grid.shape == (20, 50) and grid.dtype == object
+    assert grid.ravel().tolist() == [tm.tile_to_quadkey(int(x), int(y), z)
+                                     for x, y in zip(xs, ys)]
+    top = tm.tile_to_quadkey(np.zeros(3, np.int64), np.zeros(3, np.int64), 0)
+    assert top.dtype == object and top.tolist() == ["", "", ""]
 
 
 def test_dc_golden_quadkeys_decode_to_dc():

@@ -12,6 +12,16 @@ from __future__ import annotations
 import math
 
 
+def bq(name: str) -> str:
+    """Backtick-quote an identifier for generated Spark SQL text.  The
+    quoted name resolves literally as ONE column, so a name with a hyphen,
+    a space or the shape of a keyword or niladic function stays a column
+    reference.  This differs from ``F.col(name)`` for dotted names:
+    ``F.col("a.b")`` reads field ``b`` of struct ``a``, while ``bq("a.b")``
+    names the column called ``a.b``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def tile_x_sql(lon: str, z: int) -> str:
     z2 = float(1 << z)
     n = (1 << z) - 1

@@ -45,14 +45,6 @@ _INF = float("inf")
 _INF_SQL = "CAST('Infinity' AS DOUBLE)"
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for generated SQL text, so names that
-    are not plain identifiers (hyphens, spaces, keyword-shaped) keep the
-    literal-resolution contract ``F.col(name)`` had before the SQL-text
-    rewrite."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _d2(qlon, qlat, plon, plat):
     dlat = qlat - plat
     dlon = qlon - plon
@@ -209,7 +201,7 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
         enc_p = _enc_p
 
     q = encode_points(queries, z, with_quadkey=False).selectExpr(
-        _bq(query_id), "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy",
+        sq.bq(query_id), "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy",
     ).withColumn("_bd2", F.expr(_ring_boundary_d2_sql(z, ring)))
 
     # (query, ring-cell) candidate relation — explode over the (2r+1)^2
@@ -236,7 +228,7 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     cells = (
         q.selectExpr("*", f"explode({offsets}) AS _o")
         .selectExpr(
-            _bq(query_id), "_qlon", "_qlat", "_bd2",
+            sq.bq(query_id), "_qlon", "_qlat", "_bd2",
             f"pmod(_qx + _o.dx, {n_tiles}) AS x",
             "_qy + _o.dy AS y",
         )

@@ -9,6 +9,12 @@ previous level from the block-manager CACHE (persisted during the level's
 own write job), not back off parquet — the checkpoint write is the
 durability path, never a serial decode on the critical path.  On resume
 the cache is cold and the level IS re-read from its checkpoint.
+
+The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
+``rollup_ancestors`` aggregation per zoom band derives all of its levels at
+once, collected to the driver and written level by level.  Both paths use
+the combiners of ``compile_rollup_aggs``, the one place a reducer's merge
+rule is defined.
 """
 
 from __future__ import annotations
@@ -20,61 +26,21 @@ from vt_grid_spark import tilemath as tm
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
                                             cover_lonlat_predicate, cover_ranges,
                                             encode_points)
-from vt_grid_spark.operators.rollup import HOLISTIC, merge_cells, rollup_level
-from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
+from vt_grid_spark.operators.rollup import (HOLISTIC, merge_cells, rollup_ancestors,
+                                            rollup_level)
+from vt_grid_spark.plans.aggspec import compile_aggs
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan
 from vt_grid_spark.sources.table_io import TableIO
 
-# below this many rows a level is rolled up driver-side (pandas groupby):
-# at the top of the pyramid each level is one near-empty Spark job (~0.5-2 s
-# of pure scheduling), and 10+ such levels are the serial fraction that
-# caps scaling efficiency.  100k rows of partials is a few MB.
+# below this many rows a level's remaining ancestors (to the end of its zoom
+# band) are derived by ONE batched Spark aggregation and written from the
+# driver: at the top of the pyramid each level is one near-empty Spark job
+# (~0.5-2 s of pure scheduling), and 10+ such levels are the serial
+# fraction that caps scaling efficiency.  The collected batch holds the
+# band's remaining levels: ~1/3 of the first small level's rows when cells
+# are dense (each level ~4x smaller), at most that many rows per level when
+# they are sparse.
 SMALL_LEVEL_ROWS = 1_000_000
-
-
-def _rollup_small_pandas(pdf, child_z: int, specs: list[AggSpec]):
-    """Driver-side rollup of one tiny level — same semantics as
-    compile_rollup_aggs, exact (integer/partial sums)."""
-    import pandas as pd
-
-    z = child_z - 1
-    pdf = pdf.copy()
-    pdf["x"] = pdf["x"] // 2
-    pdf["y"] = pdf["y"] // 2
-    aggs: dict = {}
-    for s in specs:
-        if s.reducer in ("count", "sum", "areaWeightedSum", "totalArea"):
-            aggs[s.out] = (s.out, "sum")
-        elif s.reducer == "min":
-            aggs[s.out] = (s.out, "min")
-        elif s.reducer == "max":
-            aggs[s.out] = (s.out, "max")
-        elif s.reducer == "mean":
-            aggs[f"{s.out}__cnt"] = (f"{s.out}__cnt", "sum")
-            aggs[f"{s.out}__sum"] = (f"{s.out}__sum", "sum")
-        elif s.reducer == "areaWeightedMean":
-            aggs[f"{s.out}__w"] = (f"{s.out}__w", "sum")
-            aggs[f"{s.out}__wv"] = (f"{s.out}__wv", "sum")
-        elif s.reducer == "union":
-            aggs[s.out] = (s.out, lambda col: sorted({v for arr in col for v in arr}))
-        elif s.reducer == "kmvDistinct":
-            # k smallest of the union of the children's k-smallest — same
-            # exact-merge rule as compile_rollup_aggs
-            aggs[s.out] = (s.out, lambda col, k=s.k:
-                           sorted({v for arr in col for v in arr})[:k])
-        elif s.reducer == "histQuantile":
-            # elementwise sum of the bucket arrays — same exact merge as
-            # compile_rollup_aggs
-            aggs[s.out] = (s.out, lambda col, b=s.buckets:
-                           [int(sum(arr[i] for arr in col))
-                            for i in range(b)])
-    out = pdf.groupby(["x", "y"], as_index=False).agg(**aggs)
-    out.insert(0, "zoom", z)
-    out.insert(3, "quadkey", tm.tile_to_quadkey(out["x"].to_numpy(),
-                                                out["y"].to_numpy(), z))
-    if z == 0:
-        out["quadkey"] = out["quadkey"].astype(str)
-    return out
 
 
 def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame:
@@ -157,32 +123,42 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
         prev_df = base
 
     # --- rollup levels -------------------------------------------------------
-    # distributed while levels are big; once a level fits SMALL_LEVEL_ROWS
-    # the remaining pyramid is computed driver-side in one pass (pandas) —
-    # removes ~10 near-empty Spark jobs of pure scheduling latency.
+    # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS).  A
+    # band boundary starts a new batch: the next band's specs apply to this
+    # band's last level.
     prev_cell_z = base_cell_z
-    small_pdf = None
+    tail: dict = {}  # cell_z -> collected rows of the current batch
     for output_z, cell_z, band in levels[1:]:
         assert cell_z == prev_cell_z - 1
         if resume and io.level_complete(cell_z):
             manifests[cell_z] = io.read_manifest(cell_z)
-            small_pdf = None  # re-read lazily if needed
+            tail = {}  # the next batch starts from the skipped level
             if prev_df is not None:
                 prev_df.unpersist()
                 prev_df = None  # cache is stale relative to the skip point
-        elif small_pdf is not None or manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS:
-            if small_pdf is None:
-                small_pdf = io.read_level_pandas(prev_cell_z)
-            if prev_df is not None:
-                prev_df.unpersist()
-                prev_df = None  # remaining levels are driver-side
-            small_pdf = _rollup_small_pandas(small_pdf, prev_cell_z, band.aggregations)
+        elif cell_z in tail or manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS:
+            if cell_z not in tail:
+                children = (prev_df if prev_df is not None
+                            else io.read_level(spark, prev_cell_z))
+                min_z = min(z for _, z, b in levels if b is band)
+                batch = (rollup_ancestors(children, prev_cell_z, min_z,
+                                          band.aggregations)
+                         .toPandas()
+                         .sort_values(["zoom", "x", "y"]))  # same files every run
+                tail = {z: batch[batch["zoom"] == z].reset_index(drop=True)
+                        for z in range(min_z, prev_cell_z)}
+                if prev_df is not None:
+                    prev_df.unpersist()
+                    prev_df = None  # remaining levels are driver-side
+            pdf = tail.pop(cell_z)
+            pdf.insert(3, "quadkey", tm.tile_to_quadkey(pdf["x"].to_numpy(),
+                                                        pdf["y"].to_numpy(), cell_z))
             manifests[cell_z] = io.write_level_pandas(
-                small_pdf, cell_z,
+                pdf, cell_z,
                 lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
                          "output_tile_zoom": output_z},
             )
-            _track_max(cell_z, pdf=small_pdf)
+            _track_max(cell_z, pdf=pdf)
         else:
             salt = _salt_for(prev_cell_z, band)
             children = (prev_df if prev_df is not None

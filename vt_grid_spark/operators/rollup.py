@@ -5,6 +5,8 @@ The reference buckets children by parent quadkey
 drop-last-char).  Here the whole level is ONE hash aggregation on the
 integer parent key ``(x>>1, y>>1)`` — no geometry, no strings in the
 grouping key (quadkey is re-derived per level as presentation).
+``rollup_ancestors`` is the batched form: all levels of a small zoom band
+in one hash aggregation on ``(zoom, x>>d, y>>d)``.
 
 Scale notes (100 TB / 1000 executors):
   * Algebraic reducers (count/sum/min/max/mean/AWM partials) are immune to
@@ -49,17 +51,24 @@ def _required_rollup_cols(specs: list[AggSpec]) -> list[str]:
     return cols
 
 
-def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
-                 salt_buckets: int = 0, extra_keys: list[str] | None = None) -> DataFrame:
-    """Aggregate cells at child_z into their parents at child_z - 1."""
-    z = child_z - 1
-    missing = [c for c in _required_rollup_cols(specs) if c not in cells.columns]
+def _check_rollup_input(cells: DataFrame, specs: list[AggSpec]) -> list[str]:
+    """The aggregate columns a rollup reads; raises when any is missing."""
+    cols = _required_rollup_cols(specs)
+    missing = [c for c in cols if c not in cells.columns]
     if missing:
         raise ValueError(
             f"rollup input is missing aggregate columns {missing}: rollup "
             "consumes the OUTPUT of a previous cell_aggregate/rollup_level "
             "(columns named spec.out / spec.out__*), not raw feature columns "
             "(spec.field is only read at the base level)")
+    return cols
+
+
+def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
+                 salt_buckets: int = 0, extra_keys: list[str] | None = None) -> DataFrame:
+    """Aggregate cells at child_z into their parents at child_z - 1."""
+    z = child_z - 1
+    _check_rollup_input(cells, specs)
     exprs = compile_rollup_aggs(specs)
     keys = extra_keys or []
 
@@ -87,6 +96,27 @@ def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
     # stable column order: keys, then aggregates
     agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", "quadkey", *keys}]
     return out.select("zoom", "x", "y", "quadkey", *keys, *agg_cols)
+
+
+def rollup_ancestors(cells: DataFrame, child_z: int, min_z: int,
+                     specs: list[AggSpec]) -> DataFrame:
+    """Every ancestor level of cells at child_z, zooms child_z-1 .. min_z,
+    as ONE hash aggregation (the batch-of-group-bys shape of LMFAO,
+    VLDB'20): each cell is emitted once per ancestor ``(child_z-d, x>>d,
+    y>>d)``, d = 1..child_z-min_z, and grouped on ``(zoom, x, y)`` with the
+    rollup combiners.  Equal to chaining ``rollup_level`` down to min_z
+    because every combiner is a commutative monoid; the specs must hold
+    for the whole range (a zoom band).  Output: zoom, x, y, aggregates."""
+    cols = _check_rollup_input(cells, specs)
+    ancestors = (
+        cells.select("x", "y", *cols,
+                     F.explode(F.sequence(F.lit(1), F.lit(child_z - min_z)))
+                     .alias("_d"))
+        .select((F.lit(child_z) - F.col("_d")).alias("zoom"),
+                F.expr("shiftright(x, _d)").alias("x"),
+                F.expr("shiftright(y, _d)").alias("y"), *cols)
+    )
+    return ancestors.groupBy("zoom", "x", "y").agg(*compile_rollup_aggs(specs))
 
 
 def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],

@@ -19,6 +19,11 @@ manual count→sum pattern of README.md:66-74, generalized):
   histQuantile-> linear-bucket count array  elementwise sum (exact merge);
                  finalize reads p50/p95 off the cumulative counts
 
+:func:`compile_rollup_aggs` is the ONE definition of every reducer's merge
+rule: the per-level rollup (``rollup_level``), the batched pyramid tail
+(``rollup_ancestors``, all small upper levels in one aggregation) and the
+incremental merge (``merge_cells``) all aggregate with its combiners.
+
 Custom reducers (reference lib/aggregate.js:26-36) are Python callables
 run via applyInPandas — see operators/custom_reduce.py.
 postAggregations (lib/aggregate-cells.js:96-101) are withColumn hooks
@@ -33,6 +38,8 @@ from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from vt_grid_spark.functions.sqltext import bq
 
 VALID_REDUCERS = {
     "count", "sum", "min", "max", "mean",
@@ -134,13 +141,6 @@ class CompiledAggs:
     post: dict[str, Callable[[], Column]] = field(default_factory=dict)
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for generated SQL text: keeps the
-    literal-resolution contract ``F.col(name)`` had (a field named like a
-    niladic function or containing a hyphen must stay a column ref)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _w(spec: AggSpec) -> Column:
     return F.col(spec.weight) if spec.weight else F.lit(1.0)
 
@@ -193,7 +193,7 @@ def compile_aggs(specs: list[AggSpec]) -> list[Column]:
             # repr() round-trips the width double, so bucketing is
             # bit-identical (oracle + merge-proof tests green).
             b = (f"cast(least({s.buckets - 1}, greatest(0, "
-                 f"floor({_bq(s.field)} / {s.width!r}D))) as int)")
+                 f"floor({bq(s.field)} / {s.width!r}D))) as int)")
             out.append(F.expr("array(" + ",".join(
                 f"sum(cast(CASE WHEN {b} = {i} THEN 1 ELSE 0 END as long))"
                 for i in range(s.buckets)) + ")").alias(s.out))
@@ -237,7 +237,7 @@ def compile_rollup_aggs(specs: list[AggSpec]) -> list[Column]:
             # merge; generated SQL text for the same py4j-latency reason
             # as the base-level compile (one F.expr vs 4/bucket)
             out.append(F.expr("array(" + ",".join(
-                f"sum(element_at({_bq(s.out)}, {i + 1}))"
+                f"sum(element_at({bq(s.out)}, {i + 1}))"
                 for i in range(s.buckets)) + ")").alias(s.out))
     return out
 

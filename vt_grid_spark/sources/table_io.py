@@ -2,8 +2,10 @@
 
 "Iceberg" as an interface (SURVEY.md §7 g6): this class IS the seam — the
 pyramid driver only calls ``write_level`` / ``read_level`` /
-``level_complete`` / ``read_manifest`` (+ the pandas fast-path pair for
-tiny upper levels).  The default backend is parquet partitioned by
+``level_complete`` / ``read_manifest`` (+ ``write_level_pandas`` for the
+pyramid tail, whose small levels are rolled up in ONE Spark aggregation and
+collected, so they are written from the driver without a Spark job per
+level).  The default backend is parquet partitioned by
 ``zoom=<z>`` plus a JSON manifest per level carrying what the north rule
 asks for: input lineage, per-partition row counts, and status — so a
 killed pyramid build resumes from the last complete zoom.
@@ -172,17 +174,7 @@ class TableIO:
         with open(self.manifest_path(zoom)) as f:
             return json.load(f)
 
-    # -- driver-side (pandas) path for tiny upper levels ------------------------
-    def read_level_pandas(self, zoom: int):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        path = self.level_path(zoom)
-        tbl = pq.read_table(path)
-        pdf = tbl.to_pandas()
-        pdf.insert(0, "zoom", zoom)
-        return pdf
-
+    # -- driver-side write of the collected pyramid tail -----------------------
     def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -220,7 +212,7 @@ class CatalogTableIO(TableIO):
     table is fully (re)created.  With ``format="iceberg"`` on a configured
     Iceberg catalog the level write is a snapshot commit and the journal
     rides the same table format; with the default session catalog it
-    degrades to managed parquet tables.  The pandas fast-path pair routes
+    degrades to managed parquet tables.  ``write_level_pandas`` routes
     through Spark (a catalog has no local files to short-circuit to).
 
     Upgrading the seam to real Iceberg (no code change, session config
@@ -329,12 +321,7 @@ class CatalogTableIO(TableIO):
             raise FileNotFoundError(f"no manifest for zoom {zoom}")
         return m
 
-    # -- pandas fast path: no local files behind a catalog — go through Spark ----
-    def read_level_pandas(self, zoom: int):
-        pdf = self.spark.table(self.level_table(zoom)).toPandas()
-        pdf.insert(0, "zoom", zoom)
-        return pdf
-
+    # -- driver-side write: no local files behind a catalog — go through Spark --
     def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
         out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
         return self.write_level(self.spark.createDataFrame(out), zoom,

@@ -115,7 +115,8 @@ def tile_to_quadkey(x, y, z: int):
         d = ((x >> shift) & 1) + 2 * ((y >> shift) & 1)
         digits[..., k] = d.astype(np.uint8) + ord("0")
     if x.shape:
-        return np.array([bytes(row).decode("ascii") for row in digits.reshape(-1, z)], dtype=object).reshape(x.shape)
+        # each row of z ASCII digits viewed as one fixed-width bytes value
+        return digits.view(f"S{z}")[..., 0].astype(f"U{z}").astype(object)
     return bytes(digits).decode("ascii")
 
 
