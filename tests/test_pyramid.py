@@ -86,6 +86,7 @@ def test_checkpoint_resume(spark, tmp_path):
         assert man["status"] == "complete"
         assert man["row_count"] > 0
         assert man["files"]  # per-partition row counts (north_rule lineage)
+    assert set(m1[8]) == set(m1[9])  # driver-side and Spark writes: same keys
 
     # simulate a kill after the base level: wipe upper-level manifests
     for z in (8, 7):
@@ -339,6 +340,56 @@ def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
         assert got == _rows(mem.where(F.col("zoom") == z), cols) and got, \
             f"zoom {z} diverged"
     mem.unpersist()
+
+
+def test_sketch_reducers_quote_hyphenated_names(spark):
+    """Generated SQL quotes every interpolated name: kmvDistinct over a
+    hyphenated field and histQuantile under a hyphenated output name give
+    the same cells as the same specs under plain names, through
+    compile_aggs -> rollup_level -> finalize_columns."""
+    from vt_grid_spark.operators.encode import cell_aggregate, encode_points
+    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.plans.aggspec import compile_aggs
+
+    enc = encode_points(_points(spark, 1500), 8, with_quadkey=False)
+
+    def cells(field, hist):
+        specs = [AggSpec(out="sk", reducer="kmvDistinct", field=field, k=8),
+                 AggSpec(out=hist, reducer="histQuantile", field="v",
+                         buckets=8, width=2.0)]
+        fine = cell_aggregate(enc.withColumn(field, F.col("url")), 8,
+                              compile_aggs(specs))
+        top = rollup_level(fine, 8, specs)
+        return _rows(top, ["x", "y", "sk", F.col(hist),
+                           *finalize_columns(specs).values()])
+
+    want = cells("dom_name", "len_hist")
+    assert cells("dom-name", "len-hist") == want and want
+
+
+def test_reducer_names_branch_only_in_aggspec():
+    """Architecture gate: each reducer is defined once, in
+    ``aggspec.REDUCERS``; no other module compares ``.reducer`` with
+    ``==``, ``!=``, ``in`` or ``not in`` (use ``is_holistic``,
+    ``count_column``, ``partial_columns`` or the table instead)."""
+    import ast
+    import pathlib
+
+    import vt_grid_spark
+
+    root = pathlib.Path(vt_grid_spark.__file__).parent
+    ops = (ast.Eq, ast.NotEq, ast.In, ast.NotIn)
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "plans" / "aggspec.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Compare)
+                    and any(isinstance(o, ops) for o in node.ops)
+                    and any(isinstance(e, ast.Attribute) and e.attr == "reducer"
+                            for e in (node.left, *node.comparators))):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
 
 
 def test_tail_crash_then_resume_equals_one_shot(spark, tmp_path, monkeypatch):

@@ -96,3 +96,14 @@ def test_sql_pipeline_equals_dataframe_pipeline(spark):
     a = {(r.x, r.y): (r.cnt, r.sum_v) for r in sql_cells.collect()}
     b = {(r.x, r.y): (r.cnt, r.sum_v) for r in df_cells.collect()}
     assert a == b and len(a) > 10
+
+
+def test_sq_literal_roundtrip(spark):
+    """sqltext.sq: a quoted word parses back to itself under Spark's
+    default ``escapedStringLiterals=false`` — quotes, backslashes and
+    elisions included."""
+    from vt_grid_spark.functions.sqltext import sq
+
+    words = ["l'", "po'", "it's", "back\\slash", "\\'", "''", "\\", "a\\nb"]
+    row = spark.sql("SELECT " + ", ".join(sq(w) for w in words)).first()
+    assert list(row) == words

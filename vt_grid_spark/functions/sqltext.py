@@ -22,6 +22,18 @@ def bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sq(word: str) -> str:
+    """Single-quote a string literal for generated Spark SQL text: quotes
+    are doubled and backslashes doubled, so any word (fr/it elisions like
+    ``l'``, a stray backslash) parses back to itself.  The backslash
+    doubling is correct only under
+    ``spark.sql.parser.escapedStringLiterals=false``, the Spark default;
+    with that conf on, Spark reads backslashes literally and each one
+    would come back doubled.  Not for DuckDB text, where a backslash is
+    never an escape."""
+    return "'" + word.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def tile_x_sql(lon: str, z: int) -> str:
     z2 = float(1 << z)
     n = (1 << z) - 1

@@ -13,8 +13,8 @@ the cache is cold and the level IS re-read from its checkpoint.
 The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
 ``rollup_ancestors`` aggregation per zoom band derives all of its levels at
 once, collected to the driver and written level by level.  Both paths use
-the combiners of ``compile_rollup_aggs``, the one place a reducer's merge
-rule is defined.
+the combiners of ``compile_rollup_aggs``, derived from ``aggspec.REDUCERS``,
+the one place a reducer's merge rule is defined.
 """
 
 from __future__ import annotations
@@ -26,9 +26,8 @@ from vt_grid_spark import tilemath as tm
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
                                             cover_lonlat_predicate, cover_ranges,
                                             encode_points)
-from vt_grid_spark.operators.rollup import (HOLISTIC, merge_cells, rollup_ancestors,
-                                            rollup_level)
-from vt_grid_spark.plans.aggspec import compile_aggs
+from vt_grid_spark.operators.rollup import merge_cells, rollup_ancestors, rollup_level
+from vt_grid_spark.plans.aggspec import compile_aggs, count_column, is_holistic
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan
 from vt_grid_spark.sources.table_io import TableIO
 
@@ -79,10 +78,9 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
     # count aggregate) and the NEXT rollup salts only when it exceeds
     # plan.hot_key_threshold.  Plans with no holistic reducer skip all of
     # this — algebraic aggs are skew-immune via map-side partials.
-    any_holistic = any(s.reducer in HOLISTIC
-                       for b in plan.bands for s in b.aggregations)
-    count_col = next((s.out for b in plan.bands for s in b.aggregations
-                      if s.reducer == "count"), None)
+    all_specs = [s for b in plan.bands for s in b.aggregations]
+    any_holistic = is_holistic(all_specs)
+    count_col = count_column(all_specs)
 
     def _track_max(zoom: int, pdf=None, df=None) -> None:
         if not any_holistic or count_col is None:
@@ -96,8 +94,7 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
         manifests[zoom] = io.amend_manifest(zoom, max_cell_rows=mx)
 
     def _salt_for(prev_zoom: int, band) -> int:
-        if plan.salt_buckets <= 1 or not any(
-                s.reducer in HOLISTIC for s in band.aggregations):
+        if plan.salt_buckets <= 1 or not is_holistic(band.aggregations):
             return 0
         prev_max = manifests[prev_zoom].get("max_cell_rows")
         if prev_max is None:  # no count spec to measure with — stay safe
@@ -257,8 +254,7 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
         # JUST-COMMITTED level files (the merged plan's own lineage would
         # re-read the level files this write replaced)
         if old.get("max_cell_rows") is not None:
-            count_col = next((s.out for s in specs
-                              if s.reducer == "count"), None)
+            count_col = count_column(specs)
             if count_col is not None:
                 row = io.read_level(spark, cell_z) \
                     .agg(F.max(count_col)).collect()[0]

@@ -13,10 +13,11 @@ Scale notes (100 TB / 1000 executors):
     key skew: Catalyst's map-side partial aggregation emits at most one row
     per (task, key), so a hot cell's final combine sees <= #tasks rows.
     No salt needed — adding one would only double the shuffle.
-  * Holistic reducers (union/collect_set, custom applyInPandas) DO
-    concentrate a hot cell's raw rows in one task.  ``salted_agg`` runs the
-    classic two-phase (key, salt)->key aggregation for those
-    (north_rule: explicit salted-key skew handling; SURVEY.md §7 g5).
+  * Holistic reducers (``aggspec.is_holistic``: union and kmvDistinct
+    merges; custom applyInPandas too) DO concentrate a hot cell's raw rows
+    in one task.  ``rollup_level(salt_buckets=...)`` runs the classic
+    two-phase (key, salt)->key aggregation for those (north_rule: explicit
+    salted-key skew handling; SURVEY.md §7 g5).
   * Each level shrinks keys 4x; AQE coalesces the post-shuffle partitions.
 """
 
@@ -26,34 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vt_grid_spark import functions as vf
-from vt_grid_spark.plans.aggspec import AggSpec, compile_rollup_aggs
-
-HOLISTIC = {"union", "kmvDistinct"}
-
-
-def _has_holistic(specs: list[AggSpec]) -> bool:
-    return any(s.reducer in HOLISTIC for s in specs)
-
-
-def _required_rollup_cols(specs: list[AggSpec]) -> list[str]:
-    """Input columns a rollup consumes.  Rollup input is by contract the
-    OUTPUT of compile_aggs/compile_rollup_aggs: the aggregate lives under
-    ``spec.out`` (partials under ``out__*``) — ``spec.field`` names the
-    base-level input column and is never read again above the base level."""
-    cols: list[str] = []
-    for s in specs:
-        if s.reducer == "mean":
-            cols += [f"{s.out}__cnt", f"{s.out}__sum"]
-        elif s.reducer == "areaWeightedMean":
-            cols += [f"{s.out}__w", f"{s.out}__wv"]
-        else:
-            cols.append(s.out)
-    return cols
+from vt_grid_spark.plans.aggspec import (AggSpec, compile_rollup_aggs, is_holistic,
+                                         partial_columns)
 
 
 def _check_rollup_input(cells: DataFrame, specs: list[AggSpec]) -> list[str]:
     """The aggregate columns a rollup reads; raises when any is missing."""
-    cols = _required_rollup_cols(specs)
+    cols = partial_columns(specs)
     missing = [c for c in cols if c not in cells.columns]
     if missing:
         raise ValueError(
@@ -75,7 +55,7 @@ def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
     px, py = vf.parent_xy(F.col("x"), F.col("y"))
     parented = cells.withColumn("_px", px).withColumn("_py", py)
 
-    if salt_buckets > 1 and _has_holistic(specs):
+    if salt_buckets > 1 and is_holistic(specs):
         # two-phase: partials per (parent, salt), then final per parent.
         salt = F.pmod(F.xxhash64("x", "y"), F.lit(salt_buckets))
         phase1 = (
@@ -129,7 +109,7 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
     is a rollup without the parent shift, so it inherits the same
     map-side-partial skew immunity for algebraic reducers."""
     keys = extra_keys or []
-    cols = ["x", "y", *keys, *_required_rollup_cols(specs)]
+    cols = ["x", "y", *keys, *partial_columns(specs)]
     for p in parts:
         missing = [c for c in cols if c not in p.columns]
         if missing:

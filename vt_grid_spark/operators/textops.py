@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vt_grid_spark.functions.sqltext import sq
+
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for",
            "on", "with", "as", "was", "at", "by", "an", "be", "this", "are"],
@@ -42,13 +44,6 @@ GOPHER = {
 
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
-def _sq(w: str) -> str:
-    """Single-quoted SQL string literal for generated array() text —
-    escapes backslashes and quotes so any word is safe to interpolate
-    (fr/it elision forms like l'/po' would otherwise break the parse)."""
-    return "'" + w.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 
 def tokens_col(text_col: str):
     """BPE-ish tokenization: alpha runs, digit runs, single punctuation.
@@ -68,7 +63,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     toks = tokens_col(text_col)
     ws = ws_tokens_col(text_col)
     stop_list = F.expr(  # one parse vs 40 py4j constructor calls
-        "array(" + ",".join(_sq(w) for w in STOPWORDS["en"]) + ")")
+        "array(" + ",".join(sq(w) for w in STOPWORDS["en"]) + ")")
     stop_hits = F.size(F.filter(ws, lambda t: F.array_contains(stop_list, t)))
     n_punct = F.size(F.filter(toks, lambda t: t.rlike("^[^A-Za-z0-9]$")))
     n_tokens = F.size(toks)
@@ -100,7 +95,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     out = df
     for lang, words in STOPWORDS.items():
         lst = F.expr(  # one parse vs 40 py4j constructor calls
-            "array(" + ",".join(_sq(w) for w in words) + ")")
+            "array(" + ",".join(sq(w) for w in words) + ")")
         out = out.withColumn(
             f"hits_{lang}",
             F.size(F.filter(ws, lambda t: F.array_contains(lst, t))).cast("long"))
@@ -167,7 +162,7 @@ def with_gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         (n_lines - F.size(F.array_distinct(lines))).cast("double") / nl, 6)
 
     stop_list = F.expr(  # one parse vs 40 py4j constructor calls
-        "array(" + ",".join(_sq(w) for w in STOPWORDS["en"]) + ")")
+        "array(" + ",".join(sq(w) for w in STOPWORDS["en"]) + ")")
     stop_hits = F.size(F.filter(ws, lambda t: F.array_contains(stop_list, t)))
 
     sentences = F.filter(F.transform(F.split(text, "[.!?]"), F.trim),

@@ -6,23 +6,16 @@ resolved from geojson-polygon-aggregate at lib/aggregate.js:18-25) and
 applies them once per (cell, feature).  Here a spec compiles to a list of
 ``F.agg`` expressions, and — crucially for the pyramid — each reducer knows
 its *rollup* form so level z-1 composes from level z's partials (the
-manual count→sum pattern of README.md:66-74, generalized):
+manual count→sum pattern of README.md:66-74, generalized).
 
-  count       -> base F.count(1)            rollup F.sum(cnt)
-  sum         -> F.sum(v)                   F.sum(sum_v)
-  min/max     -> F.min/max(v)               F.min/max
-  mean        -> partials (cnt, sum)        summed partials, mean = sum/cnt
-  areaWeightedMean -> partials (w_sum, wv_sum)  summed partials (README.md:49-61)
-  areaWeightedSum  -> F.sum(w*v)            F.sum
-  totalArea   -> F.sum(w)                   F.sum
-  union       -> sorted collect_set         flatten+re-distinct (README.md:101,154)
-  histQuantile-> linear-bucket count array  elementwise sum (exact merge);
-                 finalize reads p50/p95 off the cumulative counts
-
-:func:`compile_rollup_aggs` is the ONE definition of every reducer's merge
-rule: the per-level rollup (``rollup_level``), the batched pyramid tail
-(``rollup_ancestors``, all small upper levels in one aggregation) and the
-incremental merge (``merge_cells``) all aggregate with its combiners.
+:data:`REDUCERS` is the ONE definition of every reducer: its partial
+columns, base-level expressions, merge rule and finalizer.  Everything
+else is derived from it — ``compile_aggs``, ``compile_rollup_aggs``,
+``finalize_columns``, the rollup input contract (``partial_columns``) and
+the salting decision (``is_holistic``).  The per-level rollup
+(``rollup_level``), the batched pyramid tail (``rollup_ancestors``) and
+the incremental merge (``merge_cells``) all aggregate with its combiners;
+adding a reducer means adding one table entry.
 
 Custom reducers (reference lib/aggregate.js:26-36) are Python callables
 run via applyInPandas — see operators/custom_reduce.py.
@@ -33,19 +26,13 @@ applied after the agg.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from vt_grid_spark.functions.sqltext import bq
-
-VALID_REDUCERS = {
-    "count", "sum", "min", "max", "mean",
-    "areaWeightedMean", "areaWeightedSum", "totalArea", "union",
-    "kmvDistinct", "histQuantile",
-}
 
 # KMV hash domain: 60 uniform bits from md5 (same derivation the dedup
 # and simhash operators use, so DuckDB mirrors it exactly)
@@ -134,15 +121,145 @@ def parse_agg_strings(args: list[str]) -> dict[str, list[AggSpec]]:
     return out
 
 
-@dataclass
-class CompiledAggs:
-    exprs: list[Column]
-    finalize: dict[str, Column] = field(default_factory=dict)
-    post: dict[str, Callable[[], Column]] = field(default_factory=dict)
-
-
 def _w(spec: AggSpec) -> Column:
     return F.col(spec.weight) if spec.weight else F.lit(1.0)
+
+
+def _kmv_base(s: AggSpec) -> list[Column]:
+    h = F.expr(f"cast(conv(substring(md5(cast({bq(s.field)} as string)),"
+               f" 1, 15), 16, 10) as bigint)")
+    return [F.slice(F.array_sort(F.collect_set(h)), 1, s.k)]
+
+
+def _hist_base(s: AggSpec) -> list[Column]:
+    # fixed linear-bucket histogram as an array<bigint> of length
+    # ``buckets``: bucket = clamp(floor(v / width)).  EXACTLY mergeable
+    # (rollup = elementwise sum), deterministic, and DuckDB-oracle-checkable
+    # — the per-cell quantile sketch a 100 TB pyramid needs where
+    # collect-and-sort cannot run (percentile resolution = width, bounded
+    # state = buckets).  One F.expr over generated SQL text instead of ~8
+    # Column constructors per bucket (each a py4j round trip): the
+    # 32-bucket default cost ~0.2 s of pure DRIVER time per compile_aggs
+    # call.  CASE mirrors when/otherwise exactly and repr() round-trips the
+    # width double, so bucketing is bit-identical (oracle + merge-proof
+    # tests green).
+    b = (f"cast(least({s.buckets - 1}, greatest(0, "
+         f"floor({bq(s.field)} / {s.width!r}D))) as int)")
+    return [F.expr("array(" + ",".join(
+        f"sum(cast(CASE WHEN {b} = {i} THEN 1 ELSE 0 END as long))"
+        for i in range(s.buckets)) + ")")]
+
+
+def _kmv_estimate(s: AggSpec) -> dict[str, Column]:
+    kth = F.element_at(F.col(s.out), s.k)
+    return {f"{s.out}_est": F.when(
+        F.size(s.out) < s.k, F.size(s.out).cast("double")
+    ).otherwise(
+        F.round(F.lit(float(s.k - 1)) * F.lit(float(KMV_DOMAIN)) / kth, 4))}
+
+
+def _hist_quantiles(s: AggSpec) -> dict[str, Column]:
+    # q-quantile lower bound: first bucket whose cumulative count reaches
+    # ceil(q * total), reported as bucket_lo = idx * width.  Integer cumsums
+    # + an exact ceil comparison — deterministic, mirrored in the DuckDB
+    # oracle (whose per-prefix list_sum is the same monotone cumsum, so
+    # first-match == min-match).  Linear: ONE running-sum fold carrying
+    # (run, pos, hit) finds the index — a per-prefix re-sum was
+    # O(buckets^2) per row.  The threshold is hoisted through a
+    # single-element transform (nested higher-order lambdas capture outer
+    # variables) so the total fold runs once, not once per element.
+    col = bq(s.out)
+    total = f"aggregate({col}, 0L, (a, x) -> a + x)"
+    return {f"{s.out}_p{int(round(q * 100))}": F.expr(
+        f"cast(transform(array(ceil({q!r} * {total})), t -> "
+        f"aggregate({col}, "
+        f"named_struct('run', 0L, 'pos', 0, 'hit', -1), "
+        f"(a, x) -> named_struct("
+        f"'run', a.run + x, 'pos', a.pos + 1, "
+        f"'hit', CASE WHEN a.hit >= 0 THEN a.hit "
+        f"WHEN a.run + x >= t THEN a.pos ELSE -1 END), "
+        f"a -> a.hit))[0] * {s.width!r} as double)")
+        for q in s.quantiles}
+
+
+@dataclass(frozen=True)
+class Reducer:
+    """One reducer, defined once.
+
+    partials — suffixes of the stored columns, each named ``out + suffix``
+    base     — spec -> base-level aggregate expressions, one per partial
+    merge    — the combiner every partial rolls up with (a key of _MERGES);
+               each is a commutative monoid, so level z-1 is built from
+               level z's partials
+    finalize — spec -> presentation columns derived from the partials
+    """
+
+    partials: tuple[str, ...]
+    base: Callable[[AggSpec], list[Column]]
+    merge: str
+    finalize: Callable[[AggSpec], dict[str, Column]] | None = None
+
+
+_MERGES: dict[str, Callable[[AggSpec, str], Column]] = {
+    "sum": lambda s, c: F.sum(c),
+    "min": lambda s, c: F.min(c),
+    "max": lambda s, c: F.max(c),
+    # children carry sorted arrays; flatten + re-distinct
+    "union": lambda s, c: F.array_sort(F.array_distinct(
+        F.flatten(F.collect_list(c)))),
+    # k smallest of the union of children's k-smallest — exact
+    "kmv": lambda s, c: F.slice(F.array_sort(F.array_distinct(
+        F.flatten(F.collect_list(c)))), 1, s.k),
+    # elementwise sum of the children's bucket arrays — exact; generated
+    # SQL text for the same py4j-latency reason as the base-level compile
+    "hist": lambda s, c: F.expr("array(" + ",".join(
+        f"sum(element_at({bq(c)}, {i + 1}))" for i in range(s.buckets)) + ")"),
+}
+
+REDUCERS: dict[str, Reducer] = {
+    "count": Reducer(("",), lambda s: [F.count(F.lit(1))], "sum"),
+    "sum": Reducer(("",), lambda s: [F.sum(s.field)], "sum"),
+    "min": Reducer(("",), lambda s: [F.min(s.field)], "min"),
+    "max": Reducer(("",), lambda s: [F.max(s.field)], "max"),
+    "mean": Reducer(
+        ("__cnt", "__sum"),
+        lambda s: [F.count(s.field).cast("double"), F.sum(s.field)], "sum",
+        lambda s: {s.out: F.col(f"{s.out}__sum") / F.col(f"{s.out}__cnt")}),
+    # README.md:49-61
+    "areaWeightedMean": Reducer(
+        ("__w", "__wv"),
+        lambda s: [F.sum(_w(s)), F.sum(_w(s) * F.col(s.field))], "sum",
+        lambda s: {s.out: F.col(f"{s.out}__wv") / F.col(f"{s.out}__w")}),
+    "areaWeightedSum": Reducer(
+        ("",), lambda s: [F.sum(_w(s) * F.col(s.field))], "sum"),
+    "totalArea": Reducer(("",), lambda s: [F.sum(_w(s))], "sum"),
+    # README.md:101,154
+    "union": Reducer(
+        ("",), lambda s: [F.array_sort(F.collect_set(s.field))], "union"),
+    "kmvDistinct": Reducer(("",), _kmv_base, "kmv", _kmv_estimate),
+    "histQuantile": Reducer(("",), _hist_base, "hist", _hist_quantiles),
+}
+
+VALID_REDUCERS = frozenset(REDUCERS)
+
+
+def partial_columns(specs: list[AggSpec]) -> list[str]:
+    """The stored aggregate columns of ``specs``, in compile order: what a
+    rollup or merge reads.  Plain strings, no Column construction."""
+    return [s.out + p for s in specs for p in REDUCERS[s.reducer].partials]
+
+
+def is_holistic(specs: list[AggSpec]) -> bool:
+    """True when any spec's merge keeps a cell's values (union, kmv) rather
+    than a fixed-size summary: a hot cell's rows then meet in one task, so
+    rollups of these specs salt."""
+    return any(REDUCERS[s.reducer].merge in ("union", "kmv") for s in specs)
+
+
+def count_column(specs: list[AggSpec]) -> str | None:
+    """Output column of the first ``count`` spec (the per-cell point
+    count the hot-key bookkeeping reads), or None."""
+    return next((s.out for s in specs if s.reducer == "count"), None)
 
 
 def compile_aggs(specs: list[AggSpec]) -> list[Column]:
@@ -154,49 +271,9 @@ def compile_aggs(specs: list[AggSpec]) -> list[Column]:
     """
     out: list[Column] = []
     for s in specs:
-        if s.reducer == "count":
-            out.append(F.count(F.lit(1)).alias(s.out))
-        elif s.reducer == "sum":
-            out.append(F.sum(s.field).alias(s.out))
-        elif s.reducer == "min":
-            out.append(F.min(s.field).alias(s.out))
-        elif s.reducer == "max":
-            out.append(F.max(s.field).alias(s.out))
-        elif s.reducer == "mean":
-            out.append(F.count(s.field).cast("double").alias(f"{s.out}__cnt"))
-            out.append(F.sum(s.field).alias(f"{s.out}__sum"))
-        elif s.reducer == "areaWeightedMean":
-            out.append(F.sum(_w(s)).alias(f"{s.out}__w"))
-            out.append(F.sum(_w(s) * F.col(s.field)).alias(f"{s.out}__wv"))
-        elif s.reducer == "areaWeightedSum":
-            out.append(F.sum(_w(s) * F.col(s.field)).alias(s.out))
-        elif s.reducer == "totalArea":
-            out.append(F.sum(_w(s)).alias(s.out))
-        elif s.reducer == "union":
-            out.append(F.array_sort(F.collect_set(s.field)).alias(s.out))
-        elif s.reducer == "kmvDistinct":
-            h = F.expr(f"cast(conv(substring(md5(cast({s.field} as string)),"
-                       f" 1, 15), 16, 10) as bigint)")
-            out.append(F.slice(F.array_sort(F.collect_set(h)), 1, s.k)
-                       .alias(s.out))
-        elif s.reducer == "histQuantile":
-            # fixed linear-bucket histogram as an array<bigint> of length
-            # ``buckets``: bucket = clamp(floor(v / width)).  EXACTLY
-            # mergeable (rollup = elementwise sum), deterministic, and
-            # DuckDB-oracle-checkable — the per-cell quantile sketch a
-            # 100 TB pyramid needs where collect-and-sort cannot run
-            # (percentile resolution = width, bounded state = buckets).
-            # one F.expr over generated SQL text instead of ~8 Column
-            # constructors per bucket (each a py4j round trip): the
-            # 32-bucket default cost ~0.2 s of pure DRIVER time per
-            # compile_aggs call.  CASE mirrors when/otherwise exactly and
-            # repr() round-trips the width double, so bucketing is
-            # bit-identical (oracle + merge-proof tests green).
-            b = (f"cast(least({s.buckets - 1}, greatest(0, "
-                 f"floor({bq(s.field)} / {s.width!r}D))) as int)")
-            out.append(F.expr("array(" + ",".join(
-                f"sum(cast(CASE WHEN {b} = {i} THEN 1 ELSE 0 END as long))"
-                for i in range(s.buckets)) + ")").alias(s.out))
+        r = REDUCERS[s.reducer]
+        out += [e.alias(s.out + p)
+                for p, e in zip(r.partials, r.base(s), strict=True)]
     return out
 
 
@@ -207,39 +284,8 @@ def compile_rollup_aggs(specs: list[AggSpec]) -> list[Column]:
     rollup input is by contract the output of :func:`compile_aggs`, where
     the base-level ``field`` has already been folded into ``out``.
     ``rollup_level`` validates the input frame against this contract."""
-    out: list[Column] = []
-    for s in specs:
-        if s.reducer in ("count", "sum", "areaWeightedSum", "totalArea"):
-            out.append(F.sum(s.out).alias(s.out))
-        elif s.reducer == "min":
-            out.append(F.min(s.out).alias(s.out))
-        elif s.reducer == "max":
-            out.append(F.max(s.out).alias(s.out))
-        elif s.reducer == "mean":
-            out.append(F.sum(f"{s.out}__cnt").alias(f"{s.out}__cnt"))
-            out.append(F.sum(f"{s.out}__sum").alias(f"{s.out}__sum"))
-        elif s.reducer == "areaWeightedMean":
-            out.append(F.sum(f"{s.out}__w").alias(f"{s.out}__w"))
-            out.append(F.sum(f"{s.out}__wv").alias(f"{s.out}__wv"))
-        elif s.reducer == "union":
-            # children carry sorted arrays; flatten + re-distinct
-            out.append(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list(s.out)))).alias(s.out)
-            )
-        elif s.reducer == "kmvDistinct":
-            # k smallest of the union of children's k-smallest — exact
-            out.append(
-                F.slice(F.array_sort(F.array_distinct(
-                    F.flatten(F.collect_list(s.out)))), 1, s.k).alias(s.out)
-            )
-        elif s.reducer == "histQuantile":
-            # elementwise sum of the children's bucket arrays — exact
-            # merge; generated SQL text for the same py4j-latency reason
-            # as the base-level compile (one F.expr vs 4/bucket)
-            out.append(F.expr("array(" + ",".join(
-                f"sum(element_at({bq(s.out)}, {i + 1}))"
-                for i in range(s.buckets)) + ")").alias(s.out))
-    return out
+    return [_MERGES[REDUCERS[s.reducer].merge](s, s.out + p).alias(s.out + p)
+            for s in specs for p in REDUCERS[s.reducer].partials]
 
 
 def finalize_columns(specs: list[AggSpec]) -> dict[str, Column]:
@@ -247,37 +293,7 @@ def finalize_columns(specs: list[AggSpec]) -> dict[str, Column]:
     exporting; partial columns stay in the table for the next rollup)."""
     out: dict[str, Column] = {}
     for s in specs:
-        if s.reducer == "mean":
-            out[s.out] = F.col(f"{s.out}__sum") / F.col(f"{s.out}__cnt")
-        elif s.reducer == "areaWeightedMean":
-            out[s.out] = F.col(f"{s.out}__wv") / F.col(f"{s.out}__w")
-        elif s.reducer == "kmvDistinct":
-            kth = F.element_at(F.col(s.out), s.k)
-            out[f"{s.out}_est"] = F.when(
-                F.size(s.out) < s.k, F.size(s.out).cast("double")
-            ).otherwise(
-                F.round(F.lit(float(s.k - 1)) * F.lit(float(KMV_DOMAIN)) / kth, 4))
-        elif s.reducer == "histQuantile":
-            # q-quantile lower bound: first bucket whose cumulative count
-            # reaches ceil(q * total), reported as bucket_lo = idx * width.
-            # Integer cumsums + an exact ceil comparison — deterministic,
-            # mirrored in the DuckDB oracle (whose per-prefix list_sum is
-            # the same monotone cumsum, so first-match == min-match).
-            # Linear: ONE running-sum fold carrying (run, pos, hit) finds
-            # the index — a per-prefix re-sum was O(buckets^2) per row.
-            # The threshold is hoisted through a single-element transform
-            # (nested higher-order lambdas capture outer variables) so
-            # the total fold runs once, not once per element.
-            total = f"aggregate({s.out}, 0L, (a, x) -> a + x)"
-            for q in s.quantiles:
-                name = f"{s.out}_p{int(round(q * 100))}"
-                out[name] = F.expr(
-                    f"cast(transform(array(ceil({q!r} * {total})), t -> "
-                    f"aggregate({s.out}, "
-                    f"named_struct('run', 0L, 'pos', 0, 'hit', -1), "
-                    f"(a, x) -> named_struct("
-                    f"'run', a.run + x, 'pos', a.pos + 1, "
-                    f"'hit', CASE WHEN a.hit >= 0 THEN a.hit "
-                    f"WHEN a.run + x >= t THEN a.pos ELSE -1 END), "
-                    f"a -> a.hit))[0] * {s.width!r} as double)")
+        fin = REDUCERS[s.reducer].finalize
+        if fin is not None:
+            out.update(fin(s))
     return out

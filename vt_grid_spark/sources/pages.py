@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vt_grid_spark.functions.sqltext import sq
+
 LANGS = ["en", "de", "fr", "es", "pt", "zh", "ja", "ru", "ar", "hi"]
 
 # rows per scale-factor directory (keyed by basename of the sf dir)
@@ -62,7 +64,7 @@ def pages_df(spark: SparkSession, n: int, partitions: int | None = None) -> Data
     text = ("concat('page ', cast(id as string), "
             "' lorem ipsum dolor w', cast(id % 7 as string), "
             f"{geo_tok}, {geo2_tok}, ' tail', cast(id % 13 as string))")
-    langs = ", ".join(f"'{l}'" for l in LANGS)
+    langs = ", ".join(sq(l) for l in LANGS)
     return spark.range(0, n, 1, partitions).selectExpr(
         "concat('https://site', cast(id % 1000 as string), "
         "'.example/page/', cast(id as string)) AS url",
@@ -80,6 +82,7 @@ def pages_cte_sql(n: int) -> str:
     """DuckDB CTE producing the identical corpus (minus html/warc_ts, which
     no oracle query consumes).  Use as ``WITH pages AS ({this}) SELECT ...``.
     """
+    # DuckDB reads a backslash literally, so not sqltext.sq (Spark-only)
     langs = ", ".join(f"'{l}'" for l in LANGS)
     return f"""
 SELECT

@@ -63,7 +63,6 @@ class TableIO:
 
     # -- write ---------------------------------------------------------------
     def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None,
-                    partition_cols: int | None = None,
                     cluster: bool = False,
                     cluster_partitions: int | None = None,
                     stage: bool = False) -> dict:
@@ -118,20 +117,20 @@ class TableIO:
         for name in sorted(os.listdir(path)):
             if name.endswith(".parquet"):
                 files[name] = pq.read_metadata(os.path.join(path, name)).num_rows
-        manifest = {
+        return self._commit_level(zoom, files, lineage, cluster)
+
+    def _commit_level(self, zoom: int, files: dict, lineage: dict | None,
+                      clustered: bool) -> dict:
+        """Mark a fully written level complete (write-then-commit)."""
+        return self._commit_manifest({
             "zoom": zoom,
             "status": "complete",
             "row_count": int(sum(files.values())),
             "files": files,
             "lineage": lineage or {},
-            "clustered": bool(cluster),
+            "clustered": bool(clustered),
             "completed_at": time.time(),
-        }
-        tmp = self.manifest_path(zoom) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.manifest_path(zoom))
-        return manifest
+        })
 
     def cluster_level(self, spark: SparkSession, zoom: int,
                       partitions: int | None = None) -> dict:
@@ -153,11 +152,17 @@ class TableIO:
         write-then-replace as the original commit)."""
         m = self.read_manifest(zoom)
         m.update(extra)
-        tmp = self.manifest_path(zoom) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.manifest_path(zoom))
-        return m
+        return self._commit_manifest(m)
+
+    def _commit_manifest(self, manifest: dict) -> dict:
+        """Write a manifest to a sibling ``.tmp`` and rename it over the
+        old one, so a reader sees the old manifest or the new one, never a
+        partial file."""
+        path = self.manifest_path(manifest["zoom"])
+        with open(path + ".tmp", "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
+        return manifest
 
     # -- read / resume ---------------------------------------------------------
     def level_complete(self, zoom: int) -> bool:
@@ -188,19 +193,8 @@ class TableIO:
         out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
         pq.write_table(pa.Table.from_pandas(out, preserve_index=False),
                        os.path.join(path, fname))
-        manifest = {
-            "zoom": zoom,
-            "status": "complete",
-            "row_count": int(len(out)),
-            "files": {fname: int(len(out))},
-            "lineage": lineage or {},
-            "completed_at": time.time(),
-        }
-        tmp = self.manifest_path(zoom) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.manifest_path(zoom))
-        return manifest
+        return self._commit_level(zoom, {fname: int(len(out))}, lineage,
+                                  clustered=False)
 
 
 class CatalogTableIO(TableIO):
@@ -277,8 +271,7 @@ class CatalogTableIO(TableIO):
         return json.loads(rows[0].manifest) if rows else None
 
     # -- the four-method contract -------------------------------------------------
-    def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None,
-                    partition_cols: int | None = None) -> dict:
+    def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None) -> dict:
         out = df.drop("zoom") if "zoom" in df.columns else df
         name = self.level_table(zoom)
         try:
