@@ -153,19 +153,26 @@ def test_catalog_tableio_contract(spark):
     CatalogTableIO docstring).  Deliberately NO skip escape: if the
     catalog rejects V2 writes this must FAIL loudly, not vanish from the
     suite (round-3 finding)."""
+    from vt_grid_spark.operators.pyramid import incremental_update
     from vt_grid_spark.sources.table_io import CatalogTableIO
 
     io = CatalogTableIO(spark, namespace="vtg_test", prefix="p1")
 
-    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6, aggregations=SPECS[:2])],
+    specs = SPECS[:2] + [SPECS[5]]  # union: max_cell_rows is tracked
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6, aggregations=specs)],
                        gridsize=16)
     pts = _points(spark, 1500)
+
+    def max_cnt(z):
+        return io.read_level(spark, z).agg(F.max("cnt")).collect()[0][0]
+
     try:
         m1 = build_pyramid(pts, plan, io)
         assert sorted(m1) == [8, 9]  # cell zooms for outputs 7 (base), 6
         for z, man in m1.items():
             assert man["status"] == "complete" and man["row_count"] > 0
             assert spark.table(io.level_table(z)).count() == man["row_count"]
+            assert man["max_cell_rows"] == max_cnt(z)  # observed on the write
 
         # resume: every level complete -> nothing re-runs
         m2 = build_pyramid(pts, plan, io)
@@ -180,6 +187,13 @@ def test_catalog_tableio_contract(spark):
             b = {(r.x, r.y, r.cnt, r.sum_v)
                  for r in mem.where(F.col("zoom") == z).collect()}
             assert a == b
+
+        # a fold on this backend observes max_cell_rows on its eager
+        # checkpoint; folding the same points doubles every count
+        m3 = incremental_update(pts, plan, io)
+        for z in m1:
+            assert m3[z]["row_count"] == m1[z]["row_count"]
+            assert m3[z]["max_cell_rows"] == 2 * m1[z]["max_cell_rows"] == max_cnt(z)
 
         # manifest journal is append-only: amend adds a row, latest wins
         before = spark.table(io._manifest_tbl).count()
@@ -508,7 +522,79 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
         got, want = norm(io_inc.read_level(spark, z)), norm(io_full.read_level(spark, z))
         assert got == want and len(got) > 0, f"zoom {z} diverged"
         assert man[z]["row_count"] == man_full[z]["row_count"]
+        assert man[z]["max_cell_rows"] == man_full[z]["max_cell_rows"]
     pts.unpersist()
+
+
+def _jobs_started(spark, fn):
+    """Number of Spark jobs with no job group that ``fn()`` starts.  The
+    status tracker is fed asynchronously, so a fenced job (its own group)
+    runs afterwards and the count is read once the fence is visible: the
+    tracker sees job starts in order."""
+    import time
+
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    sc.setJobGroup("job-audit-fence", "job-audit-fence")
+    try:
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(200):
+        if sc.statusTracker().getJobIdsForGroup("job-audit-fence"):
+            break
+        time.sleep(0.05)
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
+def test_incremental_update_job_audit(spark, tmp_path):
+    """A one-level fold with the benchmark's count + sum + union plan
+    computes the delta partials once (an eager localCheckpoint) and takes
+    max_cell_rows from the merge write itself: 6 jobs, none of which
+    recomputes the delta or re-reads the committed level.  With the
+    partials lazily persisted instead, the merge's concurrent query stages
+    each recomputed them and a read-back of the level followed: 12 jobs."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    specs = [AggSpec(out="cnt", reducer="count"),
+             AggSpec(out="sum_v", reducer="sum", field="v"),
+             AggSpec(out="langs", reducer="union", field="lang")]
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=8, aggregations=specs)],
+                       gridsize=1)
+    pts = _points(spark, 3000)
+    a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
+    b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(a, plan, io, resume=False)
+    assert [z for _, z, _ in plan.levels()] == [8]
+
+    man = {}
+    n_jobs = _jobs_started(spark, lambda: man.update(incremental_update(b, plan, io)))
+    assert man[8]["lineage"]["op"] == "incremental-merge"
+    assert man[8]["max_cell_rows"] == \
+        io.read_level(spark, 8).agg(F.max("cnt")).collect()[0][0]
+    assert n_jobs == 6, n_jobs
+
+
+def test_empty_cover_build_records_zero_max(spark, tmp_path):
+    """A cover that holds none of the points gives empty levels, Spark base
+    and driver-side tail alike; with a holistic reducer each records
+    max_cell_rows == 0 instead of failing on the empty max."""
+    plan = PyramidPlan(
+        bands=[ZoomBand(basezoom=8, minzoom=5,
+                        aggregations=[AggSpec(out="cnt", reducer="count"),
+                                      AggSpec(out="langs", reducer="union",
+                                              field="lang")])],
+        gridsize=16, bbox=(-60, -40, -50, -30))
+    pts = _points(spark, 1500)
+    assert pts.where(F.col("lon").between(-60, -50)
+                     & F.col("lat").between(-40, -30)).count() == 0
+    man = build_pyramid(pts, plan, TableIO(str(tmp_path / "pyr")), resume=False)
+    assert sorted(man) == [7, 8, 9]
+    for z, m in man.items():
+        assert m["status"] == "complete" and m["row_count"] == 0, z
+        assert m["max_cell_rows"] == 0, z
 
 
 def test_incremental_update_requires_complete_pyramid(spark, tmp_path):

@@ -19,7 +19,7 @@ the one place a reducer's merge rule is defined.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from vt_grid_spark import tilemath as tm
@@ -55,6 +55,24 @@ def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame
     return encode_points(pre, cell_z).where(cover_cell_predicate(ranges))
 
 
+def _observe_max(df: DataFrame, count_col: str | None):
+    """``(df, obs)``: ``df`` with the max per-cell point count observed on
+    the job that next materializes it — the level's own write — so
+    ``max_cell_rows`` costs no Spark job of its own.  ``obs`` is None when
+    there is nothing to track (``count_col`` None); read it with
+    :func:`_observed_max` after that job."""
+    if count_col is None:
+        return df, None
+    obs = Observation()
+    return df.observe(obs, F.max(count_col).alias("mx")), obs
+
+
+def _observed_max(obs: Observation) -> int:
+    """The max an :func:`_observe_max` write saw; 0 for an empty level."""
+    mx = obs.get["mx"]
+    return int(mx) if mx is not None else 0
+
+
 def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                   resume: bool = True, repartition: int | None = None) -> dict:
     """points(lon, lat, value columns) -> one written level per output zoom.
@@ -75,23 +93,19 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
     # hot-key bookkeeping (SURVEY.md §7 g5 re-salt rule): holistic reducers
     # concentrate a hot cell's values in one task, so each level's manifest
     # records max_cell_rows (the max per-cell point count, read from the
-    # count aggregate) and the NEXT rollup salts only when it exceeds
-    # plan.hot_key_threshold.  Plans with no holistic reducer skip all of
-    # this — algebraic aggs are skew-immune via map-side partials.
+    # count aggregate: observed on a Spark level's write job, taken from the
+    # collected rows of a tail level) and the NEXT rollup salts only when it
+    # exceeds plan.hot_key_threshold.  Plans with no holistic reducer skip
+    # all of this — algebraic aggs are skew-immune via map-side partials.
     all_specs = [s for b in plan.bands for s in b.aggregations]
-    any_holistic = is_holistic(all_specs)
-    count_col = count_column(all_specs)
+    count_col = count_column(all_specs) if is_holistic(all_specs) else None
 
-    def _track_max(zoom: int, pdf=None, df=None) -> None:
-        if not any_holistic or count_col is None:
-            return
-        if pdf is not None:
-            mx = int(pdf[count_col].max())
-        else:
-            src = df if df is not None else io.read_level(spark, zoom)
-            row = src.agg(F.max(count_col)).collect()[0]
-            mx = int(row[0]) if row[0] is not None else 0
-        manifests[zoom] = io.amend_manifest(zoom, max_cell_rows=mx)
+    def _write_spark_level(df: DataFrame, zoom: int, lineage: dict) -> None:
+        df, obs = _observe_max(df, count_col)
+        manifests[zoom] = io.write_level(df, zoom, lineage=lineage)
+        if obs is not None:
+            manifests[zoom] = io.amend_manifest(zoom,
+                                                max_cell_rows=_observed_max(obs))
 
     def _salt_for(prev_zoom: int, band) -> int:
         if plan.salt_buckets <= 1 or not is_holistic(band.aggregations):
@@ -111,12 +125,9 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
             encoded = encoded.repartition(repartition, "x", "y")
         base = cell_aggregate(encoded, base_cell_z,
                               compile_aggs(base_band.aggregations)).persist()
-        manifests[base_cell_z] = io.write_level(
-            base, base_cell_z,
-            lineage={"input": "points", "op": "encode+aggregate",
-                     "output_tile_zoom": base_output_z},
-        )
-        _track_max(base_cell_z, df=base)
+        _write_spark_level(base, base_cell_z,
+                           {"input": "points", "op": "encode+aggregate",
+                            "output_tile_zoom": base_output_z})
         prev_df = base
 
     # --- rollup levels -------------------------------------------------------
@@ -155,20 +166,20 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                 lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
                          "output_tile_zoom": output_z},
             )
-            _track_max(cell_z, pdf=pdf)
+            if count_col is not None:
+                # an empty level (cover outside every point) records 0
+                mx = int(pdf[count_col].max()) if len(pdf) else 0
+                manifests[cell_z] = io.amend_manifest(cell_z, max_cell_rows=mx)
         else:
             salt = _salt_for(prev_cell_z, band)
             children = (prev_df if prev_df is not None
                         else io.read_level(spark, prev_cell_z))
             level = rollup_level(children, prev_cell_z, band.aggregations,
                                  salt_buckets=salt).persist()
-            manifests[cell_z] = io.write_level(
-                level, cell_z,
-                lineage={"input": f"zoom={prev_cell_z}", "op": "rollup",
-                         "output_tile_zoom": output_z, "salted": salt > 1,
-                         "salt_buckets": salt},
-            )
-            _track_max(cell_z, df=level)
+            _write_spark_level(level, cell_z,
+                               {"input": f"zoom={prev_cell_z}", "op": "rollup",
+                                "output_tile_zoom": output_z, "salted": salt > 1,
+                                "salt_buckets": salt})
             if prev_df is not None:
                 prev_df.unpersist()
             prev_df = level
@@ -188,13 +199,17 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     monoid, so merge(existing_level, rollup(delta)) == rebuild over the
     union — asserted level-by-level in tests/test_pyramid.py).
 
-    Scale shape (100 TB pyramid, small delta): per level the delta touches
-    |delta cells| keys — broadcast that key set, route untouched existing
-    rows through a broadcast LEFT ANTI join (no shuffle of the big table),
-    and hash-merge only the touched slice with the delta partials.  Cost
-    per level = one scan of the level + one tiny shuffle of the touched
-    slice, instead of a full rebuild from raw points.  Deletes are out of
-    scope (append-only corpus, min/max/union/kmv are insert-monotone).
+    Scale shape (100 TB pyramid, small delta): the delta's partials are
+    computed once per level, up front, by an eager localCheckpoint (one
+    job each, which reads ``delta_points`` exactly once for the base
+    level).  Per level the delta touches |delta cells| keys — broadcast
+    that key set from the checkpoint, route untouched existing rows
+    through a broadcast LEFT ANTI join (no shuffle of the big table), and
+    hash-merge only the touched slice with the delta partials.  Cost per
+    level = one scan of the level + one tiny shuffle of the touched slice,
+    instead of a full rebuild from raw points.  ``max_cell_rows`` is
+    observed on the level's own write job.  Deletes are out of scope
+    (append-only corpus, min/max/union/kmv are insert-monotone).
     """
     spark = delta_points.sparkSession
     levels = list(plan.levels())
@@ -208,19 +223,23 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
 
     manifests: dict[int, dict] = {}
     staged = type(io).write_level is TableIO.write_level
-    # phase 1 — the per-level delta partial chain, ALL levels persisted up
-    # front (r6): the r5 loop unpersisted each level before its child
-    # materialized, so every level's broadcast re-ran the whole delta
-    # aggregation from raw points.  The chain is materialized by the merge
-    # jobs below and released once every level is committed.
+    # phase 1 — the per-level delta partial chain, each level computed ONCE
+    # by an eager localCheckpoint before any merge starts.  It must be
+    # eager: a lazy persist is filled by nobody before the merge's
+    # concurrent query stages start, so each of them would recompute the
+    # partials, at full shuffle width (AQE does not coalesce a cached
+    # plan's output).  The checkpoint is AQE-coalesced (a small delta
+    # becomes one partition) and its blocks are reclaimed with the
+    # DataFrames.
     cur = cell_aggregate(_apply_cover(delta_points, plan, base_cell_z),
-                         base_cell_z,
-                         compile_aggs(base_band.aggregations)).persist()
+                         base_cell_z, compile_aggs(base_band.aggregations)
+                         ).localCheckpoint(eager=True)
     work: list[tuple] = []
     prev_cell_z = None
     for output_z, cell_z, band in levels:
         if prev_cell_z is not None:
-            cur = rollup_level(cur, prev_cell_z, band.aggregations).persist()
+            cur = rollup_level(cur, prev_cell_z,
+                               band.aggregations).localCheckpoint(eager=True)
         work.append((output_z, cell_z, band, cur))
         prev_cell_z = cell_z
 
@@ -233,16 +252,20 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
         touched = existing.join(F.broadcast(keys), ["x", "y"], "left_semi")
         merged = merge_cells([touched, delta], cell_z, specs)
         cols = merged.columns
+        old = io.read_manifest(cell_z)
+        # hot-key bookkeeping stays valid: max_cell_rows is observed on the
+        # job that materializes the new level, never by re-reading it
+        track = old.get("max_cell_rows") is not None
+        new_level, obs = _observe_max(untouched.select(*cols).unionByName(merged),
+                                      count_column(specs) if track else None)
         # staged write (r6): the merged plan lazily reads the level it
         # replaces, so the parquet backend writes to a sibling dir and
         # swaps after success — ONE materialization per level instead of
         # an eager localCheckpoint followed by a second full write.  The
         # catalog backend has no stage knob; fall back to the checkpoint
         # there (createOrReplace may not be atomic against its own input).
-        new_level = untouched.select(*cols).unionByName(merged)
         if not staged:
             new_level = new_level.localCheckpoint(eager=True)
-        old = io.read_manifest(cell_z)
         lineage = {"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
                    "output_tile_zoom": output_z,
                    "previous_row_count": old.get("row_count")}
@@ -250,16 +273,8 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
             m = io.write_level(new_level, cell_z, lineage=lineage, stage=True)
         else:
             m = io.write_level(new_level, cell_z, lineage=lineage)
-        # hot-key bookkeeping stays valid: recompute the max over the
-        # JUST-COMMITTED level files (the merged plan's own lineage would
-        # re-read the level files this write replaced)
-        if old.get("max_cell_rows") is not None:
-            count_col = count_column(specs)
-            if count_col is not None:
-                row = io.read_level(spark, cell_z) \
-                    .agg(F.max(count_col)).collect()[0]
-                mx = int(row[0]) if row[0] is not None else 0
-                m = io.amend_manifest(cell_z, max_cell_rows=mx)
+        if obs is not None:
+            m = io.amend_manifest(cell_z, max_cell_rows=_observed_max(obs))
         return cell_z, m
 
     # phase 2 — once the delta chain exists the per-level merges are
@@ -274,8 +289,6 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     with ThreadPoolExecutor(max_workers=max(workers, 1)) as pool:
         for cell_z, m in pool.map(_merge_level, work):
             manifests[cell_z] = m
-    for *_, d in work:
-        d.unpersist()
     return manifests
 
 

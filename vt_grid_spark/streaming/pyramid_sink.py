@@ -126,19 +126,16 @@ class PyramidStreamSink:
         # stage — wipe and redo (CURRENT never pointed at it)
         shutil.rmtree(stage, ignore_errors=True)
 
-        # localCheckpoint: the fold runs one job per level over the delta
-        # — without it each level would re-read the stream batch's files
-        batch = batch.localCheckpoint()
-        try:
-            if cur["gen"] is None:
-                build_pyramid(batch, self.plan, TableIO(stage), resume=False)
-            else:
-                _link_tree(os.path.join(self.root, cur["gen"]), stage)
-                incremental_update(batch, self.plan, TableIO(stage))
-            self._commit(stage_name, batch_id)
-            self._gc(keep=stage_name)
-        finally:
-            batch.unpersist()
+        # no checkpoint of the batch here: the bootstrap build persists its
+        # base level during the level's write and the fold checkpoints its
+        # delta partials before any merge, so either reads the batch once
+        if cur["gen"] is None:
+            build_pyramid(batch, self.plan, TableIO(stage), resume=False)
+        else:
+            _link_tree(os.path.join(self.root, cur["gen"]), stage)
+            incremental_update(batch, self.plan, TableIO(stage))
+        self._commit(stage_name, batch_id)
+        self._gc(keep=stage_name)
 
 
 def maintain_pyramid(stream: DataFrame, plan: PyramidPlan, root: str,
