@@ -1,13 +1,19 @@
 """CLI surface (python -m vt_grid_spark) — the reference bin/vt-grid
 migration path, driven end-to-end in-process."""
 
-import json
 import sqlite3
 
 from pyspark.sql import functions as F
 
 from vt_grid_spark.__main__ import build_parser, main
 from vt_grid_spark.sources import pages
+from vt_grid_spark.sources.table_io import TableIO
+
+
+def _level_files(spark, out, z):
+    """A level read straight from its ``zoom=<z>`` directory, which after
+    a publish holds exactly the live generation one directory down."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(f"{out}/zoom={z}")
 
 
 def test_cli_parquet_build_and_export(spark, tmp_path, monkeypatch):
@@ -24,9 +30,9 @@ def test_cli_parquet_build_and_export(spark, tmp_path, monkeypatch):
 
     # manifests + levels exist (cell zooms 8,7 for outputs 6,5 at 4x4 grid)
     for z in (8, 7):
-        m = json.load(open(f"{out}/_manifest/z{z}.json"))
+        m = TableIO(out).read_manifest(z)
         assert m["status"] == "complete" and m["row_count"] > 0
-        assert spark.read.parquet(f"{out}/zoom={z}").count() == m["row_count"]
+        assert _level_files(spark, out, z).count() == m["row_count"]
 
     # the exported mbtiles re-ingests to the same cell counts
     con = sqlite3.connect(f"{out}/grid.mbtiles")
@@ -36,7 +42,7 @@ def test_cli_parquet_build_and_export(spark, tmp_path, monkeypatch):
     from vt_grid_spark.sources import mvt
     feats = mvt.decode_tiles_df(mvt.read_mbtiles(spark, f"{out}/grid.mbtiles"))
     got = feats.where(F.col("z") == 6).count()
-    assert got == json.load(open(f"{out}/_manifest/z8.json"))["row_count"]
+    assert got == TableIO(out).read_manifest(8)["row_count"]
 
 
 def test_cli_mbtiles_input_roundtrip(spark, tmp_path):
@@ -57,7 +63,7 @@ def test_cli_mbtiles_input_roundtrip(spark, tmp_path):
     rc = main([src, "-o", out, "--minzoom", "4", "--gridsize", "4",
                "--aggregations", "pages:count()", "pages:sum(v)", "--quiet"])
     assert rc == 0
-    base = spark.read.parquet(f"{out}/zoom=6")  # basezoom 6 + log4(4)=1 -> 7? see below
+    base = _level_files(spark, out, 6)  # basezoom 6 + log4(4)=1 -> 7? see below
     # basezoom defaults to input maxzoom (6); base cell zoom = 6 (output 5 + 1)
     total = base.agg(F.sum("count").alias("s")).collect()[0].s \
         if "count" in base.columns else base.agg(F.sum("cnt")).collect()[0][0]
@@ -103,10 +109,10 @@ def test_cli_reducer_module_build(spark, tmp_path):
     # cell zooms 7, 6 (output 6, 5 at 2x2 grid); medians are re-reduced
     # from raw per level, so every level's n must sum to the input size
     for z in (7, 6):
-        m = json.load(open(f"{out}/_manifest/z{z}.json"))
+        m = TableIO(out).read_manifest(z)
         assert m["status"] == "complete" and m["row_count"] > 0
         assert m["lineage"]["op"] == "custom-reduce"
-        lvl = spark.read.parquet(f"{out}/zoom={z}")
+        lvl = _level_files(spark, out, z)
         assert lvl.agg(F.sum("n")).collect()[0][0] == n_pts
         assert set(lvl.columns) >= {"x", "y", "quadkey", "median_chars", "n"}
 

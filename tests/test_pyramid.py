@@ -3,7 +3,9 @@
 checkpoint/resume behavior."""
 
 import os
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from vt_grid_spark.operators.pyramid import build_pyramid, build_pyramid_df
@@ -75,27 +77,76 @@ def test_union_and_mean_semantics(spark):
         assert r.min_v <= r.mean_v <= r.max_v
 
 
-def test_checkpoint_resume(spark, tmp_path):
+def _crash_writes(monkeypatch, before=(), after=()):
+    """Fault injection: wrap TableIO's two level writers.  The n-th write
+    to start raises before writing if n is in ``before`` (once an earlier
+    write has finished, so at least one level is written), and the n-th
+    write to finish raises after writing if n is in ``after``.  Returns
+    the records of the finished writes, by zoom."""
+    lock, finished = threading.Lock(), threading.Event()
+    count = {"start": 0, "done": 0}
+    records = {}
+
+    def wrap(write):
+        def crashing(self, data, zoom, *args, **kwargs):
+            with lock:
+                count["start"] += 1
+                n = count["start"]
+            if n in before:
+                if n > 1:
+                    finished.wait(600)
+                raise RuntimeError("injected crash")
+            try:
+                records[zoom] = write(self, data, zoom, *args, **kwargs)
+            finally:
+                finished.set()
+            with lock:
+                count["done"] += 1
+                n = count["done"]
+            if n in after:
+                raise RuntimeError("injected crash")
+            return records[zoom]
+        return crashing
+
+    for name in ("write_level", "write_level_pandas"):
+        monkeypatch.setattr(TableIO, name, wrap(getattr(TableIO, name)))
+    return records
+
+
+def _level_rows(io, spark, zooms):
+    """Every level of ``io`` as a set of row tuples."""
+    cols = [c for c in io.read_level(spark, zooms[0]).columns if c != "zoom"]
+    return {z: _rows(io.read_level(spark, z), cols) for z in zooms}
+
+
+def test_checkpoint_resume(spark, tmp_path, monkeypatch):
     io = TableIO(str(tmp_path / "pyr"))
     plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS[:2])],
                        gridsize=16)
     pts = _points(spark, 1500)
-    m1 = build_pyramid(pts, plan, io)
+
+    # a kill after the base level: the second level write crashes, so the
+    # base level is staged and nothing is published
+    staged = _crash_writes(monkeypatch, before={2})
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(pts, plan, io)
+    monkeypatch.undo()
+    assert sorted(staged) == [9]
+    assert not any(io.level_complete(z) for z in (7, 8, 9))
+
+    m1 = build_pyramid(pts, plan, io)  # resume
     assert sorted(m1) == [7, 8, 9]  # cell zooms for output 7,6,5 at gridsize 16
     for z, man in m1.items():
         assert man["status"] == "complete"
         assert man["row_count"] > 0
         assert man["files"]  # per-partition row counts (north_rule lineage)
     assert set(m1[8]) == set(m1[9])  # driver-side and Spark writes: same keys
+    assert m1[9]["completed_at"] == staged[9]["completed_at"]  # base level kept
 
-    # simulate a kill after the base level: wipe upper-level manifests
-    for z in (8, 7):
-        os.remove(io.manifest_path(z))
+    # every level published: a second resume re-runs nothing
     m2 = build_pyramid(pts, plan, io)
-    assert m2[9]["completed_at"] == m1[9]["completed_at"]  # base level skipped
-    assert m2[8]["completed_at"] != m1[8]["completed_at"]  # re-run
-    assert m2[8]["row_count"] == m1[8]["row_count"]
-    assert m2[7]["row_count"] == m1[7]["row_count"]
+    assert {z: m["completed_at"] for z, m in m2.items()} == \
+           {z: m["completed_at"] for z, m in m1.items()}
 
     # written levels agree with the in-memory path
     mem = build_pyramid_df(pts, plan)
@@ -105,6 +156,135 @@ def test_checkpoint_resume(spark, tmp_path):
         b = {(r.x, r.y, r.cnt, r.sum_v)
              for r in mem.where(F.col("zoom") == z).collect()}
         assert a == b
+
+
+@pytest.mark.parametrize("crash", [{"before": {2}}, {"after": {3}}],
+                         ids=["second_write", "before_publish"])
+def test_build_crash_keeps_published_pyramid(spark, tmp_path, monkeypatch, crash):
+    """Fault injection: ``build_pyramid(resume=False)`` of new points over
+    a complete pyramid crashes at its second level write, or after its
+    last one (just before the publish).  Every level still reads as
+    before the call; a resumed build then equals a one-shot build, and
+    only the published generations stay on disk."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [9, 8, 7]
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(_points(spark, 1500), plan, io, resume=False)
+    before = _level_rows(io, spark, zooms)
+    new = _points(spark, 2500)
+
+    _crash_writes(monkeypatch, **crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(new, plan, io, resume=False)
+    monkeypatch.undo()
+    assert _level_rows(io, spark, zooms) == before
+
+    man = build_pyramid(new, plan, io, resume=True)
+    one_shot = TableIO(str(tmp_path / "one_shot"))
+    build_pyramid(new, plan, one_shot, resume=False)
+    assert _level_rows(io, spark, zooms) == _level_rows(one_shot, spark, zooms)
+    for z in zooms:
+        assert os.listdir(os.path.join(io.root, f"zoom={z}")) == [man[z]["gen"]]
+
+
+@pytest.mark.parametrize("crash", [{"before": {2, 3}}, {"after": {3}}],
+                         ids=["after_one_merge", "before_publish"])
+def test_incremental_crash_keeps_published_pyramid(spark, tmp_path, monkeypatch,
+                                                   crash):
+    """Fault injection: ``incremental_update`` on a 3-level plan crashes
+    once one level's merge has finished, or after every merge (just
+    before the publish).  Every level still reads as before the call; a
+    re-run then equals a one-shot build over both batches, and
+    re-applying its delta id is a no-op."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [9, 8, 7]
+    pts = _points(spark, 3000).cache()
+    a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
+    b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    root = str(tmp_path / "pyr")
+    io = TableIO(root)
+    build_pyramid(a, plan, io, resume=False)
+    before = _level_rows(io, spark, zooms)
+
+    _crash_writes(monkeypatch, **crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        incremental_update(b, plan, io)
+    monkeypatch.undo()
+    assert _level_rows(io, spark, zooms) == before
+
+    man = incremental_update(b, plan, TableIO(root, delta_id=1))
+    one_shot = TableIO(str(tmp_path / "one_shot"))
+    build_pyramid(pts, plan, one_shot, resume=False)
+    want = _level_rows(one_shot, spark, zooms)
+    assert _level_rows(io, spark, zooms) == want
+
+    assert incremental_update(b, plan, TableIO(root, delta_id=1)) == man
+    assert _level_rows(io, spark, zooms) == want
+    pts.unpersist()
+
+
+def test_cluster_level_crash_keeps_published_level(spark, tmp_path, monkeypatch):
+    """Fault injection: ``cluster_level`` crashes after its write, before
+    the publish.  Rows and record of the level are unchanged; a re-run
+    clusters it with the same rows."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6, aggregations=SPECS[:2])],
+                       gridsize=16)
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(_points(spark, 1500), plan, io, resume=False)
+    rows = _level_rows(io, spark, [9, 8])
+    records = {z: io.read_manifest(z) for z in (9, 8)}
+
+    _crash_writes(monkeypatch, after={1})
+    with pytest.raises(RuntimeError, match="injected crash"):
+        io.cluster_level(spark, 9, partitions=4)
+    monkeypatch.undo()
+    assert {z: io.read_manifest(z) for z in (9, 8)} == records
+    assert _level_rows(io, spark, [9, 8]) == rows
+
+    m = io.cluster_level(spark, 9, partitions=4)
+    assert m["clustered"] is True and "+zorder" in m["lineage"]["op"]
+    assert io.read_manifest(8) == records[8]
+    assert _level_rows(io, spark, [9, 8]) == rows
+
+
+def test_concurrent_stages_are_all_published(tmp_path):
+    """incremental_update's merge threads stage into one shared draft:
+    64 level writes from 16 threads, with a short thread switch
+    interval, all reach the one publish."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pandas as pd
+
+    io = TableIO(str(tmp_path / "pyr"))
+    pdf = pd.DataFrame({"x": [1, 2], "y": [3, 4], "cnt": [5, 6]})
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with io.commit(), ThreadPoolExecutor(max_workers=16) as pool:
+            done = list(pool.map(lambda z: io.write_level_pandas(pdf, z), range(64),
+                                 timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(done) == 64
+    published = TableIO(io.root)
+    assert all(published.read_manifest(z)["gen"] == done[z]["gen"] for z in range(64))
+
+
+@pytest.mark.parametrize("root", ["s3a://bucket/pyr", "hdfs://nn:8020/pyr",
+                                  "file:/tmp/pyr"])
+def test_tableio_rejects_uri_root(tmp_path, monkeypatch, root):
+    """TableIO commits with ``os`` under a local directory; a URI root is
+    refused instead of splitting a pyramid between a remote store and a
+    local directory named after the scheme."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local directory"):
+        TableIO(root)
+    assert os.listdir(tmp_path) == []
 
 
 def test_hot_key_resalt_trigger(spark, tmp_path, monkeypatch):
@@ -146,8 +326,8 @@ def test_hot_key_resalt_trigger(spark, tmp_path, monkeypatch):
 
 def test_catalog_tableio_contract(spark):
     """CatalogTableIO satisfies the same contract as the parquet TableIO:
-    write-then-commit manifests, resume skipping complete levels, levels
-    readable back via spark.table.  Runs against the session catalog's
+    one snapshot publish per writer call, resume skipping complete
+    levels, levels readable back via spark.table, cluster_level.  Runs against the session catalog's
     V2 writer (managed parquet tables; an Iceberg catalog + jar flips
     `format` to 'iceberg' for snapshot lineage — exact config in the
     CatalogTableIO docstring).  Deliberately NO skip escape: if the
@@ -188,23 +368,33 @@ def test_catalog_tableio_contract(spark):
                  for r in mem.where(F.col("zoom") == z).collect()}
             assert a == b
 
-        # a fold on this backend observes max_cell_rows on its eager
-        # checkpoint; folding the same points doubles every count
+        # a fold on this backend observes max_cell_rows on its merge
+        # write; folding the same points doubles every count
         m3 = incremental_update(pts, plan, io)
         for z in m1:
             assert m3[z]["row_count"] == m1[z]["row_count"]
             assert m3[z]["max_cell_rows"] == 2 * m1[z]["max_cell_rows"] == max_cnt(z)
 
-        # manifest journal is append-only: amend adds a row, latest wins
-        before = spark.table(io._manifest_tbl).count()
+        # the journal is append-only: a bare amend is one publish, which
+        # appends one snapshot row; the latest wins
+        def snapshots():
+            return spark.table(io._journal).where(F.col("kind") == "snapshot").count()
+
+        before = snapshots()
         io.amend_manifest(9, max_cell_rows=7)
-        assert spark.table(io._manifest_tbl).count() == before + 1
+        assert snapshots() == before + 1
         assert io.read_manifest(9)["max_cell_rows"] == 7
+
+        # cluster_level: same rows, clustered, the replaced table dropped
+        rows = {(r.x, r.y, r.cnt, r.sum_v) for r in io.read_level(spark, 9).collect()}
+        old_table = io.level_table(9)
+        m4 = io.cluster_level(spark, 9, partitions=4)
+        assert m4["clustered"] is True and io.read_manifest(9)["clustered"] is True
+        assert {(r.x, r.y, r.cnt, r.sum_v)
+                for r in io.read_level(spark, 9).collect()} == rows
+        assert not spark.catalog.tableExists(old_table)
     finally:
-        for z in (8, 9, 10):
-            spark.sql(f"DROP TABLE IF EXISTS vtg_test.p1_z{z}")
-        spark.sql("DROP TABLE IF EXISTS vtg_test.p1_manifest")
-        spark.sql("DROP NAMESPACE IF EXISTS vtg_test")
+        spark.sql("DROP NAMESPACE IF EXISTS vtg_test CASCADE")
 
 
 def test_merge_cells_three_way_with_partials(spark):
@@ -408,42 +598,29 @@ def test_reducer_names_branch_only_in_aggspec():
 
 def test_tail_crash_then_resume_equals_one_shot(spark, tmp_path, monkeypatch):
     """Fault injection in the tail: a crash while writing the 4th tail
-    level leaves the three levels before it committed; a resumed build
-    keeps them (same completed_at) and every level then equals a one-shot
-    build as row sets."""
-    import pytest
-
+    level leaves the base and the three tail levels before it staged but
+    unpublished; a resumed build keeps them (same completed_at) and every
+    level then equals a one-shot build as row sets."""
     plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=3, aggregations=SPECS)],
                        gridsize=16)
     pts = _points(spark, 2000)
     io = TableIO(str(tmp_path / "crash"))
-    written = []
-    write = TableIO.write_level_pandas
-
-    def crash_on_4th(self, pdf, zoom, lineage=None):
-        written.append(zoom)
-        if len(written) == 4:
-            raise RuntimeError("injected crash")
-        return write(self, pdf, zoom, lineage=lineage)
-
-    monkeypatch.setattr(TableIO, "write_level_pandas", crash_on_4th)
+    staged = _crash_writes(monkeypatch, before={5})  # base 10, tail 9 8 7 | 6
     with pytest.raises(RuntimeError, match="injected crash"):
         build_pyramid(pts, plan, io)
     monkeypatch.undo()
-    assert written == [9, 8, 7, 6]
-    committed = {z: io.read_manifest(z)["completed_at"] for z in (10, 9, 8, 7)}
-    assert not io.level_complete(6) and not io.level_complete(5)
+    assert sorted(staged) == [7, 8, 9, 10]
+    assert not any(io.level_complete(z) for z in range(5, 11))
 
     man = build_pyramid(pts, plan, io, resume=True)
-    assert {z: man[z]["completed_at"] for z in committed} == committed
+    assert {z: man[z]["completed_at"] for z in staged} == \
+           {z: r["completed_at"] for z, r in staged.items()}
     one_shot = TableIO(str(tmp_path / "one_shot"))
     want = build_pyramid(pts, plan, one_shot, resume=False)
     assert sorted(man) == sorted(want) == list(range(5, 11))
-    cols = [c for c in io.read_level(spark, 10).columns if c != "zoom"]
-    for z in man:
-        got = _rows(io.read_level(spark, z), cols)
-        assert got == _rows(one_shot.read_level(spark, z), cols) and got, \
-            f"zoom {z} diverged"
+    zooms = sorted(man)
+    got = _level_rows(io, spark, zooms)
+    assert got == _level_rows(one_shot, spark, zooms) and all(got.values())
 
 
 def test_kmv_sketch_merge_exact_and_estimate_sane(spark):
@@ -598,8 +775,6 @@ def test_empty_cover_build_records_zero_max(spark, tmp_path):
 
 
 def test_incremental_update_requires_complete_pyramid(spark, tmp_path):
-    import pytest
-
     from vt_grid_spark.operators.pyramid import incremental_update
 
     plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=7, aggregations=SPECS[:2])],

@@ -99,11 +99,12 @@ def test_sql_pipeline_equals_dataframe_pipeline(spark):
 
 
 def test_sq_literal_roundtrip(spark):
-    """sqltext.sq: a quoted word parses back to itself under Spark's
-    default ``escapedStringLiterals=false`` — quotes, backslashes and
-    elisions included."""
+    """sqltext.sq: a quoted word parses back to itself under
+    ``escapedStringLiterals=false``, which ``get_spark`` pins — quotes,
+    backslashes and elisions included."""
     from vt_grid_spark.functions.sqltext import sq
 
+    assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
     words = ["l'", "po'", "it's", "back\\slash", "\\'", "''", "\\", "a\\nb"]
     row = spark.sql("SELECT " + ", ".join(sq(w) for w in words)).first()
     assert list(row) == words

@@ -361,17 +361,18 @@ def test_streaming_dedup_file_source_kill_restart(spark, tmp_path):
     assert all(d in holders[fp] for d, fp in got)    # every survivor real
 
 
-def test_streaming_pyramid_maintenance_equals_batch_rebuild(spark, tmp_path):
+def test_streaming_pyramid_maintenance_equals_batch_rebuild(spark, tmp_path,
+                                                           monkeypatch):
     """PyramidStreamSink: points arriving as file-source microbatches
     (maxFilesPerTrigger=1 -> first batch bootstraps, later batches fold
     through incremental_update) must leave a pyramid IDENTICAL at every
     level to a one-shot batch build over the union; a replayed
-    foreachBatch call must be a no-op (generation commit), and a crash
-    MID-FOLD must leave CURRENT on the old generation so the replay
-    redoes the fold exactly once."""
-    import json
+    foreachBatch call must be a no-op (the batch id rides in the
+    snapshot publish), and a crash MID-FOLD must leave the published
+    pyramid untouched so the replay redoes the fold exactly once."""
     import os
-    import shutil
+
+    import pytest
 
     from vt_grid_spark.operators.pyramid import build_pyramid
     from vt_grid_spark.plans.aggspec import AggSpec
@@ -405,7 +406,7 @@ def test_streaming_pyramid_maintenance_equals_batch_rebuild(spark, tmp_path):
     build_pyramid(pts, plan, io_b, resume=False)
 
     sink = PyramidStreamSink(plan, root)
-    io_s = sink.current_io()
+    io_s = TableIO(root)
     zooms = [cz for _, cz, _ in plan.levels()]
 
     def level(io, z):
@@ -416,29 +417,41 @@ def test_streaming_pyramid_maintenance_equals_batch_rebuild(spark, tmp_path):
         a, b = level(io_s, z), level(io_b, z)
         assert a == b and a, f"zoom {z} diverged"
 
-    # CURRENT committed the last batch id; replay of batch 2 is a no-op
-    cur = json.load(open(os.path.join(root, "CURRENT")))
-    assert cur["applied_batch"] == 2
+    # the snapshot records the last batch id; replay of batch 2 is a no-op
+    assert TableIO(root, delta_id=2).delta_applied()
+    assert not TableIO(root, delta_id=3).delta_applied()
     sink(parts[2], 2)  # foreachBatch retry after the commit
-    assert level(sink.current_io(), zooms[0]) == level(io_b, zooms[0])
+    assert level(io_s, zooms[0]) == level(io_b, zooms[0])
 
-    # crash MID-FOLD simulation: a partial stage exists for batch 3 but
-    # CURRENT still points at gen-2 — the retry must wipe the stage,
-    # redo the fold once, and land exactly the delta
+    # crash MID-FOLD: one level's merge fails while the others finish, so
+    # nothing is published; the retry redoes the fold once and lands
+    # exactly the delta
     extra = pts.limit(100)
-    os.makedirs(os.path.join(root, "gen-3", "zoom=7"), exist_ok=True)
-    with open(os.path.join(root, "gen-3", "zoom=7", "junk"), "w") as f:
-        f.write("partial")
+    write = TableIO.write_level
+
+    def crash_one_level(self, df, zoom, *args, **kwargs):
+        if zoom == zooms[-1]:
+            raise RuntimeError("injected crash")
+        return write(self, df, zoom, *args, **kwargs)
+
+    monkeypatch.setattr(TableIO, "write_level", crash_one_level)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink(extra, 3)
+    monkeypatch.undo()
+    assert not TableIO(root, delta_id=3).delta_applied()
+    for z in zooms:
+        assert level(io_s, z) == level(io_b, z), f"zoom {z} changed by a crash"
     sink(extra, 3)
-    cur = json.load(open(os.path.join(root, "CURRENT")))
-    assert cur == {"gen": "gen-3", "applied_batch": 3}
-    n_total = sum(c for c, _ in level(sink.current_io(), zooms[0]).values())
+    assert TableIO(root, delta_id=3).delta_applied()
+    n_total = sum(c for c, _ in level(io_s, zooms[0]).values())
     n_base = sum(c for c, _ in level(io_b, zooms[0]).values())
     assert n_total == n_base + 100
-    # old generations are garbage-collected; only the live one remains
-    gens = [d for d in os.listdir(root) if d.startswith("gen-")]
-    assert gens == ["gen-3"]
-    # and an empty batch advances the pointer without a new generation
+    # generations the snapshot no longer names (replaced levels and the
+    # crashed fold's) are deleted; only the live one remains per level
+    for z in zooms:
+        assert os.listdir(os.path.join(root, f"zoom={z}")) == \
+            [io_s.read_manifest(z)["gen"]]
+    # and an empty batch changes nothing
+    snapshot = {z: io_s.read_manifest(z) for z in zooms}
     sink(extra.where(F.lit(False)), 4)
-    cur = json.load(open(os.path.join(root, "CURRENT")))
-    assert cur == {"gen": "gen-3", "applied_batch": 4}
+    assert {z: io_s.read_manifest(z) for z in zooms} == snapshot

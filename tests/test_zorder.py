@@ -58,9 +58,9 @@ def test_clustered_level_files_have_compact_footprints(spark, tmp_path):
     assert m["clustered"] is True
     assert io_u.read_manifest(10)["clustered"] is False
 
-    def footprints(root):
+    def footprints(io):
         spans = []
-        path = os.path.join(root, "zoom=10")
+        path = io.level_path(10)  # the published generation's files
         for name in sorted(os.listdir(path)):
             if not name.endswith(".parquet"):
                 continue
@@ -80,8 +80,8 @@ def test_clustered_level_files_have_compact_footprints(spark, tmp_path):
                 spans.append((hi_x - lo_x + 1) * (hi_y - lo_y + 1))
         return spans
 
-    plain = footprints(io_u.root)
-    zord = footprints(io_c.root)
+    plain = footprints(io_u)
+    zord = footprints(io_c)
     assert plain and zord
     # unclustered files each cover ~the whole occupied grid; z-ordered
     # files cover compact tiles of it
@@ -97,10 +97,11 @@ def test_clustered_level_files_have_compact_footprints(spark, tmp_path):
     assert a == b
 
     # OPTIMIZE ZORDER post-pass: cluster_level rewrites the plain level
-    # in place — identical content, clustered manifest, lineage marked
+    # as a new generation — identical content, clustered manifest,
+    # lineage marked
     before = {(r.x, r.y, r.cnt) for r in io_u.read_level(spark, 10).collect()}
     m2 = io_u.cluster_level(spark, 10, partitions=32)
     assert m2["clustered"] is True and "+zorder" in m2["lineage"]["op"]
     after = {(r.x, r.y, r.cnt) for r in io_u.read_level(spark, 10).collect()}
     assert after == before
-    assert np.mean(footprints(io_u.root)) * 4 <= np.mean(plain)
+    assert np.mean(footprints(io_u)) * 4 <= np.mean(plain)

@@ -11,7 +11,7 @@
 INPUT is a parquet/directory of points with (lon, lat, ...) columns, or an
 .mbtiles file (ingested through the true MVT decode path; point features
 become rows).  OUTPUT is a TableIO root (zoom-partitioned parquet +
-manifests — the engine's native artifact); ``--export-mbtiles K`` also
+a snapshot of level records — the engine's native artifact); ``--export-mbtiles K`` also
 packs each written level's cells into MVT tiles (2^K x 2^K cells per
 tile) and writes OUTPUT/grid.mbtiles, the reference's output artifact.
 

@@ -27,10 +27,10 @@ def sq(word: str) -> str:
     are doubled and backslashes doubled, so any word (fr/it elisions like
     ``l'``, a stray backslash) parses back to itself.  The backslash
     doubling is correct only under
-    ``spark.sql.parser.escapedStringLiterals=false``, the Spark default;
-    with that conf on, Spark reads backslashes literally and each one
-    would come back doubled.  Not for DuckDB text, where a backslash is
-    never an escape."""
+    ``spark.sql.parser.escapedStringLiterals=false``, the Spark default,
+    which ``session.get_spark`` pins; with that conf on, Spark reads
+    backslashes literally and each one would come back doubled.  Not for
+    DuckDB text, where a backslash is never an escape."""
     return "'" + word.replace("\\", "\\\\").replace("'", "''") + "'"
 
 

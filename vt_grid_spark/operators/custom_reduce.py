@@ -107,7 +107,8 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
     plans/aggspec where the rollup IS partial-merge.  Cost is L scans of
     the input for L levels — the encode is closed-form bit math and the
     scan is the cheap part of a custom-reduce level; levels are written
-    deepest-first so ``resume`` skips completed ones by manifest.
+    deepest-first and published together by one ``io.commit``, so
+    ``resume`` skips the ones an interrupted build already staged.
 
     Returns {cell_zoom: manifest} like :func:`operators.pyramid.build_pyramid`.
     """
@@ -116,20 +117,21 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
     from vt_grid_spark.tilemath import grid_zoom
 
     manifests: dict[int, dict] = {}
-    for output_z in range(basezoom, minzoom - 1, -1):
-        cell_z = grid_zoom(output_z, gridsize)
-        if resume and io.level_complete(cell_z):
-            manifests[cell_z] = io.read_manifest(cell_z)
-            continue
-        encoded = encode_points(points, cell_z, with_quadkey=False)
-        cells = apply_custom_reducer(encoded, cell_z, output_z, reduce_fn,
-                                     result_schema, strategy=strategy)
-        out = (cells.withColumn("zoom", F.lit(cell_z))
-               .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z)))
-        val_cols = [c for c in cells.columns if c not in ("x", "y")]
-        out = out.select("zoom", "x", "y", "quadkey", *val_cols)
-        manifests[cell_z] = io.write_level(
-            out, cell_z,
-            lineage={"input": "points", "op": "custom-reduce",
-                     "output_tile_zoom": output_z, "strategy": strategy})
+    with io.commit("resume" if resume else "empty"):
+        for output_z in range(basezoom, minzoom - 1, -1):
+            cell_z = grid_zoom(output_z, gridsize)
+            if resume and io.level_complete(cell_z):
+                manifests[cell_z] = io.read_manifest(cell_z)
+                continue
+            encoded = encode_points(points, cell_z, with_quadkey=False)
+            cells = apply_custom_reducer(encoded, cell_z, output_z, reduce_fn,
+                                         result_schema, strategy=strategy)
+            out = (cells.withColumn("zoom", F.lit(cell_z))
+                   .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z)))
+            val_cols = [c for c in cells.columns if c not in ("x", "y")]
+            out = out.select("zoom", "x", "y", "quadkey", *val_cols)
+            manifests[cell_z] = io.write_level(
+                out, cell_z,
+                lineage={"input": "points", "op": "custom-reduce",
+                         "output_tile_zoom": output_z, "strategy": strategy})
     return manifests

@@ -2,9 +2,11 @@
 (/root/reference/index.js:94-162) as a checkpointed Spark loop.
 
 Each output level is one shuffle stage (groupBy on the integer parent
-key); every level is written to a ``zoom=<z>`` partition with a manifest
-(the resume point, mirroring the reference feeding each level's mbtiles
-into the next, index.js:151-159).  Within a run the next rollup reads the
+key); every level is staged in its own generation with a record (the
+resume point, mirroring the reference feeding each level's mbtiles into
+the next, index.js:151-159), and one ``TableIO.commit`` publishes them
+all at the end, as the reference's final tile-join creates its output
+(index.js:151-175).  Within a run the next rollup reads the
 previous level from the block-manager CACHE (persisted during the level's
 own write job), not back off parquet — the checkpoint write is the
 durability path, never a serial decode on the critical path.  On resume
@@ -82,6 +84,14 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
     and each rollup is `groupBy(x>>1, y>>1)` — the quadkey-prefix
     invariant (SURVEY.md §2.3 G2).
 
+    The build is one ``io.commit``: every level is written to a fresh
+    generation and staged, and all of them are published together at the
+    end, so a crash leaves the previous pyramid readable.  ``resume=True``
+    continues a build interrupted since the last publish, keeping the
+    levels it staged, or else keeps the published levels and builds the
+    missing ones; ``resume=False`` builds every level and publishes a
+    pyramid made of exactly them.
+
     Returns {cell_zoom: manifest}.
     """
     spark = points.sparkSession
@@ -115,78 +125,80 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
             return plan.salt_buckets
         return plan.salt_buckets if prev_max > plan.hot_key_threshold else 0
 
-    # --- base level: encode + first aggregation -----------------------------
-    prev_df = None  # cached handle of the previous level within this run
-    if resume and io.level_complete(base_cell_z):
-        manifests[base_cell_z] = io.read_manifest(base_cell_z)
-    else:
-        encoded = _apply_cover(points, plan, base_cell_z)
-        if repartition:
-            encoded = encoded.repartition(repartition, "x", "y")
-        base = cell_aggregate(encoded, base_cell_z,
-                              compile_aggs(base_band.aggregations)).persist()
-        _write_spark_level(base, base_cell_z,
-                           {"input": "points", "op": "encode+aggregate",
-                            "output_tile_zoom": base_output_z})
-        prev_df = base
+    with io.commit("resume" if resume else "empty"):
+        # --- base level: encode + first aggregation -------------------------
+        prev_df = None  # cached handle of the previous level within this run
+        if resume and io.level_complete(base_cell_z):
+            manifests[base_cell_z] = io.read_manifest(base_cell_z)
+        else:
+            encoded = _apply_cover(points, plan, base_cell_z)
+            if repartition:
+                encoded = encoded.repartition(repartition, "x", "y")
+            base = cell_aggregate(encoded, base_cell_z,
+                                  compile_aggs(base_band.aggregations)).persist()
+            _write_spark_level(base, base_cell_z,
+                               {"input": "points", "op": "encode+aggregate",
+                                "output_tile_zoom": base_output_z})
+            prev_df = base
 
-    # --- rollup levels -------------------------------------------------------
-    # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS).  A
-    # band boundary starts a new batch: the next band's specs apply to this
-    # band's last level.
-    prev_cell_z = base_cell_z
-    tail: dict = {}  # cell_z -> collected rows of the current batch
-    for output_z, cell_z, band in levels[1:]:
-        assert cell_z == prev_cell_z - 1
-        if resume and io.level_complete(cell_z):
-            manifests[cell_z] = io.read_manifest(cell_z)
-            tail = {}  # the next batch starts from the skipped level
-            if prev_df is not None:
-                prev_df.unpersist()
-                prev_df = None  # cache is stale relative to the skip point
-        elif cell_z in tail or manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS:
-            if cell_z not in tail:
-                children = (prev_df if prev_df is not None
-                            else io.read_level(spark, prev_cell_z))
-                min_z = min(z for _, z, b in levels if b is band)
-                batch = (rollup_ancestors(children, prev_cell_z, min_z,
-                                          band.aggregations)
-                         .toPandas()
-                         .sort_values(["zoom", "x", "y"]))  # same files every run
-                tail = {z: batch[batch["zoom"] == z].reset_index(drop=True)
-                        for z in range(min_z, prev_cell_z)}
+        # --- rollup levels ---------------------------------------------------
+        # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS).
+        # A band boundary starts a new batch: the next band's specs apply to
+        # this band's last level.
+        prev_cell_z = base_cell_z
+        tail: dict = {}  # cell_z -> collected rows of the current batch
+        for output_z, cell_z, band in levels[1:]:
+            assert cell_z == prev_cell_z - 1
+            if resume and io.level_complete(cell_z):
+                manifests[cell_z] = io.read_manifest(cell_z)
+                tail = {}  # the next batch starts from the skipped level
                 if prev_df is not None:
                     prev_df.unpersist()
-                    prev_df = None  # remaining levels are driver-side
-            pdf = tail.pop(cell_z)
-            pdf.insert(3, "quadkey", tm.tile_to_quadkey(pdf["x"].to_numpy(),
-                                                        pdf["y"].to_numpy(), cell_z))
-            manifests[cell_z] = io.write_level_pandas(
-                pdf, cell_z,
-                lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
-                         "output_tile_zoom": output_z},
-            )
-            if count_col is not None:
-                # an empty level (cover outside every point) records 0
-                mx = int(pdf[count_col].max()) if len(pdf) else 0
-                manifests[cell_z] = io.amend_manifest(cell_z, max_cell_rows=mx)
-        else:
-            salt = _salt_for(prev_cell_z, band)
-            children = (prev_df if prev_df is not None
-                        else io.read_level(spark, prev_cell_z))
-            level = rollup_level(children, prev_cell_z, band.aggregations,
-                                 salt_buckets=salt).persist()
-            _write_spark_level(level, cell_z,
-                               {"input": f"zoom={prev_cell_z}", "op": "rollup",
-                                "output_tile_zoom": output_z, "salted": salt > 1,
-                                "salt_buckets": salt})
-            if prev_df is not None:
-                prev_df.unpersist()
-            prev_df = level
-        prev_cell_z = cell_z
+                    prev_df = None  # cache is stale relative to the skip point
+            elif (cell_z in tail
+                  or manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS):
+                if cell_z not in tail:
+                    children = (prev_df if prev_df is not None
+                                else io.read_level(spark, prev_cell_z))
+                    min_z = min(z for _, z, b in levels if b is band)
+                    batch = (rollup_ancestors(children, prev_cell_z, min_z,
+                                              band.aggregations)
+                             .toPandas()
+                             .sort_values(["zoom", "x", "y"]))  # same files every run
+                    tail = {z: batch[batch["zoom"] == z].reset_index(drop=True)
+                            for z in range(min_z, prev_cell_z)}
+                    if prev_df is not None:
+                        prev_df.unpersist()
+                        prev_df = None  # remaining levels are driver-side
+                pdf = tail.pop(cell_z)
+                pdf.insert(3, "quadkey", tm.tile_to_quadkey(pdf["x"].to_numpy(),
+                                                            pdf["y"].to_numpy(), cell_z))
+                manifests[cell_z] = io.write_level_pandas(
+                    pdf, cell_z,
+                    lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
+                             "output_tile_zoom": output_z},
+                )
+                if count_col is not None:
+                    # an empty level (cover outside every point) records 0
+                    mx = int(pdf[count_col].max()) if len(pdf) else 0
+                    manifests[cell_z] = io.amend_manifest(cell_z, max_cell_rows=mx)
+            else:
+                salt = _salt_for(prev_cell_z, band)
+                children = (prev_df if prev_df is not None
+                            else io.read_level(spark, prev_cell_z))
+                level = rollup_level(children, prev_cell_z, band.aggregations,
+                                     salt_buckets=salt).persist()
+                _write_spark_level(level, cell_z,
+                                   {"input": f"zoom={prev_cell_z}", "op": "rollup",
+                                    "output_tile_zoom": output_z, "salted": salt > 1,
+                                    "salt_buckets": salt})
+                if prev_df is not None:
+                    prev_df.unpersist()
+                prev_df = level
+            prev_cell_z = cell_z
 
-    if prev_df is not None:
-        prev_df.unpersist()
+        if prev_df is not None:
+            prev_df.unpersist()
     return manifests
 
 
@@ -210,6 +222,12 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     instead of a full rebuild from raw points.  ``max_cell_rows`` is
     observed on the level's own write job.  Deletes are out of scope
     (append-only corpus, min/max/union/kmv are insert-monotone).
+
+    The fold is one ``io.commit``: each merged level goes to a fresh
+    generation and all of them are published together, with ``io``'s
+    ``delta_id`` as the last applied delta.  A crash leaves the pyramid
+    unfolded, so a re-run folds the delta exactly once; a fold whose
+    ``delta_id`` the published snapshot already records is a no-op.
     """
     spark = delta_points.sparkSession
     levels = list(plan.levels())
@@ -220,9 +238,10 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
                 f"incremental_update needs a complete pyramid; zoom {cell_z} "
                 "is missing — run build_pyramid first (resume finishes a "
                 "partial build)")
+    if io.delta_applied():
+        return {cell_z: io.read_manifest(cell_z) for _, cell_z, _ in levels}
 
     manifests: dict[int, dict] = {}
-    staged = type(io).write_level is TableIO.write_level
     # phase 1 — the per-level delta partial chain, each level computed ONCE
     # by an eager localCheckpoint before any merge starts.  It must be
     # eager: a lazy persist is filled by nobody before the merge's
@@ -258,21 +277,11 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
         track = old.get("max_cell_rows") is not None
         new_level, obs = _observe_max(untouched.select(*cols).unionByName(merged),
                                       count_column(specs) if track else None)
-        # staged write (r6): the merged plan lazily reads the level it
-        # replaces, so the parquet backend writes to a sibling dir and
-        # swaps after success — ONE materialization per level instead of
-        # an eager localCheckpoint followed by a second full write.  The
-        # catalog backend has no stage knob; fall back to the checkpoint
-        # there (createOrReplace may not be atomic against its own input).
-        if not staged:
-            new_level = new_level.localCheckpoint(eager=True)
-        lineage = {"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
-                   "output_tile_zoom": output_z,
-                   "previous_row_count": old.get("row_count")}
-        if staged:
-            m = io.write_level(new_level, cell_z, lineage=lineage, stage=True)
-        else:
-            m = io.write_level(new_level, cell_z, lineage=lineage)
+        # the merged plan lazily reads the level it replaces; the write goes
+        # to a new generation, so it is the only materialization
+        m = io.write_level(new_level, cell_z, lineage={
+            "input": f"zoom={cell_z}+delta", "op": "incremental-merge",
+            "output_tile_zoom": output_z, "previous_row_count": old.get("row_count")})
         if obs is not None:
             m = io.amend_manifest(cell_z, max_cell_rows=_observed_max(obs))
         return cell_z, m
@@ -280,13 +289,11 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     # phase 2 — once the delta chain exists the per-level merges are
     # independent of each other: run them from a small thread pool so one
     # level's write tail back-fills with the next level's tasks (guide
-    # §2.6 overlapping independent jobs).  Parquet backend only — the
-    # catalog backend appends every manifest to ONE journal table, which
-    # concurrent v1 appends could corrupt.
+    # §2.6 overlapping independent jobs).  They stage into one draft,
+    # published once all of them have finished.
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = min(4, len(work)) if staged else 1
-    with ThreadPoolExecutor(max_workers=max(workers, 1)) as pool:
+    with io.commit(), ThreadPoolExecutor(max_workers=min(4, len(work))) as pool:
         for cell_z, m in pool.map(_merge_level, work):
             manifests[cell_z] = m
     return manifests

@@ -31,6 +31,9 @@ def get_spark(app: str = "vt-grid-spark", cores: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # functions.sqltext.sq doubles backslashes, which is right only
+        # while string literals are unescaped by the parser (the default)
+        .config("spark.sql.parser.escapedStringLiterals", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # shuffle spill/local files on tmpfs when available: this sandbox
         # has ONE virtio disk, so disk-bound shuffle caps multi-core scaling

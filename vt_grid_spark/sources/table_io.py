@@ -1,31 +1,42 @@
-"""Zoom-partitioned table IO with per-level manifests (checkpoint/resume).
+"""Pyramid storage with ONE commit protocol: Iceberg's snapshot-pointer
+commit (https://iceberg.apache.org/spec/).
 
-"Iceberg" as an interface (SURVEY.md §7 g6): this class IS the seam — the
-pyramid driver only calls ``write_level`` / ``read_level`` /
-``level_complete`` / ``read_manifest`` (+ ``write_level_pandas`` for the
-pyramid tail, whose small levels are rolled up in ONE Spark aggregation and
-collected, so they are written from the driver without a Spark job per
-level).  The default backend is parquet partitioned by
-``zoom=<z>`` plus a JSON manifest per level carrying what the north rule
-asks for: input lineage, per-partition row counts, and status — so a
-killed pyramid build resumes from the last complete zoom.
+"Iceberg" as an interface (SURVEY.md §7 g6): this class IS the seam and
+the only place a pyramid is committed.  The pyramid driver stages levels
+with ``write_level`` / ``write_level_pandas`` (the collected tail) /
+``amend_manifest`` and reads them with ``read_level`` / ``read_manifest``
+/ ``level_complete``.
 
-``CatalogTableIO`` below is the catalog-backed variant: levels are
-catalog tables written through the DataFrameWriterV2 and manifests an
-append-only journal table (latest row per zoom wins — no deletes needed,
-the Iceberg-style commit log shape).  Point it at an Iceberg catalog
-(``spark.sql.catalog.<name>`` + the runtime jar, format="iceberg") for
-snapshot lineage; against the plain session catalog it degrades to
-managed parquet tables with the same contract.  The contract test
-(tests/test_pyramid.py) runs it against whatever catalog the session has
-and skips cleanly if V2 writes are unsupported.
+- A level write goes to a fresh *generation*, never over published data;
+  its record (lineage, per-file row counts, status) is staged in a
+  durable *draft*, from which a killed build resumes.
+- Each writer call runs in one :meth:`TableIO.commit` and ends with ONE
+  publish: an atomic replace of the snapshot, which names every live
+  level's generation and record plus the last applied delta id.
+  Generations it no longer names are deleted afterwards.
+- Readers see the published snapshot; a writer call sees its draft.
+
+So a crash leaves the old pyramid or the new one, never a mix.  On disk:
+``<root>/zoom=<z>/<gen>/part-*.parquet`` plus ``_snapshot.json`` and
+``_draft.json``, which the ``_`` hides from Spark and pyarrow readers.
+
+``CatalogTableIO`` maps the same protocol onto a catalog: one table per
+generation, snapshots and drafts as rows of an append-only journal
+table.  Point it at an Iceberg catalog (``spark.sql.catalog.<name>`` +
+the runtime jar, format="iceberg") for snapshot lineage; against the
+plain session catalog it degrades to managed parquet tables.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
+import threading
 import time
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,25 +61,97 @@ def zorder_clustered(df: DataFrame, n_parts: int) -> DataFrame:
 
 
 class TableIO:
-    def __init__(self, root: str):
+    """A pyramid of parquet levels under a local directory.
+
+    The one filesystem assumption: ``root`` is a local POSIX directory,
+    where ``os.replace`` of a file is atomic; no hardlinks are needed.  A
+    root with a URI scheme (``s3a://``, ``hdfs://``, ``file:``) is
+    rejected, since the snapshot is written with ``os``.  The protocol
+    covers a killed process; nothing is fsynced, so a power loss can
+    still lose writes the page cache held.
+
+    ``delta_id`` carries the id of the delta this writer applies (a
+    stream's batch id): every publish records it as the last applied
+    delta, and :meth:`delta_applied` tells a retry that it is done.
+    """
+
+    def __init__(self, root: str, delta_id: int | None = None):
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", root):
+            raise ValueError(
+                f"TableIO root must be a local directory, not a URI: {root!r}")
         self.root = root
-        os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
+        self._init_protocol(delta_id)
+        os.makedirs(root, exist_ok=True)
 
-    # -- paths ---------------------------------------------------------------
-    def level_path(self, zoom: int) -> str:
-        return os.path.join(self.root, f"zoom={zoom}")
+    def _init_protocol(self, delta_id: int | None) -> None:
+        self.delta_id = delta_id
+        self._draft: dict | None = None  # the open writer call's draft
+        self._lock = threading.Lock()  # merges stage from several threads
 
-    def manifest_path(self, zoom: int) -> str:
-        return os.path.join(self.root, "_manifest", f"z{zoom}.json")
+    # -- the commit protocol ---------------------------------------------------
+    @contextmanager
+    def commit(self, start: str = "published"):
+        """One writer call: open a draft, run the body, publish the draft.
+
+        ``start`` is what the draft begins as: ``"published"`` the
+        published levels; ``"empty"`` no levels (a build that replaces
+        the pyramid); ``"resume"`` the draft of a build interrupted since
+        the last publish, else the published levels.  A call made inside
+        an open draft joins it.  If the body raises, nothing is published
+        and readers keep seeing the published snapshot."""
+        if self._draft is not None:
+            yield
+            return
+        snap = self._published()
+        draft = self._load("draft") if start == "resume" else None
+        if not (draft and draft["resumable"] and draft["base"] == snap["id"]):
+            draft = {"base": snap["id"], "resumable": start != "published",
+                     "levels": {} if start == "empty" else dict(snap["levels"])}
+        self._draft = draft
+        try:
+            yield
+            applied = snap["applied_delta"] if self.delta_id is None else self.delta_id
+            self._store("snapshot", {"id": snap["id"] + 1, "applied_delta": applied,
+                                     "levels": draft["levels"]})
+        finally:
+            self._draft = None
+        self._collect(draft["levels"])
+
+    def delta_applied(self) -> bool:
+        """Whether the published snapshot already records ``delta_id``.
+        Delta ids increase, so every id up to the last applied one counts."""
+        applied = self._published()["applied_delta"]
+        if self.delta_id is None or applied is None:
+            return False
+        return self.delta_id <= applied
+
+    def _published(self) -> dict:
+        return self._load("snapshot") or {"id": 0, "applied_delta": None, "levels": {}}
+
+    def _levels(self) -> dict:
+        """The levels this caller sees, keyed by ``str(zoom)`` as in JSON:
+        its draft's, else the published."""
+        return (self._draft or self._published())["levels"]
+
+    def _stage(self, zoom: int, gen: str, where: dict, lineage: dict | None,
+               clustered: bool) -> dict:
+        """Stage the record of a fully written level (write-then-stage)."""
+        return self._put({"zoom": zoom, "status": "complete", **where, "gen": gen,
+                          "lineage": lineage or {}, "clustered": bool(clustered),
+                          "completed_at": time.time()})
+
+    def _put(self, record: dict) -> dict:
+        with self._lock:
+            self._draft["levels"][str(record["zoom"])] = record
+            self._store("draft", self._draft)
+        return dict(record)
 
     # -- write ---------------------------------------------------------------
     def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None,
                     cluster: bool = False,
-                    cluster_partitions: int | None = None,
-                    stage: bool = False) -> dict:
-        """Write one pyramid level; manifest committed AFTER a successful
-        write (write-then-commit, so a crash mid-write leaves an incomplete
-        level that resume re-runs).
+                    cluster_partitions: int | None = None) -> dict:
+        """Write one pyramid level to a fresh generation and stage its
+        record.
 
         ``cluster=True`` Z-orders the level on disk: rows are range-
         partitioned and sorted by the Morton code of (x, y), so every
@@ -83,131 +166,136 @@ class TableIO:
         partitions, whose morton intervals span half the world each and
         cluster nothing; at production scale size it for ~128 MB files.
 
-        ``stage=True`` writes to a sibling ``.inprogress`` directory and
-        swaps it into place after the job succeeds — for writers whose
-        input PLAN reads the level being replaced (incremental_update):
-        the write job itself is then the only materialization, instead of
-        an eager localCheckpoint followed by a second full write (r6; the
-        swap is no less atomic than the overwrite it replaces, and a
-        crash mid-swap still leaves the manifest uncommitted, so resume
-        re-runs the level)."""
-        path = self.level_path(zoom)
+        The input plan may read the level it replaces (a fold, a
+        re-cluster): the new generation is another location, so the
+        write job is the only materialization."""
         out = df.drop("zoom") if "zoom" in df.columns else df
         if cluster:
             n_parts = cluster_partitions or int(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
             out = zorder_clustered(out, n_parts)
-        if stage:
-            import shutil
+        with self.commit():
+            gen = _new_gen()
+            return self._stage(zoom, gen, self._write(out, zoom, gen), lineage, cluster)
 
-            tmp_path = path + ".inprogress"
-            shutil.rmtree(tmp_path, ignore_errors=True)
-            out.write.mode("overwrite").parquet(tmp_path)
-            shutil.rmtree(path, ignore_errors=True)
-            os.replace(tmp_path, path)
-        else:
-            out.write.mode("overwrite").parquet(path)
-
-        # per-partition row counts from parquet FOOTERS (driver-side pyarrow
-        # metadata read, no Spark job) — a read-back count job per level was
-        # the dominant fixed cost of the build at small level sizes
+    def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
+        """Driver-side write of one collected tail level."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        files = {}
-        for name in sorted(os.listdir(path)):
-            if name.endswith(".parquet"):
-                files[name] = pq.read_metadata(os.path.join(path, name)).num_rows
-        return self._commit_level(zoom, files, lineage, cluster)
-
-    def _commit_level(self, zoom: int, files: dict, lineage: dict | None,
-                      clustered: bool) -> dict:
-        """Mark a fully written level complete (write-then-commit)."""
-        return self._commit_manifest({
-            "zoom": zoom,
-            "status": "complete",
-            "row_count": int(sum(files.values())),
-            "files": files,
-            "lineage": lineage or {},
-            "clustered": bool(clustered),
-            "completed_at": time.time(),
-        })
+        with self.commit():
+            gen = _new_gen()
+            path = self._gen_path(zoom, gen)
+            os.makedirs(path)
+            fname = "part-00000.parquet"
+            out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
+            pq.write_table(pa.Table.from_pandas(out, preserve_index=False),
+                           os.path.join(path, fname))
+            return self._stage(zoom, gen, {"row_count": len(out),
+                                           "files": {fname: len(out)}},
+                               lineage, clustered=False)
 
     def cluster_level(self, spark: SparkSession, zoom: int,
                       partitions: int | None = None) -> dict:
         """Rewrite one complete level Z-ordered — the engine's OPTIMIZE
         ZORDER: a maintenance post-pass, so builds stay one-shuffle-per-
-        level and serving layouts opt in afterwards.  The level is
-        materialized via localCheckpoint before the overwrite (Spark
-        cannot overwrite a path it is still reading); lineage records the
+        level and serving layouts opt in afterwards.  Lineage records the
         rewrite."""
-        df = self.read_level(spark, zoom).localCheckpoint()
-        man = self.read_manifest(zoom)
-        lineage = dict(man.get("lineage", {}))
-        lineage["op"] = f"{lineage.get('op', '?')}+zorder"
-        return self.write_level(df, zoom, lineage=lineage, cluster=True,
-                                cluster_partitions=partitions)
+        with self.commit():
+            lineage = dict(self.read_manifest(zoom).get("lineage", {}))
+            lineage["op"] = f"{lineage.get('op', '?')}+zorder"
+            return self.write_level(self.read_level(spark, zoom), zoom,
+                                    lineage=lineage, cluster=True,
+                                    cluster_partitions=partitions)
 
     def amend_manifest(self, zoom: int, **extra) -> dict:
-        """Merge extra keys into an existing manifest (same atomic
-        write-then-replace as the original commit)."""
-        m = self.read_manifest(zoom)
-        m.update(extra)
-        return self._commit_manifest(m)
-
-    def _commit_manifest(self, manifest: dict) -> dict:
-        """Write a manifest to a sibling ``.tmp`` and rename it over the
-        old one, so a reader sees the old manifest or the new one, never a
-        partial file."""
-        path = self.manifest_path(manifest["zoom"])
-        with open(path + ".tmp", "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(path + ".tmp", path)
-        return manifest
+        """Merge extra keys into a level's record."""
+        with self.commit():
+            return self._put({**self.read_manifest(zoom), **extra})
 
     # -- read / resume ---------------------------------------------------------
     def level_complete(self, zoom: int) -> bool:
-        p = self.manifest_path(zoom)
-        if not os.path.exists(p):
-            return False
-        with open(p) as f:
-            return json.load(f).get("status") == "complete"
+        return str(zoom) in self._levels()
+
+    def read_manifest(self, zoom: int) -> dict:
+        try:
+            return dict(self._levels()[str(zoom)])
+        except KeyError:
+            raise FileNotFoundError(f"no level {zoom}") from None
+
+    def level_path(self, zoom: int) -> str:
+        """Directory of the level's generation that this caller sees."""
+        return self._gen_path(zoom, self.read_manifest(zoom)["gen"])
 
     def read_level(self, spark: SparkSession, zoom: int) -> DataFrame:
         return spark.read.parquet(self.level_path(zoom)).withColumn("zoom", F.lit(zoom))
 
-    def read_manifest(self, zoom: int) -> dict:
-        with open(self.manifest_path(zoom)) as f:
-            return json.load(f)
+    # -- parquet backend storage -------------------------------------------------
+    def _gen_path(self, zoom: int, gen: str) -> str:
+        return os.path.join(self.root, f"zoom={zoom}", gen)
 
-    # -- driver-side write of the collected pyramid tail -----------------------
-    def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
-        import pyarrow as pa
+    def _write(self, out: DataFrame, zoom: int, gen: str) -> dict:
+        # per-file row counts from parquet FOOTERS (driver-side pyarrow
+        # metadata read, no Spark job) — a read-back count job per level was
+        # the dominant fixed cost of the build at small level sizes
         import pyarrow.parquet as pq
 
-        path = self.level_path(zoom)
-        if os.path.exists(path):  # overwrite semantics, same as the Spark path
-            import shutil
-            shutil.rmtree(path)
-        os.makedirs(path)
-        fname = "part-00000.parquet"
-        out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
-        pq.write_table(pa.Table.from_pandas(out, preserve_index=False),
-                       os.path.join(path, fname))
-        return self._commit_level(zoom, {fname: int(len(out))}, lineage,
-                                  clustered=False)
+        path = self._gen_path(zoom, gen)
+        out.write.parquet(path)
+        files = {name: pq.read_metadata(os.path.join(path, name)).num_rows
+                 for name in sorted(os.listdir(path)) if name.endswith(".parquet")}
+        return {"row_count": sum(files.values()), "files": files}
+
+    def _load(self, kind: str) -> dict | None:
+        try:
+            with open(os.path.join(self.root, f"_{kind}.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _store(self, kind: str, doc: dict) -> None:
+        """Write to a sibling ``.tmp`` and rename it over the old file: a
+        reader sees the old document or the new one."""
+        path = os.path.join(self.root, f"_{kind}.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(doc, f, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
+
+    def _collect(self, levels: dict) -> None:
+        """After a publish: delete every generation the snapshot does not
+        name (replaced levels and what crashed writers left) and the
+        draft."""
+        for name in os.listdir(self.root):
+            if name.startswith("zoom="):
+                live = levels.get(name[5:], {}).get("gen")
+                level_dir = os.path.join(self.root, name)
+                if live is None:
+                    shutil.rmtree(level_dir)
+                    continue
+                for gen in os.listdir(level_dir):
+                    path = os.path.join(level_dir, gen)
+                    if gen == live:
+                        continue
+                    if os.path.isdir(path):
+                        shutil.rmtree(path)
+                    else:  # a level file of the flat layout before generations
+                        os.remove(path)
+        try:
+            os.remove(os.path.join(self.root, "_draft.json"))
+        except FileNotFoundError:
+            pass
+
+
+def _new_gen() -> str:
+    return f"g{uuid.uuid4().hex[:12]}"
 
 
 class CatalogTableIO(TableIO):
-    """Catalog-backed TableIO: levels as catalog tables, manifests as an
-    append-only journal table (latest row per zoom wins).
-
-    Same four-method contract as the parquet backend; write-then-commit is
-    preserved because the manifest row is appended only AFTER the level
-    table is fully (re)created.  With ``format="iceberg"`` on a configured
-    Iceberg catalog the level write is a snapshot commit and the journal
-    rides the same table format; with the default session catalog it
-    degrades to managed parquet tables.  ``write_level_pandas`` routes
-    through Spark (a catalog has no local files to short-circuit to).
+    """Catalog-backed TableIO: each level generation is a table
+    ``<prefix>_z<zoom>_<gen>``, and snapshots and drafts are rows of the
+    append-only journal ``<prefix>_journal`` (the latest row of each kind
+    wins), so every publish appends one snapshot row.  ``write_level_pandas``
+    routes through Spark (a catalog has no local files to short-circuit to).
 
     Upgrading the seam to real Iceberg (no code change, session config
     only — the exact spark-submit flags; pick the runtime artifact that
@@ -220,102 +308,72 @@ class CatalogTableIO(TableIO):
         --conf spark.sql.catalog.vtg.warehouse=s3://bucket/warehouse
 
     then ``CatalogTableIO(spark, namespace="vtg.vt_grid",
-    format="iceberg")`` — level replaces become atomic snapshot commits
-    and the manifest journal rides Iceberg's own snapshot lineage.  The
-    contract test (tests/test_pyramid.py::test_catalog_tableio_contract)
-    runs the identical code path against the session catalog's V2 writer
-    on every `pytest tests/` run — no jar, no skip.
+    format="iceberg")``.  The contract test
+    (tests/test_pyramid.py::test_catalog_tableio_contract) runs the
+    identical code path against the session catalog's V2 writer on every
+    `pytest tests/` run — no jar, no skip.
     """
 
+    _JOURNAL_SCHEMA = "kind string, body string, committed_at double"
+
     def __init__(self, spark: SparkSession, namespace: str = "vt_grid",
-                 prefix: str = "pyramid", format: str = "parquet"):
+                 prefix: str = "pyramid", format: str = "parquet",
+                 delta_id: int | None = None):
         # deliberately NOT calling super().__init__ — no filesystem root
         self.spark = spark
         self.namespace = namespace
         self.prefix = prefix
         self.format = format
+        self._init_protocol(delta_id)
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace}")
-        self._manifest_tbl = f"{namespace}.{prefix}_manifest"
-        if not spark.catalog.tableExists(self._manifest_tbl):
-            spark.createDataFrame(
-                [], "zoom int, status string, row_count long, manifest string,"
-                    " completed_at double"
-            ).writeTo(self._manifest_tbl).using(format).create()
+        self._journal = f"{namespace}.{prefix}_journal"
+        if not spark.catalog.tableExists(self._journal):
+            spark.createDataFrame([], self._JOURNAL_SCHEMA) \
+                .writeTo(self._journal).using(format).create()
 
-    # -- naming ----------------------------------------------------------------
     def level_table(self, zoom: int) -> str:
-        return f"{self.namespace}.{self.prefix}_z{zoom}"
-
-    # -- manifest journal --------------------------------------------------------
-    def _append_manifest(self, manifest: dict) -> dict:
-        row = self.spark.createDataFrame(
-            [(int(manifest["zoom"]), manifest["status"],
-              int(manifest["row_count"]), json.dumps(manifest, sort_keys=True),
-              float(manifest["completed_at"]))],
-            "zoom int, status string, row_count long, manifest string,"
-            " completed_at double",
-        )
-        try:
-            row.writeTo(self._manifest_tbl).append()
-        except Exception:
-            # session catalog exposes CTAS-created tables as v1 — the V2
-            # append is rejected; the v1 writer appends to the same table
-            row.write.mode("append").saveAsTable(self._manifest_tbl)
-        return manifest
-
-    def _latest_manifest(self, zoom: int) -> dict | None:
-        rows = (self.spark.table(self._manifest_tbl)
-                .where(F.col("zoom") == zoom)
-                .orderBy(F.col("completed_at").desc())
-                .limit(1).collect())
-        return json.loads(rows[0].manifest) if rows else None
-
-    # -- the four-method contract -------------------------------------------------
-    def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None) -> dict:
-        out = df.drop("zoom") if "zoom" in df.columns else df
-        name = self.level_table(zoom)
-        try:
-            out.writeTo(name).using(self.format).createOrReplace()
-        except Exception:
-            # the plain V2 session catalog cannot do atomic REPLACE TABLE;
-            # degrade to drop+create (non-atomic — an Iceberg catalog does
-            # this as one snapshot commit, which is the point of the seam)
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            out.writeTo(name).using(self.format).create()
-        n = self.spark.table(name).count()
-        manifest = {
-            "zoom": zoom,
-            "status": "complete",
-            "row_count": int(n),
-            "table": name,
-            "lineage": lineage or {},
-            "completed_at": time.time(),
-        }
-        return self._append_manifest(manifest)
-
-    def amend_manifest(self, zoom: int, **extra) -> dict:
-        m = self.read_manifest(zoom)
-        m.update(extra)
-        m["completed_at"] = time.time()
-        return self._append_manifest(m)
-
-    def level_complete(self, zoom: int) -> bool:
-        if not self.spark.catalog.tableExists(self.level_table(zoom)):
-            return False
-        m = self._latest_manifest(zoom)
-        return bool(m) and m.get("status") == "complete"
+        """Table of the level's generation that this caller sees."""
+        return self._table(zoom, self.read_manifest(zoom)["gen"])
 
     def read_level(self, spark: SparkSession, zoom: int) -> DataFrame:
         return spark.table(self.level_table(zoom)).withColumn("zoom", F.lit(zoom))
 
-    def read_manifest(self, zoom: int) -> dict:
-        m = self._latest_manifest(zoom)
-        if m is None:
-            raise FileNotFoundError(f"no manifest for zoom {zoom}")
-        return m
-
-    # -- driver-side write: no local files behind a catalog — go through Spark --
     def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
         out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
         return self.write_level(self.spark.createDataFrame(out), zoom,
                                 lineage=lineage)
+
+    # -- catalog storage -----------------------------------------------------------
+    def _table(self, zoom: int, gen: str) -> str:
+        return f"{self.namespace}.{self.prefix}_z{zoom}_{gen}"
+
+    def _write(self, out: DataFrame, zoom: int, gen: str) -> dict:
+        name = self._table(zoom, gen)
+        out.writeTo(name).using(self.format).create()
+        return {"row_count": self.spark.table(name).count(), "table": name}
+
+    def _load(self, kind: str) -> dict | None:
+        rows = (self.spark.table(self._journal)
+                .where(F.col("kind") == kind)
+                .orderBy(F.col("committed_at").desc())
+                .limit(1).collect())
+        return json.loads(rows[0].body) if rows else None
+
+    def _store(self, kind: str, doc: dict) -> None:
+        row = self.spark.createDataFrame(
+            [(kind, json.dumps(doc, sort_keys=True), time.time())],
+            self._JOURNAL_SCHEMA)
+        try:
+            row.writeTo(self._journal).append()
+        except Exception:
+            # session catalog exposes CTAS-created tables as v1 — the V2
+            # append is rejected; the v1 writer appends to the same table
+            row.write.mode("append").saveAsTable(self._journal)
+
+    def _collect(self, levels: dict) -> None:
+        live = {self._table(r["zoom"], r["gen"]).lower() for r in levels.values()}
+        level = re.compile(rf"{re.escape(self.prefix.lower())}_z\d+_g[0-9a-f]+")
+        for t in self.spark.catalog.listTables(self.namespace):
+            name = f"{self.namespace}.{t.name}".lower()
+            if level.fullmatch(t.name.lower()) and name not in live:
+                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
