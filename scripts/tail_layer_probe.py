@@ -1,0 +1,90 @@
+"""Layer split of the headline pyramid build: build wall and tail layer.
+
+Builds ``bench.py``'s headline pyramid (count + sum over the page corpus,
+cell zoom 12 -> 0) several times in one session and prints one JSON line
+per build with its wall and its tail layer.  The tail layer runs from the
+first ``rollup_ancestors`` call (the batched aggregation of the small upper
+levels) to the end of the last ``TableIO.write_level_pandas`` (the driver's
+per-level writes): the collect, the per-level slicing and the writes.
+
+    python scripts/tail_layer_probe.py [--builds 7] [--src DIR]
+
+``--src`` imports ``vt_grid_spark`` from another checkout, so two trees are
+compared with one script.  The first builds still JIT-warm on a few cores:
+compare the median of builds 4-7, in alternating fresh processes.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import sys
+import tempfile
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
+
+
+def main(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--builds", type=int, default=7)
+    ap.add_argument("--src", default=ROOT)
+    args = ap.parse_args(argv)
+    sys.path.insert(0, args.src)
+
+    from pyspark.sql import functions as F
+
+    from vt_grid_spark.operators import pyramid
+    from vt_grid_spark.plans.aggspec import AggSpec
+    from vt_grid_spark.plans.pyramid_plan import PyramidPlan, ZoomBand
+    from vt_grid_spark.session import get_spark
+    from vt_grid_spark.sources import pages
+    from vt_grid_spark.sources.table_io import TableIO
+
+    marks: dict = {}
+    ancestors, write = pyramid.rollup_ancestors, TableIO.write_level_pandas
+
+    def timed_ancestors(*a, **kw):
+        marks.setdefault("tail_start", time.perf_counter())
+        return ancestors(*a, **kw)
+
+    def timed_write(*a, **kw):
+        out = write(*a, **kw)
+        marks["tail_end"] = time.perf_counter()
+        return out
+
+    pyramid.rollup_ancestors = timed_ancestors
+    TableIO.write_level_pandas = timed_write
+
+    spark = get_spark("tail-layer-probe", cores=CPUS)
+    pts = pages.with_coords(pages.pages_df(spark, pages.n_for_sf_dir(SF_DIR)))
+    pts = pts.withColumn("v", F.length("text").cast("double"))
+    specs = [AggSpec(out="cnt", reducer="count"),
+             AggSpec(out="sum_v", reducer="sum", field="v")]
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=13, minzoom=0, aggregations=specs)],
+                       gridsize=1, salt_buckets=16)
+    pts.count()  # input generation outside the timed builds
+    for i in range(1, args.builds + 1):
+        out_dir = tempfile.mkdtemp(
+            prefix="vtgrid_tail_",
+            dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
+        marks.clear()
+        try:
+            t0 = time.perf_counter()
+            pyramid.build_pyramid(pts, plan, TableIO(out_dir), resume=False)
+            wall = time.perf_counter() - t0
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        tail = marks["tail_end"] - marks["tail_start"]
+        print(json.dumps({"build": i, "wall_s": round(wall, 3),
+                          "tail_s": round(tail, 3)}), flush=True)
+    spark.stop()
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

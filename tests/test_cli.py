@@ -114,7 +114,7 @@ def test_cli_reducer_module_build(spark, tmp_path):
         assert m["lineage"]["op"] == "custom-reduce"
         lvl = _level_files(spark, out, z)
         assert lvl.agg(F.sum("n")).collect()[0][0] == n_pts
-        assert set(lvl.columns) >= {"x", "y", "quadkey", "median_chars", "n"}
+        assert set(lvl.columns) == {"x", "y", "median_chars", "n"}  # no stored quadkey
 
     # flag exclusivity: neither or both -> usage error
     assert main([src, "-o", out, "--basezoom", "6"]) == 2

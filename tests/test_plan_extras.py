@@ -100,6 +100,31 @@ def test_geojson_export_view(spark):
     assert abs(ring[0][0] - float(w)) < 1e-12 and abs(ring[0][1] - float(s)) < 1e-12
 
 
+def test_geojson_export_view_of_stored_level(spark, tmp_path):
+    """A stored level holds no quadkey: the export view derives each
+    feature's ``_quadKey`` from the level's (x, y) at its zoom."""
+    import json
+
+    from vt_grid_spark import tilemath as tm
+    from vt_grid_spark.operators.pyramid import build_pyramid
+    from vt_grid_spark.sources.export import geojson_view
+    from vt_grid_spark.sources.table_io import TableIO
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=6, minzoom=4,
+                                       aggregations=[AggSpec(out="cnt", reducer="count")])],
+                       gridsize=4)
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(pages.with_coords(pages.pages_df(spark, 500)), plan, io, resume=False)
+    for z in (6, 5):  # a Spark level and a tail level
+        level = io.read_level(spark, z)
+        assert "quadkey" not in level.columns
+        cells = {(r.x, r.y): r.cnt for r in level.collect()}
+        props = [json.loads(r.feature)["properties"]
+                 for r in geojson_view(level, z, ["cnt"]).collect()]
+        got = {tm.quadkey_to_tile(p["_quadKey"]): p["cnt"] for p in props}
+        assert got == {(x, y, z): c for (x, y), c in cells.items()} and got
+
+
 def test_parse_agg_strings_reference_semantics():
     """CLI strings parse like /root/reference/bin/vt-grid:30-44: output
     property = field name, one spec per string, unknown reducers raise."""

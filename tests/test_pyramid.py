@@ -53,11 +53,21 @@ def test_parent_equals_sum_of_children(spark):
 
 
 def test_quadkey_prefix_parenthood(spark):
+    """Levels store no quadkey; the quadkey ``vf.quadkey`` derives from a
+    level's (x, y) keeps the parent == child-prefix relation."""
+    from vt_grid_spark import functions as vf
+
     plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=7, aggregations=SPECS[:2])],
                        gridsize=16)
     levels = build_pyramid_df(_points(spark, 1500), plan).cache()
-    child = {(r.x, r.y): r.quadkey for r in levels.where("zoom = 10").collect()}
-    parent = {(r.x, r.y): r.quadkey for r in levels.where("zoom = 9").collect()}
+    assert "quadkey" not in levels.columns
+
+    def keys(z):
+        qk = vf.quadkey(F.col("x"), F.col("y"), z).alias("qk")
+        return {(r.x, r.y): r.qk
+                for r in levels.where(F.col("zoom") == z).select("x", "y", qk).collect()}
+
+    child, parent = keys(10), keys(9)
     assert child and parent
     for (x, y), qk in child.items():
         assert len(qk) == 10
@@ -258,15 +268,15 @@ def test_concurrent_stages_are_all_published(tmp_path):
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
-    import pandas as pd
+    import pyarrow as pa
 
     io = TableIO(str(tmp_path / "pyr"))
-    pdf = pd.DataFrame({"x": [1, 2], "y": [3, 4], "cnt": [5, 6]})
+    table = pa.table({"x": [1, 2], "y": [3, 4], "cnt": [5, 6]})
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
         with io.commit(), ThreadPoolExecutor(max_workers=16) as pool:
-            done = list(pool.map(lambda z: io.write_level_pandas(pdf, z), range(64),
+            done = list(pool.map(lambda z: io.write_level_pandas(table, z), range(64),
                                  timeout=120))
     finally:
         sys.setswitchinterval(interval)
@@ -346,12 +356,17 @@ def test_catalog_tableio_contract(spark):
     def max_cnt(z):
         return io.read_level(spark, z).agg(F.max("cnt")).collect()[0][0]
 
+    def counted(man):
+        # row_count is observed on each level's create job: no count job
+        for z, m in man.items():
+            assert spark.table(io._table(z, m["gen"])).count() == m["row_count"] > 0
+
     try:
         m1 = build_pyramid(pts, plan, io)
         assert sorted(m1) == [8, 9]  # cell zooms for outputs 7 (base), 6
+        counted(m1)
         for z, man in m1.items():
-            assert man["status"] == "complete" and man["row_count"] > 0
-            assert spark.table(io.level_table(z)).count() == man["row_count"]
+            assert man["status"] == "complete"
             assert man["max_cell_rows"] == max_cnt(z)  # observed on the write
 
         # resume: every level complete -> nothing re-runs
@@ -371,6 +386,7 @@ def test_catalog_tableio_contract(spark):
         # a fold on this backend observes max_cell_rows on its merge
         # write; folding the same points doubles every count
         m3 = incremental_update(pts, plan, io)
+        counted(m3)
         for z in m1:
             assert m3[z]["row_count"] == m1[z]["row_count"]
             assert m3[z]["max_cell_rows"] == 2 * m1[z]["max_cell_rows"] == max_cnt(z)
@@ -393,6 +409,15 @@ def test_catalog_tableio_contract(spark):
         assert {(r.x, r.y, r.cnt, r.sum_v)
                 for r in io.read_level(spark, 9).collect()} == rows
         assert not spark.catalog.tableExists(old_table)
+        counted({9: m4})
+
+        # one level write is one Spark job, the create: inside an open
+        # commit, write_level starts that job plus the draft's journal
+        # append (a read-back count job would make these 2 and 3)
+        level = io.read_level(spark, 8)
+        with io.commit():
+            assert _jobs_started(spark, lambda: io._write(level, 8, "g0")) == 1
+            assert _jobs_started(spark, lambda: io.write_level(level, 8)) == 2
     finally:
         spark.sql("DROP NAMESPACE IF EXISTS vtg_test CASCADE")
 
@@ -537,7 +562,7 @@ def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
     assert sorted(man) == list(range(6, 11))
     assert all(man[z]["lineage"]["op"] == "rollup-small" for z in range(6, 10))
     mem = build_pyramid_df(pts, plan).cache()
-    cols = ["x", "y", "quadkey", "cnt", "sum_v", "mean_v__cnt", "mean_v__sum",
+    cols = ["x", "y", "cnt", "sum_v", "mean_v__cnt", "mean_v__sum",
             "min_v", "max_v", "langs"]
     for z in man:
         got = _rows(io.read_level(spark, z), cols)
@@ -781,3 +806,99 @@ def test_incremental_update_requires_complete_pyramid(spark, tmp_path):
                        gridsize=16)
     with pytest.raises(ValueError, match="complete pyramid"):
         incremental_update(_points(spark, 100), plan, TableIO(str(tmp_path / "x")))
+
+
+def _with_stored_quadkey(io, spark, zooms):
+    """Rewrite levels in the layout from before levels stopped storing the
+    quadkey: ``x, y, quadkey`` and the aggregates, records kept."""
+    from vt_grid_spark import functions as vf
+
+    with io.commit():
+        for z in zooms:
+            old = io.read_manifest(z)
+            level = io.read_level(spark, z)
+            aggs = [c for c in level.columns if c not in ("zoom", "x", "y")]
+            io.write_level(level.select("x", "y", vf.quadkey(F.col("x"), F.col("y"), z)
+                                        .alias("quadkey"), *aggs),
+                           z, lineage=old["lineage"])
+            io.amend_manifest(z, max_cell_rows=old["max_cell_rows"])
+
+
+def test_stored_quadkey_layout_reads_resumes_and_folds(spark, tmp_path):
+    """A pyramid whose levels still store ``quadkey`` reads, resumes (the
+    missing upper levels roll up from a stored level) and folds; the
+    folded levels drop the column and equal a clean rebuild over both
+    batches on x, y and every aggregate."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    small = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                        gridsize=16)
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=3, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [9, 8, 7, 6, 5]
+    pts = _points(spark, 3000).cache()
+    a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
+    b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    io = TableIO(str(tmp_path / "old"))
+    build_pyramid(a, small, io, resume=False)
+    _with_stored_quadkey(io, spark, [9, 8, 7])
+    assert all("quadkey" in io.read_level(spark, z).columns for z in (9, 8, 7))
+
+    man = build_pyramid(a, plan, io, resume=True)
+    assert sorted(man) == sorted(zooms)
+    assert all(man[z]["lineage"]["op"] == "rollup-small" for z in (6, 5))
+    one_shot = TableIO(str(tmp_path / "a"))
+    build_pyramid(a, plan, one_shot, resume=False)
+    cols = [c for c in one_shot.read_level(spark, 9).columns if c != "zoom"]
+    assert {z: _rows(io.read_level(spark, z), cols) for z in zooms} == \
+        {z: _rows(one_shot.read_level(spark, z), cols) for z in zooms}
+
+    incremental_update(b, plan, io)
+    full = TableIO(str(tmp_path / "full"))
+    build_pyramid(pts, plan, full, resume=False)
+    for z in zooms:
+        folded = io.read_level(spark, z)
+        assert "quadkey" not in folded.columns, z
+        got = _rows(folded, cols)
+        assert got == _rows(full.read_level(spark, z), cols) and got, z
+    pts.unpersist()
+
+
+def test_levels_store_no_quadkey_and_build_needs_no_pandas(spark, tmp_path,
+                                                           monkeypatch):
+    """No stored level carries ``quadkey``: Spark levels (base and a
+    distributed rollup), tail levels, folded levels and a custom pyramid.
+    The build and fold paths collect the tail as Arrow: with
+    ``DataFrame.toPandas`` raising, both still finish."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from vt_grid_spark.operators import pyramid as pyr
+    from vt_grid_spark.operators.custom_reduce import build_custom_pyramid
+    from vt_grid_spark.operators.encode import encode_points
+
+    def no_pandas(self, *args, **kwargs):
+        raise AssertionError("toPandas on the build path")
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=4, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [10, 9, 8, 7, 6]
+    pts = _points(spark, 2000).cache()
+    n_base = encode_points(pts, 10).select("x", "y").distinct().count()
+    # the base level alone is big enough for a distributed rollup
+    monkeypatch.setattr(pyr, "SMALL_LEVEL_ROWS", n_base)
+    monkeypatch.setattr(DataFrame, "toPandas", no_pandas)
+
+    io = TableIO(str(tmp_path / "pyr"))
+    man = build_pyramid(pts, plan, io, resume=False)
+    assert [man[z]["lineage"]["op"] for z in zooms] == \
+        ["encode+aggregate", "rollup"] + ["rollup-small"] * 3
+    man = pyr.incremental_update(pts, plan, io)
+    assert all(man[z]["lineage"]["op"] == "incremental-merge" for z in zooms)
+    custom = TableIO(str(tmp_path / "custom"))
+    build_custom_pyramid(pts, custom, lambda pdf, tile: {"n": len(pdf)}, "n long",
+                         basezoom=6, minzoom=5, gridsize=16)
+    for store, levels in ((io, zooms), (custom, [8, 7])):
+        for z in levels:
+            cols = store.read_level(spark, z).columns
+            assert "quadkey" not in cols and {"x", "y"} <= set(cols), (z, cols)
+    pts.unpersist()

@@ -33,7 +33,6 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def apply_custom_reducer(encoded: DataFrame, cell_z: int, mapper_z: int,
@@ -112,7 +111,6 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
 
     Returns {cell_zoom: manifest} like :func:`operators.pyramid.build_pyramid`.
     """
-    from vt_grid_spark import functions as vf
     from vt_grid_spark.operators.encode import encode_points
     from vt_grid_spark.tilemath import grid_zoom
 
@@ -126,12 +124,8 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
             encoded = encode_points(points, cell_z, with_quadkey=False)
             cells = apply_custom_reducer(encoded, cell_z, output_z, reduce_fn,
                                          result_schema, strategy=strategy)
-            out = (cells.withColumn("zoom", F.lit(cell_z))
-                   .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z)))
-            val_cols = [c for c in cells.columns if c not in ("x", "y")]
-            out = out.select("zoom", "x", "y", "quadkey", *val_cols)
             manifests[cell_z] = io.write_level(
-                out, cell_z,
+                cells, cell_z,
                 lineage={"input": "points", "op": "custom-reduce",
                          "output_tile_zoom": output_z, "strategy": strategy})
     return manifests

@@ -14,17 +14,18 @@ the cache is cold and the level IS re-read from its checkpoint.
 
 The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
 ``rollup_ancestors`` aggregation per zoom band derives all of its levels at
-once, collected to the driver and written level by level.  Both paths use
-the combiners of ``compile_rollup_aggs``, derived from ``aggspec.REDUCERS``,
-the one place a reducer's merge rule is defined.
+once, collected to the driver as one Arrow table and written per level.
+Both paths use the combiners of ``compile_rollup_aggs``, derived from
+``aggspec.REDUCERS``, the one place a reducer's merge rule is defined.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from vt_grid_spark import tilemath as tm
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
                                             cover_lonlat_predicate, cover_ranges,
                                             encode_points)
@@ -51,10 +52,10 @@ def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame
     PushedFilters — partition/row-group pruning), then the exact integer
     cell-range predicate on the encoded key."""
     ranges = cover_ranges(cell_z, plan.bbox, plan.tiles)
-    if not ranges:
-        return encode_points(points, cell_z)
-    pre = points.where(cover_lonlat_predicate(ranges, cell_z))
-    return encode_points(pre, cell_z).where(cover_cell_predicate(ranges))
+    if ranges:
+        points = points.where(cover_lonlat_predicate(ranges, cell_z))
+    return (encode_points(points, cell_z, with_quadkey=False)
+            .where(cover_cell_predicate(ranges)))  # no cover: a pruned where(true)
 
 
 def _observe_max(df: DataFrame, count_col: str | None):
@@ -161,26 +162,29 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                     children = (prev_df if prev_df is not None
                                 else io.read_level(spark, prev_cell_z))
                     min_z = min(z for _, z, b in levels if b is band)
-                    batch = (rollup_ancestors(children, prev_cell_z, min_z,
-                                              band.aggregations)
-                             .toPandas()
-                             .sort_values(["zoom", "x", "y"]))  # same files every run
-                    tail = {z: batch[batch["zoom"] == z].reset_index(drop=True)
-                            for z in range(min_z, prev_cell_z)}
+                    batch = rollup_ancestors(children, prev_cell_z, min_z,
+                                             band.aggregations).toArrow()
+                    # sorted (same files every run) on one int64 key, 4^z +
+                    # x*2^z + y: exact for zooms <= 31, ~4x faster than sort_by
+                    zoom, x, y = (batch[k].to_numpy().astype(np.int64)
+                                  for k in ("zoom", "x", "y"))
+                    order = np.argsort((1 << 2 * zoom) | (x << zoom) | y)
+                    batch = batch.take(order)
+                    ends = zoom[order].searchsorted(range(min_z, prev_cell_z + 1))
+                    tail = {z: batch.slice(ends[i], ends[i + 1] - ends[i])
+                            for i, z in enumerate(range(min_z, prev_cell_z))}
                     if prev_df is not None:
                         prev_df.unpersist()
                         prev_df = None  # remaining levels are driver-side
-                pdf = tail.pop(cell_z)
-                pdf.insert(3, "quadkey", tm.tile_to_quadkey(pdf["x"].to_numpy(),
-                                                            pdf["y"].to_numpy(), cell_z))
+                table = tail.pop(cell_z)
                 manifests[cell_z] = io.write_level_pandas(
-                    pdf, cell_z,
+                    table, cell_z,
                     lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
                              "output_tile_zoom": output_z},
                 )
                 if count_col is not None:
                     # an empty level (cover outside every point) records 0
-                    mx = int(pdf[count_col].max()) if len(pdf) else 0
+                    mx = pc.max(table[count_col]).as_py() or 0
                     manifests[cell_z] = io.amend_manifest(cell_z, max_cell_rows=mx)
             else:
                 salt = _salt_for(prev_cell_z, band)

@@ -4,9 +4,11 @@ The reference buckets children by parent quadkey
 (/root/reference/lib/aggregate-cells.js:26-50, ``getParent∘quadkeyToTile`` =
 drop-last-char).  Here the whole level is ONE hash aggregation on the
 integer parent key ``(x>>1, y>>1)`` — no geometry, no strings in the
-grouping key (quadkey is re-derived per level as presentation).
-``rollup_ancestors`` is the batched form: all levels of a small zoom band
-in one hash aggregation on ``(zoom, x>>d, y>>d)``.
+grouping key.  A level is ``zoom, x, y`` plus aggregates: the quadkey is
+presentation, derived (``vf.quadkey``) where a level is presented, never
+stored.  ``rollup_ancestors`` is the batched form: all levels of a small
+zoom band in one hash aggregation on ``(zoom, x>>d, y>>d)``, which the
+pyramid tail collects to the driver as one Arrow table.
 
 Scale notes (100 TB / 1000 executors):
   * Algebraic reducers (count/sum/min/max/mean/AWM partials) are immune to
@@ -71,11 +73,10 @@ def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
         grouped.withColumnRenamed("_px", "x")
         .withColumnRenamed("_py", "y")
         .withColumn("zoom", F.lit(z))
-        .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
     )
     # stable column order: keys, then aggregates
-    agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", "quadkey", *keys}]
-    return out.select("zoom", "x", "y", "quadkey", *keys, *agg_cols)
+    agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", *keys}]
+    return out.select("zoom", "x", "y", *keys, *agg_cols)
 
 
 def rollup_ancestors(cells: DataFrame, child_z: int, min_z: int,
@@ -118,11 +119,9 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
     for p in parts[1:]:
         base = base.unionByName(p.select(*cols))
     grouped = base.groupBy("x", "y", *keys).agg(*compile_rollup_aggs(specs))
-    out = (grouped.withColumn("zoom", F.lit(zoom))
-           .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), zoom)))
-    agg_cols = [c for c in out.columns
-                if c not in {"zoom", "x", "y", "quadkey", *keys}]
-    return out.select("zoom", "x", "y", "quadkey", *keys, *agg_cols)
+    out = grouped.withColumn("zoom", F.lit(zoom))
+    agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", *keys}]
+    return out.select("zoom", "x", "y", *keys, *agg_cols)
 
 
 def densify(cells: DataFrame, parent_z: int, cell_z: int) -> DataFrame:

@@ -115,10 +115,12 @@ def pyramid_rollup_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = [AggSpec(out="cnt", reducer="count"),
              AggSpec(out="sum_chars", reducer="sum", field="chars")]
     pts = _pts(spark, sf_dir).withColumn("chars", F.length("text").cast("long"))
-    cur = cell_aggregate(encode_points(pts, 12), 12, compile_aggs(specs))
+    cur = cell_aggregate(encode_points(pts, 12, with_quadkey=False), 12,
+                         compile_aggs(specs))
     for child_z in range(12, 6, -1):
         cur = rollup_level(cur, child_z, specs)
-    return cur.select("x", "y", "quadkey", "cnt", "sum_chars")
+    return cur.select("x", "y", vf.quadkey(F.col("x"), F.col("y"), 6).alias("quadkey"),
+                      "cnt", "sum_chars")
 
 
 @register(
@@ -148,7 +150,8 @@ def pyramid_level_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     specs = [AggSpec(out="c", reducer="count")]
     pts = _pts(spark, sf_dir)
-    cur = cell_aggregate(encode_points(pts, 12), 12, compile_aggs(specs))
+    cur = cell_aggregate(encode_points(pts, 12, with_quadkey=False), 12,
+                         compile_aggs(specs))
     levels = [cur]
     for child_z in range(12, 6, -1):
         cur = rollup_level(cur, child_z, specs)

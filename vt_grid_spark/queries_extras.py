@@ -237,7 +237,7 @@ def geojson_export_parse_z4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
     from vt_grid_spark.sources.export import geojson_view
 
-    enc = encode_points(_pts(spark, sf_dir), 4)
+    enc = encode_points(_pts(spark, sf_dir), 4, with_quadkey=False)
     cells = cell_aggregate(enc, 4, [
         F.count(F.lit(1)).alias("cnt"),
         F.to_json(F.array_sort(F.collect_set("lang"))).alias("langs_json"),
@@ -469,7 +469,8 @@ def tile_join_merge_z7(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves = [cell_aggregate(enc.where(F.col("_par") == i), 7,
                              compile_aggs(specs)) for i in (0, 1)]
     merged = merge_cells(halves, 7, specs)
-    return merged.select("x", "y", "quadkey", "cnt", "sum_chars",
+    return merged.select("x", "y", vf.quadkey(F.col("x"), F.col("y"), 7).alias("quadkey"),
+                         "cnt", "sum_chars",
                          F.array_join("langs", ",").alias("langs"))
 
 
@@ -1126,8 +1127,9 @@ def incremental_update_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-tripped each level through the driver (3 toPandas collects
         # + a createDataFrame re-upload)
         lv = [io.read_level(spark, z)
-                .select(F.col("zoom").cast("long").alias("zoom"),
-                        "x", "y", "quadkey", "cnt", "sum_chars")
+                .select(F.col("zoom").cast("long").alias("zoom"), "x", "y",
+                        vf.quadkey(F.col("x"), F.col("y"), z).alias("quadkey"),
+                        "cnt", "sum_chars")
               for z in (8, 7, 6)]
         return lv[0].unionByName(lv[1]).unionByName(lv[2]) \
             .localCheckpoint(eager=True)

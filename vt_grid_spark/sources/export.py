@@ -34,7 +34,7 @@ def geojson_view(cells: DataFrame, z: int, properties: list[str],
     props = F.struct(
         *[F.col(p) for p in properties],
         F.lit(layer).alias("layer"),
-        F.col("quadkey").alias("_quadKey"),
+        vf.quadkey(F.col("x"), F.col("y"), z).alias("_quadKey"),
     )
     feature = F.struct(
         F.lit("Feature").alias("type"),

@@ -3,9 +3,10 @@ commit (https://iceberg.apache.org/spec/).
 
 "Iceberg" as an interface (SURVEY.md §7 g6): this class IS the seam and
 the only place a pyramid is committed.  The pyramid driver stages levels
-with ``write_level`` / ``write_level_pandas`` (the collected tail) /
-``amend_manifest`` and reads them with ``read_level`` / ``read_manifest``
-/ ``level_complete``.
+with ``write_level`` / ``write_level_pandas`` (the tail, collected as Arrow)
+/ ``amend_manifest`` and reads them with ``read_level`` / ``read_manifest``
+/ ``level_complete``.  Levels store x, y and aggregates; older levels that
+also store ``quadkey`` still read and fold.
 
 - A level write goes to a fresh *generation*, never over published data;
   its record (lineage, per-file row counts, status) is staged in a
@@ -38,7 +39,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -178,9 +179,9 @@ class TableIO:
             gen = _new_gen()
             return self._stage(zoom, gen, self._write(out, zoom, gen), lineage, cluster)
 
-    def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
-        """Driver-side write of one collected tail level."""
-        import pyarrow as pa
+    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None) -> dict:
+        """Driver-side write of one collected tail level, a ``pyarrow.Table``
+        (the name is older than the Arrow tail)."""
         import pyarrow.parquet as pq
 
         with self.commit():
@@ -188,11 +189,10 @@ class TableIO:
             path = self._gen_path(zoom, gen)
             os.makedirs(path)
             fname = "part-00000.parquet"
-            out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
-            pq.write_table(pa.Table.from_pandas(out, preserve_index=False),
-                           os.path.join(path, fname))
-            return self._stage(zoom, gen, {"row_count": len(out),
-                                           "files": {fname: len(out)}},
+            out = table.drop_columns(["zoom"]) if "zoom" in table.column_names else table
+            pq.write_table(out, os.path.join(path, fname))
+            return self._stage(zoom, gen, {"row_count": out.num_rows,
+                                           "files": {fname: out.num_rows}},
                                lineage, clustered=False)
 
     def cluster_level(self, spark: SparkSession, zoom: int,
@@ -295,7 +295,7 @@ class CatalogTableIO(TableIO):
     ``<prefix>_z<zoom>_<gen>``, and snapshots and drafts are rows of the
     append-only journal ``<prefix>_journal`` (the latest row of each kind
     wins), so every publish appends one snapshot row.  ``write_level_pandas``
-    routes through Spark (a catalog has no local files to short-circuit to).
+    hands its Arrow table to ``spark.createDataFrame``.
 
     Upgrading the seam to real Iceberg (no code change, session config
     only — the exact spark-submit flags; pick the runtime artifact that
@@ -338,19 +338,19 @@ class CatalogTableIO(TableIO):
     def read_level(self, spark: SparkSession, zoom: int) -> DataFrame:
         return spark.table(self.level_table(zoom)).withColumn("zoom", F.lit(zoom))
 
-    def write_level_pandas(self, pdf, zoom: int, lineage: dict | None = None) -> dict:
-        out = pdf.drop(columns=["zoom"]) if "zoom" in pdf.columns else pdf
-        return self.write_level(self.spark.createDataFrame(out), zoom,
-                                lineage=lineage)
+    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None) -> dict:
+        return self.write_level(self.spark.createDataFrame(table), zoom, lineage=lineage)
 
     # -- catalog storage -----------------------------------------------------------
     def _table(self, zoom: int, gen: str) -> str:
         return f"{self.namespace}.{self.prefix}_z{zoom}_{gen}"
 
     def _write(self, out: DataFrame, zoom: int, gen: str) -> dict:
-        name = self._table(zoom, gen)
+        # the row count is observed on the create job itself: no count job
+        name, obs = self._table(zoom, gen), Observation()
+        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
         out.writeTo(name).using(self.format).create()
-        return {"row_count": self.spark.table(name).count(), "table": name}
+        return {"row_count": obs.get["n"], "table": name}
 
     def _load(self, kind: str) -> dict | None:
         rows = (self.spark.table(self._journal)
