@@ -391,15 +391,16 @@ def test_catalog_tableio_contract(spark):
             assert m3[z]["row_count"] == m1[z]["row_count"]
             assert m3[z]["max_cell_rows"] == 2 * m1[z]["max_cell_rows"] == max_cnt(z)
 
-        # the journal is append-only: a bare amend is one publish, which
-        # appends one snapshot row; the latest wins
+        # the journal is append-only: a bare level write is one publish,
+        # which appends one snapshot row; the latest wins
         def snapshots():
             return spark.table(io._journal).where(F.col("kind") == "snapshot").count()
 
         before = snapshots()
-        io.amend_manifest(9, max_cell_rows=7)
+        m9 = io.write_level(io.read_level(spark, 9), 9, count_col="cnt")
         assert snapshots() == before + 1
-        assert io.read_manifest(9)["max_cell_rows"] == 7
+        assert io.read_manifest(9)["gen"] == m9["gen"]
+        assert io.read_manifest(9)["max_cell_rows"] == m9["max_cell_rows"] == max_cnt(9)
 
         # cluster_level: same rows, clustered, the replaced table dropped
         rows = {(r.x, r.y, r.cnt, r.sum_v) for r in io.read_level(spark, 9).collect()}
@@ -413,11 +414,16 @@ def test_catalog_tableio_contract(spark):
 
         # one level write is one Spark job, the create: inside an open
         # commit, write_level starts that job plus the draft's journal
-        # append (a read-back count job would make these 2 and 3)
+        # append, and stages its record once, with the max observed on the
+        # create (a separate stage of the max would make the second 3)
         level = io.read_level(spark, 8)
         with io.commit():
             assert _jobs_started(spark, lambda: io._write(level, 8, "g0")) == 1
-            assert _jobs_started(spark, lambda: io.write_level(level, 8)) == 2
+            staged = {}
+            assert _jobs_started(spark, lambda: staged.update(
+                io.write_level(level, 8, count_col="cnt"))) == 2
+            assert io.read_manifest(8)["max_cell_rows"] == staged["max_cell_rows"]
+            assert staged["max_cell_rows"] == max_cnt(8)
     finally:
         spark.sql("DROP NAMESPACE IF EXISTS vtg_test CASCADE")
 
@@ -799,6 +805,90 @@ def test_empty_cover_build_records_zero_max(spark, tmp_path):
         assert m["max_cell_rows"] == 0, z
 
 
+def _max_cnt(io, spark, z):
+    return io.read_level(spark, z).agg(F.max("cnt")).collect()[0][0]
+
+
+def test_fold_restores_missing_max_cell_rows(spark, tmp_path):
+    """Build and fold track max_cell_rows by one plan-level rule: levels
+    rewritten without ``count_col`` (records with no max) regain it on
+    their next fold, equal to the folded level's re-read max count."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6,
+                                       aggregations=SPECS[:2] + [SPECS[5]])],
+                       gridsize=16)
+    zooms = [z for _, z, _ in plan.levels()]
+    pts = _points(spark, 1500)
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(pts, plan, io, resume=False)
+    with io.commit():
+        for z in zooms:
+            io.write_level(io.read_level(spark, z), z,
+                           lineage=io.read_manifest(z)["lineage"])
+    assert not any("max_cell_rows" in io.read_manifest(z) for z in zooms)
+
+    man = incremental_update(pts, plan, io)
+    for z in zooms:
+        assert man[z]["max_cell_rows"] == io.read_manifest(z)["max_cell_rows"] \
+            == _max_cnt(io, spark, z)
+
+
+def test_band_without_count_records_no_max(spark, tmp_path):
+    """Each level tracks its own band's count column: in a holistic plan
+    whose upper band has no count spec, the lower band's levels record
+    max_cell_rows (build and fold), the upper band's level records none,
+    and neither path asks a level for a column it does not have."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6,
+                                       aggregations=SPECS[:2] + [SPECS[5]]),
+                              ZoomBand(basezoom=6, minzoom=5, aggregations=[SPECS[5]])],
+                       gridsize=16)
+    assert [z for _, z, _ in plan.levels()] == [9, 8, 7]
+    pts = _points(spark, 1500)
+    io = TableIO(str(tmp_path / "pyr"))
+    for write in (lambda: build_pyramid(pts, plan, io, resume=False),
+                  lambda: incremental_update(pts, plan, io)):
+        man = write()
+        for z in (9, 8):
+            assert man[z]["max_cell_rows"] == _max_cnt(io, spark, z) > 0
+        assert "max_cell_rows" not in man[7]
+        assert "cnt" not in io.read_level(spark, 7).columns
+
+
+def test_crash_at_a_stage_leaves_every_record_with_its_max(spark, tmp_path,
+                                                           monkeypatch):
+    """A level write stages its record once, max_cell_rows included, so
+    no crash can leave a record without it: with the second stage of a
+    holistic build raising, the base level stays staged, a resume stages
+    each remaining level once, and every record's max_cell_rows equals
+    the level's re-read max count."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5,
+                                       aggregations=SPECS[:2] + [SPECS[5]])],
+                       gridsize=16)
+    zooms = [z for _, z, _ in plan.levels()]
+    assert len(zooms) == 3
+    pts = _points(spark, 1500)
+    io = TableIO(str(tmp_path / "pyr"))
+    put, staged = TableIO._put, []
+
+    def crashing_put(self, record):
+        staged.append(record["zoom"])
+        if len(staged) == 2:
+            raise RuntimeError("injected crash")
+        return put(self, record)
+
+    monkeypatch.setattr(TableIO, "_put", crashing_put)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(pts, plan, io, resume=False)
+    man = build_pyramid(pts, plan, io, resume=True)
+    for z in zooms:
+        assert io.read_manifest(z)["max_cell_rows"] == man[z]["max_cell_rows"] \
+            == _max_cnt(io, spark, z)
+    assert staged == zooms[:2] + zooms[1:]
+
+
 def test_incremental_update_requires_complete_pyramid(spark, tmp_path):
     from vt_grid_spark.operators.pyramid import incremental_update
 
@@ -820,8 +910,7 @@ def _with_stored_quadkey(io, spark, zooms):
             aggs = [c for c in level.columns if c not in ("zoom", "x", "y")]
             io.write_level(level.select("x", "y", vf.quadkey(F.col("x"), F.col("y"), z)
                                         .alias("quadkey"), *aggs),
-                           z, lineage=old["lineage"])
-            io.amend_manifest(z, max_cell_rows=old["max_cell_rows"])
+                           z, lineage=old["lineage"], count_col="cnt")
 
 
 def test_stored_quadkey_layout_reads_resumes_and_folds(spark, tmp_path):

@@ -22,8 +22,7 @@ Both paths use the combiners of ``compile_rollup_aggs``, derived from
 from __future__ import annotations
 
 import numpy as np
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
@@ -58,22 +57,16 @@ def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame
             .where(cover_cell_predicate(ranges)))  # no cover: a pruned where(true)
 
 
-def _observe_max(df: DataFrame, count_col: str | None):
-    """``(df, obs)``: ``df`` with the max per-cell point count observed on
-    the job that next materializes it — the level's own write — so
-    ``max_cell_rows`` costs no Spark job of its own.  ``obs`` is None when
-    there is nothing to track (``count_col`` None); read it with
-    :func:`_observed_max` after that job."""
-    if count_col is None:
-        return df, None
-    obs = Observation()
-    return df.observe(obs, F.max(count_col).alias("mx")), obs
-
-
-def _observed_max(obs: Observation) -> int:
-    """The max an :func:`_observe_max` write saw; 0 for an empty level."""
-    mx = obs.get["mx"]
-    return int(mx) if mx is not None else 0
+def _tracked_count(plan: PyramidPlan, band) -> str | None:
+    """The count column whose per-cell max a level of ``band`` records as
+    ``max_cell_rows`` (SURVEY.md §7 g5 re-salt rule): the band's own count
+    column, or None.  Holistic reducers concentrate a hot cell's values in
+    one task, so a holistic rollup salts only when the previous level's max
+    exceeds ``plan.hot_key_threshold``; plans with no holistic reducer track
+    nothing, since algebraic aggs are skew-immune via map-side partials."""
+    if not is_holistic([s for b in plan.bands for s in b.aggregations]):
+        return None
+    return count_column(band.aggregations)
 
 
 def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
@@ -101,23 +94,9 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
     levels = list(plan.levels())  # [(output_z, cell_z, band)] desc
     base_output_z, base_cell_z, base_band = levels[0]
 
-    # hot-key bookkeeping (SURVEY.md §7 g5 re-salt rule): holistic reducers
-    # concentrate a hot cell's values in one task, so each level's manifest
-    # records max_cell_rows (the max per-cell point count, read from the
-    # count aggregate: observed on a Spark level's write job, taken from the
-    # collected rows of a tail level) and the NEXT rollup salts only when it
-    # exceeds plan.hot_key_threshold.  Plans with no holistic reducer skip
-    # all of this — algebraic aggs are skew-immune via map-side partials.
-    all_specs = [s for b in plan.bands for s in b.aggregations]
-    count_col = count_column(all_specs) if is_holistic(all_specs) else None
-
-    def _write_spark_level(df: DataFrame, zoom: int, lineage: dict) -> None:
-        df, obs = _observe_max(df, count_col)
-        manifests[zoom] = io.write_level(df, zoom, lineage=lineage)
-        if obs is not None:
-            manifests[zoom] = io.amend_manifest(zoom,
-                                                max_cell_rows=_observed_max(obs))
-
+    # hot-key bookkeeping: every level write records max_cell_rows in the
+    # record it stages (observed on a Spark level's write job, taken from
+    # the collected table of a tail level), and _salt_for reads it
     def _salt_for(prev_zoom: int, band) -> int:
         if plan.salt_buckets <= 1 or not is_holistic(band.aggregations):
             return 0
@@ -137,9 +116,10 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                 encoded = encoded.repartition(repartition, "x", "y")
             base = cell_aggregate(encoded, base_cell_z,
                                   compile_aggs(base_band.aggregations)).persist()
-            _write_spark_level(base, base_cell_z,
-                               {"input": "points", "op": "encode+aggregate",
-                                "output_tile_zoom": base_output_z})
+            manifests[base_cell_z] = io.write_level(
+                base, base_cell_z, {"input": "points", "op": "encode+aggregate",
+                                    "output_tile_zoom": base_output_z},
+                count_col=_tracked_count(plan, base_band))
             prev_df = base
 
         # --- rollup levels ---------------------------------------------------
@@ -176,26 +156,22 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                     if prev_df is not None:
                         prev_df.unpersist()
                         prev_df = None  # remaining levels are driver-side
-                table = tail.pop(cell_z)
                 manifests[cell_z] = io.write_level_pandas(
-                    table, cell_z,
+                    tail.pop(cell_z), cell_z,
                     lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
                              "output_tile_zoom": output_z},
-                )
-                if count_col is not None:
-                    # an empty level (cover outside every point) records 0
-                    mx = pc.max(table[count_col]).as_py() or 0
-                    manifests[cell_z] = io.amend_manifest(cell_z, max_cell_rows=mx)
+                    count_col=_tracked_count(plan, band))
             else:
                 salt = _salt_for(prev_cell_z, band)
                 children = (prev_df if prev_df is not None
                             else io.read_level(spark, prev_cell_z))
                 level = rollup_level(children, prev_cell_z, band.aggregations,
                                      salt_buckets=salt).persist()
-                _write_spark_level(level, cell_z,
-                                   {"input": f"zoom={prev_cell_z}", "op": "rollup",
+                manifests[cell_z] = io.write_level(
+                    level, cell_z, {"input": f"zoom={prev_cell_z}", "op": "rollup",
                                     "output_tile_zoom": output_z, "salted": salt > 1,
-                                    "salt_buckets": salt})
+                                    "salt_buckets": salt},
+                    count_col=_tracked_count(plan, band))
                 if prev_df is not None:
                     prev_df.unpersist()
                 prev_df = level
@@ -223,8 +199,10 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     through a broadcast LEFT ANTI join (no shuffle of the big table), and
     hash-merge only the touched slice with the delta partials.  Cost per
     level = one scan of the level + one tiny shuffle of the touched slice,
-    instead of a full rebuild from raw points.  ``max_cell_rows`` is
-    observed on the level's own write job.  Deletes are out of scope
+    instead of a full rebuild from raw points.  Each merged level records
+    ``max_cell_rows`` by the build's rule (:func:`_tracked_count`),
+    observed on the level's own write job, so a record that lacks it
+    regains it.  Deletes are out of scope
     (append-only corpus, min/max/union/kmv are insert-monotone).
 
     The fold is one ``io.commit``: each merged level goes to a fresh
@@ -268,27 +246,20 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
 
     def _merge_level(item):
         output_z, cell_z, band, delta = item
-        specs = band.aggregations
         existing = io.read_level(spark, cell_z)
         keys = delta.select("x", "y")
         untouched = existing.join(F.broadcast(keys), ["x", "y"], "left_anti")
         touched = existing.join(F.broadcast(keys), ["x", "y"], "left_semi")
-        merged = merge_cells([touched, delta], cell_z, specs)
-        cols = merged.columns
-        old = io.read_manifest(cell_z)
-        # hot-key bookkeeping stays valid: max_cell_rows is observed on the
-        # job that materializes the new level, never by re-reading it
-        track = old.get("max_cell_rows") is not None
-        new_level, obs = _observe_max(untouched.select(*cols).unionByName(merged),
-                                      count_column(specs) if track else None)
+        merged = merge_cells([touched, delta], cell_z, band.aggregations)
         # the merged plan lazily reads the level it replaces; the write goes
-        # to a new generation, so it is the only materialization
-        m = io.write_level(new_level, cell_z, lineage={
-            "input": f"zoom={cell_z}+delta", "op": "incremental-merge",
-            "output_tile_zoom": output_z, "previous_row_count": old.get("row_count")})
-        if obs is not None:
-            m = io.amend_manifest(cell_z, max_cell_rows=_observed_max(obs))
-        return cell_z, m
+        # to a new generation, so it is the only materialization, and the
+        # max_cell_rows it records is observed on it, as a build's is
+        return cell_z, io.write_level(
+            untouched.select(*merged.columns).unionByName(merged), cell_z,
+            lineage={"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
+                     "output_tile_zoom": output_z,
+                     "previous_row_count": io.read_manifest(cell_z).get("row_count")},
+            count_col=_tracked_count(plan, band))
 
     # phase 2 — once the delta chain exists the per-level merges are
     # independent of each other: run them from a small thread pool so one

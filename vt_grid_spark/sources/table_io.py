@@ -4,13 +4,14 @@ commit (https://iceberg.apache.org/spec/).
 "Iceberg" as an interface (SURVEY.md §7 g6): this class IS the seam and
 the only place a pyramid is committed.  The pyramid driver stages levels
 with ``write_level`` / ``write_level_pandas`` (the tail, collected as Arrow)
-/ ``amend_manifest`` and reads them with ``read_level`` / ``read_manifest``
-/ ``level_complete``.  Levels store x, y and aggregates; older levels that
-also store ``quadkey`` still read and fold.
+and reads them with ``read_level`` / ``read_manifest`` / ``level_complete``.
+Levels store x, y and aggregates; older levels that also store
+``quadkey`` still read and fold.
 
 - A level write goes to a fresh *generation*, never over published data;
-  its record (lineage, per-file row counts, status) is staged in a
-  durable *draft*, from which a killed build resumes.
+  its record (lineage, row counts, status, the metrics observed on the
+  write) is staged once, in a durable *draft*, from which a killed build
+  resumes.
 - Each writer call runs in one :meth:`TableIO.commit` and ends with ONE
   publish: an atomic replace of the snapshot, which names every live
   level's generation and record plus the last applied delta id.
@@ -149,10 +150,19 @@ class TableIO:
 
     # -- write ---------------------------------------------------------------
     def write_level(self, df: DataFrame, zoom: int, lineage: dict | None = None,
-                    cluster: bool = False,
-                    cluster_partitions: int | None = None) -> dict:
+                    cluster: bool = False, cluster_partitions: int | None = None,
+                    count_col: str | None = None) -> dict:
         """Write one pyramid level to a fresh generation and stage its
-        record.
+        record, once.
+
+        The record holds ``zoom``, ``gen``, ``status`` ("complete"),
+        ``row_count``, where the rows are (``files``, the row count of
+        each parquet file; ``table`` on the catalog backend), ``lineage``,
+        ``clustered`` and ``completed_at``.  With ``count_col`` set it
+        also holds ``max_cell_rows``, the largest value of that per-cell
+        count column (0 for an empty level), which the hot-key re-salt
+        rule reads.  ``row_count`` and ``max_cell_rows`` are observed on
+        the level's own write job, so they cost no Spark job.
 
         ``cluster=True`` Z-orders the level on disk: rows are range-
         partitioned and sorted by the Morton code of (x, y), so every
@@ -175,13 +185,22 @@ class TableIO:
             n_parts = cluster_partitions or int(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
             out = zorder_clustered(out, n_parts)
+        metrics = [F.count(F.lit(1)).alias("row_count")]
+        if count_col is not None:
+            metrics.append(F.max(count_col).alias("max_cell_rows"))
+        obs = Observation()
         with self.commit():
             gen = _new_gen()
-            return self._stage(zoom, gen, self._write(out, zoom, gen), lineage, cluster)
+            where = self._write(out.observe(obs, *metrics), zoom, gen)
+            observed = {k: v or 0 for k, v in obs.get.items()}  # empty: max is null
+            return self._stage(zoom, gen, {**where, **observed}, lineage, cluster)
 
-    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None) -> dict:
+    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None,
+                           count_col: str | None = None) -> dict:
         """Driver-side write of one collected tail level, a ``pyarrow.Table``
-        (the name is older than the Arrow tail)."""
+        (the name is older than the Arrow tail); its record is
+        :meth:`write_level`'s."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         with self.commit():
@@ -191,9 +210,10 @@ class TableIO:
             fname = "part-00000.parquet"
             out = table.drop_columns(["zoom"]) if "zoom" in table.column_names else table
             pq.write_table(out, os.path.join(path, fname))
-            return self._stage(zoom, gen, {"row_count": out.num_rows,
-                                           "files": {fname: out.num_rows}},
-                               lineage, clustered=False)
+            where = {"row_count": out.num_rows, "files": {fname: out.num_rows}}
+            if count_col is not None:
+                where["max_cell_rows"] = pc.max(out[count_col]).as_py() or 0
+            return self._stage(zoom, gen, where, lineage, clustered=False)
 
     def cluster_level(self, spark: SparkSession, zoom: int,
                       partitions: int | None = None) -> dict:
@@ -207,11 +227,6 @@ class TableIO:
             return self.write_level(self.read_level(spark, zoom), zoom,
                                     lineage=lineage, cluster=True,
                                     cluster_partitions=partitions)
-
-    def amend_manifest(self, zoom: int, **extra) -> dict:
-        """Merge extra keys into a level's record."""
-        with self.commit():
-            return self._put({**self.read_manifest(zoom), **extra})
 
     # -- read / resume ---------------------------------------------------------
     def level_complete(self, zoom: int) -> bool:
@@ -235,6 +250,7 @@ class TableIO:
         return os.path.join(self.root, f"zoom={zoom}", gen)
 
     def _write(self, out: DataFrame, zoom: int, gen: str) -> dict:
+        """Run the level's write job; return where its rows went."""
         # per-file row counts from parquet FOOTERS (driver-side pyarrow
         # metadata read, no Spark job) — a read-back count job per level was
         # the dominant fixed cost of the build at small level sizes
@@ -242,9 +258,9 @@ class TableIO:
 
         path = self._gen_path(zoom, gen)
         out.write.parquet(path)
-        files = {name: pq.read_metadata(os.path.join(path, name)).num_rows
-                 for name in sorted(os.listdir(path)) if name.endswith(".parquet")}
-        return {"row_count": sum(files.values()), "files": files}
+        return {"files": {name: pq.read_metadata(os.path.join(path, name)).num_rows
+                          for name in sorted(os.listdir(path))
+                          if name.endswith(".parquet")}}
 
     def _load(self, kind: str) -> dict | None:
         try:
@@ -338,19 +354,19 @@ class CatalogTableIO(TableIO):
     def read_level(self, spark: SparkSession, zoom: int) -> DataFrame:
         return spark.table(self.level_table(zoom)).withColumn("zoom", F.lit(zoom))
 
-    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None) -> dict:
-        return self.write_level(self.spark.createDataFrame(table), zoom, lineage=lineage)
+    def write_level_pandas(self, table, zoom: int, lineage: dict | None = None,
+                           count_col: str | None = None) -> dict:
+        return self.write_level(self.spark.createDataFrame(table), zoom,
+                                lineage=lineage, count_col=count_col)
 
     # -- catalog storage -----------------------------------------------------------
     def _table(self, zoom: int, gen: str) -> str:
         return f"{self.namespace}.{self.prefix}_z{zoom}_{gen}"
 
     def _write(self, out: DataFrame, zoom: int, gen: str) -> dict:
-        # the row count is observed on the create job itself: no count job
-        name, obs = self._table(zoom, gen), Observation()
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+        name = self._table(zoom, gen)
         out.writeTo(name).using(self.format).create()
-        return {"row_count": obs.get["n"], "table": name}
+        return {"table": name}
 
     def _load(self, kind: str) -> dict | None:
         rows = (self.spark.table(self._journal)
