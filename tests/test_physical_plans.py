@@ -73,8 +73,12 @@ def test_pip_join_broadcasts_cover(spark):
 def test_knn_cells_shuffle_join_above_threshold(spark):
     """Above broadcast_threshold the (query, ring-cell) candidate relation
     must reach the point table by SHUFFLE, not broadcast — an unbounded
-    query side would otherwise die on the driver (r2 ADVICE)."""
-    from vt_grid_spark.operators.knn import knn_cells
+    query side would otherwise die on the driver (r2 ADVICE).  A level is
+    materialized by a checkpoint, so the result's plan only scans it: the
+    gate is read from the recorded decision, and each decision's join from
+    the plan of the level it builds."""
+    from vt_grid_spark.operators.encode import encode_points
+    from vt_grid_spark.operators.knn import _ring_level, knn_cells, unpersist_knn
     from vt_grid_spark.sources import pages
 
     pts = pages.with_coords(pages.pages_df(spark, 500))
@@ -82,13 +86,21 @@ def test_knn_cells_shuffle_join_above_threshold(spark):
         F.col("id").alias("qid"),
         (F.col("id") * 7.0 - 170.0).alias("lon"),
         (F.col("id") * 2.0 - 50.0).alias("lat"))
-    big = knn_cells(pts, queries, 3, z=5, ring=1,
-                    broadcast_threshold=10, rering_steps=0)
-    assert "ShuffledHashJoin" in plan_str(big, "simple")
-    small = knn_cells(pts, queries, 3, z=5, ring=1,
-                      broadcast_threshold=1000, rering_steps=0)
+    for threshold, join in ((10, "shuffle_hash"), (1000, "broadcast")):
+        stats: dict = {}
+        out = knn_cells(pts, queries, 3, z=5, ring=1, stats=stats,
+                        broadcast_threshold=threshold, rering_steps=0)
+        assert [lv["join"] for lv in stats["levels"]] == [join]
+        unpersist_knn(out, blocking=True)
+
+    enc_p = encode_points(pts, 5, with_quadkey=False).select("url", "lon", "lat", "x", "y")
+    q = encode_points(queries, 5, with_quadkey=False).selectExpr(
+        "qid", "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy")
+    big = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", False), "simple")
+    assert "ShuffledHashJoin" in big and "BroadcastHashJoin" not in big
     # below the gate the candidate join stays broadcast (no fact shuffle)
-    assert "BroadcastHashJoin" in plan_str(small, "simple")
+    small = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", True), "simple")
+    assert "BroadcastHashJoin" in small and "ShuffledHashJoin" not in small
 
 
 def test_bbox_cover_pushdown(spark, tmp_path):

@@ -261,6 +261,31 @@ def test_cluster_level_crash_keeps_published_level(spark, tmp_path, monkeypatch)
     assert _level_rows(io, spark, [9, 8]) == rows
 
 
+@pytest.mark.parametrize("backend", ["parquet", "catalog"])
+def test_cluster_level_keeps_max_cell_rows(spark, tmp_path, backend):
+    """``cluster_level`` rewrites every row of a level, so its record keeps
+    ``max_cell_rows``: a record without it makes a resumed build salt the
+    next holistic rollup whether or not the level is hot."""
+    from vt_grid_spark.sources.table_io import CatalogTableIO
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=7,
+                                       aggregations=[SPECS[0], SPECS[5]])],
+                       gridsize=16)
+    io = (TableIO(str(tmp_path / "pyr")) if backend == "parquet"
+          else CatalogTableIO(spark, namespace="vtg_cluster", prefix="p1"))
+    try:
+        built = build_pyramid(_points(spark, 1500), plan, io)
+        z = max(built)
+        assert built[z]["max_cell_rows"] > 0
+        m = io.cluster_level(spark, z, partitions=4)
+        assert m["clustered"] is True
+        assert m["max_cell_rows"] == io.read_manifest(z)["max_cell_rows"] \
+            == built[z]["max_cell_rows"]
+    finally:
+        if backend == "catalog":
+            spark.sql("DROP NAMESPACE IF EXISTS vtg_cluster CASCADE")
+
+
 def test_concurrent_stages_are_all_published(tmp_path):
     """incremental_update's merge threads stage into one shared draft:
     64 level writes from 16 threads, with a short thread switch
@@ -334,7 +359,7 @@ def test_hot_key_resalt_trigger(spark, tmp_path, monkeypatch):
     assert a == b
 
 
-def test_catalog_tableio_contract(spark):
+def test_catalog_tableio_contract(spark, jobs_started):
     """CatalogTableIO satisfies the same contract as the parquet TableIO:
     one snapshot publish per writer call, resume skipping complete
     levels, levels readable back via spark.table, cluster_level.  Runs against the session catalog's
@@ -418,9 +443,9 @@ def test_catalog_tableio_contract(spark):
         # create (a separate stage of the max would make the second 3)
         level = io.read_level(spark, 8)
         with io.commit():
-            assert _jobs_started(spark, lambda: io._write(level, 8, "g0")) == 1
+            assert jobs_started(lambda: io._write(level, 8, "g0")) == 1
             staged = {}
-            assert _jobs_started(spark, lambda: staged.update(
+            assert jobs_started(lambda: staged.update(
                 io.write_level(level, 8, count_col="cnt"))) == 2
             assert io.read_manifest(8)["max_cell_rows"] == staged["max_cell_rows"]
             assert staged["max_cell_rows"] == max_cnt(8)
@@ -734,29 +759,7 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
     pts.unpersist()
 
 
-def _jobs_started(spark, fn):
-    """Number of Spark jobs with no job group that ``fn()`` starts.  The
-    status tracker is fed asynchronously, so a fenced job (its own group)
-    runs afterwards and the count is read once the fence is visible: the
-    tracker sees job starts in order."""
-    import time
-
-    sc = spark.sparkContext
-    before = set(sc.statusTracker().getJobIdsForGroup(None))
-    fn()
-    sc.setJobGroup("job-audit-fence", "job-audit-fence")
-    try:
-        spark.range(1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    for _ in range(200):
-        if sc.statusTracker().getJobIdsForGroup("job-audit-fence"):
-            break
-        time.sleep(0.05)
-    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
-
-
-def test_incremental_update_job_audit(spark, tmp_path):
+def test_incremental_update_job_audit(spark, tmp_path, jobs_started):
     """A one-level fold with the benchmark's count + sum + union plan
     computes the delta partials once (an eager localCheckpoint) and takes
     max_cell_rows from the merge write itself: 6 jobs, none of which
@@ -778,7 +781,7 @@ def test_incremental_update_job_audit(spark, tmp_path):
     assert [z for _, z, _ in plan.levels()] == [8]
 
     man = {}
-    n_jobs = _jobs_started(spark, lambda: man.update(incremental_update(b, plan, io)))
+    n_jobs = jobs_started(lambda: man.update(incremental_update(b, plan, io)))
     assert man[8]["lineage"]["op"] == "incremental-merge"
     assert man[8]["max_cell_rows"] == \
         io.read_level(spark, 8).agg(F.max("cnt")).collect()[0][0]

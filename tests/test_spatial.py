@@ -68,31 +68,85 @@ def test_knn_cells_equals_bruteforce(spark):
     assert len(b) == 15
 
 
-def test_knn_cells_escalates_on_safety_radius(spark):
-    """Adversarial sparse-cell case: the ring holds >= k candidates, but the
-    true nearest neighbor sits just OUTSIDE the ring — without the
-    safety-radius check the ring answer would be silently wrong
-    (VERDICT r1 'What's wrong' #1)."""
+def _sparse_ring(spark, dense=()):
+    """The adversarial sparse-ring case at z=6, k=3: query 1's ring-1
+    holds k candidates, tucked into its far corner cell, but its true
+    nearest neighbor sits just OUTSIDE the ring, so ring 1 cannot prove
+    it and ring 3 does.  Each (x, y) tile in ``dense`` adds one more
+    query at the tile's centre with k points right next to it, which
+    ring 1 proves."""
     from vt_grid_spark import tilemath as tm
 
-    z, ring, k = 6, 1, 3
+    z = 6
+    k = 3
+
+    def centre(x, y):
+        w, s, e, n = (float(v) for v in tm.tile_to_bbox(x, y, z))
+        return (w + e) / 2.0, (s + n) / 2.0
+
     qx, qy = 32, 25
-    w, s, e, n = (float(v) for v in tm.tile_to_bbox(qx, qy, z))
-    qlon, qlat = (w + e) / 2.0, (s + n) / 2.0
+    qlon, qlat = centre(qx, qy)
     # k points inside the ring, but tucked into the far corner cell
     cw, cs, ce, cn = (float(v) for v in tm.tile_to_bbox(qx + 1, qy + 1, z))
     pts_rows = [(f"in{i}", ce - 0.01 - 0.02 * i, cs + 0.01) for i in range(k)]
     # one point just past the ring's east boundary — CLOSER than the corner
     ow, _, _, _ = (float(v) for v in tm.tile_to_bbox(qx + 2, qy, z))
     pts_rows.append(("out0", ow + 0.01, qlat))
+    q_rows = [(1, qlon, qlat)]
+    for j, (x, y) in enumerate(dense, start=2):
+        lon, lat = centre(x, y)
+        q_rows.append((j, lon, lat))
+        pts_rows += [(f"d{j}_{i}", lon + 0.01 * (i + 1), lat) for i in range(k)]
     pts = spark.createDataFrame(pts_rows, "url string, lon double, lat double")
-    queries = spark.createDataFrame([(1, qlon, qlat)], "qid long, lon double, lat double")
+    queries = spark.createDataFrame(q_rows, "qid long, lon double, lat double")
+    return pts, queries
 
+
+def test_knn_cells_escalates_on_safety_radius(spark):
+    """Adversarial sparse-cell case: the ring holds >= k candidates, but the
+    true nearest neighbor sits just OUTSIDE the ring — without the
+    safety-radius check the ring answer would be silently wrong
+    (VERDICT r1 'What's wrong' #1)."""
+    pts, queries = _sparse_ring(spark)
+    k = 3
     brute = sorted((r.qid, r.rank, r.url) for r in knn_bruteforce(pts, queries, k).collect())
-    cells = sorted((r.qid, r.rank, r.url) for r in knn_cells(pts, queries, k, z=z, ring=ring).collect())
+    cells = sorted((r.qid, r.rank, r.url) for r in knn_cells(pts, queries, k, z=6, ring=1).collect())
     assert cells == brute
     # the fixture is genuinely adversarial: the out-of-ring point must win
     assert cells[0][2] == "out0"
+
+
+def test_knn_cells_records_escalation(spark):
+    """``stats`` records each level's decisions: its ring, query count,
+    residue and join.  Three queries exceed broadcast_threshold=2, so ring
+    1 joins by shuffle hash; its residue of one query is under the
+    threshold, so ring 3 broadcasts, and proves it."""
+    pts, queries = _sparse_ring(spark, dense=[(10, 20), (50, 40)])
+    stats: dict = {}
+    out = knn_cells(pts, queries, 3, z=6, ring=1, broadcast_threshold=2,
+                    stats=stats)
+    assert stats["levels"] == [
+        {"ring": 1, "n_q": 3, "residue": 1, "join": "shuffle_hash"},
+        {"ring": 3, "n_q": 1, "residue": 0, "join": "broadcast"},
+    ]
+    got = sorted((r.qid, r.rank, r.url) for r in out.collect())
+    assert got == sorted((r.qid, r.rank, r.url)
+                         for r in knn_bruteforce(pts, queries, 3).collect())
+
+
+def test_knn_cells_job_audit(spark, jobs_started):
+    """A knn_cells call that escalates once, plus its collect: the size
+    probe, then one eager checkpoint per ring level, whose observed
+    metrics give the level's query count and residue, then the collect
+    of the checkpoints: 11 jobs.  With a lazily persisted level instead,
+    each level counted its proven rows in jobs of its own, the top level
+    counted the queries, and the next level anti-joined them: 18 jobs."""
+    pts, queries = _sparse_ring(spark, dense=[(10, 20), (50, 40)])
+    rows: list = []
+    n_jobs = jobs_started(lambda: rows.extend(
+        knn_cells(pts, queries, 3, z=6, ring=1, broadcast_threshold=2).collect()))
+    assert len(rows) == 9
+    assert n_jobs == 11, n_jobs
 
 
 def test_knn_cells_ring_wider_than_world(spark):
@@ -250,21 +304,25 @@ def test_pip_refine_geometry_ships_as_broadcast(spark):
 
 
 def test_knn_cells_unpersist_releases_cache(spark):
+    """unpersist_knn frees every block a knn_cells call pinned: the
+    encoded point table and each level's checkpoint, whose frames read
+    storageLevel NONE, so the check reads the context's persisted RDDs."""
     from vt_grid_spark.operators.knn import knn_cells, unpersist_knn
     from vt_grid_spark.sources import pages
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     pts = pages.with_coords(pages.pages_df(spark, 500))
     queries = spark.createDataFrame(
         [(1, -74.0, 40.7), (2, 10.1, 50.3)], "qid long, lon double, lat double")
+    before = persisted()
     out = knn_cells(pts, queries, 5, z=5, ring=1)
     out.collect()
-    frames = getattr(out, "_knn_persisted", [])
-    assert frames, "top-level knn_cells must expose its persisted frames"
-    assert all(f.storageLevel.useMemory or f.storageLevel.useDisk
-               for f in frames)
+    pinned = persisted() - before
+    assert len(pinned) == 1 + len(out._knn_checkpoints)
     unpersist_knn(out, blocking=True)
-    assert all(not (f.storageLevel.useMemory or f.storageLevel.useDisk)
-               for f in frames)
+    assert not persisted() & pinned
 
 
 def test_knn_cells_non_identifier_query_id(spark):

@@ -108,3 +108,33 @@ def test_sq_literal_roundtrip(spark):
     words = ["l'", "po'", "it's", "back\\slash", "\\'", "''", "\\", "a\\nb"]
     row = spark.sql("SELECT " + ", ".join(sq(w) for w in words)).first()
     assert list(row) == words
+
+
+def test_sqltext_tile_twins_match_column_builders(spark):
+    """The generated-SQL tile twins (kNN encodes with them, in their
+    DOUBLE-literal form) equal the Column builders bit for bit in both
+    literal forms, on random points and on both sides of tile edges."""
+    import numpy as np
+
+    from vt_grid_spark.functions import sqltext as sq
+
+    rng = np.random.default_rng(3)
+    lon = [float(v) for v in rng.uniform(-180, 180, 2000)] + [-180.0, 180.0, -0.0]
+    lat = [float(v) for v in rng.uniform(-89.9, 89.9, 2000)] + [89.99, -89.99, -0.0]
+    for x in range(16):
+        w, s, _, n = (float(v) for v in tm.tile_to_bbox(x, x, 4))
+        lon += [w, float(np.nextafter(w, 1e9)), float(np.nextafter(w, -1e9))]
+        lat += [n, float(np.nextafter(n, 1e9)), float(np.nextafter(s, -1e9))]
+    df = spark.createDataFrame(list(zip(lon, lat)), "lon double, lat double")
+    for z in (4, 9):
+        cols = [vf.tile_x(F.col("lon"), z).alias("x"), vf.tile_y(F.col("lat"), z).alias("y")]
+        for double in (False, True):
+            cols += [F.expr(sq.tile_x_sql("lon", z, double=double)).alias(f"x{double}"),
+                     F.expr(sq.tile_y_sql("lat", z, double=double)).alias(f"y{double}"),
+                     F.expr(sq.tile_lon_sql("x", z, double=double)).alias(f"w{double}"),
+                     F.expr(sq.tile_lat_sql("y", z, double=double)).alias(f"n{double}")]
+        rows = df.select(*cols).collect()
+        for r in rows:
+            assert r.x == r.xFalse == r.xTrue and r.y == r.yFalse == r.yTrue
+            assert r.wFalse == r.wTrue and r.nFalse == r.nTrue
+        assert len(rows) == len(lon)

@@ -34,19 +34,32 @@ def sq(word: str) -> str:
     return "'" + word.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def tile_x_sql(lon: str, z: int) -> str:
-    z2 = float(1 << z)
+def _num(v: float, double: bool) -> str:
+    """A float literal: plain (the oracle text; a DECIMAL literal in
+    Spark) or, with ``double``, Spark's ``D``-suffixed DOUBLE literal.
+    Both denote the same double, and Spark casts a DECIMAL operand of a
+    double operation to DOUBLE, so the arithmetic is the same.  The
+    DOUBLE form skips the decimal type coercion: Spark analyzes kNN's
+    safety-radius expression in about half the time (54 -> 26 ms)."""
+    return f"{v!r}D" if double else repr(v)
+
+
+def tile_x_sql(lon: str, z: int, double: bool = False) -> str:
+    z2 = _num(float(1 << z), double)
     n = (1 << z) - 1
-    fx = f"(({z2} * (({lon})/360.0 + 0.5)) % {z2})"
+    half, deg = _num(0.5, double), _num(360.0, double)
+    fx = f"(({z2} * (({lon})/{deg} + {half})) % {z2})"
     fx = f"(CASE WHEN {fx} < 0 THEN {fx} + {z2} ELSE {fx} END)"
     return f"CAST(LEAST(GREATEST(FLOOR({fx}), 0), {n}) AS BIGINT)"
 
 
-def tile_y_sql(lat: str, z: int) -> str:
-    z2 = float(1 << z)
+def tile_y_sql(lat: str, z: int, double: bool = False) -> str:
+    z2 = _num(float(1 << z), double)
     n = (1 << z) - 1
+    one = _num(1.0, double)
     s = f"SIN(RADIANS({lat}))"
-    fy = f"({z2} * (0.5 - 0.25 * LN((1.0 + {s}) / (1.0 - {s})) / PI()))"
+    fy = (f"({z2} * ({_num(0.5, double)} - {_num(0.25, double)} * "
+          f"LN(({one} + {s}) / ({one} - {s})) / PI()))")
     return f"CAST(LEAST(GREATEST(FLOOR({fy}), 0), {n}) AS BIGINT)"
 
 
@@ -63,13 +76,15 @@ def quadkey_sql(x: str, y: str, z: int) -> str:
     return " || ".join(parts)
 
 
-def tile_lat_sql(y: str, z: int) -> str:
-    nexpr = f"({math.pi} - {2.0 * math.pi} * CAST({y} AS DOUBLE) / {float(1 << z)})"
-    return f"DEGREES(ATAN(0.5 * (EXP({nexpr}) - EXP(-{nexpr}))))"
+def tile_lat_sql(y: str, z: int, double: bool = False) -> str:
+    nexpr = (f"({_num(math.pi, double)} - {_num(2.0 * math.pi, double)} * "
+             f"CAST({y} AS DOUBLE) / {_num(float(1 << z), double)})")
+    return f"DEGREES(ATAN({_num(0.5, double)} * (EXP({nexpr}) - EXP(-{nexpr}))))"
 
 
-def tile_lon_sql(x: str, z: int) -> str:
-    return f"(CAST({x} AS DOUBLE) / {float(1 << z)} * 360.0 - 180.0)"
+def tile_lon_sql(x: str, z: int, double: bool = False) -> str:
+    return (f"(CAST({x} AS DOUBLE) / {_num(float(1 << z), double)} * "
+            f"{_num(360.0, double)} - {_num(180.0, double)})")
 
 
 def tile_lon_dyn_sql(x: str, zoom: str) -> str:

@@ -220,13 +220,19 @@ class TableIO:
         """Rewrite one complete level Z-ordered — the engine's OPTIMIZE
         ZORDER: a maintenance post-pass, so builds stay one-shuffle-per-
         level and serving layouts opt in afterwards.  Lineage records the
-        rewrite."""
+        rewrite.  The rewrite keeps every row, so the old record's
+        ``max_cell_rows`` still holds and carries over (without it the
+        next holistic rollup of a resumed build would be salted)."""
         with self.commit():
-            lineage = dict(self.read_manifest(zoom).get("lineage", {}))
+            old = self.read_manifest(zoom)
+            lineage = dict(old.get("lineage", {}))
             lineage["op"] = f"{lineage.get('op', '?')}+zorder"
-            return self.write_level(self.read_level(spark, zoom), zoom,
-                                    lineage=lineage, cluster=True,
-                                    cluster_partitions=partitions)
+            record = self.write_level(self.read_level(spark, zoom), zoom,
+                                      lineage=lineage, cluster=True,
+                                      cluster_partitions=partitions)
+            if "max_cell_rows" in old:
+                record = self._put({**record, "max_cell_rows": old["max_cell_rows"]})
+            return record
 
     # -- read / resume ---------------------------------------------------------
     def level_complete(self, zoom: int) -> bool:
