@@ -3,9 +3,11 @@
 Builds ``bench.py``'s headline pyramid (count + sum over the page corpus,
 cell zoom 12 -> 0) several times in one session and prints one JSON line
 per build with its wall and its tail layer.  The tail layer runs from the
-first ``rollup_ancestors`` call (the batched aggregation of the small upper
-levels) to the end of the last ``TableIO.write_level_pandas`` (the driver's
-per-level writes): the collect, the per-level slicing and the writes.
+``rollup_ancestors`` call of the first tail batch (the batched aggregation
+of the small upper levels: the last call before the first
+``TableIO.write_level_pandas``; Spark levels call it too) to the end of the
+last ``write_level_pandas`` (the driver's per-level writes): the collect,
+the per-level slicing and the writes.
 
     python scripts/tail_layer_probe.py [--builds 7] [--src DIR]
 
@@ -49,10 +51,11 @@ def main(argv: list[str]) -> int:
     ancestors, write = pyramid.rollup_ancestors, TableIO.write_level_pandas
 
     def timed_ancestors(*a, **kw):
-        marks.setdefault("tail_start", time.perf_counter())
+        marks["ancestors_at"] = time.perf_counter()
         return ancestors(*a, **kw)
 
     def timed_write(*a, **kw):
+        marks.setdefault("tail_start", marks["ancestors_at"])
         out = write(*a, **kw)
         marks["tail_end"] = time.perf_counter()
         return out

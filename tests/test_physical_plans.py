@@ -22,7 +22,7 @@ def test_parquet_pushdown(spark):
 
 def test_rollup_single_exchange(spark):
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
     from vt_grid_spark.sources import pages
 
@@ -30,14 +30,36 @@ def test_rollup_single_exchange(spark):
     pts = pages.with_coords(pages.pages_df(spark, 100))
     cells = cell_aggregate(encode_points(pts, 8, with_quadkey=False), 8,
                            compile_aggs(specs))
-    lvl = rollup_level(cells, 8, specs)
+    lvl = rollup_ancestors(cells, 8, 7, specs)
     p = plan_str(lvl, "simple")
     # one exchange for the base cell agg + one for the parent rollup — and
-    # nothing else (no sort, no extra repartition)
+    # nothing else (no sort, no extra repartition, no explode at depth 1)
     assert p.count("Exchange") == 2
     assert "Sort" not in p
+    assert "Generate" not in p
     # map-side combine present on both aggregations
     assert "partial_count" in p and "partial_sum" in p
+
+
+def test_build_pyramid_df_one_aggregation_per_band(spark):
+    """The in-memory pyramid is the base aggregate plus one
+    ``rollup_ancestors`` per band: a 1-band, 5-level holistic plan has at
+    most 3 hash exchanges (a chain of lazily unioned levels re-derives
+    every level from the base: 25)."""
+    from vt_grid_spark.operators.pyramid import build_pyramid_df
+    from vt_grid_spark.plans.aggspec import AggSpec
+    from vt_grid_spark.plans.pyramid_plan import PyramidPlan, ZoomBand
+    from vt_grid_spark.sources import pages
+
+    specs = [AggSpec(out="cnt", reducer="count"),
+             AggSpec(out="langs", reducer="union", field="lang")]
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=10, minzoom=5, aggregations=specs)],
+                       gridsize=1)
+    df = build_pyramid_df(pages.with_coords(pages.pages_df(spark, 100)), plan)
+    p = plan_str(df, "simple")
+    assert p.count("Exchange hashpartitioning") <= 3, p
+    assert sorted(r.zoom for r in df.select("zoom").distinct().collect()) \
+        == list(range(5, 10))
 
 
 def test_encode_is_narrow(spark):

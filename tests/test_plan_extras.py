@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-from vt_grid_spark.operators.rollup import densify, rollup_level
+from vt_grid_spark.operators.rollup import densify, rollup_ancestors
 from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan, ZoomBand
 from vt_grid_spark.sources import pages
@@ -142,9 +142,9 @@ def test_parse_agg_strings_reference_semantics():
 
 
 def test_rollup_validates_input_contract(spark):
-    """rollup_level must reject a frame that lacks the spec.out aggregate
-    columns (ADVICE r1: silent misuse when out != field)."""
+    """rollup_ancestors must reject a frame that lacks the spec.out
+    aggregate columns (ADVICE r1: silent misuse when out != field)."""
     pts = pages.with_coords(pages.pages_df(spark, 50))
     enc = encode_points(pts, 6, with_quadkey=False)
     with pytest.raises(ValueError, match="missing aggregate columns"):
-        rollup_level(enc, 6, [AggSpec(out="total", reducer="sum", field="n")])
+        rollup_ancestors(enc, 6, 5, [AggSpec(out="total", reducer="sum", field="n")])

@@ -490,7 +490,7 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
     import pytest
 
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs, finalize_columns
 
     b, w = 16, 128.0
@@ -500,7 +500,7 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
            .withColumn("_v", F.length("text").cast("double")))
     enc = encode_points(pts, 8, with_quadkey=False)
     fine = cell_aggregate(enc, 8, compile_aggs([spec]))
-    merged = rollup_level(rollup_level(fine, 8, [spec]), 7, [spec])
+    merged = rollup_ancestors(rollup_ancestors(fine, 8, 7, [spec]), 7, 6, [spec])
     direct = cell_aggregate(
         enc.withColumn("x", F.shiftright("x", 2))
            .withColumn("y", F.shiftright("y", 2)), 6, compile_aggs([spec]))
@@ -536,15 +536,15 @@ def _rows(df, cols):
 
 
 def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
-    """The batched tail: (1) ``rollup_ancestors`` equals chained
-    ``rollup_level`` at every level for one spec of each reducer; (2) its
-    plan is ONE hash aggregation (a single hash exchange); (3) a two-band
-    ``build_pyramid``, whose small levels all run through the tail, equals
-    the in-memory ``build_pyramid_df`` as row sets."""
+    """The batched tail: (1) ``rollup_ancestors`` equals chained one-level
+    rollups at every level for one spec of each reducer, salted or not;
+    (2) its plan is ONE hash aggregation (a single hash exchange); (3) a
+    two-band ``build_pyramid``, whose small levels all run through the
+    tail, equals the in-memory ``build_pyramid_df`` as row sets."""
     import re
 
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_ancestors, rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import VALID_REDUCERS, compile_aggs
 
     specs = [
@@ -571,11 +571,15 @@ def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
     cols = [c for c in batch.columns if c != "zoom"]
     chained = fine
     for z in range(7, 3, -1):
-        chained = rollup_level(chained, z + 1, specs)
+        chained = rollup_ancestors(chained, z + 1, z, specs)
         got = _rows(batch.where(F.col("zoom") == z), cols)
         assert got == _rows(chained, cols) and got, f"zoom {z} diverged"
     assert sorted(r.zoom for r in batch.select("zoom").distinct().collect()) \
         == [4, 5, 6, 7]
+    # the two-phase (key, salt) -> key form gives the same rows
+    salted = rollup_ancestors(fine, 8, 4, specs, salt_buckets=4)
+    assert "_salt" in salted._jdf.queryExecution().optimizedPlan().toString()
+    assert _rows(salted, ["zoom", *cols]) == _rows(batch, ["zoom", *cols])
     batch.unpersist()
 
     # two bands at the default SMALL_LEVEL_ROWS: band 1's tail batch is
@@ -606,9 +610,9 @@ def test_sketch_reducers_quote_hyphenated_names(spark):
     """Generated SQL quotes every interpolated name: kmvDistinct over a
     hyphenated field and histQuantile under a hyphenated output name give
     the same cells as the same specs under plain names, through
-    compile_aggs -> rollup_level -> finalize_columns."""
+    compile_aggs -> rollup_ancestors -> finalize_columns."""
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import compile_aggs
 
     enc = encode_points(_points(spark, 1500), 8, with_quadkey=False)
@@ -619,7 +623,7 @@ def test_sketch_reducers_quote_hyphenated_names(spark):
                          buckets=8, width=2.0)]
         fine = cell_aggregate(enc.withColumn(field, F.col("url")), 8,
                               compile_aggs(specs))
-        top = rollup_level(fine, 8, specs)
+        top = rollup_ancestors(fine, 8, 7, specs)
         return _rows(top, ["x", "y", "sk", F.col(hist),
                            *finalize_columns(specs).values()])
 
@@ -685,7 +689,7 @@ def test_kmv_sketch_merge_exact_and_estimate_sane(spark):
     mergeability); (2) the estimator lands within ~3 standard errors
     (rse = 1/sqrt(k-1)) of the true distinct count when it saturates."""
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs, finalize_columns
 
     k = 64
@@ -696,7 +700,7 @@ def test_kmv_sketch_merge_exact_and_estimate_sane(spark):
                                                          F.lit(700)))))
     enc = encode_points(pts, 8, with_quadkey=False)
     fine = cell_aggregate(enc, 8, compile_aggs([spec]))
-    merged = rollup_level(rollup_level(fine, 8, [spec]), 7, [spec])
+    merged = rollup_ancestors(rollup_ancestors(fine, 8, 7, [spec]), 7, 6, [spec])
     direct = cell_aggregate(
         enc.withColumn("x", F.shiftright("x", 2))
            .withColumn("y", F.shiftright("y", 2)), 6, compile_aggs([spec]))

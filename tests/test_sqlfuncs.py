@@ -138,3 +138,40 @@ def test_sqltext_tile_twins_match_column_builders(spark):
             assert r.x == r.xFalse == r.xTrue and r.y == r.yFalse == r.yTrue
             assert r.wFalse == r.wTrue and r.nFalse == r.nTrue
         assert len(rows) == len(lon)
+
+
+def test_pole_latitudes_encode_like_tilemath(spark):
+    """Latitude +-90 lands in row 0 / row 2^z-1, as ``tm.point_to_tile``
+    puts it, through every Spark-side encoder: ``encode_points``
+    (``vf.tile_y``), ``vt_tile_y`` and kNN's generated-SQL encode.  Unclamped,
+    the north pole divides by zero (an error under ANSI mode) and the
+    south pole takes ln(0)."""
+    import numpy as np
+
+    from vt_grid_spark.functions import sqltext as sq
+    from vt_grid_spark.operators.encode import encode_points
+    from vt_grid_spark.operators.knn import knn_bruteforce, knn_cells, unpersist_knn
+
+    register_sql_functions(spark)
+    z = 6
+    pts = [("n", 10.0, 90.0), ("s", -20.0, -90.0), ("n2", 30.0, 89.99),
+           ("s2", -40.0, -89.99), ("e", 0.5, 0.5)]
+    df = spark.createDataFrame(pts, "url string, lon double, lat double")
+    with np.errstate(divide="ignore"):
+        want = {u: tuple(int(v) for v in tm.point_to_tile(lon, lat, z))
+                for u, lon, lat in pts}
+    assert want["n"][1] == 0 and want["s"][1] == (1 << z) - 1
+    df.createOrReplaceTempView("_poles")
+    for enc in (encode_points(df, z),
+                spark.sql(f"SELECT url, vt_tile_x(lon, {z}) AS x, "
+                          f"vt_tile_y(lat, {z}) AS y FROM _poles"),
+                df.selectExpr("url", f"{sq.tile_x_sql('lon', z, double=True)} AS x",
+                              f"{sq.tile_y_sql('lat', z, double=True)} AS y")):
+        assert {r.url: (r.x, r.y) for r in enc.collect()} == want
+
+    queries = df.selectExpr("url AS qid", "lon", "lat")
+    out = knn_cells(df, queries, 2, z=z)
+    got = sorted(tuple(r) for r in out.select("qid", "rank", "url", "d2").collect())
+    unpersist_knn(out)
+    assert got == sorted(tuple(r) for r in knn_bruteforce(df, queries, 2).collect())
+    assert len(got) == 2 * len(pts)

@@ -214,8 +214,10 @@ def test_stateful_sessionize_checkpoint_restart(spark, tmp_path):
 
 
 def test_custom_reducer_strategies_agree(spark):
-    """batched (default) == per_cell on every cell, including cells that
-    span Arrow-batch boundaries (forced tiny batches)."""
+    """The batched mapInPandas reducer == the plain per-cell
+    groupBy().applyInPandas form (the reference here) on every cell,
+    including cells that span Arrow-batch boundaries (forced tiny
+    batches)."""
     import pandas as pd
 
     from vt_grid_spark.operators.custom_reduce import apply_custom_reducer
@@ -233,11 +235,17 @@ def test_custom_reducer_strategies_agree(spark):
             return {"med": float(pdf["v"].median()),
                     "n": len(pdf), "t": ",".join(str(t) for t in tile)}
 
+        def per_cell(key, pdf):
+            x, y = int(key[0]), int(key[1])
+            return pd.DataFrame([{"x": x, "y": y, **fn(pdf, (4, x >> 4, y >> 4))}])
+
+        schema = "med double, n long, t string"
         outs = {}
-        for strat in ("per_cell", "batched"):
-            rows = apply_custom_reducer(enc, 8, 4, fn, "med double, n long, t string",
-                                        strategy=strat).collect()
-            outs[strat] = {(r.x, r.y): (r.med, r.n, r.t) for r in rows}
+        for strat, df in (
+                ("per_cell", enc.groupBy("x", "y").applyInPandas(
+                    per_cell, schema=f"x long, y long, {schema}")),
+                ("batched", apply_custom_reducer(enc, 8, 4, fn, schema))):
+            outs[strat] = {(r.x, r.y): (r.med, r.n, r.t) for r in df.collect()}
         assert outs["batched"] == outs["per_cell"]
         assert len(outs["batched"]) > 100
         # row conservation (with_coords drops coordinate-less pages)

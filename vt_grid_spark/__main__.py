@@ -45,7 +45,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "(lib/aggregate.js:26-36) in Python form.  factory() "
                         "returns {'reduce_fn': callable(pdf, tile)->dict, "
                         "'result_schema': 'col type, ...', optional "
-                        "'strategy', 'layer', 'fields' (feature properties "
+                        "'layer', 'fields' (feature properties "
                         "to extract from an .mbtiles input)}.  On a cluster "
                         "ship the module "
                         "with spark-submit --py-files.  Mutually exclusive "
@@ -224,9 +224,7 @@ def main(argv: list[str] | None = None) -> int:
         manifests = build_custom_pyramid(
             pts, io, reducer_spec["reduce_fn"],
             reducer_spec["result_schema"], basezoom=basezoom,
-            minzoom=args.minzoom, gridsize=args.gridsize,
-            strategy=reducer_spec.get("strategy", "batched"),
-            resume=args.resume)
+            minzoom=args.minzoom, gridsize=args.gridsize, resume=args.resume)
     else:
         tiles = None
         if args.tiles:

@@ -14,6 +14,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vt_grid_spark import tilemath as tm
+
 
 def tile_x(lon: Column, z: int) -> Column:
     """Integer tile x for a longitude column at literal zoom z.
@@ -30,8 +32,16 @@ def tile_x(lon: Column, z: int) -> Column:
 
 
 def tile_y(lat: Column, z: int) -> Column:
-    """Integer tile y: floor(2^z * (0.5 - 0.25*ln((1+sin)/(1-sin))/pi)), clamped."""
+    """Integer tile y: floor(2^z * (0.5 - 0.25*ln((1+sin)/(1-sin))/pi)), clamped.
+
+    Latitude is first clamped to +-``tm.MERCATOR_MAX_LAT``, which leaves y
+    unchanged for every |lat| < 90 and keeps the poles finite (row 0 and
+    row 2^z-1, as ``tm.point_to_tile``): at lat = 90 the ratio divides by
+    zero, which raises under ANSI mode.  The clamp reads ``lat`` once: a
+    filter on y pushed below a derived ``lat`` inlines it per reference."""
     z2 = float(1 << z)
+    m = tm.MERCATOR_MAX_LAT
+    lat = F.least(F.greatest(lat, F.lit(-m)), F.lit(m))
     s = F.sin(F.radians(lat))
     fy = F.lit(z2) * (
         F.lit(0.5)

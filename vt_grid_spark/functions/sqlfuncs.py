@@ -30,10 +30,15 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from vt_grid_spark.tilemath import MERCATOR_MAX_LAT
+
 _Z2 = "CAST(shiftleft(1, z) AS DOUBLE)"
 _FX = f"(({_Z2} * (lon/360.0 + 0.5)) % {_Z2})"
 _FXW = f"(CASE WHEN {_FX} < 0 THEN {_FX} + {_Z2} ELSE {_FX} END)"
-_S = "SIN(RADIANS(lat))"
+# latitude clamped to +-MERCATOR_MAX_LAT, as in vf.tile_y: finite at the poles
+_M = f"{MERCATOR_MAX_LAT!r}D"
+_LAT = f"LEAST(GREATEST(lat, -{_M}), {_M})"
+_S = f"SIN(RADIANS({_LAT}))"
 _FY = f"({_Z2} * (0.5 - 0.25 * LN((1.0 + {_S}) / (1.0 - {_S})) / PI()))"
 
 _DEFS: dict[str, str] = {

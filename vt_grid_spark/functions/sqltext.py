@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import math
 
+from vt_grid_spark.tilemath import MERCATOR_MAX_LAT
+
 
 def bq(name: str) -> str:
     """Backtick-quote an identifier for generated Spark SQL text.  The
@@ -54,6 +56,12 @@ def tile_x_sql(lon: str, z: int, double: bool = False) -> str:
 
 
 def tile_y_sql(lat: str, z: int, double: bool = False) -> str:
+    """The DOUBLE form is Spark-side text and clamps latitude to
+    +-``MERCATOR_MAX_LAT`` first, as ``vf.tile_y`` does (same y for every
+    |lat| < 90, finite at the poles); the plain oracle text does not."""
+    if double:
+        m = _num(MERCATOR_MAX_LAT, True)
+        lat = f"LEAST(GREATEST({lat}, -{m}), {m})"
     z2 = _num(float(1 << z), double)
     n = (1 << z) - 1
     one = _num(1.0, double)

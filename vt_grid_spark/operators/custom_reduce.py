@@ -10,21 +10,18 @@ row-at-a-time (north_rule: no per-row Python).  The ``tile`` argument
 reconstructed from the cell key so reducer code can keep the reference's
 calling convention.
 
-Two physical strategies, identical semantics:
+Physical form: repartition on the cell key, sort within partitions, then
+ONE mapInPandas pass that sub-groups each Arrow batch in pandas, carrying
+the trailing (possibly batch-spanning) cell into the next batch.
+groupBy().applyInPandas pays ~ms of per-GROUP machinery; at one group per
+cell that overhead IS the operator's cost at scale (millions of cells,
+measured 15x slower at 375k cells), the same pathology the MVT sink hit
+(sources/mvt.py).  The applyInPandas form survives only as the test
+reference this one is checked against.
 
-  * ``batched`` (default) — repartition on the cell key, sort within
-    partitions, then ONE mapInPandas pass that sub-groups each Arrow
-    batch in pandas, carrying the trailing (possibly batch-spanning)
-    cell into the next batch.  groupBy().applyInPandas pays ~ms of
-    per-GROUP machinery; at one group per cell that overhead IS the
-    operator's cost at scale (millions of cells), the same pathology the
-    MVT sink hit (sources/mvt.py).
-  * ``per_cell`` — the plain applyInPandas form; right when cells are
-    few and huge.
-
-Scale note (SURVEY.md §7 g7): either way one cell's rows materialize in
-one worker — pre-aggregate or salt upstream if cells can exceed memory;
-algebraic logic belongs in plans/aggspec instead.
+Scale note (SURVEY.md §7 g7): one cell's rows materialize in one worker —
+pre-aggregate or salt upstream if cells can exceed memory; algebraic
+logic belongs in plans/aggspec instead.
 """
 
 from __future__ import annotations
@@ -37,8 +34,7 @@ from pyspark.sql import DataFrame
 
 def apply_custom_reducer(encoded: DataFrame, cell_z: int, mapper_z: int,
                          reduce_fn: Callable[[pd.DataFrame, tuple], dict],
-                         result_schema: str,
-                         strategy: str = "batched") -> DataFrame:
+                         result_schema: str) -> DataFrame:
     """encoded: rows with (x, y) cell columns at cell_z + value columns.
 
     reduce_fn sees all rows of one cell and the (z, x, y) of the *mapper*
@@ -48,16 +44,6 @@ def apply_custom_reducer(encoded: DataFrame, cell_z: int, mapper_z: int,
     """
     dz = cell_z - mapper_z
     out_schema = f"x long, y long, {result_schema}"
-
-    if strategy == "per_cell":
-        def per_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            x, y = int(key[0]), int(key[1])
-            tile = (mapper_z, x >> dz, y >> dz)  # (z, x, y) single convention
-            res = reduce_fn(pdf, tile)
-            return pd.DataFrame([{"x": x, "y": y, **res}])
-
-        return encoded.groupBy("x", "y").applyInPandas(
-            per_cell, schema=out_schema)
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -92,8 +78,7 @@ def apply_custom_reducer(encoded: DataFrame, cell_z: int, mapper_z: int,
 
 def build_custom_pyramid(points: DataFrame, io, reduce_fn,
                          result_schema: str, basezoom: int, minzoom: int,
-                         gridsize: int = 1024, strategy: str = "batched",
-                         resume: bool = False) -> dict:
+                         gridsize: int = 1024, resume: bool = False) -> dict:
     """Full pyramid of custom-reduced cells — the CLI surface behind
     ``--reducer-module`` (the reference loads user reducer modules per
     worker, lib/aggregate.js:26-36; here the module's callable ships to
@@ -123,9 +108,9 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
                 continue
             encoded = encode_points(points, cell_z, with_quadkey=False)
             cells = apply_custom_reducer(encoded, cell_z, output_z, reduce_fn,
-                                         result_schema, strategy=strategy)
+                                         result_schema)
             manifests[cell_z] = io.write_level(
                 cells, cell_z,
                 lineage={"input": "points", "op": "custom-reduce",
-                         "output_tile_zoom": output_z, "strategy": strategy})
+                         "output_tile_zoom": output_z})
     return manifests

@@ -80,8 +80,7 @@ def cover_lonlat_predicate(ranges: list[tuple], cell_z: int,
     return cond if cond is not None else F.lit(True)
 
 
-def cell_aggregate(points: DataFrame, z: int, agg_exprs: list,
-                   extra_keys: list[str] | None = None) -> DataFrame:
+def cell_aggregate(points: DataFrame, z: int, agg_exprs: list) -> DataFrame:
     """points (already encoded at zoom z) -> one row per occupied cell.
 
     Sparse by design: empty cells are never materialized (the reference's
@@ -89,17 +88,15 @@ def cell_aggregate(points: DataFrame, z: int, agg_exprs: list,
     scale that is 4^19 rows of nothing; a ``densify`` view reproduces dense
     output for fixture parity, SURVEY.md §7 g3).
 
-    Shuffle hygiene: the grouping key is ONLY the integer (x, y) [+ extra
-    keys] — the constant ``zoom`` and the derivable ``quadkey`` string are
+    Shuffle hygiene: the grouping key is ONLY the integer (x, y) — the
+    constant ``zoom`` and the derivable ``quadkey`` string are
     re-attached AFTER the aggregation, so the exchange carries two longs
     per record instead of longs + a z-char string key (measured ~30% of
     base-level shuffle bytes at z12)."""
-    keys = ["x", "y"] + (extra_keys or [])
-    out = points.groupBy(*keys).agg(*agg_exprs)
+    out = points.groupBy("x", "y").agg(*agg_exprs)
     out = out.withColumn("zoom", F.lit(z))
     cols = ["zoom", "x", "y"]
     if "quadkey" in points.columns:
         out = out.withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
         cols.append("quadkey")
-    agg_cols = [c for c in out.columns if c not in set(cols) | set(extra_keys or [])]
-    return out.select(*cols, *(extra_keys or []), *agg_cols)
+    return out.select(*cols, *[c for c in out.columns if c not in cols])

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
                                             cover_lonlat_predicate, cover_ranges,
                                             encode_points)
-from vt_grid_spark.operators.rollup import merge_cells, rollup_ancestors, rollup_level
+from vt_grid_spark.operators.rollup import merge_cells, rollup_ancestors
 from vt_grid_spark.plans.aggspec import compile_aggs, count_column, is_holistic
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan
 from vt_grid_spark.sources.table_io import TableIO
@@ -165,8 +165,8 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
                 salt = _salt_for(prev_cell_z, band)
                 children = (prev_df if prev_df is not None
                             else io.read_level(spark, prev_cell_z))
-                level = rollup_level(children, prev_cell_z, band.aggregations,
-                                     salt_buckets=salt).persist()
+                level = rollup_ancestors(children, prev_cell_z, cell_z,
+                                         band.aggregations, salt_buckets=salt).persist()
                 manifests[cell_z] = io.write_level(
                     level, cell_z, {"input": f"zoom={prev_cell_z}", "op": "rollup",
                                     "output_tile_zoom": output_z, "salted": salt > 1,
@@ -239,8 +239,8 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     prev_cell_z = None
     for output_z, cell_z, band in levels:
         if prev_cell_z is not None:
-            cur = rollup_level(cur, prev_cell_z,
-                               band.aggregations).localCheckpoint(eager=True)
+            cur = rollup_ancestors(cur, prev_cell_z, cell_z,
+                                   band.aggregations).localCheckpoint(eager=True)
         work.append((output_z, cell_z, band, cur))
         prev_cell_z = cell_z
 
@@ -277,19 +277,19 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
 def build_pyramid_df(points: DataFrame, plan: PyramidPlan) -> DataFrame:
     """In-memory variant (no checkpointing): union of all levels as one
     DataFrame — used by tests and the DuckDB-oracle queries where writing
-    to disk is unnecessary."""
+    to disk is unnecessary.  The base aggregate plus one
+    ``rollup_ancestors`` per zoom band, the build tail's shape: each band
+    rolls up from the previous band's last level with its own specs.  No
+    salting: the hot-key rule needs the per-level observations of a build."""
     levels = list(plan.levels())
     _, base_cell_z, base_band = levels[0]
-    encoded = _apply_cover(points, plan, base_cell_z)
-    cur = cell_aggregate(encoded, base_cell_z, compile_aggs(base_band.aggregations))
-    out = [cur]
-    prev_cell_z = base_cell_z
-    for _, cell_z, band in levels[1:]:
-        cur = rollup_level(cur, prev_cell_z, band.aggregations,
-                           salt_buckets=plan.salt_buckets)
-        out.append(cur)
-        prev_cell_z = cell_z
-    result = out[0]
-    for lvl in out[1:]:
-        result = result.unionByName(lvl)
+    base = cell_aggregate(_apply_cover(points, plan, base_cell_z), base_cell_z,
+                          compile_aggs(base_band.aggregations))
+    result, top, top_z = base, base, base_cell_z
+    for band in plan.bands:
+        zooms = [z for _, z, b in levels[1:] if b is band]  # descending
+        if zooms:
+            batch = rollup_ancestors(top, top_z, zooms[-1], band.aggregations)
+            result = result.unionByName(batch)
+            top, top_z = batch.where(F.col("zoom") == zooms[-1]), zooms[-1]
     return result

@@ -1,14 +1,13 @@
-"""One pyramid level: cells at zoom z -> parent cells at z-1.
+"""The pyramid rollup: cells at zoom z -> their ancestors at z-1 .. min_z.
 
 The reference buckets children by parent quadkey
 (/root/reference/lib/aggregate-cells.js:26-50, ``getParent∘quadkeyToTile`` =
-drop-last-char).  Here the whole level is ONE hash aggregation on the
-integer parent key ``(x>>1, y>>1)`` — no geometry, no strings in the
-grouping key.  A level is ``zoom, x, y`` plus aggregates: the quadkey is
-presentation, derived (``vf.quadkey``) where a level is presented, never
-stored.  ``rollup_ancestors`` is the batched form: all levels of a small
-zoom band in one hash aggregation on ``(zoom, x>>d, y>>d)``, which the
-pyramid tail collects to the driver as one Arrow table.
+drop-last-char).  Here a rollup is ONE hash aggregation on integer keys —
+no geometry, no strings in the grouping key: ``(x>>1, y>>1)`` for one
+level, ``(zoom, x>>d, y>>d)`` for a band of levels at once (the
+batch-of-group-bys shape of LMFAO, VLDB'20).  A level is ``zoom, x, y``
+plus aggregates: the quadkey is presentation, derived (``vf.quadkey``)
+where a level is presented, never stored.
 
 Scale notes (100 TB / 1000 executors):
   * Algebraic reducers (count/sum/min/max/mean/AWM partials) are immune to
@@ -17,7 +16,7 @@ Scale notes (100 TB / 1000 executors):
     No salt needed — adding one would only double the shuffle.
   * Holistic reducers (``aggspec.is_holistic``: union and kmvDistinct
     merges; custom applyInPandas too) DO concentrate a hot cell's raw rows
-    in one task.  ``rollup_level(salt_buckets=...)`` runs the classic
+    in one task.  ``rollup_ancestors(salt_buckets=...)`` runs the classic
     two-phase (key, salt)->key aggregation for those (north_rule: explicit
     salted-key skew handling; SURVEY.md §7 g5).
   * Each level shrinks keys 4x; AQE coalesces the post-shuffle partitions.
@@ -33,75 +32,53 @@ from vt_grid_spark.plans.aggspec import (AggSpec, compile_rollup_aggs, is_holist
                                          partial_columns)
 
 
-def _check_rollup_input(cells: DataFrame, specs: list[AggSpec]) -> list[str]:
-    """The aggregate columns a rollup reads; raises when any is missing."""
+def rollup_ancestors(cells: DataFrame, child_z: int, min_z: int,
+                     specs: list[AggSpec], salt_buckets: int = 0) -> DataFrame:
+    """Every ancestor level of cells at child_z, zooms child_z-1 .. min_z,
+    as ONE hash aggregation: each cell is emitted once per ancestor
+    ``(child_z-d, x>>d, y>>d)``, d = 1..child_z-min_z, and grouped on
+    ``(zoom, x, y)`` with the rollup combiners.  Equal to rolling up one
+    level at a time because every combiner is a commutative monoid; the
+    specs must hold for the whole range (a zoom band).  One level
+    (``min_z = child_z - 1``) needs no explode: it groups on the parent
+    ``(x>>1, y>>1)`` and attaches the constant zoom afterwards.
+
+    ``salt_buckets > 1`` with a holistic spec first aggregates per
+    (key, hash(child cell) mod salt_buckets), then per key.
+    Output: zoom, x, y, aggregates."""
     cols = partial_columns(specs)
     missing = [c for c in cols if c not in cells.columns]
     if missing:
         raise ValueError(
             f"rollup input is missing aggregate columns {missing}: rollup "
-            "consumes the OUTPUT of a previous cell_aggregate/rollup_level "
+            "consumes the OUTPUT of a previous cell_aggregate/rollup_ancestors "
             "(columns named spec.out / spec.out__*), not raw feature columns "
             "(spec.field is only read at the base level)")
-    return cols
-
-
-def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
-                 salt_buckets: int = 0, extra_keys: list[str] | None = None) -> DataFrame:
-    """Aggregate cells at child_z into their parents at child_z - 1."""
-    z = child_z - 1
-    _check_rollup_input(cells, specs)
-    exprs = compile_rollup_aggs(specs)
-    keys = extra_keys or []
-
-    px, py = vf.parent_xy(F.col("x"), F.col("y"))
-    parented = cells.withColumn("_px", px).withColumn("_py", py)
-
-    if salt_buckets > 1 and is_holistic(specs):
-        # two-phase: partials per (parent, salt), then final per parent.
-        salt = F.pmod(F.xxhash64("x", "y"), F.lit(salt_buckets))
-        phase1 = (
-            parented.withColumn("_salt", salt)
-            .groupBy("_px", "_py", "_salt", *keys)
-            .agg(*exprs)
-        )
-        grouped = phase1.groupBy("_px", "_py", *keys).agg(*compile_rollup_aggs(specs))
+    salt = ([F.pmod(F.xxhash64("x", "y"), F.lit(salt_buckets)).alias("_salt")]
+            if salt_buckets > 1 and is_holistic(specs) else [])
+    if child_z - min_z == 1:
+        keys = ["x", "y"]
+        px, py = vf.parent_xy(F.col("x"), F.col("y"))
+        rows = cells.select(px.alias("x"), py.alias("y"), *cols, *salt)
     else:
-        grouped = parented.groupBy("_px", "_py", *keys).agg(*exprs)
-
-    out = (
-        grouped.withColumnRenamed("_px", "x")
-        .withColumnRenamed("_py", "y")
-        .withColumn("zoom", F.lit(z))
-    )
-    # stable column order: keys, then aggregates
-    agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", *keys}]
-    return out.select("zoom", "x", "y", *keys, *agg_cols)
-
-
-def rollup_ancestors(cells: DataFrame, child_z: int, min_z: int,
-                     specs: list[AggSpec]) -> DataFrame:
-    """Every ancestor level of cells at child_z, zooms child_z-1 .. min_z,
-    as ONE hash aggregation (the batch-of-group-bys shape of LMFAO,
-    VLDB'20): each cell is emitted once per ancestor ``(child_z-d, x>>d,
-    y>>d)``, d = 1..child_z-min_z, and grouped on ``(zoom, x, y)`` with the
-    rollup combiners.  Equal to chaining ``rollup_level`` down to min_z
-    because every combiner is a commutative monoid; the specs must hold
-    for the whole range (a zoom band).  Output: zoom, x, y, aggregates."""
-    cols = _check_rollup_input(cells, specs)
-    ancestors = (
-        cells.select("x", "y", *cols,
-                     F.explode(F.sequence(F.lit(1), F.lit(child_z - min_z)))
-                     .alias("_d"))
-        .select((F.lit(child_z) - F.col("_d")).alias("zoom"),
-                F.expr("shiftright(x, _d)").alias("x"),
-                F.expr("shiftright(y, _d)").alias("y"), *cols)
-    )
-    return ancestors.groupBy("zoom", "x", "y").agg(*compile_rollup_aggs(specs))
+        keys = ["zoom", "x", "y"]
+        rows = (
+            cells.select("x", "y", *cols, *salt,
+                         F.explode(F.sequence(F.lit(1), F.lit(child_z - min_z)))
+                         .alias("_d"))
+            .select((F.lit(child_z) - F.col("_d")).alias("zoom"),
+                    F.expr("shiftright(x, _d)").alias("x"),
+                    F.expr("shiftright(y, _d)").alias("y"), *cols,
+                    *(["_salt"] if salt else []))
+        )
+    if salt:
+        rows = rows.groupBy(*keys, "_salt").agg(*compile_rollup_aggs(specs))
+    out = rows.groupBy(*keys).agg(*compile_rollup_aggs(specs))
+    zoom = F.col("zoom") if "zoom" in keys else F.lit(min_z).alias("zoom")
+    return out.select(zoom, "x", "y", *cols)
 
 
-def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
-                extra_keys: list[str] | None = None) -> DataFrame:
+def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec]) -> DataFrame:
     """tile-join merge (S7; reference ``tile-join`` / includeBaseData,
     /root/reference/index.js:144-171): combine N cell tables AT THE SAME
     zoom into one, re-reducing aggregates cell-by-cell with the rollup
@@ -109,8 +86,7 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
     partials carried).  One hash aggregation on integer (x, y) — a merge
     is a rollup without the parent shift, so it inherits the same
     map-side-partial skew immunity for algebraic reducers."""
-    keys = extra_keys or []
-    cols = ["x", "y", *keys, *partial_columns(specs)]
+    cols = ["x", "y", *partial_columns(specs)]
     for p in parts:
         missing = [c for c in cols if c not in p.columns]
         if missing:
@@ -118,10 +94,8 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
     base = parts[0].select(*cols)
     for p in parts[1:]:
         base = base.unionByName(p.select(*cols))
-    grouped = base.groupBy("x", "y", *keys).agg(*compile_rollup_aggs(specs))
-    out = grouped.withColumn("zoom", F.lit(zoom))
-    agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", *keys}]
-    return out.select("zoom", "x", "y", *keys, *agg_cols)
+    grouped = base.groupBy("x", "y").agg(*compile_rollup_aggs(specs))
+    return grouped.select(F.lit(zoom).alias("zoom"), *grouped.columns)
 
 
 def densify(cells: DataFrame, parent_z: int, cell_z: int) -> DataFrame:

@@ -12,10 +12,11 @@ manual count→sum pattern of README.md:66-74, generalized).
 columns, base-level expressions, merge rule and finalizer.  Everything
 else is derived from it — ``compile_aggs``, ``compile_rollup_aggs``,
 ``finalize_columns``, the rollup input contract (``partial_columns``) and
-the salting decision (``is_holistic``).  The per-level rollup
-(``rollup_level``), the batched pyramid tail (``rollup_ancestors``) and
-the incremental merge (``merge_cells``) all aggregate with its combiners;
-adding a reducer means adding one table entry.
+the salting decision (``is_holistic``).  The one rollup operator
+(``rollup_ancestors``: a Spark level, a build-tail band, the in-memory
+pyramid and the delta chain) and the incremental merge (``merge_cells``)
+aggregate with its combiners; adding a reducer means adding one table
+entry.
 
 Custom reducers (reference lib/aggregate.js:26-36) are Python callables
 run via applyInPandas — see operators/custom_reduce.py.
@@ -283,7 +284,7 @@ def compile_rollup_aggs(specs: list[AggSpec]) -> list[Column]:
     Reads ``spec.out`` (and ``out__*`` partials), NOT ``spec.field``:
     rollup input is by contract the output of :func:`compile_aggs`, where
     the base-level ``field`` has already been folded into ``out``.
-    ``rollup_level`` validates the input frame against this contract."""
+    ``rollup_ancestors`` validates the input frame against this contract."""
     return [_MERGES[REDUCERS[s.reducer].merge](s, s.out + p).alias(s.out + p)
             for s in specs for p in REDUCERS[s.reducer].partials]
 

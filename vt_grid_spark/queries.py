@@ -105,20 +105,19 @@ FROM up GROUP BY x, y
 """,
 )
 def pyramid_rollup_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encode at z12 then roll up level-by-level to z6 through the engine's
-    rollup operator; the oracle collapses the ladder to one shift (exact:
-    floor-division composes)."""
+    """Encode at z12 then roll up the ladder z11..z6 through the engine's
+    rollup operator and keep z6; the oracle collapses the ladder to one
+    shift (exact: floor-division composes)."""
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
 
     specs = [AggSpec(out="cnt", reducer="count"),
              AggSpec(out="sum_chars", reducer="sum", field="chars")]
     pts = _pts(spark, sf_dir).withColumn("chars", F.length("text").cast("long"))
-    cur = cell_aggregate(encode_points(pts, 12, with_quadkey=False), 12,
-                         compile_aggs(specs))
-    for child_z in range(12, 6, -1):
-        cur = rollup_level(cur, child_z, specs)
+    cells = cell_aggregate(encode_points(pts, 12, with_quadkey=False), 12,
+                           compile_aggs(specs))
+    cur = rollup_ancestors(cells, 12, 6, specs).where(F.col("zoom") == 6)
     return cur.select("x", "y", vf.quadkey(F.col("x"), F.col("y"), 6).alias("quadkey"),
                       "cnt", "sum_chars")
 
@@ -144,21 +143,13 @@ def pyramid_level_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Level-cardinality profile of the whole pyramid z12..z6 — every level
     must conserve the point count (pyramid-consistency invariant,
     /root/reference/test/lib/aggregate-cells.js:43-56)."""
-    from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
-    from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
+    from vt_grid_spark.operators.pyramid import build_pyramid_df
+    from vt_grid_spark.plans.aggspec import AggSpec
+    from vt_grid_spark.plans.pyramid_plan import PyramidPlan, ZoomBand
 
-    specs = [AggSpec(out="c", reducer="count")]
-    pts = _pts(spark, sf_dir)
-    cur = cell_aggregate(encode_points(pts, 12, with_quadkey=False), 12,
-                         compile_aggs(specs))
-    levels = [cur]
-    for child_z in range(12, 6, -1):
-        cur = rollup_level(cur, child_z, specs)
-        levels.append(cur)
-    allv = levels[0]
-    for l in levels[1:]:
-        allv = allv.unionByName(l)
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=13, minzoom=6, aggregations=[
+        AggSpec(out="c", reducer="count")])], gridsize=1)
+    allv = build_pyramid_df(_pts(spark, sf_dir), plan)
     return allv.groupBy("zoom").agg(
         F.count(F.lit(1)).alias("n_cells"), F.sum("c").alias("n_points")
     ).select(F.col("zoom").cast("long").alias("zoom"), "n_cells", "n_points")
@@ -230,14 +221,14 @@ def union_langs_z4(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-phase z4 aggregation — equality proves salting is transparent
     AND union-of-unions is associative."""
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
 
     specs = [AggSpec(out="cnt", reducer="count"),
              AggSpec(out="langs", reducer="union", field="lang")]
     enc = encode_points(_pts(spark, sf_dir), 5, with_quadkey=False)
     cells = cell_aggregate(enc, 5, compile_aggs(specs))
-    lvl = rollup_level(cells, 5, specs, salt_buckets=8)
+    lvl = rollup_ancestors(cells, 5, 4, specs, salt_buckets=8)
     return lvl.select(
         "x", "y",
         F.array_join("langs", ",").alias("langs"),

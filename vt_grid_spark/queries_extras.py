@@ -575,7 +575,7 @@ def kmv_distinct_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyramid levels — must hash-match the oracle's direct z5 computation
     (exact-merge proof for both reducers)."""
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.rollup import rollup_level
+    from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs, finalize_columns
 
     specs = [
@@ -589,8 +589,7 @@ def kmv_distinct_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_chars", F.length("text").cast("double"))
     cells = cell_aggregate(encode_points(pts, 7, with_quadkey=False), 7,
                            compile_aggs(specs))
-    for child_z in (7, 6):
-        cells = rollup_level(cells, child_z, specs)
+    cells = rollup_ancestors(cells, 7, 5, specs).where(F.col("zoom") == 5)
     fin = finalize_columns(specs)
     return cells.select(
         "x", "y",
