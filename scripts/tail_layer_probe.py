@@ -7,9 +7,14 @@ per build with its wall and its tail layer.  The tail layer runs from the
 of the small upper levels: the last call before the first
 ``TableIO.write_level_pandas``; Spark levels call it too) to the end of the
 last ``write_level_pandas`` (the driver's per-level writes): the collect,
-the per-level slicing and the writes.
+the per-level slicing and the writes.  ``writes_s`` is the part of it
+spent inside ``write_level_pandas`` (parquet files plus staging each
+level's record).
 
-    python scripts/tail_layer_probe.py [--builds 7] [--src DIR]
+    python scripts/tail_layer_probe.py [--builds 7] [--src DIR] [--dir DIR]
+
+``--dir`` is where the pyramids are built (default ``/dev/shm``, a tmpfs
+where file renames are cheap; a disk directory shows what they cost there).
 
 ``--src`` imports ``vt_grid_spark`` from another checkout, so two trees are
 compared with one script.  The first builds still JIT-warm on a few cores:
@@ -35,6 +40,7 @@ def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--builds", type=int, default=7)
     ap.add_argument("--src", default=ROOT)
+    ap.add_argument("--dir", default="/dev/shm" if os.path.isdir("/dev/shm") else None)
     args = ap.parse_args(argv)
     sys.path.insert(0, args.src)
 
@@ -56,8 +62,10 @@ def main(argv: list[str]) -> int:
 
     def timed_write(*a, **kw):
         marks.setdefault("tail_start", marks["ancestors_at"])
+        t = time.perf_counter()
         out = write(*a, **kw)
         marks["tail_end"] = time.perf_counter()
+        marks["writes"] = marks.get("writes", 0.0) + marks["tail_end"] - t
         return out
 
     pyramid.rollup_ancestors = timed_ancestors
@@ -72,9 +80,7 @@ def main(argv: list[str]) -> int:
                        gridsize=1, salt_buckets=16)
     pts.count()  # input generation outside the timed builds
     for i in range(1, args.builds + 1):
-        out_dir = tempfile.mkdtemp(
-            prefix="vtgrid_tail_",
-            dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
+        out_dir = tempfile.mkdtemp(prefix="vtgrid_tail_", dir=args.dir)
         marks.clear()
         try:
             t0 = time.perf_counter()
@@ -84,7 +90,8 @@ def main(argv: list[str]) -> int:
             shutil.rmtree(out_dir, ignore_errors=True)
         tail = marks["tail_end"] - marks["tail_start"]
         print(json.dumps({"build": i, "wall_s": round(wall, 3),
-                          "tail_s": round(tail, 3)}), flush=True)
+                          "tail_s": round(tail, 3),
+                          "writes_s": round(marks["writes"], 3)}), flush=True)
     spark.stop()
     return 0
 

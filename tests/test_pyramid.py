@@ -998,3 +998,129 @@ def test_levels_store_no_quadkey_and_build_needs_no_pandas(spark, tmp_path,
             cols = store.read_level(spark, z).columns
             assert "quadkey" not in cols and {"x", "y"} <= set(cols), (z, cols)
     pts.unpersist()
+
+
+def test_one_rename_per_writer_call(spark, tmp_path, monkeypatch):
+    """Staging a level appends to the draft log; the snapshot publish is
+    the only ``os.replace`` of a writer call: a build with a Spark base
+    level and five tail levels makes one, and so does a fold of a
+    single-level pyramid."""
+    from vt_grid_spark.operators import pyramid as pyr
+
+    replaced = []
+    replace = os.replace
+
+    def counting(src, dst, *args, **kwargs):
+        if str(dst).startswith(str(tmp_path)):
+            replaced.append(os.path.basename(dst))
+        return replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", counting)
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=3, aggregations=SPECS)],
+                       gridsize=16)
+    pts = _points(spark, 2000)
+    man = build_pyramid(pts, plan, TableIO(str(tmp_path / "pyr")), resume=False)
+    ops = [man[z]["lineage"]["op"] for z in sorted(man, reverse=True)]
+    assert ops == ["encode+aggregate"] + ["rollup-small"] * 5
+    assert replaced == ["_snapshot.json"]
+
+    one = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=7, aggregations=SPECS)],
+                      gridsize=16)
+    io = TableIO(str(tmp_path / "one"))
+    build_pyramid(pts, one, io, resume=False)
+    replaced.clear()
+    pyr.incremental_update(pts, one, TableIO(io.root, delta_id=1))
+    assert replaced == ["_snapshot.json"]
+
+
+def test_torn_draft_log_line_is_rebuilt(spark, tmp_path, monkeypatch):
+    """A crash partway through a build leaves the draft log with the base
+    and three tail records; with the last line cut in half (a torn
+    append), a resume keeps the earlier records (same completed_at),
+    rebuilds the torn level, and equals a one-shot build."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=3, aggregations=SPECS)],
+                       gridsize=16)
+    pts = _points(spark, 2000)
+    io = TableIO(str(tmp_path / "crash"))
+    staged = _crash_writes(monkeypatch, before={5})  # base 10, tail 9 8 7 | 6
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(pts, plan, io)
+    monkeypatch.undo()
+    assert sorted(staged) == [7, 8, 9, 10]
+
+    log = os.path.join(io.root, "_draft.jsonl")
+    with open(log, "rb") as f:
+        data = f.read()
+    start = data.rindex(b"\n", 0, len(data) - 1) + 1  # the last line, zoom 7's
+    assert b'"zoom": 7' in data[start:]
+    with open(log, "wb") as f:
+        f.write(data[:start + (len(data) - start) // 2])
+
+    man = build_pyramid(pts, plan, io, resume=True)
+    assert {z: man[z]["completed_at"] for z in (8, 9, 10)} == \
+           {z: staged[z]["completed_at"] for z in (8, 9, 10)}
+    assert man[7]["completed_at"] > staged[7]["completed_at"]
+    assert man[7]["gen"] != staged[7]["gen"]
+    one_shot = TableIO(str(tmp_path / "one_shot"))
+    build_pyramid(pts, plan, one_shot, resume=False)
+    zooms = sorted(man)
+    got = _level_rows(io, spark, zooms)
+    assert got == _level_rows(one_shot, spark, zooms) and all(got.values())
+    for z in zooms:
+        assert os.listdir(os.path.join(io.root, f"zoom={z}")) == [man[z]["gen"]]
+    assert not os.path.exists(log)
+
+
+def test_draft_from_before_the_log_is_ignored(spark, tmp_path):
+    """A root that still holds a one-document ``_draft.json`` (the draft's
+    form before the log) keeps working: a resume does not read it and
+    resumes from the published levels, and the publish deletes it along
+    with the log."""
+    import json
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS[:2])],
+                       gridsize=16)
+    pts = _points(spark, 1500)
+    io = TableIO(str(tmp_path / "pyr"))
+    m1 = build_pyramid(pts, plan, io, resume=False)
+    with open(os.path.join(io.root, "_snapshot.json")) as f:
+        snap = json.load(f)
+    stale = {**m1[9], "gen": "g000000000000", "completed_at": 0.0}
+    with open(os.path.join(io.root, "_draft.json"), "w") as f:
+        json.dump({"base": snap["id"], "resumable": True,
+                   "levels": {**snap["levels"], "9": stale}}, f)
+
+    m2 = build_pyramid(pts, plan, io, resume=True)
+    assert {z: m["completed_at"] for z, m in m2.items()} == \
+           {z: m["completed_at"] for z, m in m1.items()}
+    assert sorted(n for n in os.listdir(io.root) if n.startswith("_")) == \
+        ["_snapshot.json"]
+    assert _level_rows(io, spark, [9, 8, 7])[9]
+
+
+def test_concurrent_stages_all_reach_the_draft_log(tmp_path):
+    """The draft log, not only the in-memory draft, holds every stage of
+    concurrent writers: 64 level writes from 16 threads, with a short
+    thread switch interval, then a crash before the publish; a resume
+    sees all 64 records."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+
+    io = TableIO(str(tmp_path / "pyr"))
+    table = pa.table({"x": [1, 2], "y": [3, 4], "cnt": [5, 6]})
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"), \
+                io.commit("empty"), ThreadPoolExecutor(max_workers=16) as pool:
+            done = list(pool.map(lambda z: io.write_level_pandas(table, z), range(64),
+                                 timeout=120))
+            raise RuntimeError("injected crash")
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(done) == 64
+    resumed = TableIO(io.root)
+    with resumed.commit("resume"):
+        assert all(resumed.read_manifest(z) == done[z] for z in range(64))

@@ -79,11 +79,6 @@ def parent_xy(x: Column, y: Column) -> tuple[Column, Column]:
     return F.shiftright(x, 1), F.shiftright(y, 1)
 
 
-def ancestor_xy(x: Column, y: Column, dz: int) -> tuple[Column, Column]:
-    """Ancestor dz levels up: (x>>dz, y>>dz) — rollup in integer key space."""
-    return F.shiftright(x, dz), F.shiftright(y, dz)
-
-
 def tile_lon(x: Column, z: int) -> Column:
     return x.cast("double") / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
 
@@ -118,45 +113,6 @@ def degenerate_pass_point(lon: Column, lat: Column, x: Column, y: Column,
     s = tile_lat(y + F.lit(1), z)
     n = tile_lat(y, z)
     return (lon - w > eps) & (e - lon > eps) & (lat - s > eps) & (n - lat > eps)
-
-
-def tile_bbox(x: Column, y: Column, z: int) -> Column:
-    """struct(west, south, east, north) of the cell — derived on demand,
-    never stored (the grouping key is the quadkey / (x,y) ints)."""
-    return F.struct(
-        tile_lon(x, z).alias("west"),
-        tile_lat(y + F.lit(1), z).alias("south"),
-        tile_lon(x + F.lit(1), z).alias("east"),
-        tile_lat(y, z).alias("north"),
-    )
-
-
-def cell_centroid(x: Column, y: Column, z: int) -> tuple[Column, Column]:
-    """(lon, lat) of the cell center."""
-    lon = tile_lon(x.cast("double") + F.lit(0.5), z)
-    lat = tile_lat(y.cast("double") + F.lit(0.5), z)
-    return lon, lat
-
-
-def tile_lon_frac(xf: Column, z: int) -> Column:
-    return xf / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
-
-
-def tile_lat_frac(yf: Column, z: int) -> Column:
-    n = F.lit(math.pi) - F.lit(2.0 * math.pi) * yf / F.lit(float(1 << z))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def cell_area_weight(y: Column, z: int) -> Column:
-    """Relative spherical area of a cell (row y at zoom z), for
-    areaWeightedMean across grid levels: cells in a Mercator row share area
-    A ∝ sin(lat_n) - sin(lat_s).  Matches the reference's semantics where
-    the weight of a wholly-contained child is its own area
-    (/root/reference/test/lib/aggregate-cells.js:30-56 relies only on
-    ratios, so the ∝ constant cancels)."""
-    lat_n = F.radians(tile_lat(y, z))
-    lat_s = F.radians(tile_lat(y + F.lit(1), z))
-    return F.sin(lat_n) - F.sin(lat_s)
 
 
 def _spread_bits(v: Column) -> Column:

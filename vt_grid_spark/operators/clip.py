@@ -124,16 +124,6 @@ def ring_area_sq_m(ring: np.ndarray) -> float:
                  * _WGS84_R * _WGS84_R / 2.0)
 
 
-def polygon_area_sq_m(rings: list) -> float:
-    """abs(outer) - Σ abs(holes)."""
-    if not rings:
-        return 0.0
-    area = abs(ring_area_sq_m(np.asarray(rings[0])))
-    for hole in rings[1:]:
-        area -= abs(ring_area_sq_m(np.asarray(hole)))
-    return area
-
-
 # ---------------------------------------------------------------------------
 # line clipping (the reference's roads workload: per-tile line distance,
 # bench/aggregations/osm-roads.js) — slab method, pure arithmetic so the

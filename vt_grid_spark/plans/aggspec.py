@@ -47,8 +47,9 @@ class AggSpec:
     out       — output column name (stable across all pyramid levels)
     reducer   — one of VALID_REDUCERS
     field     — input column (ignored for count/totalArea)
-    weight    — weight column for area-weighted reducers (defaults to the
-                cell's spherical area at the base level; 1.0 for points)
+    weight    — weight column for area-weighted reducers (1.0 for every
+                row when unset; polygon clip's ``area`` column is the
+                clipped part's spherical area)
     k         — sketch size for kmvDistinct (k smallest hashes kept)
     buckets/width/quantiles — histQuantile configuration: the cell value
                 is a ``buckets``-long array of counts over linear bins of

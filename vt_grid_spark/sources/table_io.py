@@ -10,17 +10,22 @@ Levels store x, y and aggregates; older levels that also store
 
 - A level write goes to a fresh *generation*, never over published data;
   its record (lineage, row counts, status, the metrics observed on the
-  write) is staged once, in a durable *draft*, from which a killed build
-  resumes.
+  write) is staged once, after its files are written, in a durable
+  *draft*, from which a killed build resumes.  The draft is an
+  append-only log: a writer call's first stage writes a header line (the
+  draft's base snapshot, whether it resumes, its levels), every later
+  stage appends one line with the level's record.  A stage replaces no
+  file.
 - Each writer call runs in one :meth:`TableIO.commit` and ends with ONE
-  publish: an atomic replace of the snapshot, which names every live
-  level's generation and record plus the last applied delta id.
-  Generations it no longer names are deleted afterwards.
+  publish, its only file rename: an atomic replace of the snapshot,
+  which names every live level's generation and record plus the last
+  applied delta id.  Generations it no longer names, and the draft, are
+  deleted afterwards.
 - Readers see the published snapshot; a writer call sees its draft.
 
 So a crash leaves the old pyramid or the new one, never a mix.  On disk:
 ``<root>/zoom=<z>/<gen>/part-*.parquet`` plus ``_snapshot.json`` and
-``_draft.json``, which the ``_`` hides from Spark and pyarrow readers.
+``_draft.jsonl``, which the ``_`` hides from Spark and pyarrow readers.
 
 ``CatalogTableIO`` maps the same protocol onto a catalog: one table per
 generation, snapshots and drafts as rows of an append-only journal
@@ -88,6 +93,7 @@ class TableIO:
     def _init_protocol(self, delta_id: int | None) -> None:
         self.delta_id = delta_id
         self._draft: dict | None = None  # the open writer call's draft
+        self._draft_logged = False  # whether the open call has staged yet
         self._lock = threading.Lock()  # merges stage from several threads
 
     # -- the commit protocol ---------------------------------------------------
@@ -105,11 +111,11 @@ class TableIO:
             yield
             return
         snap = self._published()
-        draft = self._load("draft") if start == "resume" else None
+        draft = self._load_draft() if start == "resume" else None
         if not (draft and draft["resumable"] and draft["base"] == snap["id"]):
             draft = {"base": snap["id"], "resumable": start != "published",
                      "levels": {} if start == "empty" else dict(snap["levels"])}
-        self._draft = draft
+        self._draft, self._draft_logged = draft, False
         try:
             yield
             applied = snap["applied_delta"] if self.delta_id is None else self.delta_id
@@ -145,7 +151,8 @@ class TableIO:
     def _put(self, record: dict) -> dict:
         with self._lock:
             self._draft["levels"][str(record["zoom"])] = record
-            self._store("draft", self._draft)
+            self._log(record)
+            self._draft_logged = True
         return dict(record)
 
     # -- write ---------------------------------------------------------------
@@ -275,6 +282,39 @@ class TableIO:
         except FileNotFoundError:
             return None
 
+    def _log(self, record: dict) -> None:
+        """Make the draft, which already holds ``record``, durable: the
+        call's first stage writes the log anew with the whole draft as its
+        header line, each later stage appends ``record`` as one line.
+        Appending renames nothing, so a stage costs no file replace."""
+        line, mode = (record, "a") if self._draft_logged else (self._draft, "w")
+        with open(os.path.join(self.root, "_draft.jsonl"), mode) as f:
+            f.write(json.dumps(line, sort_keys=True) + "\n")
+
+    def _load_draft(self) -> dict | None:
+        """Replay the draft log: the header, then each record in order (a
+        later record of a zoom replaces an earlier one).  A last line
+        without its newline, or one that does not parse, is a torn append:
+        it is dropped, so its level is rebuilt like one whose write
+        crashed.  A ``_draft.json`` from before the log is not read; the
+        call resumes from the published levels."""
+        try:
+            with open(os.path.join(self.root, "_draft.jsonl")) as f:
+                *lines, _torn = f.read().split("\n")  # "" after a whole line
+        except FileNotFoundError:
+            return None
+        draft = None
+        for line in lines:
+            try:
+                doc = json.loads(line)
+            except ValueError:
+                break
+            if draft is None:
+                draft = doc
+            else:
+                draft["levels"][str(doc["zoom"])] = doc
+        return draft
+
     def _store(self, kind: str, doc: dict) -> None:
         """Write to a sibling ``.tmp`` and rename it over the old file: a
         reader sees the old document or the new one."""
@@ -286,7 +326,7 @@ class TableIO:
     def _collect(self, levels: dict) -> None:
         """After a publish: delete every generation the snapshot does not
         name (replaced levels and what crashed writers left) and the
-        draft."""
+        draft, in the log and in the one-document form before it."""
         for name in os.listdir(self.root):
             if name.startswith("zoom="):
                 live = levels.get(name[5:], {}).get("gen")
@@ -302,10 +342,11 @@ class TableIO:
                         shutil.rmtree(path)
                     else:  # a level file of the flat layout before generations
                         os.remove(path)
-        try:
-            os.remove(os.path.join(self.root, "_draft.json"))
-        except FileNotFoundError:
-            pass
+        for name in ("_draft.jsonl", "_draft.json"):
+            try:
+                os.remove(os.path.join(self.root, name))
+            except FileNotFoundError:
+                pass
 
 
 def _new_gen() -> str:
@@ -380,6 +421,12 @@ class CatalogTableIO(TableIO):
                 .orderBy(F.col("committed_at").desc())
                 .limit(1).collect())
         return json.loads(rows[0].body) if rows else None
+
+    def _log(self, record: dict) -> None:
+        self._store("draft", self._draft)  # the journal is append-only already
+
+    def _load_draft(self) -> dict | None:
+        return self._load("draft")
 
     def _store(self, kind: str, doc: dict) -> None:
         row = self.spark.createDataFrame(

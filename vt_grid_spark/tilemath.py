@@ -86,15 +86,6 @@ def tile_to_bbox(x, y, z: int):
     )
 
 
-def tile_to_polygon(x: int, y: int, z: int) -> list:
-    """GeoJSON Polygon coordinates of the tile bbox, ring closed,
-    tilebelt.tileToGeoJSON winding (/root/reference/lib/aggregate-cells.js:93).
-    """
-    w, s, e, n = tile_to_bbox(x, y, z)
-    w, s, e, n = float(w), float(s), float(e), float(n)
-    return [[[w, s], [w, n], [e, n], [e, s], [w, s]]]
-
-
 # ---------------------------------------------------------------------------
 # quadkeys
 # ---------------------------------------------------------------------------
