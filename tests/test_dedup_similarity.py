@@ -513,7 +513,7 @@ def test_dedup_clusters_star_one_job_per_round(spark):
     sc.setJobGroup("cc-job-audit", "star CC one-job-per-round audit")
     try:
         stats = {}
-        out = dedup_clusters(chain, algorithm="star", stats=stats,
+        out = dedup_clusters(chain, stats=stats,
                              small_graph_edges=0)  # audit the distributed path
         n_rows = out.count()
         jobs = sc.statusTracker().getJobIdsForGroup("cc-job-audit")
@@ -529,13 +529,15 @@ def test_dedup_clusters_star_one_job_per_round(spark):
 
 
 def test_dedup_clusters_star_equals_hashmin_and_beats_diameter(spark):
-    """The large-star/small-star CC (default) must agree with the
-    independently-implemented hash-min propagation on a random graph, and
-    must converge on a 300-node chain within rounds where hash-min's
-    O(diameter) propagation cannot (it raises past max_iter=20)."""
+    """The large-star/small-star CC must agree with the independently
+    implemented hash-min propagation (the test reference) on a random
+    graph, and must converge on a 300-node chain within rounds where
+    hash-min's O(diameter) propagation cannot (it raises past
+    max_iter=20)."""
     import random
 
     import pytest
+    from hashmin_reference import dedup_clusters_hashmin
 
     from vt_grid_spark.operators.dedup import dedup_clusters
 
@@ -544,18 +546,16 @@ def test_dedup_clusters_star_equals_hashmin_and_beats_diameter(spark):
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     star = {(r.doc_id, r.cluster_rep)
-            for r in dedup_clusters(df, algorithm="star",
-                                    small_graph_edges=0).collect()}
+            for r in dedup_clusters(df, small_graph_edges=0).collect()}
     hm = {(r.doc_id, r.cluster_rep)
-          for r in dedup_clusters(df, algorithm="hashmin").collect()}
+          for r in dedup_clusters_hashmin(df).collect()}
     assert star == hm and star
 
     # r6 small-graph fast path (driver union-find) must agree with BOTH
     # distributed implementations on the same graph, and must flag itself
     stats = {}
     fast = {(r.doc_id, r.cluster_rep)
-            for r in dedup_clusters(df, algorithm="star",
-                                    stats=stats).collect()}
+            for r in dedup_clusters(df, stats=stats).collect()}
     assert fast == star
     assert stats.get("small_graph") is True and stats.get("rounds") == 0
 
@@ -563,20 +563,21 @@ def test_dedup_clusters_star_equals_hashmin_and_beats_diameter(spark):
     # from both algorithms AND the driver fast path — dropping it would
     # silently remove the doc from a keep-one-per-cluster decision
     selfp = spark.createDataFrame([(5, 5), (1, 2)], "id_a long, id_b long")
-    for algo, sge in (("star", 0), ("star", 10), ("hashmin", 0)):
-        got = {(r.doc_id, r.cluster_rep)
-               for r in dedup_clusters(selfp, algorithm=algo,
-                                       small_graph_edges=sge).collect()}
-        assert got == {(1, 1), (2, 1), (5, 5)}, (algo, sge, got)
+    for name, cc in (("star", lambda g: dedup_clusters(g, small_graph_edges=0)),
+                     ("star_small_graph",
+                      lambda g: dedup_clusters(g, small_graph_edges=10)),
+                     ("hashmin", dedup_clusters_hashmin)):
+        got = {(r.doc_id, r.cluster_rep) for r in cc(selfp).collect()}
+        assert got == {(1, 1), (2, 1), (5, 5)}, (name, got)
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(300)],
                                   "id_a long, id_b long")
     labels = {r.doc_id: r.cluster_rep
-              for r in dedup_clusters(chain, max_iter=20, algorithm="star",
+              for r in dedup_clusters(chain, max_iter=20,
                                       small_graph_edges=0).collect()}
     assert set(labels.values()) == {0} and len(labels) == 301
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iter=20, algorithm="hashmin").collect()
+        dedup_clusters_hashmin(chain, max_iter=20).collect()
 
 
 def test_signatures_keep_null_and_empty_text_rows(spark):

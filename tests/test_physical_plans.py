@@ -232,18 +232,17 @@ def test_hex_bin_stays_jvm_side(spark):
 
 
 def test_dedup_clusters_round_no_broadcast(spark):
-    """One label-propagation round OF THE REAL OPERATOR (_hashmin_round):
-    the corpus-sized labels table reaches the edge join by SHUFFLE, never
-    broadcast (labels are per-node at 10^12-doc scale)."""
+    """One round of the hash-min reference that the star components are
+    checked against: the corpus-sized labels table reaches the edge join
+    by SHUFFLE, never broadcast (labels are per-node at 10^12-doc scale)."""
+    from hashmin_reference import hashmin_round
     from pyspark.sql import functions as F
-
-    from vt_grid_spark.operators.dedup import _hashmin_round
 
     edges = spark.range(1000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
     labels = edges.select(F.col("src").alias("id")).distinct() \
         .withColumn("label", F.col("id"))
-    p = plan_str(_hashmin_round(edges, labels), "simple")
+    p = plan_str(hashmin_round(edges, labels), "simple")
     assert "BroadcastExchange" not in p and "BroadcastHashJoin" not in p
     assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
 

@@ -287,9 +287,9 @@ def test_cluster_level_keeps_max_cell_rows(spark, tmp_path, backend):
 
 
 def test_concurrent_stages_are_all_published(tmp_path):
-    """incremental_update's merge threads stage into one shared draft:
-    64 level writes from 16 threads, with a short thread switch
-    interval, all reach the one publish."""
+    """TableIO's stage is thread-safe: 64 level writes from 16 threads
+    that share one draft, with a short thread switch interval, all reach
+    the one publish."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -748,7 +748,8 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
     fin = finalize_columns(specs)
     for z in man:
         assert man[z]["status"] == "complete"
-        assert man[z]["lineage"]["op"] == "incremental-merge"
+        assert man[z]["lineage"]["op"] == \
+            ("incremental-merge" if z == max(man) else "rollup-small")
 
         def norm(df):
             df = df.withColumn("mean_v", fin["mean_v"])
@@ -763,33 +764,50 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
     pts.unpersist()
 
 
-def test_incremental_update_job_audit(spark, tmp_path, jobs_started):
+@pytest.mark.parametrize("basezoom, minzoom", [(9, 8), (13, 0)],
+                         ids=["one_level", "thirteen_levels"])
+def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, minzoom):
     """A one-level fold with the benchmark's count + sum + union plan
     computes the delta partials once (an eager localCheckpoint) and takes
     max_cell_rows from the merge write itself: 6 jobs, none of which
     recomputes the delta or re-reads the committed level.  With the
     partials lazily persisted instead, the merge's concurrent query stages
-    each recomputed them and a read-back of the level followed: 12 jobs."""
+    each recomputed them and a read-back of the level followed: 12 jobs.
+
+    A 13-level fold (cell zooms 12 -> 0) merges only the base level in
+    Spark and derives the 12 small levels above it with the build's tail,
+    from the merged level read back: at most 12 jobs (merging every level
+    took 78), and every level equals a one-shot build over both batches."""
     from vt_grid_spark.operators.pyramid import incremental_update
 
     specs = [AggSpec(out="cnt", reducer="count"),
              AggSpec(out="sum_v", reducer="sum", field="v"),
              AggSpec(out="langs", reducer="union", field="lang")]
-    plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=8, aggregations=specs)],
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=basezoom, minzoom=minzoom,
+                                       aggregations=specs)],
                        gridsize=1)
+    zooms = [z for _, z, _ in plan.levels()]
     pts = _points(spark, 3000)
     a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
     b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
     io = TableIO(str(tmp_path / "pyr"))
     build_pyramid(a, plan, io, resume=False)
-    assert [z for _, z, _ in plan.levels()] == [8]
 
     man = {}
     n_jobs = jobs_started(lambda: man.update(incremental_update(b, plan, io)))
-    assert man[8]["lineage"]["op"] == "incremental-merge"
-    assert man[8]["max_cell_rows"] == \
-        io.read_level(spark, 8).agg(F.max("cnt")).collect()[0][0]
-    assert n_jobs == 6, n_jobs
+    assert [man[z]["lineage"]["op"] for z in zooms] == \
+        ["incremental-merge"] + ["rollup-small"] * (len(zooms) - 1)
+    for z in zooms:
+        assert man[z]["max_cell_rows"] == _max_cnt(io, spark, z)
+    if len(zooms) == 1:
+        assert zooms == [8]
+        assert n_jobs == 6, n_jobs
+    else:
+        assert zooms == list(range(12, -1, -1))
+        assert n_jobs <= 12, n_jobs
+        one_shot = TableIO(str(tmp_path / "one_shot"))
+        build_pyramid(pts, plan, one_shot, resume=False)
+        assert _level_rows(io, spark, zooms) == _level_rows(one_shot, spark, zooms)
 
 
 def test_empty_cover_build_records_zero_max(spark, tmp_path):
@@ -989,7 +1007,8 @@ def test_levels_store_no_quadkey_and_build_needs_no_pandas(spark, tmp_path,
     assert [man[z]["lineage"]["op"] for z in zooms] == \
         ["encode+aggregate", "rollup"] + ["rollup-small"] * 3
     man = pyr.incremental_update(pts, plan, io)
-    assert all(man[z]["lineage"]["op"] == "incremental-merge" for z in zooms)
+    assert [man[z]["lineage"]["op"] for z in zooms] == \
+        ["incremental-merge"] * 2 + ["rollup-small"] * 3
     custom = TableIO(str(tmp_path / "custom"))
     build_custom_pyramid(pts, custom, lambda pdf, tile: {"n": len(pdf)}, "n long",
                          basezoom=6, minzoom=5, gridsize=16)

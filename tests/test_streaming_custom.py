@@ -431,18 +431,20 @@ def test_streaming_pyramid_maintenance_equals_batch_rebuild(spark, tmp_path,
     sink(parts[2], 2)  # foreachBatch retry after the commit
     assert level(io_s, zooms[0]) == level(io_b, zooms[0])
 
-    # crash MID-FOLD: one level's merge fails while the others finish, so
-    # nothing is published; the retry redoes the fold once and lands
-    # exactly the delta
+    # crash MID-FOLD: the last level's write fails (a Spark merge or, as
+    # here, a tail level) after the others finish, so nothing is
+    # published; the retry redoes the fold once and lands exactly the delta
     extra = pts.limit(100)
-    write = TableIO.write_level
 
-    def crash_one_level(self, df, zoom, *args, **kwargs):
-        if zoom == zooms[-1]:
-            raise RuntimeError("injected crash")
-        return write(self, df, zoom, *args, **kwargs)
+    def crashing(write):
+        def crash_one_level(self, data, zoom, *args, **kwargs):
+            if zoom == zooms[-1]:
+                raise RuntimeError("injected crash")
+            return write(self, data, zoom, *args, **kwargs)
+        return crash_one_level
 
-    monkeypatch.setattr(TableIO, "write_level", crash_one_level)
+    for name in ("write_level", "write_level_pandas"):
+        monkeypatch.setattr(TableIO, name, crashing(getattr(TableIO, name)))
     with pytest.raises(RuntimeError, match="injected crash"):
         sink(extra, 3)
     monkeypatch.undo()

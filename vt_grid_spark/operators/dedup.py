@@ -324,7 +324,6 @@ def _union_find_clusters(rows, out_schema):
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                    max_iter: int = 30,
-                   algorithm: str = "star",
                    stats: dict | None = None,
                    small_graph_edges: int | None = SMALL_GRAPH_EDGES) -> DataFrame:
     """Connected components over a near-dup pair graph -> (doc_id,
@@ -332,20 +331,16 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     generation, so "keep one doc per near-dup CLUSTER" is one groupBy on
     cluster_rep (pairs alone under-dedup transitive chains A~B~C).
 
-    ``algorithm="star"`` (default) — alternating large-star / small-star
-    [Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14]: each half-round rewires every node's larger (resp. smaller)
-    neighbors to its minimum neighbor, collapsing components into star
-    graphs in O(log n)-ish rounds REGARDLESS of diameter — a 10^6-node
-    chain converges in ~20 half-rounds where label propagation needs 10^6.
+    Alternating large-star / small-star [Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14]: each half-round
+    rewires every node's larger (resp. smaller) neighbors to its minimum
+    neighbor, collapsing components into star graphs in O(log n)-ish
+    rounds REGARDLESS of diameter — a 10^6-node chain converges in ~20
+    half-rounds where label propagation needs 10^6.
     Both halves also emit the (u, min) star edge itself (always
     intra-component, so connectivity can only be preserved, never
     invented).  Convergence = edge-set fingerprint (count + hash sum)
     stable across a full round.
-
-    ``algorithm="hashmin"`` — classic min-label propagation, kept as the
-    independently-implemented twin (converges in O(diameter) rounds; the
-    equality test pins the two against each other on random graphs).
 
     Every per-round step is a shuffle-hash join / aggregation on node-id
     keys; ``localCheckpoint`` truncates lineage so round N doesn't
@@ -364,18 +359,13 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     full large+small star rounds materialized (used by the one-job-per-
     round test and by bench instrumentation).
 
-    ``small_graph_edges`` (star mode only): pair graphs at or below this
-    many edges are clustered driver-side by union-find over the collected
-    checkpoint (identical output; ``stats`` gets ``rounds=0,
-    small_graph=True``) — a bounded hybrid like pyramid.py's
-    SMALL_LEVEL_ROWS, because each distributed star round costs ~1 s of
-    fixed scheduling that dwarfs a tiny graph.  Pass 0/None to force the
+    ``small_graph_edges``: pair graphs at or below this many edges are
+    clustered driver-side by union-find over the collected checkpoint
+    (identical output; ``stats`` gets ``rounds=0, small_graph=True``) — a
+    bounded hybrid like pyramid.py's SMALL_LEVEL_ROWS, because each
+    distributed star round costs ~1 s of fixed scheduling that dwarfs a
+    tiny graph.  Pass 0/None to force the
     distributed path (the plan/job-audit tests do)."""
-    if algorithm == "hashmin":
-        return _dedup_clusters_hashmin(pairs, id_a, id_b, max_iter)
-    if algorithm != "star":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-
     from pyspark.sql import Observation
 
     # checkpoint the raw pair projection ONCE: both the edge set and the
@@ -385,10 +375,8 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     raw = pairs.select(F.col(id_a).alias("u"),
                        F.col(id_b).alias("v")).localCheckpoint()
 
-    # bounded small-graph fast path (star mode only — the hashmin twin
-    # stays purely distributed so the equality tests keep pinning the
-    # star implementation against an independent one).  The count is an
-    # O(|E|) local scan of the checkpoint blocks just materialized.
+    # bounded small-graph fast path.  The count is an O(|E|) local scan
+    # of the checkpoint blocks just materialized.
     if small_graph_edges and raw.count() <= small_graph_edges:
         spark = pairs.sparkSession
         node_t = raw.select("u").unionByName(
@@ -423,7 +411,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     edges, fp = _ckpt_fp(_sym_edges(raw))
     # nodes come from the RAW pairs, not the loop-free edge set: a doc
     # whose only pair is a self-pair (id_a == id_b) must still receive a
-    # cluster label (itself), matching the hashmin twin
+    # cluster label (itself)
     nodes = (raw.select("u").unionByName(raw.select(F.col("v").alias("u")))
              .distinct().localCheckpoint())
 
@@ -459,48 +447,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                             F.coalesce("m", "u").alias("cluster_rep")))
         fp = new_fp
     raise RuntimeError(
-        f"dedup_clusters(star) did not converge in {max_iter} rounds")
-
-
-def _hashmin_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label propagation round — module-level so the no-broadcast
-    plan gate (tests/test_physical_plans.py) exercises the operator's
-    actual join, not a hand-built copy."""
-    nbr_min = (
-        edges.join(labels.select(F.col("id").alias("dst"),
-                                 F.col("label").alias("_dl"))
-                   .hint("shuffle_hash"), "dst")
-        .groupBy("src").agg(F.min("_dl").alias("_nmin")))
-    return (
-        labels.join(nbr_min.withColumnRenamed("src", "id")
-                    .hint("shuffle_hash"), "id", "left")
-        .select("id", F.least("label", F.coalesce("_nmin", "label"))
-                .alias("label")))
-
-
-def _dedup_clusters_hashmin(pairs: DataFrame, id_a: str, id_b: str,
-                            max_iter: int) -> DataFrame:
-    """Min-label propagation twin of :func:`dedup_clusters` — converges in
-    O(diameter) rounds; raises loudly past ``max_iter`` rather than
-    silently under-merging."""
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                       F.col(id_a).alias("dst")))
-             .distinct().localCheckpoint())
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id")).localCheckpoint())
-    for _ in range(max_iter):
-        new_labels = _hashmin_round(edges, labels).localCheckpoint()
-        changed = (new_labels.alias("n").join(labels.alias("o"), "id")
-                   .where(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            return labels.select(F.col("id").alias("doc_id"),
-                                 F.col("label").alias("cluster_rep"))
-    raise RuntimeError(
-        f"dedup_clusters(hashmin) did not converge in {max_iter} rounds — "
-        "the pair graph has a path longer than max_iter; use the default "
-        "star algorithm (O(log n) rounds at any diameter)")
+        f"dedup_clusters did not converge in {max_iter} rounds")
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",

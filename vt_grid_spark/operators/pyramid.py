@@ -1,5 +1,5 @@
-"""Pyramid driver: the reference's per-level recursion
-(/root/reference/index.js:94-162) as a checkpointed Spark loop.
+"""Pyramid driver: the reference's per-level recursion (index.js:94-162)
+as a checkpointed Spark loop.
 
 Each output level is one shuffle stage (groupBy on the integer parent
 key); every level is staged in its own generation with a record (the
@@ -12,17 +12,21 @@ own write job), not back off parquet — the checkpoint write is the
 durability path, never a serial decode on the critical path.  On resume
 the cache is cold and the level IS re-read from its checkpoint.
 
-The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
-``rollup_ancestors`` aggregation per zoom band derives all of its levels at
-once, collected to the driver as one Arrow table and written per level.
-Both paths use the combiners of ``compile_rollup_aggs``, derived from
-``aggspec.REDUCERS``, the one place a reducer's merge rule is defined.
+The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail,
+which both writers share: one ``rollup_ancestors`` aggregation per zoom
+band derives all of its levels at once, collected to the driver as one
+Arrow table and written per level.  A fold merges the delta in Spark only
+while levels are big.  All paths use the combiners of
+``compile_rollup_aggs``, derived from ``aggspec.REDUCERS``, the one place
+a reducer's merge rule is defined.
 """
 
 from __future__ import annotations
 
+from itertools import groupby, takewhile
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate,
@@ -123,62 +127,68 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
             prev_df = base
 
         # --- rollup levels ---------------------------------------------------
-        # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS).
-        # A band boundary starts a new batch: the next band's specs apply to
-        # this band's last level.
-        prev_cell_z = base_cell_z
-        tail: dict = {}  # cell_z -> collected rows of the current batch
-        for output_z, cell_z, band in levels[1:]:
-            assert cell_z == prev_cell_z - 1
+        # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS)
+        # up to the next level a resume keeps
+        for i, (output_z, cell_z, band) in enumerate(levels[1:], 1):
+            if cell_z in manifests:  # written by a tail batch
+                continue
+            prev_cell_z = cell_z + 1
+            cached, prev_df = prev_df, None  # only a Spark rollup is kept
             if resume and io.level_complete(cell_z):
                 manifests[cell_z] = io.read_manifest(cell_z)
-                tail = {}  # the next batch starts from the skipped level
-                if prev_df is not None:
-                    prev_df.unpersist()
-                    prev_df = None  # cache is stale relative to the skip point
-            elif (cell_z in tail
-                  or manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS):
-                if cell_z not in tail:
-                    children = (prev_df if prev_df is not None
-                                else io.read_level(spark, prev_cell_z))
-                    min_z = min(z for _, z, b in levels if b is band)
-                    batch = rollup_ancestors(children, prev_cell_z, min_z,
-                                             band.aggregations).toArrow()
-                    # sorted (same files every run) on one int64 key, 4^z +
-                    # x*2^z + y: exact for zooms <= 31, ~4x faster than sort_by
-                    zoom, x, y = (batch[k].to_numpy().astype(np.int64)
-                                  for k in ("zoom", "x", "y"))
-                    order = np.argsort((1 << 2 * zoom) | (x << zoom) | y)
-                    batch = batch.take(order)
-                    ends = zoom[order].searchsorted(range(min_z, prev_cell_z + 1))
-                    tail = {z: batch.slice(ends[i], ends[i + 1] - ends[i])
-                            for i, z in enumerate(range(min_z, prev_cell_z))}
-                    if prev_df is not None:
-                        prev_df.unpersist()
-                        prev_df = None  # remaining levels are driver-side
-                manifests[cell_z] = io.write_level_pandas(
-                    tail.pop(cell_z), cell_z,
-                    lineage={"input": f"zoom={prev_cell_z}", "op": "rollup-small",
-                             "output_tile_zoom": output_z},
-                    count_col=_tracked_count(plan, band))
+            elif manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS:
+                run = takewhile(lambda lv: not (resume and io.level_complete(lv[1])),
+                                levels[i:])
+                manifests.update(_write_tail(spark, io, plan, list(run),
+                                             prev_cell_z, cached))
             else:
                 salt = _salt_for(prev_cell_z, band)
-                children = (prev_df if prev_df is not None
+                children = (cached if cached is not None
                             else io.read_level(spark, prev_cell_z))
-                level = rollup_ancestors(children, prev_cell_z, cell_z,
-                                         band.aggregations, salt_buckets=salt).persist()
+                prev_df = rollup_ancestors(children, prev_cell_z, cell_z,
+                                           band.aggregations, salt_buckets=salt).persist()
                 manifests[cell_z] = io.write_level(
-                    level, cell_z, {"input": f"zoom={prev_cell_z}", "op": "rollup",
-                                    "output_tile_zoom": output_z, "salted": salt > 1,
-                                    "salt_buckets": salt},
+                    prev_df, cell_z, {"input": f"zoom={prev_cell_z}", "op": "rollup",
+                                      "output_tile_zoom": output_z, "salted": salt > 1,
+                                      "salt_buckets": salt},
                     count_col=_tracked_count(plan, band))
-                if prev_df is not None:
-                    prev_df.unpersist()
-                prev_df = level
-            prev_cell_z = cell_z
+            if cached is not None:
+                cached.unpersist()
 
         if prev_df is not None:
             prev_df.unpersist()
+    return manifests
+
+
+def _write_tail(spark: SparkSession, io: TableIO, plan: PyramidPlan, todo: list,
+                child_z: int, children: DataFrame | None = None) -> dict:
+    """The tail: derive the levels ``todo`` ([(output_z, cell_z, band)],
+    descending from ``child_z - 1``) from the level at ``child_z``
+    (``children``, else read from ``io``), one ``rollup_ancestors`` batch
+    per zoom band, collected as Arrow and written per level.  A band
+    boundary starts a new batch from the last level written: the next
+    band's specs apply to it.  Returns {cell_zoom: manifest}."""
+    manifests: dict[int, dict] = {}
+    for _, run in groupby(todo, key=lambda lv: id(lv[2])):
+        run = list(run)
+        band, min_z = run[0][2], run[-1][1]
+        if children is None:
+            children = io.read_level(spark, child_z)
+        batch = rollup_ancestors(children, child_z, min_z, band.aggregations).toArrow()
+        # sorted (same files every run) on one int64 key, 4^z + x*2^z + y:
+        # exact for zooms <= 31, ~4x faster than sort_by
+        zoom, x, y = (batch[k].to_numpy().astype(np.int64) for k in ("zoom", "x", "y"))
+        order = np.argsort((1 << 2 * zoom) | (x << zoom) | y)
+        batch = batch.take(order)
+        ends = zoom[order].searchsorted(range(min_z, child_z + 1))
+        for output_z, cell_z, _ in run:
+            i = cell_z - min_z
+            manifests[cell_z] = io.write_level_pandas(
+                batch.slice(ends[i], ends[i + 1] - ends[i]), cell_z,
+                lineage={"input": f"zoom={cell_z + 1}", "op": "rollup-small",
+                         "output_tile_zoom": output_z},
+                count_col=_tracked_count(plan, band))
+        children, child_z = None, min_z
     return manifests
 
 
@@ -191,21 +201,21 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     monoid, so merge(existing_level, rollup(delta)) == rebuild over the
     union — asserted level-by-level in tests/test_pyramid.py).
 
-    Scale shape (100 TB pyramid, small delta): the delta's partials are
-    computed once per level, up front, by an eager localCheckpoint (one
-    job each, which reads ``delta_points`` exactly once for the base
-    level).  Per level the delta touches |delta cells| keys — broadcast
-    that key set from the checkpoint, route untouched existing rows
-    through a broadcast LEFT ANTI join (no shuffle of the big table), and
-    hash-merge only the touched slice with the delta partials.  Cost per
-    level = one scan of the level + one tiny shuffle of the touched slice,
-    instead of a full rebuild from raw points.  Each merged level records
-    ``max_cell_rows`` by the build's rule (:func:`_tracked_count`),
-    observed on the level's own write job, so a record that lacks it
-    regains it.  Deletes are out of scope
-    (append-only corpus, min/max/union/kmv are insert-monotone).
+    By the build's rule, Spark merges a level only while the level below
+    it, merged, holds ``SMALL_LEVEL_ROWS`` or more rows (the base level
+    always); the levels above are then derived from that merged level,
+    read back from its new generation, by the build's tail
+    (:func:`_write_tail`).  Per Spark level (100 TB pyramid, small delta):
+    the delta's partials, rolled up from the previous level's, are
+    computed once by an eager localCheckpoint; the untouched existing rows
+    pass a broadcast LEFT ANTI join on the delta's keys (no shuffle of the
+    big table), and only the touched slice is hash-merged with the
+    partials.  Every record tracks ``max_cell_rows``
+    by the build's rule (:func:`_tracked_count`), so a record that lacks
+    it regains it.  Deletes are out of scope (append-only corpus,
+    min/max/union/kmv are insert-monotone).
 
-    The fold is one ``io.commit``: each merged level goes to a fresh
+    The fold is one ``io.commit``: each written level goes to a fresh
     generation and all of them are published together, with ``io``'s
     ``delta_id`` as the last applied delta.  A crash leaves the pyramid
     unfolded, so a re-run folds the delta exactly once; a fold whose
@@ -213,7 +223,6 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     """
     spark = delta_points.sparkSession
     levels = list(plan.levels())
-    _, base_cell_z, base_band = levels[0]
     for _, cell_z, _ in levels:
         if not io.level_complete(cell_z):
             raise ValueError(
@@ -224,53 +233,34 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
         return {cell_z: io.read_manifest(cell_z) for _, cell_z, _ in levels}
 
     manifests: dict[int, dict] = {}
-    # phase 1 — the per-level delta partial chain, each level computed ONCE
-    # by an eager localCheckpoint before any merge starts.  It must be
-    # eager: a lazy persist is filled by nobody before the merge's
-    # concurrent query stages start, so each of them would recompute the
-    # partials, at full shuffle width (AQE does not coalesce a cached
-    # plan's output).  The checkpoint is AQE-coalesced (a small delta
-    # becomes one partition) and its blocks are reclaimed with the
-    # DataFrames.
-    cur = cell_aggregate(_apply_cover(delta_points, plan, base_cell_z),
-                         base_cell_z, compile_aggs(base_band.aggregations)
-                         ).localCheckpoint(eager=True)
-    work: list[tuple] = []
-    prev_cell_z = None
-    for output_z, cell_z, band in levels:
-        if prev_cell_z is not None:
-            cur = rollup_ancestors(cur, prev_cell_z, cell_z,
-                                   band.aggregations).localCheckpoint(eager=True)
-        work.append((output_z, cell_z, band, cur))
-        prev_cell_z = cell_z
-
-    def _merge_level(item):
-        output_z, cell_z, band, delta = item
-        existing = io.read_level(spark, cell_z)
-        keys = delta.select("x", "y")
-        untouched = existing.join(F.broadcast(keys), ["x", "y"], "left_anti")
-        touched = existing.join(F.broadcast(keys), ["x", "y"], "left_semi")
-        merged = merge_cells([touched, delta], cell_z, band.aggregations)
-        # the merged plan lazily reads the level it replaces; the write goes
-        # to a new generation, so it is the only materialization, and the
-        # max_cell_rows it records is observed on it, as a build's is
-        return cell_z, io.write_level(
-            untouched.select(*merged.columns).unionByName(merged), cell_z,
-            lineage={"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
-                     "output_tile_zoom": output_z,
-                     "previous_row_count": io.read_manifest(cell_z).get("row_count")},
-            count_col=_tracked_count(plan, band))
-
-    # phase 2 — once the delta chain exists the per-level merges are
-    # independent of each other: run them from a small thread pool so one
-    # level's write tail back-fills with the next level's tasks (guide
-    # §2.6 overlapping independent jobs).  They stage into one draft,
-    # published once all of them have finished.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with io.commit(), ThreadPoolExecutor(max_workers=min(4, len(work))) as pool:
-        for cell_z, m in pool.map(_merge_level, work):
-            manifests[cell_z] = m
+    with io.commit():
+        for i, (output_z, cell_z, band) in enumerate(levels):
+            if i and manifests[cell_z + 1]["row_count"] < SMALL_LEVEL_ROWS:
+                # the tail reads the merged level back: persisted, the merge
+                # would lose AQE's coalescing (a cached plan keeps its shuffle
+                # width) and write many more files
+                manifests.update(_write_tail(spark, io, plan, levels[i:], cell_z + 1))
+                break
+            # eager: a lazy persist is filled by nobody before the merge's
+            # query stages start, so each would recompute the partials at
+            # full shuffle width; the checkpoint is AQE-coalesced
+            delta = (cell_aggregate(_apply_cover(delta_points, plan, cell_z), cell_z,
+                                    compile_aggs(band.aggregations)) if i == 0
+                     else rollup_ancestors(delta, cell_z + 1, cell_z, band.aggregations)
+                     ).localCheckpoint(eager=True)
+            keys = F.broadcast(delta.select("x", "y"))
+            existing = io.read_level(spark, cell_z)
+            merged = merge_cells([existing.join(keys, ["x", "y"], "left_semi"), delta],
+                                 cell_z, band.aggregations)
+            untouched = existing.join(keys, ["x", "y"], "left_anti")
+            # the write (to a new generation) is the merge's only
+            # materialization; max_cell_rows is observed on it
+            manifests[cell_z] = io.write_level(
+                untouched.select(*merged.columns).unionByName(merged), cell_z,
+                lineage={"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
+                         "output_tile_zoom": output_z,
+                         "previous_row_count": io.read_manifest(cell_z).get("row_count")},
+                count_col=_tracked_count(plan, band))
     return manifests
 
 

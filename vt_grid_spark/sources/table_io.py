@@ -94,7 +94,7 @@ class TableIO:
         self.delta_id = delta_id
         self._draft: dict | None = None  # the open writer call's draft
         self._draft_logged = False  # whether the open call has staged yet
-        self._lock = threading.Lock()  # merges stage from several threads
+        self._lock = threading.Lock()  # stages may come from several threads
 
     # -- the commit protocol ---------------------------------------------------
     @contextmanager

@@ -4,9 +4,10 @@ a checkpointed TableIO pyramid fresh as point batches arrive.
 The production shape for "events flow in, tiles stay current": the first
 microbatch bootstraps the pyramid with :func:`operators.pyramid.
 build_pyramid`; every later microbatch folds in through
-:func:`operators.pyramid.incremental_update` — per level one scan of the
-existing cells plus a delta-sized shuffle (broadcast anti/semi routing),
-never a rebuild from raw history.  Exactness holds because every aggspec
+:func:`operators.pyramid.incremental_update` — per big (Spark) level one
+scan of the existing cells plus a delta-sized shuffle (broadcast anti/semi
+routing), then the small upper levels derived from the merged level by
+the build's tail; never a rebuild from raw history.  Exactness holds because every aggspec
 reducer's rollup combiner is a commutative monoid (the property the
 batch delta path proves in tests/test_pyramid.py::
 test_incremental_update_equals_rebuild), so after N microbatches the
