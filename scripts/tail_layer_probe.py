@@ -9,7 +9,8 @@ of the small upper levels: the last call before the first
 last ``write_level_pandas`` (the driver's per-level writes): the collect,
 the per-level slicing and the writes.  ``writes_s`` is the part of it
 spent inside ``write_level_pandas`` (parquet files plus staging each
-level's record).
+level's record).  ``spark_jobs`` is the number of Spark jobs the build
+started, from the status tracker's job ids before and after it.
 
     python scripts/tail_layer_probe.py [--builds 7] [--src DIR] [--dir DIR]
 
@@ -82,6 +83,7 @@ def main(argv: list[str]) -> int:
     for i in range(1, args.builds + 1):
         out_dir = tempfile.mkdtemp(prefix="vtgrid_tail_", dir=args.dir)
         marks.clear()
+        before = _job_ids(spark)
         try:
             t0 = time.perf_counter()
             pyramid.build_pyramid(pts, plan, TableIO(out_dir), resume=False)
@@ -91,9 +93,28 @@ def main(argv: list[str]) -> int:
         tail = marks["tail_end"] - marks["tail_start"]
         print(json.dumps({"build": i, "wall_s": round(wall, 3),
                           "tail_s": round(tail, 3),
-                          "writes_s": round(marks["writes"], 3)}), flush=True)
+                          "writes_s": round(marks["writes"], 3),
+                          "spark_jobs": len(_job_ids(spark) - before)}), flush=True)
     spark.stop()
     return 0
+
+
+def _job_ids(spark) -> set:
+    """Ids of every job the session has started, read once a fence job is
+    visible: the status tracker is fed asynchronously, in job order.  The
+    fence runs in a job group of its own, so it is not among the ids."""
+    sc, group = spark.sparkContext, "tail-layer-probe-fence"
+    fences = len(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(1000):
+        if len(sc.statusTracker().getJobIdsForGroup(group)) > fences:
+            break
+        time.sleep(0.01)
+    return set(sc.statusTracker().getJobIdsForGroup(None))
 
 
 if __name__ == "__main__":

@@ -408,9 +408,22 @@ def test_catalog_tableio_contract(spark, jobs_started):
                  for r in mem.where(F.col("zoom") == z).collect()}
             assert a == b
 
+        # a journal read is a Spark job; inside a writer call the
+        # completeness and delta checks read the snapshot its commit read
+        assert jobs_started(io.delta_applied) == 1
+        with io.commit():
+            assert jobs_started(lambda: [io.level_complete(z) for z in m1]
+                                + [io.delta_applied()]) == 0
+
         # a fold on this backend observes max_cell_rows on its merge
-        # write; folding the same points doubles every count
+        # write; folding the same points doubles every count.  It reads the
+        # journal once, when its commit opens (checking before the commit
+        # read it 4 times, 3 more Spark jobs)
+        loaded, load = [], io._load
+        io._load = lambda kind: loaded.append(kind) or load(kind)
         m3 = incremental_update(pts, plan, io)
+        del io._load
+        assert loaded == ["snapshot"]
         counted(m3)
         for z in m1:
             assert m3[z]["row_count"] == m1[z]["row_count"]
@@ -769,15 +782,18 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
 def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, minzoom):
     """A one-level fold with the benchmark's count + sum + union plan
     computes the delta partials once (an eager localCheckpoint) and takes
-    max_cell_rows from the merge write itself: 6 jobs, none of which
+    max_cell_rows from the merge write itself: 5 jobs, none of which
     recomputes the delta or re-reads the committed level.  With the
     partials lazily persisted instead, the merge's concurrent query stages
     each recomputed them and a read-back of the level followed: 12 jobs.
+    Reading a level takes its schema from its record: inferring it was
+    one more job per read (6 jobs).
 
     A 13-level fold (cell zooms 12 -> 0) merges only the base level in
     Spark and derives the 12 small levels above it with the build's tail,
-    from the merged level read back: at most 12 jobs (merging every level
-    took 78), and every level equals a one-shot build over both batches."""
+    from the merged level read back: at most 7 jobs (9 with schema
+    inference, 78 merging every level), and every level equals a one-shot
+    build over both batches."""
     from vt_grid_spark.operators.pyramid import incremental_update
 
     specs = [AggSpec(out="cnt", reducer="count"),
@@ -801,10 +817,10 @@ def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, m
         assert man[z]["max_cell_rows"] == _max_cnt(io, spark, z)
     if len(zooms) == 1:
         assert zooms == [8]
-        assert n_jobs == 6, n_jobs
+        assert n_jobs == 5, n_jobs
     else:
         assert zooms == list(range(12, -1, -1))
-        assert n_jobs <= 12, n_jobs
+        assert n_jobs <= 7, n_jobs
         one_shot = TableIO(str(tmp_path / "one_shot"))
         build_pyramid(pts, plan, one_shot, resume=False)
         assert _level_rows(io, spark, zooms) == _level_rows(one_shot, spark, zooms)
@@ -1019,37 +1035,46 @@ def test_levels_store_no_quadkey_and_build_needs_no_pandas(spark, tmp_path,
     pts.unpersist()
 
 
+def _snapshot_files(root):
+    return sorted(n for n in os.listdir(root) if n.startswith("_snapshot"))
+
+
 def test_one_rename_per_writer_call(spark, tmp_path, monkeypatch):
     """Staging a level appends to the draft log; the snapshot publish is
-    the only ``os.replace`` of a writer call: a build with a Spark base
-    level and five tail levels makes one, and so does a fold of a
+    the only rename of a writer call, and it renames to a fresh numbered
+    name, so no rename targets an existing file (on ext4 a rename over a
+    file waits for the renamed file's write-back): a build with a Spark
+    base level and five tail levels makes one, and so does a fold of a
     single-level pyramid."""
     from vt_grid_spark.operators import pyramid as pyr
 
-    replaced = []
-    replace = os.replace
+    renamed = []
 
-    def counting(src, dst, *args, **kwargs):
-        if str(dst).startswith(str(tmp_path)):
-            replaced.append(os.path.basename(dst))
-        return replace(src, dst, *args, **kwargs)
+    def recording(rename):
+        def record(src, dst, *args, **kwargs):
+            if str(dst).startswith(str(tmp_path)):
+                renamed.append((os.path.basename(dst), os.path.exists(dst)))
+            return rename(src, dst, *args, **kwargs)
+        return record
 
-    monkeypatch.setattr(os, "replace", counting)
+    for name in ("rename", "replace"):
+        monkeypatch.setattr(os, name, recording(getattr(os, name)))
     plan = PyramidPlan(bands=[ZoomBand(basezoom=9, minzoom=3, aggregations=SPECS)],
                        gridsize=16)
     pts = _points(spark, 2000)
     man = build_pyramid(pts, plan, TableIO(str(tmp_path / "pyr")), resume=False)
     ops = [man[z]["lineage"]["op"] for z in sorted(man, reverse=True)]
     assert ops == ["encode+aggregate"] + ["rollup-small"] * 5
-    assert replaced == ["_snapshot.json"]
+    assert renamed == [("_snapshot.1.json", False)]
 
     one = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=7, aggregations=SPECS)],
                       gridsize=16)
     io = TableIO(str(tmp_path / "one"))
     build_pyramid(pts, one, io, resume=False)
-    replaced.clear()
+    renamed.clear()
     pyr.incremental_update(pts, one, TableIO(io.root, delta_id=1))
-    assert replaced == ["_snapshot.json"]
+    assert renamed == [("_snapshot.2.json", False)]
+    assert _snapshot_files(io.root) == ["_snapshot.2.json"]
 
 
 def test_torn_draft_log_line_is_rebuilt(spark, tmp_path, monkeypatch):
@@ -1102,7 +1127,7 @@ def test_draft_from_before_the_log_is_ignored(spark, tmp_path):
     pts = _points(spark, 1500)
     io = TableIO(str(tmp_path / "pyr"))
     m1 = build_pyramid(pts, plan, io, resume=False)
-    with open(os.path.join(io.root, "_snapshot.json")) as f:
+    with open(os.path.join(io.root, "_snapshot.1.json")) as f:
         snap = json.load(f)
     stale = {**m1[9], "gen": "g000000000000", "completed_at": 0.0}
     with open(os.path.join(io.root, "_draft.json"), "w") as f:
@@ -1113,7 +1138,7 @@ def test_draft_from_before_the_log_is_ignored(spark, tmp_path):
     assert {z: m["completed_at"] for z, m in m2.items()} == \
            {z: m["completed_at"] for z, m in m1.items()}
     assert sorted(n for n in os.listdir(io.root) if n.startswith("_")) == \
-        ["_snapshot.json"]
+        ["_snapshot.2.json"]
     assert _level_rows(io, spark, [9, 8, 7])[9]
 
 
@@ -1143,3 +1168,109 @@ def test_concurrent_stages_all_reach_the_draft_log(tmp_path):
     resumed = TableIO(io.root)
     with resumed.commit("resume"):
         assert all(resumed.read_manifest(z) == done[z] for z in range(64))
+
+
+def test_read_level_starts_no_job(spark, tmp_path, jobs_started):
+    """A level's record holds its Spark schema, so ``read_level`` infers
+    none and starts no Spark job (inference was one job per read), for a
+    level written by ``write_level`` (the Spark base) and by
+    ``write_level_pandas`` (the tail) alike.  The recorded schema is the
+    one inference finds, and the rows read are the rows written."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                       gridsize=16)
+    io = TableIO(str(tmp_path / "pyr"))
+    man = build_pyramid(_points(spark, 1500), plan, io, resume=False)
+    assert [man[z]["lineage"]["op"] for z in (9, 8, 7)] == \
+        ["encode+aggregate", "rollup-small", "rollup-small"]
+    levels = {}
+    for z in (9, 8, 7):
+        assert jobs_started(lambda: levels.update({z: io.read_level(spark, z)})) == 0
+        inferred = spark.read.parquet(io.level_path(z))
+        assert levels[z].drop("zoom").schema == inferred.schema, z
+        assert _rows(levels[z], inferred.columns) == _rows(inferred, inferred.columns)
+    assert _rows(levels[9], ["cnt"]) and _rows(levels[7], ["cnt"])
+
+
+def test_crash_between_publish_and_collection(spark, tmp_path, monkeypatch):
+    """A writer killed after its snapshot rename, before the collection,
+    has published: readers see the new pyramid (the highest-numbered
+    snapshot) although the old snapshot and the replaced generations are
+    still on disk, and the next publish leaves one snapshot file and only
+    the live generations."""
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [9, 8, 7]
+    root = str(tmp_path / "pyr")
+    build_pyramid(_points(spark, 1500), plan, TableIO(root), resume=False)
+    new = _points(spark, 2500)
+    one_shot = TableIO(str(tmp_path / "one_shot"))
+    build_pyramid(new, plan, one_shot, resume=False)
+    want = _level_rows(one_shot, spark, zooms)
+
+    def killed(self, snapshot):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(TableIO, "_collect", killed)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pyramid(new, plan, TableIO(root), resume=False)
+    monkeypatch.undo()
+    assert _snapshot_files(root) == ["_snapshot.1.json", "_snapshot.2.json"]
+    assert all(len(os.listdir(os.path.join(root, f"zoom={z}"))) == 2 for z in zooms)
+    assert _level_rows(TableIO(root), spark, zooms) == want
+
+    man = build_pyramid(new, plan, TableIO(root), resume=True)
+    assert _snapshot_files(root) == ["_snapshot.3.json"]
+    assert sorted(n for n in os.listdir(root) if n.startswith("_")) == \
+        ["_snapshot.3.json"]
+    for z in zooms:
+        assert os.listdir(os.path.join(root, f"zoom={z}")) == [man[z]["gen"]]
+    assert _level_rows(TableIO(root), spark, zooms) == want
+
+
+def test_root_from_before_numbered_snapshots_is_upgraded(spark, tmp_path):
+    """A root published before snapshots were numbered and records held a
+    schema (one ``_snapshot.json``; no ``schema`` in any record) keeps
+    working: its levels read by inference, a resumed build derives the
+    missing upper levels from such a level, a fold merges into one, and
+    the first publish replaces ``_snapshot.json`` with a numbered
+    snapshot.  Every level then equals a one-shot build over both
+    batches, and every rewritten record holds its schema."""
+    import json
+
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    small = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
+                        gridsize=16)
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=3, aggregations=SPECS)],
+                       gridsize=16)
+    zooms = [9, 8, 7, 6, 5]
+    pts = _points(spark, 3000).cache()
+    a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
+    b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    root = str(tmp_path / "old")
+    fresh = TableIO(str(tmp_path / "a"))
+    build_pyramid(a, small, fresh, resume=False)
+    build_pyramid(a, small, TableIO(root), resume=False)
+    with open(os.path.join(root, "_snapshot.1.json")) as f:
+        snap = json.load(f)
+    for record in snap["levels"].values():
+        del record["schema"]
+    with open(os.path.join(root, "_snapshot.json"), "w") as f:
+        json.dump(snap, f)
+    os.remove(os.path.join(root, "_snapshot.1.json"))
+
+    io = TableIO(root)
+    assert all("schema" not in io.read_manifest(z) for z in (9, 8, 7))
+    assert _level_rows(io, spark, [9, 8, 7]) == _level_rows(fresh, spark, [9, 8, 7])
+    man = build_pyramid(a, plan, io, resume=True)
+    assert [man[z]["lineage"]["op"] for z in (6, 5)] == ["rollup-small"] * 2
+    assert _snapshot_files(root) == ["_snapshot.2.json"]
+
+    incremental_update(b, plan, TableIO(root, delta_id=1))
+    assert _snapshot_files(root) == ["_snapshot.3.json"]
+    assert all("schema" in io.read_manifest(z) for z in zooms)
+    full = TableIO(str(tmp_path / "full"))
+    build_pyramid(pts, plan, full, resume=False)
+    got = _level_rows(io, spark, zooms)
+    assert got == _level_rows(full, spark, zooms) and all(got.values())
+    pts.unpersist()

@@ -140,6 +140,29 @@ def test_sqltext_tile_twins_match_column_builders(spark):
         assert len(rows) == len(lon)
 
 
+def test_null_or_nan_coordinate_has_no_cell(spark):
+    """A point whose ``lon`` or ``lat`` is null or NaN has no cell:
+    ``encode_points`` drops it, so no aggregate counts it.  Clamped by
+    ``LEAST``/``GREATEST``, which skip a null, a null latitude encoded to
+    row 2^z-1 and a null longitude to column 0, and each was counted
+    there."""
+    from vt_grid_spark.operators.encode import cell_aggregate, encode_points
+    from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
+
+    z = 6
+    nan = float("nan")
+    pts = [("ok", 10.0, 20.0), ("null_lat", 10.0, None), ("null_lon", None, 20.0),
+           ("nan_lat", 10.0, nan), ("nan_lon", nan, 20.0), ("both", None, None)]
+    df = spark.createDataFrame(pts, "url string, lon double, lat double")
+    want = tuple(int(v) for v in tm.point_to_tile(10.0, 20.0, z))
+    for with_quadkey in (True, False):
+        enc = encode_points(df, z, with_quadkey=with_quadkey)
+        assert [(r.url, r.x, r.y) for r in enc.collect()] == [("ok", *want)]
+    cells = cell_aggregate(encode_points(df, z, with_quadkey=False), z,
+                           compile_aggs([AggSpec(out="cnt", reducer="count")]))
+    assert [(r.x, r.y, r.cnt) for r in cells.collect()] == [(*want, 1)]
+
+
 def test_pole_latitudes_encode_like_tilemath(spark):
     """Latitude +-90 lands in row 0 / row 2^z-1, as ``tm.point_to_tile``
     puts it, through every Spark-side encoder: ``encode_points``

@@ -23,9 +23,19 @@ def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
     Half-open cell intervals (floor of the fractional tile coordinate) make
     the strict-interior degenerate filter a no-op for points — a point on a
     shared edge belongs to exactly one cell (SURVEY.md §2.2 P1).
+
+    A row whose ``lon`` or ``lat`` is null or NaN is dropped: it has no
+    cell, while the tile math would clamp it into a real one (``LEAST`` and
+    ``GREATEST`` skip a null).  The filter reads each coordinate once.
+    Catalyst pushes it below a projection that derives the coordinates
+    (``pages.with_coords``), which then derives them twice per row.
     """
+    def located(c: str) -> Column:  # neither null nor NaN
+        return F.nanvl(F.col(c), F.lit(None).cast("double")).isNotNull()
+
     out = (
-        df.withColumn("zoom", F.lit(z))
+        df.where(located(lon) & located(lat))
+        .withColumn("zoom", F.lit(z))
         .withColumn("x", vf.tile_x(F.col(lon), z))
         .withColumn("y", vf.tile_y(F.col(lat), z))
     )

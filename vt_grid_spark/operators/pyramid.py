@@ -219,21 +219,22 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     generation and all of them are published together, with ``io``'s
     ``delta_id`` as the last applied delta.  A crash leaves the pyramid
     unfolded, so a re-run folds the delta exactly once; a fold whose
-    ``delta_id`` the published snapshot already records is a no-op.
+    ``delta_id`` the published snapshot already records folds nothing and
+    publishes the same levels.  The checks read the snapshot the commit
+    read, so the call reads the published snapshot once.
     """
     spark = delta_points.sparkSession
     levels = list(plan.levels())
-    for _, cell_z, _ in levels:
-        if not io.level_complete(cell_z):
-            raise ValueError(
-                f"incremental_update needs a complete pyramid; zoom {cell_z} "
-                "is missing — run build_pyramid first (resume finishes a "
-                "partial build)")
-    if io.delta_applied():
-        return {cell_z: io.read_manifest(cell_z) for _, cell_z, _ in levels}
-
     manifests: dict[int, dict] = {}
     with io.commit():
+        for _, cell_z, _ in levels:
+            if not io.level_complete(cell_z):
+                raise ValueError(
+                    f"incremental_update needs a complete pyramid; zoom {cell_z} "
+                    "is missing — run build_pyramid first (resume finishes a "
+                    "partial build)")
+        if io.delta_applied():
+            return {cell_z: io.read_manifest(cell_z) for _, cell_z, _ in levels}
         for i, (output_z, cell_z, band) in enumerate(levels):
             if i and manifests[cell_z + 1]["row_count"] < SMALL_LEVEL_ROWS:
                 # the tail reads the merged level back: persisted, the merge

@@ -17,15 +17,22 @@ Levels store x, y and aggregates; older levels that also store
   stage appends one line with the level's record.  A stage replaces no
   file.
 - Each writer call runs in one :meth:`TableIO.commit` and ends with ONE
-  publish, its only file rename: an atomic replace of the snapshot,
-  which names every live level's generation and record plus the last
-  applied delta id.  Generations it no longer names, and the draft, are
-  deleted afterwards.
-- Readers see the published snapshot; a writer call sees its draft.
+  publish, its only file rename: the next snapshot, which names every
+  live level's generation and record plus the last applied delta id, is
+  renamed to a fresh numbered name, ``_snapshot.<id>.json``.  No rename
+  targets an existing file.  Lower-numbered snapshots, generations the
+  snapshot no longer names, and the draft are deleted afterwards.
+- Readers see the published snapshot, the highest-numbered one; a writer
+  call sees its draft and reads the published snapshot once, when it
+  opens.
+- A level's record holds its Spark schema, so reading a level infers
+  none and starts no Spark job.
 
 So a crash leaves the old pyramid or the new one, never a mix.  On disk:
-``<root>/zoom=<z>/<gen>/part-*.parquet`` plus ``_snapshot.json`` and
-``_draft.jsonl``, which the ``_`` hides from Spark and pyarrow readers.
+``<root>/zoom=<z>/<gen>/part-*.parquet`` plus ``_snapshot.<id>.json`` and
+``_draft.jsonl``, which the ``_`` hides from Spark and pyarrow readers.  A
+root published as ``_snapshot.json``, before snapshots were numbered,
+reads as before and is upgraded by its next publish.
 
 ``CatalogTableIO`` maps the same protocol onto a catalog: one table per
 generation, snapshots and drafts as rows of an append-only journal
@@ -47,6 +54,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def zorder_clustered(df: DataFrame, n_parts: int) -> DataFrame:
@@ -67,15 +75,24 @@ def zorder_clustered(df: DataFrame, n_parts: int) -> DataFrame:
             .drop("_mz"))
 
 
+# a snapshot, its .tmp, or either from before snapshots were numbered
+_SNAPSHOT_FILE = re.compile(r"_snapshot(?:\.(\d+))?\.json(?:\.tmp)?")
+
+
 class TableIO:
     """A pyramid of parquet levels under a local directory.
 
     The one filesystem assumption: ``root`` is a local POSIX directory,
-    where ``os.replace`` of a file is atomic; no hardlinks are needed.  A
+    where ``os.rename`` of a file is atomic; no hardlinks are needed.  The
+    publish renames to a name that does not exist yet: a rename over an
+    existing file makes ext4 (``auto_da_alloc``) write the renamed file
+    back, and the next such rename waits for that write, tens of ms.  A
     root with a URI scheme (``s3a://``, ``hdfs://``, ``file:``) is
     rejected, since the snapshot is written with ``os``.  The protocol
     covers a killed process; nothing is fsynced, so a power loss can
-    still lose writes the page cache held.
+    still lose writes the page cache held.  Concurrent writers are not
+    serialized: of two calls that publish the same snapshot id, the later
+    rename wins.
 
     ``delta_id`` carries the id of the delta this writer applies (a
     stream's batch id): every publish records it as the last applied
@@ -93,6 +110,7 @@ class TableIO:
     def _init_protocol(self, delta_id: int | None) -> None:
         self.delta_id = delta_id
         self._draft: dict | None = None  # the open writer call's draft
+        self._base: dict | None = None  # the snapshot the open call started from
         self._draft_logged = False  # whether the open call has staged yet
         self._lock = threading.Lock()  # stages may come from several threads
 
@@ -106,7 +124,13 @@ class TableIO:
         the pyramid); ``"resume"`` the draft of a build interrupted since
         the last publish, else the published levels.  A call made inside
         an open draft joins it.  If the body raises, nothing is published
-        and readers keep seeing the published snapshot."""
+        and readers keep seeing the published snapshot.  The publish
+        records ``delta_id`` as the last applied delta unless the snapshot
+        already records it (delta ids increase).
+
+        The published snapshot is read once, here: inside the call,
+        :meth:`level_complete` and :meth:`read_manifest` read the draft and
+        :meth:`delta_applied` the snapshot the call started from."""
         if self._draft is not None:
             yield
             return
@@ -115,20 +139,23 @@ class TableIO:
         if not (draft and draft["resumable"] and draft["base"] == snap["id"]):
             draft = {"base": snap["id"], "resumable": start != "published",
                      "levels": {} if start == "empty" else dict(snap["levels"])}
-        self._draft, self._draft_logged = draft, False
+        self._draft, self._draft_logged, self._base = draft, False, snap
         try:
             yield
-            applied = snap["applied_delta"] if self.delta_id is None else self.delta_id
-            self._store("snapshot", {"id": snap["id"] + 1, "applied_delta": applied,
-                                     "levels": draft["levels"]})
+            applied = (self.delta_id if self.delta_id is not None
+                       and not self.delta_applied() else snap["applied_delta"])
+            published = {"id": snap["id"] + 1, "applied_delta": applied,
+                         "levels": draft["levels"]}
+            self._store("snapshot", published)
         finally:
-            self._draft = None
-        self._collect(draft["levels"])
+            self._draft = self._base = None
+        self._collect(published)
 
     def delta_applied(self) -> bool:
-        """Whether the published snapshot already records ``delta_id``.
-        Delta ids increase, so every id up to the last applied one counts."""
-        applied = self._published()["applied_delta"]
+        """Whether the published snapshot (inside a writer call: the one the
+        call started from) already records ``delta_id``.  Delta ids
+        increase, so every id up to the last applied one counts."""
+        applied = (self._base or self._published())["applied_delta"]
         if self.delta_id is None or applied is None:
             return False
         return self.delta_id <= applied
@@ -164,8 +191,9 @@ class TableIO:
 
         The record holds ``zoom``, ``gen``, ``status`` ("complete"),
         ``row_count``, where the rows are (``files``, the row count of
-        each parquet file; ``table`` on the catalog backend), ``lineage``,
-        ``clustered`` and ``completed_at``.  With ``count_col`` set it
+        each parquet file; ``table`` on the catalog backend), ``schema``
+        (the level's Spark schema, as ``StructType.jsonValue()``),
+        ``lineage``, ``clustered`` and ``completed_at``.  With ``count_col`` set it
         also holds ``max_cell_rows``, the largest value of that per-cell
         count column (0 for an empty level), which the hot-key re-salt
         rule reads.  ``row_count`` and ``max_cell_rows`` are observed on
@@ -200,7 +228,9 @@ class TableIO:
             gen = _new_gen()
             where = self._write(out.observe(obs, *metrics), zoom, gen)
             observed = {k: v or 0 for k, v in obs.get.items()}  # empty: max is null
-            return self._stage(zoom, gen, {**where, **observed}, lineage, cluster)
+            return self._stage(zoom, gen, {**where, **observed,
+                                           "schema": out.schema.jsonValue()},
+                               lineage, cluster)
 
     def write_level_pandas(self, table, zoom: int, lineage: dict | None = None,
                            count_col: str | None = None) -> dict:
@@ -209,6 +239,7 @@ class TableIO:
         :meth:`write_level`'s."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         with self.commit():
             gen = _new_gen()
@@ -217,7 +248,8 @@ class TableIO:
             fname = "part-00000.parquet"
             out = table.drop_columns(["zoom"]) if "zoom" in table.column_names else table
             pq.write_table(out, os.path.join(path, fname))
-            where = {"row_count": out.num_rows, "files": {fname: out.num_rows}}
+            where = {"row_count": out.num_rows, "files": {fname: out.num_rows},
+                     "schema": from_arrow_schema(out.schema).jsonValue()}
             if count_col is not None:
                 where["max_cell_rows"] = pc.max(out[count_col]).as_py() or 0
             return self._stage(zoom, gen, where, lineage, clustered=False)
@@ -256,7 +288,15 @@ class TableIO:
         return self._gen_path(zoom, self.read_manifest(zoom)["gen"])
 
     def read_level(self, spark: SparkSession, zoom: int) -> DataFrame:
-        return spark.read.parquet(self.level_path(zoom)).withColumn("zoom", F.lit(zoom))
+        """The level's rows plus a literal ``zoom`` column.  The read takes
+        the schema from the level's record, so it starts no Spark job; a
+        record from before records held one is read by inference (a job)."""
+        record = self.read_manifest(zoom)
+        reader = spark.read
+        if "schema" in record:
+            reader = reader.schema(StructType.fromJson(record["schema"]))
+        return (reader.parquet(self._gen_path(zoom, record["gen"]))
+                .withColumn("zoom", F.lit(zoom)))
 
     # -- parquet backend storage -------------------------------------------------
     def _gen_path(self, zoom: int, gen: str) -> str:
@@ -276,11 +316,23 @@ class TableIO:
                           if name.endswith(".parquet")}}
 
     def _load(self, kind: str) -> dict | None:
-        try:
-            with open(os.path.join(self.root, f"_{kind}.json")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
+        """The highest-numbered ``_<kind>.<id>.json``, else the
+        ``_<kind>.json`` from before documents were numbered, else None.
+        A document a concurrent publish deletes between the listing and
+        the open sends the reader back to the listing, which then shows
+        the newer one."""
+        numbered = re.compile(rf"_{kind}\.(\d+)\.json")
+        while True:
+            names = os.listdir(self.root)
+            ids = [int(m[1]) for m in map(numbered.fullmatch, names) if m]
+            name = f"_{kind}.{max(ids)}.json" if ids else f"_{kind}.json"
+            if name not in names:
+                return None
+            try:
+                with open(os.path.join(self.root, name)) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                continue
 
     def _log(self, record: dict) -> None:
         """Make the draft, which already holds ``record``, durable: the
@@ -316,19 +368,26 @@ class TableIO:
         return draft
 
     def _store(self, kind: str, doc: dict) -> None:
-        """Write to a sibling ``.tmp`` and rename it over the old file: a
-        reader sees the old document or the new one."""
-        path = os.path.join(self.root, f"_{kind}.json")
+        """Write ``doc`` to a ``.tmp`` file and rename that to the fresh
+        name ``_<kind>.<id>.json``: a reader sees the old document or the
+        new one, and the rename replaces no file."""
+        path = os.path.join(self.root, f"_{kind}.{doc['id']}.json")
         with open(path + ".tmp", "w") as f:
             json.dump(doc, f, indent=1, sort_keys=True)
-        os.replace(path + ".tmp", path)
+        os.rename(path + ".tmp", path)
 
-    def _collect(self, levels: dict) -> None:
-        """After a publish: delete every generation the snapshot does not
-        name (replaced levels and what crashed writers left) and the
-        draft, in the log and in the one-document form before it."""
+    def _collect(self, snapshot: dict) -> None:
+        """After a publish: delete the snapshots numbered below it (and
+        the ``_snapshot.json`` from before numbering, and what crashed
+        publishes left in ``.tmp`` files), every generation the snapshot
+        does not name (replaced levels and what crashed writers left) and
+        the draft, in the log and in the one-document form before it."""
+        levels = snapshot["levels"]
         for name in os.listdir(self.root):
-            if name.startswith("zoom="):
+            m = _SNAPSHOT_FILE.fullmatch(name)
+            if m and (m[1] is None or int(m[1]) < snapshot["id"]):
+                os.remove(os.path.join(self.root, name))
+            elif name.startswith("zoom="):
                 live = levels.get(name[5:], {}).get("gen")
                 level_dir = os.path.join(self.root, name)
                 if live is None:
@@ -439,8 +498,9 @@ class CatalogTableIO(TableIO):
             # append is rejected; the v1 writer appends to the same table
             row.write.mode("append").saveAsTable(self._journal)
 
-    def _collect(self, levels: dict) -> None:
-        live = {self._table(r["zoom"], r["gen"]).lower() for r in levels.values()}
+    def _collect(self, snapshot: dict) -> None:
+        live = {self._table(r["zoom"], r["gen"]).lower()
+                for r in snapshot["levels"].values()}
         level = re.compile(rf"{re.escape(self.prefix.lower())}_z\d+_g[0-9a-f]+")
         for t in self.spark.catalog.listTables(self.namespace):
             name = f"{self.namespace}.{t.name}".lower()
