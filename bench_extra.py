@@ -2,7 +2,9 @@
 file holds the extra instrumentation the optimization round needs).
 
 Modes:
-  python bench_extra.py knn            # isolated knn_cells_200k (bench.py setup)
+  python bench_extra.py knn            # isolated knn_cells_200k (bench.py setup):
+                                       # walls, each level's (ring, n_q,
+                                       # residue, join), result digests
   python bench_extra.py minhash        # stage-by-stage minhash_dup_pairs walls
   python bench_extra.py simhash        # stage-by-stage simhash walls
   python bench_extra.py stages NAME    # noop-time one registered query, labeled
@@ -74,18 +76,28 @@ def knn_probe(spark):
     _noop(warm_out)
     unpersist_knn(warm_out)
     spark.catalog.clearCache()
-    walls = []
+    walls, levels, digests = [], [], []
     for _ in range(2):
         spark.sparkContext.setJobDescription("knn_cells_200k")
+        stats: dict = {}
         t0 = time.perf_counter()
         out = knn_cells(knn_pts, knn_q, 5, z=knn_z, ring=1,
-                        broadcast_threshold=10_000)
+                        broadcast_threshold=10_000, stats=stats)
         _noop(out)
         walls.append(round(time.perf_counter() - t0, 3))
+        # each level's (ring, n_q, residue, join), and an order-free digest
+        # of the rows, both taken outside the timed region
+        levels.append([[lv["ring"], lv["n_q"], lv["residue"], lv["join"]]
+                       for lv in stats["levels"]])
+        d = out.selectExpr(
+            "count(1) AS n",
+            "bit_xor(xxhash64(qid, rank, url, d2)) AS h").first()
+        digests.append(f"{d.n}:{d.h}")
         unpersist_knn(out)
         spark.catalog.clearCache()
     spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"stage": "knn_cells_200k", "z": knn_z, "walls": walls}))
+    print(json.dumps({"stage": "knn_cells_200k", "z": knn_z, "walls": walls,
+                      "levels": levels, "digests": digests}))
 
 
 def minhash_stages(spark):

@@ -92,13 +92,22 @@ def test_pip_join_broadcasts_cover(spark):
     assert "Union" not in p
 
 
-def test_knn_cells_shuffle_join_above_threshold(spark):
+def test_knn_cells_shuffle_join_above_threshold(spark, tmp_path):
     """Above broadcast_threshold the (query, ring-cell) candidate relation
     must reach the point table by SHUFFLE, not broadcast — an unbounded
     query side would otherwise die on the driver (r2 ADVICE).  A level is
     materialized by a checkpoint, so the result's plan only scans it: the
     gate is read from the recorded decision, and each decision's join from
-    the plan of the level it builds."""
+    the plan of the level it builds.
+
+    With at least one query per cell (n_q >= 4^z) a level takes the
+    query-cell form: the points go to the queries' cells, and the per-query
+    aggregate reuses the join's partitioning.  Its plan has two hash
+    exchanges (the cell form has three: both join sides and the candidate
+    regroup), no union, one scan of the query source, and no filter
+    inferred from the safety radius on the query side."""
+    import re
+
     from vt_grid_spark.operators.encode import encode_points
     from vt_grid_spark.operators.knn import _ring_level, knn_cells, unpersist_knn
     from vt_grid_spark.sources import pages
@@ -118,11 +127,34 @@ def test_knn_cells_shuffle_join_above_threshold(spark):
     enc_p = encode_points(pts, 5, with_quadkey=False).select("url", "lon", "lat", "x", "y")
     q = encode_points(queries, 5, with_quadkey=False).selectExpr(
         "qid", "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy")
-    big = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", False), "simple")
+    big = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", "shuffle_hash"),
+                   "simple")
     assert "ShuffledHashJoin" in big and "BroadcastHashJoin" not in big
     # below the gate the candidate join stays broadcast (no fact shuffle)
-    small = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", True), "simple")
+    small = plan_str(_ring_level(enc_p, q, 3, 5, 1, "url", "qid", "broadcast"),
+                     "simple")
     assert "BroadcastHashJoin" in small and "ShuffledHashJoin" not in small
+
+    # 2,000 parquet queries at z=5 (1,024 cells): the query-cell form
+    path = str(tmp_path / "queries.parquet")
+    spark.range(2000).select(
+        F.col("id").alias("qid"),
+        (F.col("id") * 0.17 - 170.0).alias("lon"),
+        (F.col("id") * 0.05 - 50.0).alias("lat")).write.parquet(path)
+    many = spark.read.parquet(path)
+    stats = {}
+    out = knn_cells(pts, many, 3, z=5, ring=1, stats=stats,
+                    broadcast_threshold=10, rering_steps=0)
+    assert [lv["join"] for lv in stats["levels"]] == ["query_cell"]
+    unpersist_knn(out, blocking=True)
+    qc = encode_points(many, 5, with_quadkey=False).selectExpr(
+        "qid", "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy")
+    by_cell = plan_str(_ring_level(enc_p, qc, 3, 5, 1, "url", "qid", "query_cell"),
+                       "simple")
+    assert by_cell.count("Exchange hashpartitioning") == 2, by_cell
+    assert "Union" not in by_cell
+    assert by_cell.count("FileScan parquet") == 1
+    assert not re.search(r"isnotnull\(+least\(", by_cell)
 
 
 def test_bbox_cover_pushdown(spark, tmp_path):

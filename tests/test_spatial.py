@@ -237,14 +237,63 @@ def test_knn_cells_many_queries_shuffle_path(spark):
         F.col("id").alias("qid"),
         (F.pmod(F.col("id") * 37.77, F.lit(360.0)) - 180.0).alias("lon"),
         (F.pmod(F.col("id") * 13.13, F.lit(140.0)) - 70.0).alias("lat"))
-    out = knn_cells(pts, queries, 3, z=6, ring=1, broadcast_threshold=10_000)
+    stats: dict = {}
+    out = knn_cells(pts, queries, 3, z=6, ring=1, broadcast_threshold=10_000,
+                    stats=stats)
     assert out.count() == 300_000  # every query proves or escalates to k
+    # each level's form follows from the count it is decided on: ring 1
+    # from the probe (10^5 queries, at least one per cell of the 4^6),
+    # ring 3 from ring 1's residue (under broadcast_threshold)
+    assert stats["levels"] == [
+        {"ring": 1, "n_q": 100_000, "residue": 2, "join": "query_cell"},
+        {"ring": 3, "n_q": 2, "residue": 0, "join": "broadcast"},
+    ]
     sample_ids = list(range(0, 100_000, 9973))
     sq = queries.where(F.col("qid").isin(sample_ids))
     b = sorted((r.qid, r.rank, r.url) for r in knn_bruteforce(pts, sq, 3).collect())
     c = sorted((r.qid, r.rank, r.url)
                for r in out.where(F.col("qid").isin(sample_ids)).collect())
     assert b == c
+
+
+def test_knn_cells_probe_fits_int_at_high_zoom(spark):
+    """At z >= 16 the zoom has more cells (4^z) than ``Dataset.limit``
+    takes (an int), so the size probe caps its limit: no level there can
+    take the query-cell form, and a tiny input runs as before."""
+    pts, queries = _sparse_ring(spark)
+    want = sorted(tuple(r) for r in knn_bruteforce(pts, queries, 3).collect())
+    for threshold, join in ((100_000, "broadcast"), (0, "shuffle_hash")):
+        stats: dict = {}
+        out = knn_cells(pts, queries, 3, z=16, ring=1, rering_steps=1,
+                        broadcast_threshold=threshold, stats=stats)
+        assert sorted(tuple(r) for r in out.collect()) == want
+        assert {lv["join"] for lv in stats["levels"]} == {join}
+
+
+def test_knn_null_or_nan_coordinates(spark):
+    """A point with a null or NaN coordinate is never a neighbour, and a
+    query with one gets no row and does not escalate — in both operators.
+    A null d2 sorts first in the top-k's struct sort, so such a point used
+    to rank first in the brute pass (and in knn_cells' brute tail), and
+    such a query never proved, escalated to the brute tail and got k rows
+    with a NaN or null d2."""
+    pts = spark.createDataFrame(
+        [("a", 0.0, 0.0), ("b", 1.0, 1.0), ("c", 2.0, 2.0), ("nul", 5.0, None),
+         ("nan", float("nan"), 3.0)], "url string, lon double, lat double")
+    queries = spark.createDataFrame(
+        [(1, 0.5, 0.5), (2, None, 0.5), (3, 0.5, float("nan")), (4, 40.0, 40.0)],
+        "qid long, lon double, lat double")
+    want = [(1, 1, "a"), (1, 2, "b"), (1, 3, "c"),
+            (4, 1, "c"), (4, 2, "b"), (4, 3, "a")]
+    got = sorted((r.qid, r.rank, r.url)
+                 for r in knn_bruteforce(pts, queries, 3).collect())
+    assert got == want
+    # query 4's ring holds no point, so it reaches the brute tail
+    stats: dict = {}
+    out = knn_cells(pts, queries, 3, z=6, ring=1, rering_steps=0, stats=stats)
+    assert sorted((r.qid, r.rank, r.url) for r in out.collect()) == want
+    assert stats["levels"] == [
+        {"ring": 1, "n_q": 2, "residue": 1, "join": "broadcast"}]
 
 
 def _blocks(spark, k=4, nblocks=8):

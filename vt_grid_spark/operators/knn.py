@@ -25,6 +25,29 @@ Two physical strategies:
     plus ONE job per ring level: an eager checkpoint of one row per query
     (so ``query_id`` must be unique), observed for its residue.
 
+    A ring level joins in one of two forms, chosen from counts the call
+    already has (the size probe for ring 1, the previous level's residue
+    after it):
+
+      * the cell form — each query's ring cells meet the point table on
+        (x, y), by broadcast while the level has at most
+        ``broadcast_threshold`` queries, else by shuffle-hash join, and
+        the candidates are regrouped by query in an exchange of their own
+        (a broadcast outer join cannot keep the queries' side, so a
+        candidate-less query gets its row through a union);
+      * the query-cell form, for a shuffle level with at least one query
+        per cell (n_q >= 4^z) — each point goes to every query cell whose
+        ring holds it, the queries left-join it on their own cell, and
+        the per-query top-k reuses that join's partitioning.  It shuffles
+        |P|·(2r+1)² + |Q| rows instead of |Q|·(2r+1)² cell rows, |P| and
+        the candidates, so it is the smaller once queries fill the cells.
+
+    Both forms give the same rows.
+
+A point or query with a null or NaN coordinate has no distance: such a
+point is never a neighbour, and such a query gets no row (``knn_cells``
+drops it before ring 1, so it never escalates).
+
 Distance: plain squared-degree distance (dlat² + dlon², no cos(lat)
 scale) — a single fused column expression, bit-identical across engines
 and in the DuckDB oracle.  Ties broken by point id.  The safety-radius
@@ -65,14 +88,19 @@ def knn_bruteforce(points: DataFrame, queries: DataFrame, k: int,
     of the point id (never rand(); guide §2.5 retry rule) — giving
     |Q| x salt_buckets parallel groups; phase 2 merges the
     salt_buckets * k survivors per query.  The struct sort (d2 asc, id
-    asc) is the window's exact order, so rows and ranks are identical."""
+    asc) is the window's exact order, so rows and ranks are identical.
+
+    A point with a null or NaN coordinate is never a neighbour, and a
+    query with one gets no row."""
     q = queries.select(
         F.col(query_id),
         F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"),
     )
+    # a null or NaN coordinate on either side gives a null or NaN d2: such
+    # a pair is no candidate (a null d2 would sort FIRST in the struct sort)
     cand = points.crossJoin(F.broadcast(q)).withColumn(
         "d2", _d2(F.col("_qlon"), F.col("_qlat"), F.col("lon"), F.col("lat"))
-    )
+    ).where("nanvl(d2, NULL) IS NOT NULL")
     salt = F.pmod(F.xxhash64(F.col(point_id)), F.lit(salt_buckets))
     part = (
         cand.groupBy(F.col(query_id), salt.alias("_s"))
@@ -146,17 +174,23 @@ def unpersist_knn(df: DataFrame, blocking: bool = False) -> None:
 
 
 def _ring_level(enc_p: DataFrame, q: DataFrame, k: int, z: int, ring: int,
-                point_id: str, query_id: str, broadcast: bool) -> DataFrame:
+                point_id: str, query_id: str, join: str) -> DataFrame:
     """One ring level as one frame of ONE row per query of ``q``
     (query_id, _qlon, _qlat, _qx, _qy): the query, its top-k ring
     candidates ``_top``, their count ``_n``, its squared safety radius
-    ``_bd2`` and ``_ok``, whether the ring PROVES the answer."""
+    ``_bd2`` and ``_ok``, whether the ring PROVES the answer.
+
+    ``join`` is the level's form.  ``"broadcast"`` and ``"shuffle_hash"``
+    send each query's ring cells to the point table (broadcast or
+    shuffle-hash join on the cell) and regroup the candidates by query;
+    ``"query_cell"`` sends each point to every query cell whose ring holds
+    it, joins the queries on their own cell and groups them where the
+    join left them.  Same rows either way."""
     n_tiles = 1 << z
     qid, pid = sq.bq(query_id), sq.bq(point_id)
     q = q.selectExpr("*", f"{_ring_boundary_d2_sql(z, ring)} AS _bd2")
 
-    # (query, ring-cell) candidate relation — explode over the (2r+1)^2
-    # neighbor offsets, x wrapping, y clamped (tilemath.neighbors semantics).
+    # ring offsets, x wrapping, y clamped (tilemath.neighbors semantics).
     # When the ring spans MORE than the full x extent (reachable via the
     # 1->3->7 escalation at small z), pmod would emit the same
     # (query, x, y) cell from several dx offsets — duplicate candidates
@@ -176,37 +210,6 @@ def _ring_level(enc_p: DataFrame, q: DataFrame, k: int, z: int, ring: int,
     offsets = "array(" + ",".join(
         f"struct({dx} as dx,{dy} as dy)"
         for dx in dxs for dy in range(-ring, ring + 1)) + ")"
-    cells = (
-        q.selectExpr("*", f"explode({offsets}) AS _o")
-        .selectExpr(
-            qid, "_qlon", "_qlat", "_bd2",
-            f"pmod(_qx + _o.dx, {n_tiles}) AS x",
-            "_qy + _o.dy AS y",
-        )
-    )
-    # CELL-level safety-radius prune (r6): a ring cell whose nearest
-    # possible point is already outside the query's safety radius can
-    # contribute no candidate that survives the row-level d2 < _bd2
-    # filter — drop the (query, cell) row before the join, so its points
-    # are never probed at all.  The bound is a strict LOWER bound on any
-    # contained point's d2: the lon term is the circular arc distance to
-    # the cell's lon interval (plain |dlon| >= circular, and a
-    # pole-clamped point's latitude lies beyond the cell's lat interval,
-    # so the interval distance under-estimates there too) — conservative
-    # under antimeridian wrap and clamping, therefore proven/escalation
-    # sets are byte-identical.  Typically kills the far-side ring cells
-    # (the radius is the distance to the NEAREST ring edge).
-    _cw = sq.tile_lon_sql("x", z, double=True)
-    _ce = sq.tile_lon_sql("(x + 1)", z, double=True)
-    _cn = sq.tile_lat_sql("y", z, double=True)
-    _cs = sq.tile_lat_sql("(y + 1)", z, double=True)
-    _dlon = (f"(CASE WHEN _qlon >= {_cw} AND _qlon <= {_ce} THEN 0.0D "
-             f"ELSE least(pmod({_cw} - _qlon, 360.0D), "
-             f"pmod(_qlon - {_ce}, 360.0D)) END)")
-    _dlat = f"greatest(0.0D, {_cs} - _qlat, _qlat - {_cn})"
-    cells = cells.where(f"y >= 0 AND y < {n_tiles} AND "
-                        f"({_dlon}) * ({_dlon}) + ({_dlat}) * ({_dlat}) < _bd2")
-    cells_j = F.broadcast(cells) if broadcast else cells.hint("shuffle_hash")
 
     # safety-radius PREFILTER (r6): a candidate with d2 >= _bd2 can never
     # sit in a PROVEN query's top-k — proof demands the kth distance
@@ -215,39 +218,106 @@ def _ring_level(enc_p: DataFrame, q: DataFrame, k: int, z: int, ring: int,
     # strictly larger d2, and equal-d2 rows fall on the same side), and
     # if fewer survive the query was unproven either way.  Identical
     # proven rows AND identical escalation set, but the filter runs in
-    # the join stage BEFORE the per-query exchange — measured ~3x fewer
+    # the join stage, before any per-query grouping — measured ~3x fewer
     # rows through it at the 200k x 500k bench point (ring area vs
-    # inscribed safety circle).
+    # inscribed safety circle).  A point with a null or NaN coordinate
+    # fails it (NaN sorts above every double), so it is never a candidate.
     d2 = "(_qlat - lat) * (_qlat - lat) + (_qlon - lon) * (_qlon - lon)"  # _d2 as SQL
-    cand = enc_p.join(cells_j, ["x", "y"]).where(f"{d2} < _bd2") \
-        .selectExpr(qid, f"struct({d2} AS d2, {pid}) AS _c")
 
     # per-query top-k as ONE hash aggregation (r6): collect the surviving
     # candidates per query, array_sort the (d2, id) structs — the struct
     # field order IS the (d2 asc, id asc) tie-break — and slice the first
     # k: an O(c log c) sort of each query's own c candidates, no total
-    # sort of the candidate relation.  Each query also contributes one
-    # candidate-less row (a null _c, which collect_list and count skip)
-    # carrying its coordinates and radius, so a query whose ring holds no
-    # point still gets its row — the next level reads its unproven rows
-    # straight from this frame, with no anti-join against the queries.
-    #
+    # sort of the candidate relation.  A query whose ring holds no
+    # candidate keeps its row with a null _c (which collect_list and count
+    # skip), so the next level reads its unproven rows straight from this
+    # frame, with no anti-join against the queries.
+    top = (f"slice(array_sort(collect_list(_c)), 1, {k}) AS _top",
+           "count(_c) AS _n", "min(_bd2) AS _bd2")
+    if join == "query_cell":
+        # (point, query-cell) relation: the query cells whose ring holds
+        # the point's cell are (pmod(x - dx), y - dy) over the same
+        # offsets.  It costs |P| x (2r+1)^2 rows, against the cell form's
+        # |Q| x (2r+1)^2 cell rows plus the candidates it regroups, so
+        # knn_cells takes it once there is about one query per cell.  The
+        # left join keeps a candidate-less query, its ON clause holds the
+        # prefilter, and the aggregate reuses the join's hash partitioning
+        # on (_qx, _qy): no candidate exchange, no union, one query scan.
+        # A sort-merge join: a whole call at 200k queries x 500k points
+        # (z 8, 4 cores) ran 3.86-4.27 s with it, 4.19-4.37 s with a
+        # shuffle-hash join building the points and 4.41-5.61 s building
+        # the queries; the same order held at 2k x 10k (z 4).
+        pts = (
+            enc_p.selectExpr("*", f"explode({offsets}) AS _o")
+            .selectExpr(pid, "lon", "lat", f"pmod(x - _o.dx, {n_tiles}) AS _px",
+                        "y - _o.dy AS _py")
+            .where(f"_py >= 0 AND _py < {n_tiles}")
+        )
+        grouped = (
+            q.hint("merge")
+            .join(pts, F.expr(f"_qx = _px AND _qy = _py AND {d2} < _bd2"), "left")
+            .selectExpr(qid, "_qlon", "_qlat", "_qx", "_qy", "_bd2",
+                        f"CASE WHEN _px IS NOT NULL THEN "
+                        f"struct({d2} AS d2, {pid}) END AS _c")
+            .groupBy(query_id, "_qx", "_qy").agg(*map(F.expr, (
+                "max(_qlon) AS _qlon", "max(_qlat) AS _qlat", *top)))
+        )
+    else:
+        # (query, ring-cell) candidate relation — explode over the offsets
+        cells = (
+            q.selectExpr("*", f"explode({offsets}) AS _o")
+            .selectExpr(
+                qid, "_qlon", "_qlat", "_bd2",
+                f"pmod(_qx + _o.dx, {n_tiles}) AS x",
+                "_qy + _o.dy AS y",
+            )
+        )
+        # CELL-level safety-radius prune (r6): a ring cell whose nearest
+        # possible point is already outside the query's safety radius can
+        # contribute no candidate that survives the row-level d2 < _bd2
+        # filter — drop the (query, cell) row before the join, so its
+        # points are never probed at all.  The bound is a strict LOWER
+        # bound on any contained point's d2: the lon term is the circular
+        # arc distance to the cell's lon interval (plain |dlon| >=
+        # circular, and a pole-clamped point's latitude lies beyond the
+        # cell's lat interval, so the interval distance under-estimates
+        # there too) — conservative under antimeridian wrap and clamping,
+        # therefore proven/escalation sets are byte-identical.  Typically
+        # kills the far-side ring cells (the radius is the distance to the
+        # NEAREST ring edge).
+        _cw = sq.tile_lon_sql("x", z, double=True)
+        _ce = sq.tile_lon_sql("(x + 1)", z, double=True)
+        _cn = sq.tile_lat_sql("y", z, double=True)
+        _cs = sq.tile_lat_sql("(y + 1)", z, double=True)
+        _dlon = (f"(CASE WHEN _qlon >= {_cw} AND _qlon <= {_ce} THEN 0.0D "
+                 f"ELSE least(pmod({_cw} - _qlon, 360.0D), "
+                 f"pmod(_qlon - {_ce}, 360.0D)) END)")
+        _dlat = f"greatest(0.0D, {_cs} - _qlat, _qlat - {_cn})"
+        cells = cells.where(f"y >= 0 AND y < {n_tiles} AND "
+                            f"({_dlon}) * ({_dlon}) + ({_dlat}) * ({_dlat}) < _bd2")
+        cells_j = F.broadcast(cells) if join == "broadcast" \
+            else cells.hint("shuffle_hash")
+        cand = enc_p.join(cells_j, ["x", "y"]).where(f"{d2} < _bd2") \
+            .selectExpr(qid, f"struct({d2} AS d2, {pid}) AS _c")
+        # each query also contributes one candidate-less row carrying its
+        # coordinates and radius, so a query whose ring holds no point
+        # still gets its row
+        grouped = (
+            cand.unionByName(q, allowMissingColumns=True)
+            .groupBy(query_id).agg(*map(F.expr, (
+                "max(_qlon) AS _qlon", "max(_qlat) AS _qlat",
+                "max(_qx) AS _qx", "max(_qy) AS _qy", *top)))
+        )
+
     # keep a query's ring answer only when it is PROVEN: >= k candidates
     # and the kth distance strictly inside the safety radius — otherwise a
     # true neighbor could hide just outside the ring (the adversarial
     # sparse-cell case in tests/test_spatial.py).  With the prefilter the
     # kth-distance check is implied (every kept candidate is inside the
     # radius), but it stays as a cheap belt-and-braces guard.
-    return (
-        cand.unionByName(q, allowMissingColumns=True)
-        .groupBy(query_id).agg(*map(F.expr, (
-            "max(_qlon) AS _qlon", "max(_qlat) AS _qlat",
-            "max(_qx) AS _qx", "max(_qy) AS _qy",
-            f"slice(array_sort(collect_list(_c)), 1, {k}) AS _top",
-            "count(_c) AS _n", "min(_bd2) AS _bd2")))
-        .selectExpr("*", f"CASE WHEN _n >= {k} THEN "
-                         f"element_at(_top, {k}).d2 < _bd2 ELSE false END AS _ok")
-    )
+    return grouped.selectExpr(
+        "*", f"CASE WHEN _n >= {k} THEN "
+             f"element_at(_top, {k}).d2 < _bd2 ELSE false END AS _ok")
 
 
 def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
@@ -262,13 +332,22 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     Fully distributed: candidate cells come from an explode over the ring
     offsets — no collect.  The (query, ring-cell) candidate relation is
     broadcast only while the query side is provably small
-    (``broadcast_threshold`` queries, probed with a short-circuiting
-    ``limit(n+1).count()``); above that it reaches the point table by a
-    shuffle-hash join on (x, y), so an arbitrarily large query DataFrame
-    degrades to a shuffle instead of killing the driver.  Queries the ring
-    cannot PROVE (fewer than k candidates, or the kth distance not strictly
-    inside the ring's safety radius) escalate ``rering_steps`` times with a
-    doubled-plus-one ring (1 -> 3 -> 7) before the final brute-force pass
+    (``broadcast_threshold`` queries); above that it reaches the point
+    table by a shuffle-hash join on (x, y), so an arbitrarily large query
+    DataFrame degrades to a shuffle instead of killing the driver.  A
+    shuffle level with at least one query per cell (n_q >= 4^z) takes the
+    query-cell form instead (module docstring): the points reach the
+    queries' cells, with no per-query candidate exchange.  Ring 1 decides
+    from a short-circuiting size probe,
+    ``limit(min(max(broadcast_threshold, 4^z), 2^31 - 2) + 1).count()``
+    (O(max(threshold, cells)) rows whatever |Q|; the cap keeps the limit
+    an int, so at z >= 16 no level takes the query-cell form), and each
+    later level from the previous level's observed residue.
+
+    Queries the ring cannot PROVE (fewer than k candidates, or the kth
+    distance not strictly inside the ring's safety radius) escalate
+    ``rering_steps`` times with a doubled-plus-one ring (1 -> 3 -> 7)
+    before the final brute-force pass
     — the escalation set shrinks geometrically, so brute force only ever
     sees a vanishing residue.  Default 2 re-rings: measured at 200k
     queries x 500k points (z8), one re-ring left a 1.8k-query residue
@@ -293,8 +372,10 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     ring-7 level whose queries ring a 100k-point hot cell).
 
     ``stats`` (optional dict) receives one ``{"ring", "n_q", "residue",
-    "join"}`` record per level, ``join`` being ``"broadcast"`` or
-    ``"shuffle_hash"``.
+    "join"}`` record per level, ``join`` being the level's form:
+    ``"broadcast"`` or ``"shuffle_hash"`` (the cell form) or
+    ``"query_cell"``.  A query with a null or NaN coordinate is dropped
+    before ring 1, so ``n_q`` does not count it.
 
     NOTE: this operator runs these jobs at call time; if ``queries`` is
     an expensive derived DataFrame, cache it first.  The result pins the
@@ -314,18 +395,33 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     enc_p = points.selectExpr(
         pid, "lon", "lat", f"{sq.tile_x_sql('lon', z, double=True)} AS x",
         f"{sq.tile_y_sql('lat', z, double=True)} AS y").persist()
-    # size gate: limit(n+1).count() stops scanning past the threshold, so
-    # the probe is O(threshold) regardless of |Q|
-    broadcast = (broadcast_threshold > 0 and queries.limit(
-        broadcast_threshold + 1).count() <= broadcast_threshold)
-    q = queries.selectExpr(
+    # size probe: limit(n+1).count() stops scanning past n, so it is
+    # O(max(threshold, cells)) regardless of |Q|; n stays inside the int
+    # range Dataset.limit takes (z >= 16 has more cells than that, and no
+    # level there takes the query-cell form)
+    n_cells = 4 ** z
+    cap = min(max(broadcast_threshold, n_cells), 2 ** 31 - 2)
+    n_q = queries.limit(cap + 1).count()
+    # a query with a null or NaN coordinate has no cell and no distance:
+    # it gets no row, so it never escalates
+    q = queries.where("nanvl(lon, NULL) IS NOT NULL AND "
+                      "nanvl(lat, NULL) IS NOT NULL").selectExpr(
         qid, "lon AS _qlon", "lat AS _qlat",
         f"{sq.tile_x_sql('lon', z, double=True)} AS _qx",
         f"{sq.tile_y_sql('lat', z, double=True)} AS _qy")
     levels: list = []
     for step in range(rering_steps + 1):
+        # ring 1 decides from the probe, a later level from the residue the
+        # previous one observed (n_q never grows, so a broadcast level is
+        # never followed by a shuffle one)
+        if broadcast_threshold > 0 and n_q <= broadcast_threshold:
+            join = "broadcast"
+        elif n_q >= n_cells:
+            join = "query_cell"
+        else:
+            join = "shuffle_hash"
         obs = Observation()
-        lvl = _ring_level(enc_p, q, k, z, ring, point_id, query_id, broadcast) \
+        lvl = _ring_level(enc_p, q, k, z, ring, point_id, query_id, join) \
             .observe(obs, *map(F.expr, (
                 "count(1) AS n_q", "count_if(_ok) AS n_ok",
                 "sum(CASE WHEN _ok THEN size(_top) END) AS rows"))) \
@@ -340,12 +436,11 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
         n_esc = m["n_q"] - m["n_ok"]
         if stats is not None:
             stats.setdefault("levels", []).append(
-                {"ring": ring, "n_q": m["n_q"], "residue": n_esc,
-                 "join": "broadcast" if broadcast else "shuffle_hash"})
+                {"ring": ring, "n_q": m["n_q"], "residue": n_esc, "join": join})
         q = lvl.where("NOT _ok").selectExpr(qid, "_qlon", "_qlat", "_qx", "_qy")
         if n_esc == 0 or step == rering_steps:
             break
-        broadcast = broadcast or n_esc <= broadcast_threshold
+        n_q = n_esc
         ring = 2 * ring + 1
 
     parts = [
