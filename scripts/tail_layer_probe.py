@@ -11,15 +11,22 @@ the per-level slicing and the writes.  ``writes_s`` is the part of it
 spent inside ``write_level_pandas`` (parquet files plus staging each
 level's record).  ``spark_jobs`` is the number of Spark jobs the build
 started, from the status tracker's job ids before and after it.
+``spark_levels`` is the number of levels written by Spark (not by the
+tail), and ``spark_level_files`` the file count of each, from the base
+level up.
 
     python scripts/tail_layer_probe.py [--builds 7] [--src DIR] [--dir DIR]
+                                       [--small-level-rows N]
 
 ``--dir`` is where the pyramids are built (default ``/dev/shm``, a tmpfs
 where file renames are cheap; a disk directory shows what they cost there).
 
 ``--src`` imports ``vt_grid_spark`` from another checkout, so two trees are
-compared with one script.  The first builds still JIT-warm on a few cores:
-compare the median of builds 4-7, in alternating fresh processes.
+compared with one script.  ``--small-level-rows`` sets
+``pyramid.SMALL_LEVEL_ROWS`` for the run: a lower value makes more levels
+Spark levels (at sf0.1, 20000 gives 6).  The first builds still JIT-warm
+on a few cores: compare the median of builds 4-7, in alternating fresh
+processes.
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--builds", type=int, default=7)
     ap.add_argument("--src", default=ROOT)
     ap.add_argument("--dir", default="/dev/shm" if os.path.isdir("/dev/shm") else None)
+    ap.add_argument("--small-level-rows", type=int)
     args = ap.parse_args(argv)
     sys.path.insert(0, args.src)
 
@@ -71,6 +79,8 @@ def main(argv: list[str]) -> int:
 
     pyramid.rollup_ancestors = timed_ancestors
     TableIO.write_level_pandas = timed_write
+    if args.small_level_rows is not None:
+        pyramid.SMALL_LEVEL_ROWS = args.small_level_rows
 
     spark = get_spark("tail-layer-probe", cores=CPUS)
     pts = pages.with_coords(pages.pages_df(spark, pages.n_for_sf_dir(SF_DIR)))
@@ -86,15 +96,19 @@ def main(argv: list[str]) -> int:
         before = _job_ids(spark)
         try:
             t0 = time.perf_counter()
-            pyramid.build_pyramid(pts, plan, TableIO(out_dir), resume=False)
+            man = pyramid.build_pyramid(pts, plan, TableIO(out_dir), resume=False)
             wall = time.perf_counter() - t0
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
         tail = marks["tail_end"] - marks["tail_start"]
+        files = [len(man[z]["files"]) for z in sorted(man, reverse=True)
+                 if man[z]["lineage"]["op"] != "rollup-small"]
         print(json.dumps({"build": i, "wall_s": round(wall, 3),
                           "tail_s": round(tail, 3),
                           "writes_s": round(marks["writes"], 3),
-                          "spark_jobs": len(_job_ids(spark) - before)}), flush=True)
+                          "spark_jobs": len(_job_ids(spark) - before),
+                          "spark_levels": len(files),
+                          "spark_level_files": files}), flush=True)
     spark.stop()
     return 0
 

@@ -168,14 +168,25 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
         assert a == b
 
 
-@pytest.mark.parametrize("crash", [{"before": {2}}, {"after": {3}}],
-                         ids=["second_write", "before_publish"])
-def test_build_crash_keeps_published_pyramid(spark, tmp_path, monkeypatch, crash):
+@pytest.mark.parametrize("crash", [{"before": {2}}, {"after": {3}},
+                                   {"before": {2}, "small_level_rows": 0}],
+                         ids=["second_write", "before_publish", "between_spark_levels"])
+def test_build_crash_keeps_published_pyramid(spark, tmp_path, monkeypatch, request,
+                                             crash):
     """Fault injection: ``build_pyramid(resume=False)`` of new points over
     a complete pyramid crashes at its second level write, or after its
     last one (just before the publish).  Every level still reads as
     before the call; a resumed build then equals a one-shot build, and
-    only the published generations stay on disk."""
+    only the published generations stay on disk.  With
+    ``SMALL_LEVEL_ROWS`` at 0 every level is a Spark level, so the crash
+    and the resume fall between two of them."""
+    from vt_grid_spark.operators import pyramid as pyr
+
+    crash = dict(crash)
+    levels_patch = pytest.MonkeyPatch()  # outlives the crash patch's undo
+    request.addfinalizer(levels_patch.undo)
+    levels_patch.setattr(pyr, "SMALL_LEVEL_ROWS",
+                         crash.pop("small_level_rows", pyr.SMALL_LEVEL_ROWS))
     plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=SPECS)],
                        gridsize=16)
     zooms = [9, 8, 7]
@@ -824,6 +835,47 @@ def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, m
         one_shot = TableIO(str(tmp_path / "one_shot"))
         build_pyramid(pts, plan, one_shot, resume=False)
         assert _level_rows(io, spark, zooms) == _level_rows(one_shot, spark, zooms)
+
+
+@pytest.mark.parametrize("small_level_rows, n_spark, n_jobs",
+                         [(None, 1, 4), (2000, 7, 16)],
+                         ids=["one_spark_level", "seven_spark_levels"])
+def test_build_job_audit(spark, tmp_path, monkeypatch, jobs_started,
+                         small_level_rows, n_spark, n_jobs):
+    """The build's twin of the fold's job audit, with the benchmark's
+    count + sum + union plan over cell zooms 12 -> 0.  Each Spark level is
+    written from a plan nothing caches and read back by the level above
+    it, and a level read starts no job: at the default threshold (the
+    base level, then the tail) the build starts 4 jobs, and with
+    ``SMALL_LEVEL_ROWS`` at 2,000 (Spark levels 12 -> 6, then the tail)
+    16.  Persisting each Spark level for the next one started one more
+    job per level (5 and 23).  Every level equals ``build_pyramid_df``, and
+    the session caches nothing afterwards."""
+    from vt_grid_spark.operators import pyramid as pyr
+
+    if small_level_rows is not None:
+        monkeypatch.setattr(pyr, "SMALL_LEVEL_ROWS", small_level_rows)
+    specs = [AggSpec(out="cnt", reducer="count"),
+             AggSpec(out="sum_v", reducer="sum", field="v"),
+             AggSpec(out="langs", reducer="union", field="lang")]
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=13, minzoom=0, aggregations=specs)],
+                       gridsize=1)
+    zooms = [z for _, z, _ in plan.levels()]
+    pts = _points(spark, 3000)
+    io = TableIO(str(tmp_path / "pyr"))
+
+    man = {}
+    got = jobs_started(lambda: man.update(build_pyramid(pts, plan, io, resume=False)))
+    assert [man[z]["lineage"]["op"] for z in zooms] == \
+        ["encode+aggregate"] + ["rollup"] * (n_spark - 1) + \
+        ["rollup-small"] * (len(zooms) - n_spark)
+    assert got == n_jobs, got
+    mem = build_pyramid_df(pts, plan)
+    cols = ["x", "y", "cnt", "sum_v", "langs"]
+    for z in zooms:
+        assert _rows(io.read_level(spark, z), cols) == \
+            _rows(mem.where(F.col("zoom") == z), cols), f"zoom {z}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_empty_cover_build_records_zero_max(spark, tmp_path):

@@ -226,13 +226,6 @@ def frame_sample(df: DataFrame, every_n: int, video_col: str = "video",
     return df.mapInPandas(gen, schema=FRAME_SAMPLE_SCHEMA)
 
 
-def fake_decode_features(data: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in for (width, height, channels): derived from
-    the byte content so tests are stable and collisions meaningful."""
-    n = len(data)
-    return (n % 640 + 1, (n * 7) % 480 + 1, 3)
-
-
 HTML_FEATURES_SCHEMA = (
     "url string, n_bytes long, n_tags long, text_extracted string, fake_w int, fake_h int"
 )
@@ -244,7 +237,8 @@ def html_features(df: DataFrame, html_col: str = "html",
 
     Real parts: byte length, tag count, tag-stripped text (byte-identical
     extraction — the north_rule invariant).  Fake parts: image-like
-    dimensions from fake_decode_features, standing in for decode."""
+    dimensions derived from the byte length (``n % 640 + 1``,
+    ``n * 7 % 480 + 1``), standing in for decode."""
 
     def gen(batches: Iterator) -> Iterator:
         import pandas as pd

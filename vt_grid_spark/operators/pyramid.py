@@ -3,22 +3,21 @@ as a checkpointed Spark loop.
 
 Each output level is one shuffle stage (groupBy on the integer parent
 key); every level is staged in its own generation with a record (the
-resume point, mirroring the reference feeding each level's mbtiles into
-the next, index.js:151-159), and one ``TableIO.commit`` publishes them
-all at the end, as the reference's final tile-join creates its output
-(index.js:151-175).  Within a run the next rollup reads the
-previous level from the block-manager CACHE (persisted during the level's
-own write job), not back off parquet — the checkpoint write is the
-durability path, never a serial decode on the critical path.  On resume
-the cache is cold and the level IS re-read from its checkpoint.
+resume point), and one ``TableIO.commit`` publishes them all at the end,
+as the reference's final tile-join creates its output (index.js:151-175).
+As in the reference, which feeds each level's mbtiles into the next
+(index.js:151-159), the next level reads the level below back from the
+generation it was just written to: a level read starts no Spark job, and
+the write, of a plan nothing caches, keeps AQE's partition coalescing.
 
-The small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail,
-which both writers share: one ``rollup_ancestors`` aggregation per zoom
-band derives all of its levels at once, collected to the driver as one
-Arrow table and written per level.  A fold merges the delta in Spark only
-while levels are big.  All paths use the combiners of
-``compile_rollup_aggs``, derived from ``aggspec.REDUCERS``, the one place
-a reducer's merge rule is defined.
+``build_pyramid`` and ``incremental_update`` run one level loop
+(``_write_levels``) and differ only in how a Spark level is made.  The
+small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
+``rollup_ancestors`` aggregation per zoom band derives all of its levels
+at once, collected to the driver as one Arrow table and written per
+level.  A fold merges the delta in Spark only while levels are big.  All
+paths use the combiners of ``compile_rollup_aggs``, derived from
+``aggspec.REDUCERS``, the one place a reducer's merge rule is defined.
 """
 
 from __future__ import annotations
@@ -73,14 +72,45 @@ def _tracked_count(plan: PyramidPlan, band) -> str | None:
     return count_column(band.aggregations)
 
 
+def _write_levels(spark: SparkSession, io: TableIO, plan: PyramidPlan,
+                  spark_level, keep=None) -> dict:
+    """The level loop both writers run, from the deepest zoom up.  A level
+    ``keep`` holds keeps its record; otherwise a level is a Spark level
+    while the level below it holds ``SMALL_LEVEL_ROWS`` or more rows (the
+    first level always is): ``spark_level(cell_z, band, child)``, given
+    the record of the level below (None for the first level), returns
+    the level's DataFrame and lineage, and the loop writes it.  Otherwise
+    the tail (:func:`_write_tail`) derives the levels up to the next one
+    ``keep`` holds.  Returns {cell_zoom: manifest}."""
+    levels = list(plan.levels())  # [(output_z, cell_z, band)] desc
+    manifests: dict[int, dict] = {}
+    for i, (output_z, cell_z, band) in enumerate(levels):
+        if cell_z in manifests:  # written by a tail batch
+            continue
+        child = manifests.get(cell_z + 1)
+        if keep and keep(cell_z):
+            manifests[cell_z] = io.read_manifest(cell_z)
+        elif child is None or child["row_count"] >= SMALL_LEVEL_ROWS:
+            level, lineage = spark_level(cell_z, band, child)
+            manifests[cell_z] = io.write_level(
+                level, cell_z, {**lineage, "output_tile_zoom": output_z},
+                count_col=_tracked_count(plan, band))
+        else:
+            run = takewhile(lambda lv: not (keep and keep(lv[1])), levels[i:])
+            manifests.update(_write_tail(spark, io, plan, list(run), cell_z + 1))
+    return manifests
+
+
 def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
-                  resume: bool = True, repartition: int | None = None) -> dict:
+                  resume: bool = True) -> dict:
     """points(lon, lat, value columns) -> one written level per output zoom.
 
     Levels are keyed by CELL zoom (output tile zoom + log4(gridsize)), so
     level z's cells are exactly the direct parents of level z+1's cells
     and each rollup is `groupBy(x>>1, y>>1)` — the quadkey-prefix
-    invariant (SURVEY.md §2.3 G2).
+    invariant (SURVEY.md §2.3 G2).  The base level is the encoded points'
+    aggregate; each Spark level above it rolls up the level below, read
+    back from its generation.
 
     The build is one ``io.commit``: every level is written to a fresh
     generation and staged, and all of them are published together at the
@@ -93,88 +123,42 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
     Returns {cell_zoom: manifest}.
     """
     spark = points.sparkSession
-    manifests: dict[int, dict] = {}
 
-    levels = list(plan.levels())  # [(output_z, cell_z, band)] desc
-    base_output_z, base_cell_z, base_band = levels[0]
-
-    # hot-key bookkeeping: every level write records max_cell_rows in the
-    # record it stages (observed on a Spark level's write job, taken from
-    # the collected table of a tail level), and _salt_for reads it
-    def _salt_for(prev_zoom: int, band) -> int:
-        if plan.salt_buckets <= 1 or not is_holistic(band.aggregations):
-            return 0
-        prev_max = manifests[prev_zoom].get("max_cell_rows")
-        if prev_max is None:  # no count spec to measure with — stay safe
-            return plan.salt_buckets
-        return plan.salt_buckets if prev_max > plan.hot_key_threshold else 0
+    def spark_level(cell_z: int, band, child: dict | None):
+        if child is None:
+            return (cell_aggregate(_apply_cover(points, plan, cell_z), cell_z,
+                                   compile_aggs(band.aggregations)),
+                    {"input": "points", "op": "encode+aggregate"})
+        # hot-key rule: salt a holistic rollup when the child's recorded
+        # max_cell_rows is above the threshold, or unknown (no count spec)
+        salt = 0
+        if plan.salt_buckets > 1 and is_holistic(band.aggregations):
+            hot = child.get("max_cell_rows")
+            salt = plan.salt_buckets if hot is None or hot > plan.hot_key_threshold else 0
+        return (rollup_ancestors(io.read_level(spark, cell_z + 1), cell_z + 1, cell_z,
+                                 band.aggregations, salt_buckets=salt),
+                {"input": f"zoom={cell_z + 1}", "op": "rollup",
+                 "salted": salt > 1, "salt_buckets": salt})
 
     with io.commit("resume" if resume else "empty"):
-        # --- base level: encode + first aggregation -------------------------
-        prev_df = None  # cached handle of the previous level within this run
-        if resume and io.level_complete(base_cell_z):
-            manifests[base_cell_z] = io.read_manifest(base_cell_z)
-        else:
-            encoded = _apply_cover(points, plan, base_cell_z)
-            if repartition:
-                encoded = encoded.repartition(repartition, "x", "y")
-            base = cell_aggregate(encoded, base_cell_z,
-                                  compile_aggs(base_band.aggregations)).persist()
-            manifests[base_cell_z] = io.write_level(
-                base, base_cell_z, {"input": "points", "op": "encode+aggregate",
-                                    "output_tile_zoom": base_output_z},
-                count_col=_tracked_count(plan, base_band))
-            prev_df = base
-
-        # --- rollup levels ---------------------------------------------------
-        # distributed while levels are big, then the tail (SMALL_LEVEL_ROWS)
-        # up to the next level a resume keeps
-        for i, (output_z, cell_z, band) in enumerate(levels[1:], 1):
-            if cell_z in manifests:  # written by a tail batch
-                continue
-            prev_cell_z = cell_z + 1
-            cached, prev_df = prev_df, None  # only a Spark rollup is kept
-            if resume and io.level_complete(cell_z):
-                manifests[cell_z] = io.read_manifest(cell_z)
-            elif manifests[prev_cell_z]["row_count"] < SMALL_LEVEL_ROWS:
-                run = takewhile(lambda lv: not (resume and io.level_complete(lv[1])),
-                                levels[i:])
-                manifests.update(_write_tail(spark, io, plan, list(run),
-                                             prev_cell_z, cached))
-            else:
-                salt = _salt_for(prev_cell_z, band)
-                children = (cached if cached is not None
-                            else io.read_level(spark, prev_cell_z))
-                prev_df = rollup_ancestors(children, prev_cell_z, cell_z,
-                                           band.aggregations, salt_buckets=salt).persist()
-                manifests[cell_z] = io.write_level(
-                    prev_df, cell_z, {"input": f"zoom={prev_cell_z}", "op": "rollup",
-                                      "output_tile_zoom": output_z, "salted": salt > 1,
-                                      "salt_buckets": salt},
-                    count_col=_tracked_count(plan, band))
-            if cached is not None:
-                cached.unpersist()
-
-        if prev_df is not None:
-            prev_df.unpersist()
-    return manifests
+        return _write_levels(spark, io, plan, spark_level,
+                             keep=io.level_complete if resume else None)
 
 
 def _write_tail(spark: SparkSession, io: TableIO, plan: PyramidPlan, todo: list,
-                child_z: int, children: DataFrame | None = None) -> dict:
+                child_z: int) -> dict:
     """The tail: derive the levels ``todo`` ([(output_z, cell_z, band)],
-    descending from ``child_z - 1``) from the level at ``child_z``
-    (``children``, else read from ``io``), one ``rollup_ancestors`` batch
-    per zoom band, collected as Arrow and written per level.  A band
-    boundary starts a new batch from the last level written: the next
-    band's specs apply to it.  Returns {cell_zoom: manifest}."""
+    descending from ``child_z - 1``) from the level at ``child_z``, read
+    back from its generation, one ``rollup_ancestors`` batch per zoom
+    band, collected as Arrow and written per level.  A band boundary
+    starts a new batch from the last level written: the next band's specs
+    apply to it.  Returns {cell_zoom: manifest}."""
     manifests: dict[int, dict] = {}
     for _, run in groupby(todo, key=lambda lv: id(lv[2])):
         run = list(run)
         band, min_z = run[0][2], run[-1][1]
-        if children is None:
-            children = io.read_level(spark, child_z)
-        batch = rollup_ancestors(children, child_z, min_z, band.aggregations).toArrow()
+        batch = rollup_ancestors(io.read_level(spark, child_z), child_z, min_z,
+                                 band.aggregations).toArrow()
         # sorted (same files every run) on one int64 key, 4^z + x*2^z + y:
         # exact for zooms <= 31, ~4x faster than sort_by
         zoom, x, y = (batch[k].to_numpy().astype(np.int64) for k in ("zoom", "x", "y"))
@@ -188,7 +172,7 @@ def _write_tail(spark: SparkSession, io: TableIO, plan: PyramidPlan, todo: list,
                 lineage={"input": f"zoom={cell_z + 1}", "op": "rollup-small",
                          "output_tile_zoom": output_z},
                 count_col=_tracked_count(plan, band))
-        children, child_z = None, min_z
+        child_z = min_z
     return manifests
 
 
@@ -201,18 +185,18 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     monoid, so merge(existing_level, rollup(delta)) == rebuild over the
     union — asserted level-by-level in tests/test_pyramid.py).
 
-    By the build's rule, Spark merges a level only while the level below
-    it, merged, holds ``SMALL_LEVEL_ROWS`` or more rows (the base level
-    always); the levels above are then derived from that merged level,
-    read back from its new generation, by the build's tail
-    (:func:`_write_tail`).  Per Spark level (100 TB pyramid, small delta):
-    the delta's partials, rolled up from the previous level's, are
-    computed once by an eager localCheckpoint; the untouched existing rows
-    pass a broadcast LEFT ANTI join on the delta's keys (no shuffle of the
-    big table), and only the touched slice is hash-merged with the
-    partials.  Every record tracks ``max_cell_rows``
-    by the build's rule (:func:`_tracked_count`), so a record that lacks
-    it regains it.  Deletes are out of scope (append-only corpus,
+    The fold runs the build's level loop (:func:`_write_levels`): Spark
+    merges a level only while the level below it, merged, holds
+    ``SMALL_LEVEL_ROWS`` or more rows (the base level always); the levels
+    above are then derived from that merged level, read back from its new
+    generation, by the build's tail.  Per Spark level (100 TB pyramid,
+    small delta): the delta's partials, rolled up from the previous
+    level's, are computed once by an eager localCheckpoint; the untouched
+    existing rows pass a broadcast LEFT ANTI join on the delta's keys (no
+    shuffle of the big table), and only the touched slice is hash-merged
+    with the partials.  Every record tracks ``max_cell_rows`` by the
+    build's rule (:func:`_tracked_count`), so a record that lacks it
+    regains it.  Deletes are out of scope (append-only corpus,
     min/max/union/kmv are insert-monotone).
 
     The fold is one ``io.commit``: each written level goes to a fresh
@@ -225,7 +209,28 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     """
     spark = delta_points.sparkSession
     levels = list(plan.levels())
-    manifests: dict[int, dict] = {}
+    delta = None  # the delta's partials at the last Spark level
+
+    def spark_level(cell_z: int, band, child: dict | None):
+        nonlocal delta
+        # eager: a lazy persist is filled by nobody before the merge's
+        # query stages start, so each would recompute the partials at
+        # full shuffle width; the checkpoint is AQE-coalesced
+        delta = (cell_aggregate(_apply_cover(delta_points, plan, cell_z), cell_z,
+                                compile_aggs(band.aggregations)) if child is None
+                 else rollup_ancestors(delta, cell_z + 1, cell_z, band.aggregations)
+                 ).localCheckpoint(eager=True)
+        keys = F.broadcast(delta.select("x", "y"))
+        existing = io.read_level(spark, cell_z)
+        merged = merge_cells([existing.join(keys, ["x", "y"], "left_semi"), delta],
+                             cell_z, band.aggregations)
+        untouched = existing.join(keys, ["x", "y"], "left_anti")
+        # the write (to a new generation) is the merge's only
+        # materialization; max_cell_rows is observed on it
+        return (untouched.select(*merged.columns).unionByName(merged),
+                {"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
+                 "previous_row_count": io.read_manifest(cell_z).get("row_count")})
+
     with io.commit():
         for _, cell_z, _ in levels:
             if not io.level_complete(cell_z):
@@ -235,34 +240,7 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
                     "partial build)")
         if io.delta_applied():
             return {cell_z: io.read_manifest(cell_z) for _, cell_z, _ in levels}
-        for i, (output_z, cell_z, band) in enumerate(levels):
-            if i and manifests[cell_z + 1]["row_count"] < SMALL_LEVEL_ROWS:
-                # the tail reads the merged level back: persisted, the merge
-                # would lose AQE's coalescing (a cached plan keeps its shuffle
-                # width) and write many more files
-                manifests.update(_write_tail(spark, io, plan, levels[i:], cell_z + 1))
-                break
-            # eager: a lazy persist is filled by nobody before the merge's
-            # query stages start, so each would recompute the partials at
-            # full shuffle width; the checkpoint is AQE-coalesced
-            delta = (cell_aggregate(_apply_cover(delta_points, plan, cell_z), cell_z,
-                                    compile_aggs(band.aggregations)) if i == 0
-                     else rollup_ancestors(delta, cell_z + 1, cell_z, band.aggregations)
-                     ).localCheckpoint(eager=True)
-            keys = F.broadcast(delta.select("x", "y"))
-            existing = io.read_level(spark, cell_z)
-            merged = merge_cells([existing.join(keys, ["x", "y"], "left_semi"), delta],
-                                 cell_z, band.aggregations)
-            untouched = existing.join(keys, ["x", "y"], "left_anti")
-            # the write (to a new generation) is the merge's only
-            # materialization; max_cell_rows is observed on it
-            manifests[cell_z] = io.write_level(
-                untouched.select(*merged.columns).unionByName(merged), cell_z,
-                lineage={"input": f"zoom={cell_z}+delta", "op": "incremental-merge",
-                         "output_tile_zoom": output_z,
-                         "previous_row_count": io.read_manifest(cell_z).get("row_count")},
-                count_col=_tracked_count(plan, band))
-    return manifests
+        return _write_levels(spark, io, plan, spark_level)
 
 
 def build_pyramid_df(points: DataFrame, plan: PyramidPlan) -> DataFrame:

@@ -240,11 +240,8 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame, z: int = 9,
         cand.where(pip_udf(F.col(lon), F.col(lat), F.col(poly_id), F.col("full")))
         .drop("x", "y", "zoom", "full")
     )
-    # expose the handle so long-lived sessions can release the broadcast
-    # after materializing — per-result attribute AND a module registry
-    # (the attribute is lost the moment a caller applies another
-    # transformation, so release_pip_broadcasts is the reliable surface)
-    out._pip_broadcast = geoms_bc
+    # register the handle so long-lived sessions can release the broadcast
+    # after materializing (release_pip_broadcasts)
     _PIP_BROADCASTS.append(geoms_bc)
     return out
 
@@ -261,24 +258,10 @@ def release_pip_broadcasts(blocking: bool = False) -> int:
     leaves the driver-side geometry dict resident (re-shipping it on
     reuse), so it cannot reclaim driver memory; destroy is this
     function's documented terminal contract (the released results must
-    not be re-executed — use :func:`unpersist_pip` for the re-executable
-    per-result release).  Returns the number released."""
+    not be re-executed).  Returns the number released."""
     n = len(_PIP_BROADCASTS)
     for bc in _PIP_BROADCASTS:
         bc.destroy(blocking)
     _PIP_BROADCASTS.clear()
     return n
 
-
-def unpersist_pip(df: DataFrame, blocking: bool = False) -> None:
-    """Release the geometry broadcast of ONE join result.  Only works on
-    the DataFrame returned by :func:`point_in_polygon_join` itself — any
-    further transformation returns a new DataFrame without the handle
-    (use :func:`release_pip_broadcasts` there)."""
-    bc = getattr(df, "_pip_broadcast", None)
-    if bc is not None:
-        bc.unpersist(blocking)
-        try:
-            _PIP_BROADCASTS.remove(bc)
-        except ValueError:
-            pass

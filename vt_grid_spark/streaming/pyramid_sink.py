@@ -46,9 +46,10 @@ class PyramidStreamSink:
         io = TableIO(self.root, delta_id=int(batch_id))
         if io.delta_applied() or batch.isEmpty():
             return
-        # no checkpoint of the batch here: the bootstrap build persists its
-        # base level during the level's write and the fold checkpoints its
-        # delta partials before any merge, so either reads the batch once
+        # no checkpoint of the batch here: the bootstrap build reads it
+        # once, in its base level's write (every level above reads the
+        # level below back), and the fold checkpoints its delta partials
+        # before any merge, so either reads the batch once
         if io.level_complete(next(iter(self.plan.levels()))[1]):
             incremental_update(batch, self.plan, io)
         else:
