@@ -2,15 +2,21 @@
 
     python scripts/dump_plan.py OUTDIR SUFFIX name [name ...]
 
-Writes OUTDIR/<name>_<SUFFIX>.txt for each query (the judge-facing plan
-artifacts in plans/r06/).  Uses sf0.01 (the driver's correctness scale) so
-plans stay small; plan SHAPE (exchanges, join strategies, pushed filters)
-is scale-independent.
+Writes OUTDIR/<name>_<SUFFIX>.txt for each query (the plan artifacts in
+plans/r06/).  Uses sf0.01 (the scale of the oracle checks) so plans stay
+small; plan SHAPE (exchanges, join strategies, pushed filters) is
+scale-independent.
+
+Expression ids (``#123``, ``#45L``) are written as ``#``: they count up
+with every expression a session creates, so two checkouts' dumps of the
+same plan differ in them.  With the ids stripped, ``diff`` of a parent's
+and a change's dump shows only what the change did to the plan.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,6 +37,7 @@ def main(argv: list[str]) -> int:
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
+        plan = re.sub(r"#\d+L?", "#", plan)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

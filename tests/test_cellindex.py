@@ -31,7 +31,7 @@ def test_hex_assignment_is_nearest_center(spark):
     centers (ties allowed at exact boundaries)."""
     ix = HexIndex(SIZE)
     rows = (_pts(spark)
-            .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+            .withColumn("cell", ix.cell("lon", "lat"))
             .withColumn("nbrs", ix.neighbors(F.col("cell")))
             .collect())
     assert rows
@@ -49,7 +49,7 @@ def test_hex_assignment_is_nearest_center(spark):
 def test_hex_neighbors_mutual_and_distinct(spark):
     ix = HexIndex(SIZE)
     df = (_pts(spark, 200)
-          .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+          .withColumn("cell", ix.cell("lon", "lat"))
           .select("cell").distinct()
           .withColumn("nbrs", ix.neighbors(F.col("cell"))))
     rows = df.collect()
@@ -70,7 +70,7 @@ def test_hex_parent_children_invert(spark):
     containment is approximate."""
     ix = HexIndex(SIZE, aperture=3)
     df = (_pts(spark, 400)
-          .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+          .withColumn("cell", ix.cell("lon", "lat"))
           .select("cell").distinct()
           .withColumn("parent", ix.parent(F.col("cell")))
           .withColumn("kids", ix.children(F.col("parent"))))

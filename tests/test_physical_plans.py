@@ -254,7 +254,7 @@ def test_hex_bin_stays_jvm_side(spark):
 
     ix = HexIndex(0.75, aperture=3)
     pts = pages.with_coords(pages.pages_df(spark, 100))
-    enc = (pts.withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+    enc = (pts.withColumn("cell", ix.cell("lon", "lat"))
            .withColumn("pcell", ix.parent(F.col("cell"))))
     agg = enc.groupBy("cell", "pcell").agg(F.count("*").alias("cnt"))
     p = plan_str(agg, "simple")

@@ -2,13 +2,40 @@
 aggregation-spec validation."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vt_grid_spark import functions as vf
 from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-from vt_grid_spark.operators.rollup import densify, rollup_ancestors
+from vt_grid_spark.operators.rollup import rollup_ancestors
 from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan, ZoomBand
 from vt_grid_spark.sources import pages
+
+
+def densify(cells: DataFrame, parent_z: int, cell_z: int) -> DataFrame:
+    """Dense-cell view for fixture parity: materialize all 4^(cell_z-parent_z)
+    progeny of each occupied parent tile, left-joining real values
+    (reference grid path emits empties, lib/aggregate-cells.js:39-47).
+    The engine's levels stay sparse; this view lives with its test."""
+    d = cell_z - parent_z
+    span = 1 << d
+    parents = (
+        cells.select(F.shiftright("x", d).alias("_tx"), F.shiftright("y", d).alias("_ty"))
+        .distinct()
+    )
+    grid = (
+        parents
+        .withColumn("_dx", F.explode(F.sequence(F.lit(0), F.lit(span - 1))))
+        .withColumn("_dy", F.explode(F.sequence(F.lit(0), F.lit(span - 1))))
+        .select(
+            (F.shiftleft("_tx", d) + F.col("_dx")).alias("x"),
+            (F.shiftleft("_ty", d) + F.col("_dy")).alias("y"),
+        )
+    )
+    return grid.join(cells, ["x", "y"], "left").withColumn(
+        "zoom", F.lit(cell_z)
+    ).withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z))
 
 
 def test_densify_materializes_empty_cells(spark):

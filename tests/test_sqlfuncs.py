@@ -20,14 +20,22 @@ def test_sql_functions_match_column_builders(spark):
                    vt_quadkey(vt_tile_x(lon, {z}), vt_tile_y(lat, {z}), {z}) AS sqk
             FROM _sqlf_pts""")
         want = pts.select(
-            "url", vf.tile_x(F.col("lon"), z).alias("x"),
-            vf.tile_y(F.col("lat"), z).alias("y")).withColumn(
+            "url", vf.tile_x("lon", z).alias("x"),
+            vf.tile_y("lat", z).alias("y")).withColumn(
             "qk", vf.quadkey(F.col("x"), F.col("y"), z))
         j = got.join(want, "url")
         assert j.where((F.col("sx") != F.col("x"))
                        | (F.col("sy") != F.col("y"))
                        | (F.col("sqk") != F.col("qk"))).count() == 0
         assert j.count() == pts.count()
+    # cell edges: every tile row/column index 0..2^z, bit for bit
+    for z in (4, 9, 16):
+        edges = spark.range(0, (1 << z) + 1).select(
+            F.expr(f"vt_tile_lon(id, {z})").alias("sw"), vf.tile_lon("id", z).alias("w"),
+            F.expr(f"vt_tile_lat(id, {z})").alias("sn"), vf.tile_lat("id", z).alias("n"))
+        rows = edges.collect()
+        assert [(repr(r.sw), repr(r.sn)) for r in rows] == [(repr(r.w), repr(r.n)) for r in rows]
+        assert len(rows) == (1 << z) + 1
 
 
 def test_sql_quadkey_roundtrip_and_lineage(spark):
@@ -113,7 +121,8 @@ def test_sq_literal_roundtrip(spark):
 def test_sqltext_tile_twins_match_column_builders(spark):
     """The generated-SQL tile twins (kNN encodes with them, in their
     DOUBLE-literal form) equal the Column builders bit for bit in both
-    literal forms, on random points and on both sides of tile edges."""
+    literal forms, on random points and on both sides of tile edges; with
+    a per-row zoom column they equal the literal-zoom results."""
     import numpy as np
 
     from vt_grid_spark.functions import sqltext as sq
@@ -125,9 +134,11 @@ def test_sqltext_tile_twins_match_column_builders(spark):
         w, s, _, n = (float(v) for v in tm.tile_to_bbox(x, x, 4))
         lon += [w, float(np.nextafter(w, 1e9)), float(np.nextafter(w, -1e9))]
         lat += [n, float(np.nextafter(n, 1e9)), float(np.nextafter(s, -1e9))]
-    df = spark.createDataFrame(list(zip(lon, lat)), "lon double, lat double")
-    for z in (4, 9):
-        cols = [vf.tile_x(F.col("lon"), z).alias("x"), vf.tile_y(F.col("lat"), z).alias("y")]
+    zoom = [(4, 9)[i % 2] for i in range(len(lon))]
+    df = spark.createDataFrame(list(zip(lon, lat, zoom)), "lon double, lat double, zoom int")
+    got = {}
+    for z in (4, 9, "zoom"):
+        cols = [vf.tile_x("lon", z).alias("x"), vf.tile_y("lat", z).alias("y")]
         for double in (False, True):
             cols += [F.expr(sq.tile_x_sql("lon", z, double=double)).alias(f"x{double}"),
                      F.expr(sq.tile_y_sql("lat", z, double=double)).alias(f"y{double}"),
@@ -138,6 +149,8 @@ def test_sqltext_tile_twins_match_column_builders(spark):
             assert r.x == r.xFalse == r.xTrue and r.y == r.yFalse == r.yTrue
             assert r.wFalse == r.wTrue and r.nFalse == r.nTrue
         assert len(rows) == len(lon)
+        got[z] = rows
+    assert got["zoom"] == [got[zi][i] for i, zi in enumerate(zoom)]
 
 
 def test_null_or_nan_coordinate_has_no_cell(spark):

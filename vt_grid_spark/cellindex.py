@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vt_grid_spark import functions as vf
+from vt_grid_spark.functions.sqltext import bq
 
 _OFF = 1 << 30  # axial coords are offset-shifted to stay non-negative
 
@@ -42,9 +43,10 @@ _OFF = 1 << 30  # axial coords are offset-shifted to stay non-negative
 # ---------------------------------------------------------------------------
 
 class CellIndex:
-    """point->cell id, parent, children, neighbors (all Column->Column)."""
+    """point->cell id, parent, children, neighbors.  ``cell`` takes the
+    names of the lon/lat columns; the others map Column -> Column."""
 
-    def cell(self, lon: Column, lat: Column) -> Column:
+    def cell(self, lon: str, lat: str) -> Column:
         raise NotImplementedError
 
     def parent(self, cell: Column) -> Column:
@@ -58,7 +60,7 @@ class CellIndex:
 
     def encode(self, df: DataFrame, lon: str = "lon", lat: str = "lat",
                out: str = "cell") -> DataFrame:
-        return df.withColumn(out, self.cell(F.col(lon), F.col(lat)))
+        return df.withColumn(out, self.cell(lon, lat))
 
 
 # ---------------------------------------------------------------------------
@@ -76,8 +78,9 @@ class QuadkeyIndex(CellIndex):
     def _pack(self, x: Column, y: Column, z: int) -> Column:
         return (x.cast("long") * F.lit(1 << z) + y.cast("long")).cast("long")
 
-    def cell(self, lon: Column, lat: Column) -> Column:
-        return self._pack(vf.tile_x(lon, self.z), vf.tile_y(lat, self.z), self.z)
+    def cell(self, lon: str, lat: str) -> Column:
+        return self._pack(vf.tile_x(bq(lon), self.z), vf.tile_y(bq(lat), self.z),
+                          self.z)
 
     def xy(self, cell: Column) -> tuple[Column, Column]:
         # exact integer bit math: cell = x*2^z + y packs losslessly for
@@ -181,8 +184,8 @@ class HexIndex(CellIndex):
         q, r = _cube_round(*self._frac(lon, lat, size))
         return self._pack(q, r)
 
-    def cell(self, lon: Column, lat: Column) -> Column:
-        return self._cell_at(lon, lat, self.size)
+    def cell(self, lon: str, lat: str) -> Column:
+        return self._cell_at(F.col(lon), F.col(lat), self.size)
 
     def parent(self, cell: Column) -> Column:
         q, r = self.qr(cell)

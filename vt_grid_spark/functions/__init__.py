@@ -1,53 +1,43 @@
 """JVM-side column expressions for tile math.
 
-Same closed-form Web-Mercator formulas as :mod:`vt_grid_spark.tilemath`,
-expressed as Catalyst column trees so the hot path (point -> cell encode,
-pyramid rollup keys) never leaves whole-stage codegen.  The matching ANSI-SQL
-text generators (for the DuckDB oracles) live in
-:mod:`vt_grid_spark.functions.sqltext` — keep the two in lockstep.
+The tile formulas are built from the DOUBLE-literal SQL text of
+:mod:`vt_grid_spark.functions.sqltext`, the one Spark-side definition (the
+DuckDB oracles use its plain form, the vt_* SQL functions its per-row-zoom
+form), wrapped in ``F.expr``: Catalyst trees like any column expression,
+so the hot path (point -> cell encode, pyramid rollup keys) never leaves
+whole-stage codegen.  They take SQL text: a column name quoted with
+``sqltext.bq`` or an expression such as ``"(x + 1)"``.  A zoom is an int
+or a per-row zoom expression such as ``"zoom"``.  The same closed-form
+Web-Mercator math runs in numpy in :mod:`vt_grid_spark.tilemath`.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from vt_grid_spark import tilemath as tm
+from vt_grid_spark.functions import sqltext as sq
 
 
-def tile_x(lon: Column, z: int) -> Column:
-    """Integer tile x for a longitude column at literal zoom z.
-
-    x = floor(2^z * (lon/360 + 0.5)) mod 2^z, clamped — parity with
-    tilebelt.pointToTile as used by the reference's grid assignment
-    (/root/reference/lib/aggregate-cells.js:54-78 does this via geojson-vt).
-    """
-    z2 = float(1 << z)
-    fx = F.lit(z2) * (lon / F.lit(360.0) + F.lit(0.5))
-    fx = fx % F.lit(z2)
-    fx = F.when(fx < 0, fx + F.lit(z2)).otherwise(fx)
-    return F.least(F.greatest(F.floor(fx), F.lit(0)), F.lit((1 << z) - 1)).cast("long")
+def tile_x(lon: str, z: int | str) -> Column:
+    """Integer tile x of a longitude (``sqltext.tile_x_sql``)."""
+    return F.expr(sq.tile_x_sql(lon, z, double=True))
 
 
-def tile_y(lat: Column, z: int) -> Column:
-    """Integer tile y: floor(2^z * (0.5 - 0.25*ln((1+sin)/(1-sin))/pi)), clamped.
+def tile_y(lat: str, z: int | str) -> Column:
+    """Integer tile y of a latitude, clamped to +-``MERCATOR_MAX_LAT``
+    first (``sqltext.tile_y_sql``)."""
+    return F.expr(sq.tile_y_sql(lat, z, double=True))
 
-    Latitude is first clamped to +-``tm.MERCATOR_MAX_LAT``, which leaves y
-    unchanged for every |lat| < 90 and keeps the poles finite (row 0 and
-    row 2^z-1, as ``tm.point_to_tile``): at lat = 90 the ratio divides by
-    zero, which raises under ANSI mode.  The clamp reads ``lat`` once: a
-    filter on y pushed below a derived ``lat`` inlines it per reference."""
-    z2 = float(1 << z)
-    m = tm.MERCATOR_MAX_LAT
-    lat = F.least(F.greatest(lat, F.lit(-m)), F.lit(m))
-    s = F.sin(F.radians(lat))
-    fy = F.lit(z2) * (
-        F.lit(0.5)
-        - F.lit(0.25) * F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(math.pi)
-    )
-    return F.least(F.greatest(F.floor(fy), F.lit(0)), F.lit((1 << z) - 1)).cast("long")
+
+def tile_lon(x: str, z: int | str) -> Column:
+    """West edge longitude of tile column x (``sqltext.tile_lon_sql``)."""
+    return F.expr(sq.tile_lon_sql(x, z, double=True))
+
+
+def tile_lat(y: str, z: int | str) -> Column:
+    """North edge latitude of tile row y (``sqltext.tile_lat_sql``)."""
+    return F.expr(sq.tile_lat_sql(y, z, double=True))
 
 
 def quadkey(x: Column, y: Column, z: int) -> Column:
@@ -79,39 +69,16 @@ def parent_xy(x: Column, y: Column) -> tuple[Column, Column]:
     return F.shiftright(x, 1), F.shiftright(y, 1)
 
 
-def tile_lon(x: Column, z: int) -> Column:
-    return x.cast("double") / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
-
-
-def tile_lat(y: Column, z: int) -> Column:
-    n = F.lit(math.pi) - F.lit(2.0 * math.pi) * y.cast("double") / F.lit(float(1 << z))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def tile_lon_dyn(x: Column, zoom: Column) -> Column:
-    """tile_lon with a per-row zoom column (sqltext.tile_lon_dyn_sql twin)."""
-    return (x.cast("double") / F.pow(F.lit(2.0), zoom.cast("double"))
-            * F.lit(360.0) - F.lit(180.0))
-
-
-def tile_lat_dyn(y: Column, zoom: Column) -> Column:
-    n = (F.lit(math.pi) - F.lit(2.0 * math.pi) * y.cast("double")
-         / F.pow(F.lit(2.0), zoom.cast("double")))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def degenerate_pass_point(lon: Column, lat: Column, x: Column, y: Column,
-                          z: int) -> Column:
+def degenerate_pass_point(lon: str, lat: str, x: str, y: str, z: int) -> Column:
     """Strict-interior degenerate test for a POINT feature against its
     cell at zoom z, as a pure column expression — the single-vertex case
     of /root/reference/lib/degenerate.js:10-47 (Point rule line 28): the
     point must lie strictly MORE than eps inside all four cell edges,
     eps = 0.087 / 4^z (degenerate.js:12-14)."""
     eps = F.lit(0.087 / (4.0 ** z))
-    w = tile_lon(x, z)
-    e = tile_lon(x + F.lit(1), z)
-    s = tile_lat(y + F.lit(1), z)
-    n = tile_lat(y, z)
+    w, e = tile_lon(x, z), tile_lon(f"({x} + 1)", z)
+    s, n = tile_lat(f"({y} + 1)", z), tile_lat(y, z)
+    lon, lat = F.expr(lon), F.expr(lat)
     return (lon - w > eps) & (e - lon > eps) & (lat - s > eps) & (n - lat > eps)
 
 

@@ -8,10 +8,11 @@ no Python) so an entire grid pipeline can be written in ``spark.sql``:
     SELECT vt_tile_x(lon, 12) AS x, vt_tile_y(lat, 12) AS y, COUNT(*)
     FROM points GROUP BY 1, 2
 
-The bodies are the dynamic-zoom twins of the compile-time-zoom text in
-:mod:`vt_grid_spark.functions.sqltext` (same IEEE-754 double operations,
-``shiftleft(1, z)`` for the exact power of two), mirroring the reference
-surface: tileToQuadkey / quadkeyToTile / getParent / tileToBBOX
+The vt_tile_x/y/lon/lat bodies are generated: the DOUBLE-literal text of
+:mod:`vt_grid_spark.functions.sqltext` with the zoom parameter ``z`` as
+its per-row zoom (``POWER(2.0D, z)``, the exact power of two), so they
+compute the same doubles as the Column builders.  The set mirrors the
+reference surface: tileToQuadkey / quadkeyToTile / getParent / tileToBBOX
 (/root/reference/lib/tile-util.js) as SQL instead of JS.
 
 Functions (all prefixed ``vt_`` to keep the session namespace clean):
@@ -30,27 +31,13 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from vt_grid_spark.tilemath import MERCATOR_MAX_LAT
-
-_Z2 = "CAST(shiftleft(1, z) AS DOUBLE)"
-_FX = f"(({_Z2} * (lon/360.0 + 0.5)) % {_Z2})"
-_FXW = f"(CASE WHEN {_FX} < 0 THEN {_FX} + {_Z2} ELSE {_FX} END)"
-# latitude clamped to +-MERCATOR_MAX_LAT, as in vf.tile_y: finite at the poles
-_M = f"{MERCATOR_MAX_LAT!r}D"
-_LAT = f"LEAST(GREATEST(lat, -{_M}), {_M})"
-_S = f"SIN(RADIANS({_LAT}))"
-_FY = f"({_Z2} * (0.5 - 0.25 * LN((1.0 + {_S}) / (1.0 - {_S})) / PI()))"
+from vt_grid_spark.functions import sqltext as sq
 
 _DEFS: dict[str, str] = {
-    "vt_tile_x(lon DOUBLE, z INT) RETURNS BIGINT":
-        f"CAST(LEAST(GREATEST(FLOOR({_FXW}), 0), shiftleft(1, z) - 1) AS BIGINT)",
-    "vt_tile_y(lat DOUBLE, z INT) RETURNS BIGINT":
-        f"CAST(LEAST(GREATEST(FLOOR({_FY}), 0), shiftleft(1, z) - 1) AS BIGINT)",
-    "vt_tile_lon(x BIGINT, z INT) RETURNS DOUBLE":
-        "x / CAST(shiftleft(1, z) AS DOUBLE) * 360.0 - 180.0",
-    "vt_tile_lat(y BIGINT, z INT) RETURNS DOUBLE":
-        ("DEGREES(ATAN(SINH(PI() * "
-         "(1.0 - 2.0 * y / CAST(shiftleft(1, z) AS DOUBLE)))))"),
+    "vt_tile_x(lon DOUBLE, z INT) RETURNS BIGINT": sq.tile_x_sql("lon", "z", True),
+    "vt_tile_y(lat DOUBLE, z INT) RETURNS BIGINT": sq.tile_y_sql("lat", "z", True),
+    "vt_tile_lon(x BIGINT, z INT) RETURNS DOUBLE": sq.tile_lon_sql("x", "z", True),
+    "vt_tile_lat(y BIGINT, z INT) RETURNS DOUBLE": sq.tile_lat_sql("y", "z", True),
     # z=0 guard: Spark's sequence(1, 0) yields the DESCENDING [1, 0], not
     # an empty array, so the root tile must short-circuit to '' (the same
     # pitfall _shingles_expr guards with greatest(..., 1))

@@ -1,10 +1,18 @@
-"""ANSI-SQL text generators mirroring :mod:`vt_grid_spark.functions`.
+"""ANSI-SQL text for the engine's tile math: the one Spark-side definition.
 
-These produce the DuckDB-oracle side of every SQL-expressible operator.
-The expressions are kept textually parallel to the Column builders so both
-engines evaluate the same IEEE-754 double operations (ln/sin/floor are
-bit-stable across libm for the generic inputs our synthetic keys produce;
-goldens for boundary behavior live in pytest instead — SURVEY.md §7 g8).
+Each generator gives two forms of the same IEEE-754 double operations.
+The plain form is the DuckDB-oracle text.  The DOUBLE form
+(``double=True``) is Spark text: kNN encodes with it, the Column builders
+in :mod:`vt_grid_spark.functions` wrap it in ``F.expr``, and the vt_* SQL
+function bodies in :mod:`vt_grid_spark.functions.sqlfuncs` are generated
+from it, so no other copy of a tile formula exists on the Spark side
+(ln/sin/floor are bit-stable across libm for the generic inputs our
+synthetic keys produce; goldens for boundary behavior live in pytest
+instead — SURVEY.md §7 g8).
+
+A zoom ``z`` is an int or, as a string, a per-row zoom expression; 2^z is
+then ``POWER(2.0, z)``, exact for every integer zoom, so both spellings
+compute the same doubles.
 """
 
 from __future__ import annotations
@@ -46,29 +54,50 @@ def _num(v: float, double: bool) -> str:
     return f"{v!r}D" if double else repr(v)
 
 
-def tile_x_sql(lon: str, z: int, double: bool = False) -> str:
-    z2 = _num(float(1 << z), double)
-    n = (1 << z) - 1
+def _pow2(z: int | str, double: bool) -> str:
+    """2^z as a double: a literal for an int zoom, ``POWER(2.0, z)`` for a
+    per-row zoom expression."""
+    if isinstance(z, str):
+        return f"POWER({_num(2.0, double)}, {z})"
+    return _num(float(1 << z), double)
+
+
+def _top(z: int | str) -> str:
+    """The last tile index at zoom z, 2^z - 1, as a BIGINT."""
+    if isinstance(z, str):
+        return f"(CAST(POWER(2, {z}) AS BIGINT) - 1)"
+    return str((1 << z) - 1)
+
+
+def tile_x_sql(lon: str, z: int | str, double: bool = False) -> str:
+    """Tile x of a longitude: floor(2^z * (lon/360 + 0.5)) mod 2^z,
+    clamped — tilebelt.pointToTile parity (the reference's
+    lib/aggregate-cells.js:54-78)."""
+    z2 = _pow2(z, double)
     half, deg = _num(0.5, double), _num(360.0, double)
     fx = f"(({z2} * (({lon})/{deg} + {half})) % {z2})"
     fx = f"(CASE WHEN {fx} < 0 THEN {fx} + {z2} ELSE {fx} END)"
-    return f"CAST(LEAST(GREATEST(FLOOR({fx}), 0), {n}) AS BIGINT)"
+    return f"CAST(LEAST(GREATEST(FLOOR({fx}), 0), {_top(z)}) AS BIGINT)"
 
 
-def tile_y_sql(lat: str, z: int, double: bool = False) -> str:
-    """The DOUBLE form is Spark-side text and clamps latitude to
-    +-``MERCATOR_MAX_LAT`` first, as ``vf.tile_y`` does (same y for every
-    |lat| < 90, finite at the poles); the plain oracle text does not."""
+def tile_y_sql(lat: str, z: int | str, double: bool = False) -> str:
+    """Tile y of a latitude: floor(2^z * (0.5 - 0.25*ln((1+sin)/(1-sin))/pi)),
+    clamped.  The DOUBLE form is Spark-side text and clamps latitude to
+    +-``MERCATOR_MAX_LAT`` first, which leaves y unchanged for every
+    |lat| < 90 and keeps the poles finite (row 0 and row 2^z-1, as
+    ``tm.point_to_tile``): at lat = 90 the ratio divides by zero, which
+    raises under ANSI mode.  The clamp reads ``lat`` once: a filter on y
+    pushed below a derived ``lat`` inlines it per reference.  The plain
+    oracle text does not clamp."""
     if double:
         m = _num(MERCATOR_MAX_LAT, True)
         lat = f"LEAST(GREATEST({lat}, -{m}), {m})"
-    z2 = _num(float(1 << z), double)
-    n = (1 << z) - 1
+    z2 = _pow2(z, double)
     one = _num(1.0, double)
     s = f"SIN(RADIANS({lat}))"
     fy = (f"({z2} * ({_num(0.5, double)} - {_num(0.25, double)} * "
           f"LN(({one} + {s}) / ({one} - {s})) / PI()))")
-    return f"CAST(LEAST(GREATEST(FLOOR({fy}), 0), {n}) AS BIGINT)"
+    return f"CAST(LEAST(GREATEST(FLOOR({fy}), 0), {_top(z)}) AS BIGINT)"
 
 
 def quadkey_sql(x: str, y: str, z: int) -> str:
@@ -84,24 +113,15 @@ def quadkey_sql(x: str, y: str, z: int) -> str:
     return " || ".join(parts)
 
 
-def tile_lat_sql(y: str, z: int, double: bool = False) -> str:
+def tile_lat_sql(y: str, z: int | str, double: bool = False) -> str:
+    """Latitude of a tile row's north edge: atan(sinh(n)) in degrees,
+    n = pi - 2*pi*y/2^z, with sinh spelled 0.5*(exp(n) - exp(-n))."""
     nexpr = (f"({_num(math.pi, double)} - {_num(2.0 * math.pi, double)} * "
-             f"CAST({y} AS DOUBLE) / {_num(float(1 << z), double)})")
+             f"CAST({y} AS DOUBLE) / {_pow2(z, double)})")
     return f"DEGREES(ATAN({_num(0.5, double)} * (EXP({nexpr}) - EXP(-{nexpr}))))"
 
 
-def tile_lon_sql(x: str, z: int, double: bool = False) -> str:
-    return (f"(CAST({x} AS DOUBLE) / {_num(float(1 << z), double)} * "
+def tile_lon_sql(x: str, z: int | str, double: bool = False) -> str:
+    """Longitude of a tile column's west edge: x/2^z*360 - 180."""
+    return (f"(CAST({x} AS DOUBLE) / {_pow2(z, double)} * "
             f"{_num(360.0, double)} - {_num(180.0, double)})")
-
-
-def tile_lon_dyn_sql(x: str, zoom: str) -> str:
-    """Per-row-zoom variant of :func:`tile_lon_sql` — POWER(2.0, z) is
-    exact for integer z, so the double ops match the literal-z text."""
-    return f"(CAST({x} AS DOUBLE) / POWER(2.0, {zoom}) * 360.0 - 180.0)"
-
-
-def tile_lat_dyn_sql(y: str, zoom: str) -> str:
-    nexpr = (f"({math.pi} - {2.0 * math.pi} * CAST({y} AS DOUBLE)"
-             f" / POWER(2.0, {zoom}))")
-    return f"DEGREES(ATAN(0.5 * (EXP({nexpr}) - EXP(-{nexpr}))))"

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from vt_grid_spark import functions as vf
 from vt_grid_spark import tilemath as tm
+from vt_grid_spark.functions import sqltext as sq
 
 
 def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
@@ -31,13 +32,14 @@ def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
     (``pages.with_coords``), which then derives them twice per row.
     """
     def located(c: str) -> Column:  # neither null nor NaN
-        return F.nanvl(F.col(c), F.lit(None).cast("double")).isNotNull()
+        return F.nanvl(F.expr(c), F.lit(None).cast("double")).isNotNull()
 
+    lon, lat = sq.bq(lon), sq.bq(lat)
     out = (
         df.where(located(lon) & located(lat))
         .withColumn("zoom", F.lit(z))
-        .withColumn("x", vf.tile_x(F.col(lon), z))
-        .withColumn("y", vf.tile_y(F.col(lat), z))
+        .withColumn("x", vf.tile_x(lon, z))
+        .withColumn("y", vf.tile_y(lat, z))
     )
     if with_quadkey:
         out = out.withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
@@ -95,8 +97,9 @@ def cell_aggregate(points: DataFrame, z: int, agg_exprs: list) -> DataFrame:
 
     Sparse by design: empty cells are never materialized (the reference's
     grid path emits dense 4^d cells, lib/aggregate-cells.js:39-47 — at web
-    scale that is 4^19 rows of nothing; a ``densify`` view reproduces dense
-    output for fixture parity, SURVEY.md §7 g3).
+    scale that is 4^19 rows of nothing; the ``densify`` view in
+    ``tests/test_plan_extras.py`` reproduces dense output for fixture
+    parity, SURVEY.md §7 g3).
 
     Shuffle hygiene: the grouping key is ONLY the integer (x, y) — the
     constant ``zoom`` and the derivable ``quadkey`` string are

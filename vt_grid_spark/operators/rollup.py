@@ -97,29 +97,3 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec]) -> Data
     grouped = base.groupBy("x", "y").agg(*compile_rollup_aggs(specs))
     return grouped.select(F.lit(zoom).alias("zoom"), *grouped.columns)
 
-
-def densify(cells: DataFrame, parent_z: int, cell_z: int) -> DataFrame:
-    """Dense-cell view for fixture parity: materialize all 4^(cell_z-parent_z)
-    progeny of each occupied parent tile, left-joining real values
-    (reference grid path emits empties, lib/aggregate-cells.js:39-47).
-
-    Only for small exports/tests — web-scale output stays sparse.
-    """
-    d = cell_z - parent_z
-    span = 1 << d
-    parents = (
-        cells.select(F.shiftright("x", d).alias("_tx"), F.shiftright("y", d).alias("_ty"))
-        .distinct()
-    )
-    grid = (
-        parents
-        .withColumn("_dx", F.explode(F.sequence(F.lit(0), F.lit(span - 1))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(0), F.lit(span - 1))))
-        .select(
-            (F.shiftleft("_tx", d) + F.col("_dx")).alias("x"),
-            (F.shiftleft("_ty", d) + F.col("_dy")).alias("y"),
-        )
-    )
-    return grid.join(cells, ["x", "y"], "left").withColumn(
-        "zoom", F.lit(cell_z)
-    ).withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z))

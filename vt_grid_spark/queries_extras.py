@@ -77,8 +77,7 @@ def degenerate_filter_eps_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(20.000123).alias("lat"),
     )
     enc = encode_points(pts, _DEG_Z, with_quadkey=False)
-    flag = vf.degenerate_pass_point(F.col("lon"), F.col("lat"),
-                                    F.col("x"), F.col("y"), _DEG_Z)
+    flag = vf.degenerate_pass_point("lon", "lat", "x", "y", _DEG_Z)
     return enc.groupBy("x", "y").agg(
         F.sum(F.when(flag, 1).otherwise(0)).alias("n_pass"),
         F.count(F.lit(1)).alias("n_total"),
@@ -391,10 +390,10 @@ u AS (
   SELECT CAST(zoom AS BIGINT) AS zoom, x, y, cnt FROM p
 )
 SELECT zoom, x, y, cnt,
-  ROUND({sq.tile_lon_dyn_sql('x', 'zoom')}, 9) AS west,
-  ROUND({sq.tile_lat_dyn_sql('(y + 1)', 'zoom')}, 9) AS south,
-  ROUND({sq.tile_lon_dyn_sql('(x + 1)', 'zoom')}, 9) AS east,
-  ROUND({sq.tile_lat_dyn_sql('y', 'zoom')}, 9) AS north
+  ROUND({sq.tile_lon_sql('x', 'zoom')}, 9) AS west,
+  ROUND({sq.tile_lat_sql('(y + 1)', 'zoom')}, 9) AS south,
+  ROUND({sq.tile_lon_sql('(x + 1)', 'zoom')}, 9) AS east,
+  ROUND({sq.tile_lat_sql('y', 'zoom')}, 9) AS north
 FROM u
 """,
 )
@@ -418,13 +417,12 @@ def bbox_cover_build_z9(spark: SparkSession, sf_dir: str) -> DataFrame:
                         aggregations=[AggSpec(out="cnt", reducer="count")])],
         gridsize=1, bbox=_COVER_BBOX)
     out = build_pyramid_df(_pts(spark, sf_dir), plan)
-    z = F.col("zoom").cast("long")
     return out.select(
-        z.alias("zoom"), "x", "y", "cnt",
-        F.round(vf.tile_lon_dyn(F.col("x"), z), 9).alias("west"),
-        F.round(vf.tile_lat_dyn(F.col("y") + F.lit(1), z), 9).alias("south"),
-        F.round(vf.tile_lon_dyn(F.col("x") + F.lit(1), z), 9).alias("east"),
-        F.round(vf.tile_lat_dyn(F.col("y"), z), 9).alias("north"),
+        F.col("zoom").cast("long").alias("zoom"), "x", "y", "cnt",
+        F.round(vf.tile_lon("x", "zoom"), 9).alias("west"),
+        F.round(vf.tile_lat("(y + 1)", "zoom"), 9).alias("south"),
+        F.round(vf.tile_lon("(x + 1)", "zoom"), 9).alias("east"),
+        F.round(vf.tile_lat("y", "zoom"), 9).alias("north"),
     )
 
 
@@ -1187,7 +1185,7 @@ def hex_bin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ix = HexIndex(_HEX_SIZE, aperture=_HEX_APERTURE)
     pts = _pts(spark, sf_dir).withColumn("chars", F.length("text").cast("long"))
-    enc = (pts.withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+    enc = (pts.withColumn("cell", ix.cell("lon", "lat"))
            .withColumn("pcell", ix.parent(F.col("cell"))))
     q, r = HexIndex.qr(F.col("cell"))
     pq, pr = HexIndex.qr(F.col("pcell"))

@@ -24,10 +24,8 @@ def geojson_view(cells: DataFrame, z: int, properties: list[str],
     properties serialize as JSON strings like the reference's
     ``"FID": "[59, 707, 1002]"`` (README.md:154) by virtue of to_json.
     """
-    w = vf.tile_lon(F.col("x"), z)
-    e = vf.tile_lon(F.col("x") + F.lit(1), z)
-    s = vf.tile_lat(F.col("y") + F.lit(1), z)
-    n = vf.tile_lat(F.col("y"), z)
+    w, e = vf.tile_lon("x", z), vf.tile_lon("(x + 1)", z)
+    s, n = vf.tile_lat("(y + 1)", z), vf.tile_lat("y", z)
     ring = F.array(
         F.array(w, s), F.array(w, n), F.array(e, n), F.array(e, s), F.array(w, s)
     )
