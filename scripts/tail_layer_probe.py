@@ -2,18 +2,15 @@
 
 Builds ``bench.py``'s headline pyramid (count + sum over the page corpus,
 cell zoom 12 -> 0) several times in one session and prints one JSON line
-per build with its wall and its tail layer.  The tail layer runs from the
-``rollup_ancestors`` call of the first tail batch (the batched aggregation
-of the small upper levels: the last call before the first
-``TableIO.write_level_pandas``; Spark levels call it too) to the end of the
-last ``write_level_pandas`` (the driver's per-level writes): the collect,
-the per-level slicing and the writes.  ``writes_s`` is the part of it
-spent inside ``write_level_pandas`` (parquet files plus staging each
-level's record).  ``spark_jobs`` is the number of Spark jobs the build
-started, from the status tracker's job ids before and after it.
-``spark_levels`` is the number of levels written by Spark (not by the
-tail), and ``spark_level_files`` the file count of each, from the base
-level up.
+per build with its wall and its tail layer.  The tail layer is the time
+spent in ``pyramid._write_tail``, which derives the small upper levels
+from the last Spark level: the read of that level, the per-level
+aggregation and the writes.  ``writes_s`` is the part of it spent inside
+``TableIO.write_level_pandas`` (parquet files plus staging each level's
+record).  ``spark_jobs`` is the number of Spark jobs the build started,
+from the status tracker's job ids before and after it.  ``spark_levels``
+is the number of levels written by Spark (not by the tail), and
+``spark_level_files`` the file count of each, from the base level up.
 
     python scripts/tail_layer_probe.py [--builds 7] [--src DIR] [--dir DIR]
                                        [--small-level-rows N]
@@ -63,22 +60,19 @@ def main(argv: list[str]) -> int:
     from vt_grid_spark.sources.table_io import TableIO
 
     marks: dict = {}
-    ancestors, write = pyramid.rollup_ancestors, TableIO.write_level_pandas
+    tail, write = pyramid._write_tail, TableIO.write_level_pandas
 
-    def timed_ancestors(*a, **kw):
-        marks["ancestors_at"] = time.perf_counter()
-        return ancestors(*a, **kw)
+    def timed(fn, mark):
+        def run(*a, **kw):
+            t = time.perf_counter()
+            try:
+                return fn(*a, **kw)
+            finally:
+                marks[mark] = marks.get(mark, 0.0) + time.perf_counter() - t
+        return run
 
-    def timed_write(*a, **kw):
-        marks.setdefault("tail_start", marks["ancestors_at"])
-        t = time.perf_counter()
-        out = write(*a, **kw)
-        marks["tail_end"] = time.perf_counter()
-        marks["writes"] = marks.get("writes", 0.0) + marks["tail_end"] - t
-        return out
-
-    pyramid.rollup_ancestors = timed_ancestors
-    TableIO.write_level_pandas = timed_write
+    pyramid._write_tail = timed(tail, "tail")
+    TableIO.write_level_pandas = timed(write, "writes")
     if args.small_level_rows is not None:
         pyramid.SMALL_LEVEL_ROWS = args.small_level_rows
 
@@ -100,11 +94,10 @@ def main(argv: list[str]) -> int:
             wall = time.perf_counter() - t0
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
-        tail = marks["tail_end"] - marks["tail_start"]
         files = [len(man[z]["files"]) for z in sorted(man, reverse=True)
                  if man[z]["lineage"]["op"] != "rollup-small"]
         print(json.dumps({"build": i, "wall_s": round(wall, 3),
-                          "tail_s": round(tail, 3),
+                          "tail_s": round(marks["tail"], 3),
                           "writes_s": round(marks["writes"], 3),
                           "spark_jobs": len(_job_ids(spark) - before),
                           "spark_levels": len(files),

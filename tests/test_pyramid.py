@@ -553,6 +553,77 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
         AggSpec(out="h", reducer="histQuantile", field="_v", width=48.0)
 
 
+def test_arrow_merges_equal_spark_merges(spark):
+    """The tail's Arrow executor (``aggspec.merge_arrow``) merges every
+    partial exactly as Spark's combiners do (``rollup_ancestors``, one
+    level), for one spec of every reducer.  The child cells hold NaN and
+    duplicate values, an all-NaN parent (Spark's min and max are NaN where
+    pyarrow's skip NaN and give +inf / -inf), a NaN beside numbers (Spark's
+    max is NaN, its min is not), nulls (an all-null parent stays null),
+    empty ``langs`` arrays, a kmv union cut at ``k`` and histograms."""
+    import math
+
+    from vt_grid_spark.operators.rollup import rollup_ancestors
+    from vt_grid_spark.plans.aggspec import VALID_REDUCERS, merge_arrow
+
+    specs = [
+        AggSpec(out="cnt", reducer="count"),
+        AggSpec(out="sum_v", reducer="sum", field="v"),
+        AggSpec(out="min_v", reducer="min", field="v"),
+        AggSpec(out="max_v", reducer="max", field="v"),
+        AggSpec(out="mean_v", reducer="mean", field="v"),
+        AggSpec(out="awm_v", reducer="areaWeightedMean", field="v", weight="v"),
+        AggSpec(out="aws_v", reducer="areaWeightedSum", field="v", weight="v"),
+        AggSpec(out="area", reducer="totalArea", weight="v"),
+        AggSpec(out="langs", reducer="union", field="lang"),
+        AggSpec(out="sk", reducer="kmvDistinct", field="url", k=4),
+        AggSpec(out="h", reducer="histQuantile", field="v", buckets=3, width=2.0),
+    ]
+    assert {s.reducer for s in specs} == VALID_REDUCERS
+    nan = float("nan")
+    # (x, y, cnt, v, langs, sk, h): v fills every double partial
+    cells = [
+        (0, 0, 2, 1.0, ["en", "fr"], [1, 5, 9], [1, 0, 2]),
+        (1, 0, 1, nan, ["en", "de"], [2, 5, 7], [0, None, 1]),
+        (0, 1, 3, 3.0, [], [3], None),
+        (1, 1, 1, 1.0, ["fr"], [], [2, 2, 2]),
+        (2, 0, 1, nan, ["en"], [4, 8], [1, 1, 1]),  # parent (1, 0): all NaN
+        (3, 1, 2, nan, [], [8, 4], [0, 0, 0]),
+        (0, 2, 1, None, [], [], None),  # parent (0, 1): nulls and []
+        (1, 3, 1, None, [], [], None),
+        (2, 2, 5, None, ["de"], [6], [3, 0, None]),  # parent (1, 1): null, NaN
+        (3, 3, 5, nan, ["de", "zz"], [1], [None, 0, None]),
+        (3, 2, 5, 2.5, ["aa"], [0, 6, 9], [5, 5, 5]),
+    ]
+    doubles = ["sum_v", "min_v", "max_v", "mean_v__cnt", "mean_v__sum",
+               "awm_v__w", "awm_v__wv", "aws_v", "area"]
+    df = spark.createDataFrame(
+        [(x, y, cnt, *[v] * len(doubles), langs, sk, h)
+         for x, y, cnt, v, langs, sk, h in cells],
+        "x int, y int, cnt long, " + ", ".join(f"{c} double" for c in doubles)
+        + ", langs array<string>, sk array<bigint>, h array<bigint>")
+
+    def norm(v):
+        if isinstance(v, float) and math.isnan(v):
+            return "NaN"
+        return tuple(norm(e) for e in v) if isinstance(v, (list, tuple)) else v
+
+    cols = ["x", "y", "cnt", *doubles, "langs", "sk", "h"]
+    want = sorted(tuple(norm(v) for v in r)
+                  for r in rollup_ancestors(df, 5, 4, specs).select(*cols).collect())
+    child = df.toArrow()
+    got = merge_arrow(child, child["x"].to_numpy() >> 1, child["y"].to_numpy() >> 1,
+                      specs)
+    assert got.column_names == cols
+    got = [tuple(norm(r[c]) for c in cols) for r in got.to_pylist()]
+    assert got == want and len(got) == 4
+    by_cell = {r[:2]: dict(zip(cols, r)) for r in got}
+    assert by_cell[(1, 0)]["min_v"] == by_cell[(1, 0)]["max_v"] == "NaN"
+    assert by_cell[(0, 0)]["min_v"] == 1.0 and by_cell[(0, 0)]["max_v"] == "NaN"
+    assert by_cell[(0, 1)]["sum_v"] is None and by_cell[(0, 1)]["langs"] == ()
+    assert by_cell[(0, 0)]["sk"] == (1, 2, 3, 5)  # the union cut at k
+
+
 def _rows(df, cols):
     """A level as a set of row tuples (arrays as tuples)."""
     return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
@@ -560,16 +631,18 @@ def _rows(df, cols):
 
 
 def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
-    """The batched tail: (1) ``rollup_ancestors`` equals chained one-level
-    rollups at every level for one spec of each reducer, salted or not;
-    (2) its plan is ONE hash aggregation (a single hash exchange); (3) a
-    two-band ``build_pyramid``, whose small levels all run through the
-    tail, equals the in-memory ``build_pyramid_df`` as row sets."""
+    """The multi-level rollup and the tail: (1) ``rollup_ancestors``
+    equals chained one-level rollups at every level for one spec of each
+    reducer, salted or not; (2) its plan is ONE hash aggregation (a single
+    hash exchange); (3) a two-band ``build_pyramid``, whose small levels
+    all run through the tail, equals the in-memory ``build_pyramid_df`` as
+    row sets, on both ``TableIO`` backends."""
     import re
 
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
     from vt_grid_spark.operators.rollup import rollup_ancestors
     from vt_grid_spark.plans.aggspec import VALID_REDUCERS, compile_aggs
+    from vt_grid_spark.sources.table_io import CatalogTableIO
 
     specs = [
         AggSpec(out="cnt", reducer="count"),
@@ -606,8 +679,8 @@ def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
     assert _rows(salted, ["zoom", *cols]) == _rows(batch, ["zoom", *cols])
     batch.unpersist()
 
-    # two bands at the default SMALL_LEVEL_ROWS: band 1's tail batch is
-    # rolled up from the base level, band 2's from band 1's last level
+    # two bands at the default SMALL_LEVEL_ROWS: the tail derives band 1's
+    # levels from the base level and band 2's from band 1's last level
     # with band 2's specs (its min_v is the max of band 1's, so running
     # band 1's specs past the boundary would change it)
     band2 = [AggSpec(out="cnt", reducer="sum", field="cnt"), *SPECS[1:3],
@@ -616,17 +689,23 @@ def test_rollup_ancestors_equals_chained_rollup(spark, tmp_path):
                               ZoomBand(basezoom=7, minzoom=4, aggregations=band2)],
                        gridsize=16)
     pts = _points(spark, 2000)
-    io = TableIO(str(tmp_path / "pyr"))
-    man = build_pyramid(pts, plan, io, resume=False)
-    assert sorted(man) == list(range(6, 11))
-    assert all(man[z]["lineage"]["op"] == "rollup-small" for z in range(6, 10))
     mem = build_pyramid_df(pts, plan).cache()
     cols = ["x", "y", "cnt", "sum_v", "mean_v__cnt", "mean_v__sum",
             "min_v", "max_v", "langs"]
-    for z in man:
-        got = _rows(io.read_level(spark, z), cols)
-        assert got == _rows(mem.where(F.col("zoom") == z), cols) and got, \
-            f"zoom {z} diverged"
+    for backend in ("parquet", "catalog"):
+        try:
+            io = (TableIO(str(tmp_path / "pyr")) if backend == "parquet"
+                  else CatalogTableIO(spark, namespace="vtg_tail", prefix="p1"))
+            man = build_pyramid(pts, plan, io, resume=False)
+            assert sorted(man) == list(range(6, 11))
+            assert all(man[z]["lineage"]["op"] == "rollup-small" for z in range(6, 10))
+            for z in man:
+                got = _rows(io.read_level(spark, z), cols)
+                assert got == _rows(mem.where(F.col("zoom") == z), cols) and got, \
+                    f"zoom {z} diverged"
+        finally:
+            if backend == "catalog":
+                spark.sql("DROP NAMESPACE IF EXISTS vtg_tail CASCADE")
     mem.unpersist()
 
 
@@ -802,9 +881,9 @@ def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, m
 
     A 13-level fold (cell zooms 12 -> 0) merges only the base level in
     Spark and derives the 12 small levels above it with the build's tail,
-    from the merged level read back: at most 7 jobs (9 with schema
-    inference, 78 merging every level), and every level equals a one-shot
-    build over both batches."""
+    from the merged level read back as Arrow: at most 6 jobs (7 with the
+    tail aggregated in Spark, 9 with schema inference, 78 merging every
+    level), and every level equals a one-shot build over both batches."""
     from vt_grid_spark.operators.pyramid import incremental_update
 
     specs = [AggSpec(out="cnt", reducer="count"),
@@ -831,24 +910,26 @@ def test_incremental_update_job_audit(spark, tmp_path, jobs_started, basezoom, m
         assert n_jobs == 5, n_jobs
     else:
         assert zooms == list(range(12, -1, -1))
-        assert n_jobs <= 7, n_jobs
+        assert n_jobs <= 6, n_jobs
         one_shot = TableIO(str(tmp_path / "one_shot"))
         build_pyramid(pts, plan, one_shot, resume=False)
         assert _level_rows(io, spark, zooms) == _level_rows(one_shot, spark, zooms)
 
 
 @pytest.mark.parametrize("small_level_rows, n_spark, n_jobs",
-                         [(None, 1, 4), (2000, 7, 16)],
+                         [(None, 1, 3), (2000, 7, 15)],
                          ids=["one_spark_level", "seven_spark_levels"])
 def test_build_job_audit(spark, tmp_path, monkeypatch, jobs_started,
                          small_level_rows, n_spark, n_jobs):
     """The build's twin of the fold's job audit, with the benchmark's
     count + sum + union plan over cell zooms 12 -> 0.  Each Spark level is
     written from a plan nothing caches and read back by the level above
-    it, and a level read starts no job: at the default threshold (the
-    base level, then the tail) the build starts 4 jobs, and with
-    ``SMALL_LEVEL_ROWS`` at 2,000 (Spark levels 12 -> 6, then the tail)
-    16.  Persisting each Spark level for the next one started one more
+    it, and a level read starts no job; the tail reads the level below it
+    as Arrow (one scan job) and aggregates on the driver: at the default
+    threshold (the base level, then the tail) the build starts 3 jobs, and
+    with ``SMALL_LEVEL_ROWS`` at 2,000 (Spark levels 12 -> 6, then the
+    tail) 15.  A Spark aggregation of the tail was one job more (4 and
+    16); persisting each Spark level for the next one started one more
     job per level (5 and 23).  Every level equals ``build_pyramid_df``, and
     the session caches nothing afterwards."""
     from vt_grid_spark.operators import pyramid as pyr

@@ -1,7 +1,7 @@
 """Pyramid driver: the reference's per-level recursion (index.js:94-162)
 as a checkpointed Spark loop.
 
-Each output level is one shuffle stage (groupBy on the integer parent
+Each Spark level is one shuffle stage (groupBy on the integer parent
 key); every level is staged in its own generation with a record (the
 resume point), and one ``TableIO.commit`` publishes them all at the end,
 as the reference's final tile-join creates its output (index.js:151-175).
@@ -12,19 +12,21 @@ the write, of a plan nothing caches, keeps AQE's partition coalescing.
 
 ``build_pyramid`` and ``incremental_update`` run one level loop
 (``_write_levels``) and differ only in how a Spark level is made.  The
-small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: one
-``rollup_ancestors`` aggregation per zoom band derives all of its levels
-at once, collected to the driver as one Arrow table and written per
-level.  A fold merges the delta in Spark only while levels are big.  All
-paths use the combiners of ``compile_rollup_aggs``, derived from
-``aggspec.REDUCERS``, the one place a reducer's merge rule is defined.
+small top of the pyramid (below ``SMALL_LEVEL_ROWS``) is the tail: the
+last Spark level is read to the driver as Arrow once, and each tail level
+is derived there from the level below it, as the reference derives each
+zoom from the one below, with no Spark aggregation.  A fold merges the
+delta in Spark only while levels are big.  Every path merges with the
+combiners of ``aggspec.REDUCERS``, the one place a reducer's merge rule is
+defined: Spark levels run them as Catalyst aggregates
+(``compile_rollup_aggs``), the tail as Arrow kernels (``merge_arrow``).
 """
 
 from __future__ import annotations
 
-from itertools import groupby, takewhile
+from itertools import takewhile
 
-import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,18 +34,17 @@ from vt_grid_spark.operators.encode import (cell_aggregate, cover_cell_predicate
                                             cover_lonlat_predicate, cover_ranges,
                                             encode_points)
 from vt_grid_spark.operators.rollup import merge_cells, rollup_ancestors
-from vt_grid_spark.plans.aggspec import compile_aggs, count_column, is_holistic
+from vt_grid_spark.plans.aggspec import (compile_aggs, count_column, is_holistic,
+                                          merge_arrow)
 from vt_grid_spark.plans.pyramid_plan import PyramidPlan
 from vt_grid_spark.sources.table_io import TableIO
 
-# below this many rows a level's remaining ancestors (to the end of its zoom
-# band) are derived by ONE batched Spark aggregation and written from the
-# driver: at the top of the pyramid each level is one near-empty Spark job
-# (~0.5-2 s of pure scheduling), and 10+ such levels are the serial
-# fraction that caps scaling efficiency.  The collected batch holds the
-# band's remaining levels: ~1/3 of the first small level's rows when cells
-# are dense (each level ~4x smaller), at most that many rows per level when
-# they are sparse.
+# below this many rows a level's remaining ancestors are derived on the
+# driver from the level read once as Arrow, with no Spark job per level: at
+# the top of the pyramid each level is one near-empty Spark job (~0.5-2 s
+# of pure scheduling), and 10+ such levels are the serial fraction that
+# caps scaling efficiency.  The driver holds the level read and the level
+# being derived, each at most this many rows.
 SMALL_LEVEL_ROWS = 1_000_000
 
 
@@ -85,7 +86,7 @@ def _write_levels(spark: SparkSession, io: TableIO, plan: PyramidPlan,
     levels = list(plan.levels())  # [(output_z, cell_z, band)] desc
     manifests: dict[int, dict] = {}
     for i, (output_z, cell_z, band) in enumerate(levels):
-        if cell_z in manifests:  # written by a tail batch
+        if cell_z in manifests:  # written by the tail
             continue
         child = manifests.get(cell_z + 1)
         if keep and keep(cell_z):
@@ -148,31 +149,23 @@ def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
 def _write_tail(spark: SparkSession, io: TableIO, plan: PyramidPlan, todo: list,
                 child_z: int) -> dict:
     """The tail: derive the levels ``todo`` ([(output_z, cell_z, band)],
-    descending from ``child_z - 1``) from the level at ``child_z``, read
-    back from its generation, one ``rollup_ancestors`` batch per zoom
-    band, collected as Arrow and written per level.  A band boundary
-    starts a new batch from the last level written: the next band's specs
-    apply to it.  Returns {cell_zoom: manifest}."""
+    descending from ``child_z - 1``) on the driver.  The level at
+    ``child_z`` is read back from its generation as Arrow (one scan job);
+    each level is then the level below grouped on ``(x >> 1, y >> 1)`` with
+    its band's combiners (``aggspec.merge_arrow``), cast to the child's
+    column types, and written.  Returns {cell_zoom: manifest}."""
+    child = io.read_level(spark, child_z).drop("zoom").toArrow()
     manifests: dict[int, dict] = {}
-    for _, run in groupby(todo, key=lambda lv: id(lv[2])):
-        run = list(run)
-        band, min_z = run[0][2], run[-1][1]
-        batch = rollup_ancestors(io.read_level(spark, child_z), child_z, min_z,
-                                 band.aggregations).toArrow()
-        # sorted (same files every run) on one int64 key, 4^z + x*2^z + y:
-        # exact for zooms <= 31, ~4x faster than sort_by
-        zoom, x, y = (batch[k].to_numpy().astype(np.int64) for k in ("zoom", "x", "y"))
-        order = np.argsort((1 << 2 * zoom) | (x << zoom) | y)
-        batch = batch.take(order)
-        ends = zoom[order].searchsorted(range(min_z, child_z + 1))
-        for output_z, cell_z, _ in run:
-            i = cell_z - min_z
-            manifests[cell_z] = io.write_level_pandas(
-                batch.slice(ends[i], ends[i + 1] - ends[i]), cell_z,
-                lineage={"input": f"zoom={cell_z + 1}", "op": "rollup-small",
-                         "output_tile_zoom": output_z},
-                count_col=_tracked_count(plan, band))
-        child_z = min_z
+    for output_z, cell_z, band in todo:
+        x, y = (child[k].to_numpy() >> 1 for k in ("x", "y"))
+        level = merge_arrow(child, x, y, band.aggregations)
+        child = level.cast(pa.schema([f.with_type(child.schema.field(f.name).type)
+                                      for f in level.schema]))
+        manifests[cell_z] = io.write_level_pandas(
+            child, cell_z,
+            lineage={"input": f"zoom={cell_z + 1}", "op": "rollup-small",
+                     "output_tile_zoom": output_z},
+            count_col=_tracked_count(plan, band))
     return manifests
 
 
@@ -247,9 +240,10 @@ def build_pyramid_df(points: DataFrame, plan: PyramidPlan) -> DataFrame:
     """In-memory variant (no checkpointing): union of all levels as one
     DataFrame — used by tests and the DuckDB-oracle queries where writing
     to disk is unnecessary.  The base aggregate plus one
-    ``rollup_ancestors`` per zoom band, the build tail's shape: each band
-    rolls up from the previous band's last level with its own specs.  No
-    salting: the hot-key rule needs the per-level observations of a build."""
+    ``rollup_ancestors`` per zoom band: each band rolls up from the
+    previous band's last level with its own specs, as a written build's
+    levels do.  No salting: the hot-key rule needs the per-level
+    observations of a build."""
     levels = list(plan.levels())
     _, base_cell_z, base_band = levels[0]
     base = cell_aggregate(_apply_cover(points, plan, base_cell_z), base_cell_z,

@@ -4,10 +4,13 @@ The reference buckets children by parent quadkey
 (/root/reference/lib/aggregate-cells.js:26-50, ``getParent∘quadkeyToTile`` =
 drop-last-char).  Here a rollup is ONE hash aggregation on integer keys —
 no geometry, no strings in the grouping key: ``(x>>1, y>>1)`` for one
-level, ``(zoom, x>>d, y>>d)`` for a band of levels at once (the
-batch-of-group-bys shape of LMFAO, VLDB'20).  A level is ``zoom, x, y``
-plus aggregates: the quadkey is presentation, derived (``vf.quadkey``)
-where a level is presented, never stored.
+level (a Spark level of a build or a fold), ``(zoom, x>>d, y>>d)`` for a
+band of levels at once (the batch-of-group-bys shape of LMFAO, VLDB'20).
+The multi-level form serves the in-memory ``build_pyramid_df`` and the
+queries that roll a ladder up in one plan; a written pyramid's small
+upper levels are derived on the driver (``pyramid._write_tail``).  A
+level is ``zoom, x, y`` plus aggregates: the quadkey is presentation,
+derived (``vf.quadkey``) where a level is presented, never stored.
 
 Scale notes (100 TB / 1000 executors):
   * Algebraic reducers (count/sum/min/max/mean/AWM partials) are immune to

@@ -9,14 +9,18 @@ its *rollup* form so level z-1 composes from level z's partials (the
 manual count→sum pattern of README.md:66-74, generalized).
 
 :data:`REDUCERS` is the ONE definition of every reducer: its partial
-columns, base-level expressions, merge rule and finalizer.  Everything
+columns, base-level expressions, merge kind and finalizer.  Everything
 else is derived from it — ``compile_aggs``, ``compile_rollup_aggs``,
 ``finalize_columns``, the rollup input contract (``partial_columns``) and
-the salting decision (``is_holistic``).  The one rollup operator
-(``rollup_ancestors``: a Spark level, a build-tail band, the in-memory
-pyramid and the delta chain) and the incremental merge (``merge_cells``)
-aggregate with its combiners; adding a reducer means adding one table
-entry.
+the salting decision (``is_holistic``).  A merge kind (sum, min, max,
+union, kmv, hist) has two executors with one meaning, as the tile math has
+Spark text and numpy twins: ``_MERGES`` builds the Catalyst aggregate that
+Spark's rollups and merges run (``rollup_ancestors``: a Spark level, the
+in-memory pyramid and the delta chain; ``merge_cells``), and
+``_ARROW_MERGES`` runs the same merge on a level collected to the driver
+(``merge_arrow``, the build tail), reproducing Spark's NaN, null and
+array-order rules exactly.  Adding a reducer means adding one table entry;
+a new merge kind needs both executors.
 
 Custom reducers (reference lib/aggregate.js:26-36) are Python callables
 run via applyInPandas — see operators/custom_reduce.py.
@@ -30,6 +34,9 @@ import re
 from dataclasses import dataclass
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -218,6 +225,79 @@ _MERGES: dict[str, Callable[[AggSpec, str], Column]] = {
         f"sum(element_at({bq(c)}, {i + 1}))" for i in range(s.buckets)) + ")"),
 }
 
+
+def _by_group(g: np.ndarray, col, agg: str) -> pa.ChunkedArray:
+    """One pyarrow hash aggregate of ``col`` per group id ``g`` (ascending
+    and contiguous, so the single-threaded output is in group order)."""
+    return (pa.table({"g": g, "c": col}).group_by("g", use_threads=False)
+            .aggregate([("c", agg)]).column(f"c_{agg}"))
+
+
+def _arrow_min(s: AggSpec, col, g: np.ndarray, n: int):
+    # pyarrow skips NaN (an all-NaN group gives +inf); Spark's min is NaN
+    # only when every non-null input is NaN
+    if not pa.types.is_floating(col.type):
+        return _by_group(g, col, "min")
+    nan = pc.is_nan(col)
+    low = _by_group(g, pc.if_else(nan, pa.scalar(None, col.type), col), "min")
+    all_nan = pc.and_(pc.is_null(low), pc.fill_null(_by_group(g, nan, "any"), False))
+    return pc.if_else(all_nan, pa.scalar(float("nan"), col.type), low)
+
+
+def _arrow_max(s: AggSpec, col, g: np.ndarray, n: int):
+    # Spark's max is NaN when any input is NaN (NaN sorts above +inf)
+    if not pa.types.is_floating(col.type):
+        return _by_group(g, col, "max")
+    any_nan = pc.fill_null(_by_group(g, pc.is_nan(col), "any"), False)
+    return pc.if_else(any_nan, pa.scalar(float("nan"), col.type),
+                      _by_group(g, col, "max"))
+
+
+def _arrow_union(s: AggSpec, col, g: np.ndarray, n: int, k: int | None = None):
+    # flatten (a null array contributes nothing, as in collect_list), one
+    # of each (g, value) -- NaN and null are one group each, as in
+    # array_distinct -- sorted ascending with nulls last (array_sort)
+    parent = pc.list_parent_indices(col).to_numpy()
+    t = (pa.table({"g": g[parent], "v": pc.list_flatten(col)})
+         .group_by(["g", "v"], use_threads=False).aggregate([]))
+    t = t.take(pc.sort_indices(t, [("g", "ascending"), ("v", "ascending")],
+                               null_placement="at_end"))
+    owner = t["g"].to_numpy()
+    if k is not None:  # kmv: the k smallest of each group
+        keep = np.arange(len(owner)) - np.searchsorted(owner, owner) < k
+        t, owner = t.filter(keep), owner[keep]
+    offsets = np.zeros(n + 1, np.int32)
+    np.cumsum(np.bincount(owner, minlength=n), out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, t["v"].combine_chunks())
+
+
+def _arrow_hist(s: AggSpec, col, g: np.ndarray, n: int):
+    # per-bucket sum; a bucket that no child fills is null, as Spark's sum
+    # over nulls alone is
+    parent = pc.list_parent_indices(col).to_numpy()
+    pos = np.arange(len(parent)) - np.searchsorted(parent, parent)
+    inside = pos < s.buckets
+    sums = (pa.table({"cell": (g[parent] * s.buckets + pos)[inside],
+                      "v": pc.list_flatten(col).filter(pa.array(inside))})
+            .group_by("cell", use_threads=False).aggregate([("v", "sum")]))
+    at = np.full(n * s.buckets, -1, np.int64)
+    at[sums["cell"].to_numpy()] = np.arange(sums.num_rows)
+    values = sums["v_sum"].combine_chunks().take(pa.array(at, mask=at < 0))
+    return pa.ListArray.from_arrays(
+        np.arange(0, n * s.buckets + 1, s.buckets, dtype=np.int32), values)
+
+
+# the driver-side executor of the same combiners, for a level collected as
+# Arrow (the build tail): each reproduces its _MERGES entry exactly
+_ARROW_MERGES: dict[str, Callable] = {
+    "sum": lambda s, c, g, n: _by_group(g, c, "sum"),
+    "min": _arrow_min,
+    "max": _arrow_max,
+    "union": _arrow_union,
+    "kmv": lambda s, c, g, n: _arrow_union(s, c, g, n, k=s.k),
+    "hist": _arrow_hist,
+}
+
 REDUCERS: dict[str, Reducer] = {
     "count": Reducer(("",), lambda s: [F.count(F.lit(1))], "sum"),
     "sum": Reducer(("",), lambda s: [F.sum(s.field)], "sum"),
@@ -288,6 +368,32 @@ def compile_rollup_aggs(specs: list[AggSpec]) -> list[Column]:
     ``rollup_ancestors`` validates the input frame against this contract."""
     return [_MERGES[REDUCERS[s.reducer].merge](s, s.out + p).alias(s.out + p)
             for s in specs for p in REDUCERS[s.reducer].partials]
+
+
+def merge_arrow(cells: pa.Table, x: np.ndarray, y: np.ndarray,
+                specs: list[AggSpec]) -> pa.Table:
+    """:func:`compile_rollup_aggs` run on the driver: the rows of ``cells``
+    (an Arrow table of partial columns) grouped on the non-negative integer
+    keys ``x, y`` (one per row, below 2^32), each partial merged by its
+    kind's Arrow executor.  Output: x, y (int64), the partial columns,
+    not null where Spark's merge is never null (an array merge); sorted by
+    (x, y)."""
+    key = (x.astype(np.int64) << 32) | y.astype(np.int64)
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    first = np.ones(len(key), bool)
+    first[1:] = key[1:] != key[:-1]
+    g, n = np.cumsum(first) - 1, int(first.sum())
+    cols = [pa.array(key[first] >> 32), pa.array(key[first] & 0xFFFFFFFF)]
+    fields = [pa.field("x", pa.int64()), pa.field("y", pa.int64())]
+    for s in specs:
+        kind = REDUCERS[s.reducer].merge
+        for p in REDUCERS[s.reducer].partials:
+            col = cells[s.out + p].combine_chunks().take(order)
+            cols.append(_ARROW_MERGES[kind](s, col, g, n))
+            fields.append(pa.field(s.out + p, cols[-1].type,
+                                   nullable=kind not in ("union", "kmv", "hist")))
+    return pa.table(cols, schema=pa.schema(fields))
 
 
 def finalize_columns(specs: list[AggSpec]) -> dict[str, Column]:

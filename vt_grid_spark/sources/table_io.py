@@ -246,12 +246,11 @@ class TableIO:
             path = self._gen_path(zoom, gen)
             os.makedirs(path)
             fname = "part-00000.parquet"
-            out = table.drop_columns(["zoom"]) if "zoom" in table.column_names else table
-            pq.write_table(out, os.path.join(path, fname))
-            where = {"row_count": out.num_rows, "files": {fname: out.num_rows},
-                     "schema": from_arrow_schema(out.schema).jsonValue()}
+            pq.write_table(table, os.path.join(path, fname))
+            where = {"row_count": table.num_rows, "files": {fname: table.num_rows},
+                     "schema": from_arrow_schema(table.schema).jsonValue()}
             if count_col is not None:
-                where["max_cell_rows"] = pc.max(out[count_col]).as_py() or 0
+                where["max_cell_rows"] = pc.max(table[count_col]).as_py() or 0
             return self._stage(zoom, gen, where, lineage, clustered=False)
 
     def cluster_level(self, spark: SparkSession, zoom: int,
